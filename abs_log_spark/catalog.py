@@ -2,9 +2,15 @@
 
 [B] north_rule targets Iceberg tables; this sandbox has no Iceberg runtime
 jar and no network (SURVEY.md section 7), so the catalog writes partitioned
-parquet directories behind the same call surface. Swapping ``fmt="iceberg"``
-(``df.writeTo(ident).using("iceberg")``) is a one-class change; every caller
-goes through :class:`Catalog` and never touches paths or formats directly.
+parquet directories behind the same call surface. Every caller goes through
+:class:`Catalog` and never touches paths or formats directly.
+
+Reads take the table schema from the footer Spark writes into every data
+file (:func:`footer_schema`) instead of letting Spark infer it, which costs
+one Spark job per read. Bookkeeping tables (checkpoint, metrics) are
+appended a few rows at a time on the driver with pyarrow
+(:meth:`Catalog.append_rows`): one parquet file per append, the same
+columns, physical types and footer Spark writes, and no Spark job.
 
 Partition layout is the scale story: at 10^12 rows the input is laid out by
 ``(source, part_bucket)`` (hash-bucketed doc_id) so that (a) resume can prune
@@ -15,11 +21,54 @@ dynamic partition overwrite giving idempotent re-runs.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
-from dataclasses import dataclass, field
+import uuid
+from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+#: footer key under which Spark stores a data file's schema as StructType JSON
+SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
+
+#: Spark type name -> the arrow type that writes Spark's parquet physical
+#: type (timestamps go out as INT96, see :meth:`Catalog.append_rows`)
+_ARROW_TYPES = {
+    "string": pa.string(),
+    "long": pa.int64(),
+    "timestamp": pa.timestamp("us", tz="UTC"),
+}
+
+
+def _first_data_file(path: str) -> str | None:
+    """The first ``part-*.parquet`` file under a table directory, descending
+    partition dirs in sorted order and skipping hidden (``.``/``_``) dirs
+    and files the way Spark's file index does."""
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+        for f in sorted(files):
+            if f.startswith("part-") and f.endswith(".parquet"):
+                return os.path.join(root, f)
+    return None
+
+
+def footer_schema(path: str) -> StructType | None:
+    """Data schema (partition columns excluded) of a table, read from the
+    StructType Spark stored in the footer of its first data file; None when
+    there is no data file or it carries no Spark schema."""
+    f = _first_data_file(path)
+    if f is None:
+        return None
+    try:
+        meta = pq.read_metadata(f).metadata or {}
+    except (OSError, ValueError):  # unreadable footer: let Spark report it
+        return None
+    raw = meta.get(SPARK_SCHEMA_KEY.encode())
+    return StructType.fromJson(json.loads(raw)) if raw else None
 
 
 @dataclass
@@ -27,8 +76,6 @@ class Catalog:
     """Minimal table catalog: name -> partitioned parquet dir under ``root``."""
 
     root: str
-    fmt: str = "parquet"
-    _known: set = field(default_factory=set)
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -43,7 +90,44 @@ class Catalog:
         )
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self.path(table))
+        """Read a table with the schema from its footer, so the read itself
+        runs no Spark job (schema inference runs one). Spark still discovers
+        the partition columns from the directory names. Without a Spark
+        footer the read falls back to inference."""
+        path = self.path(table)
+        schema = footer_schema(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(path)
+
+    def read_arrow(self, table: str, columns: list[str], filters=None) -> pa.Table:
+        """Driver-side pyarrow read of a small table (no Spark job). Hidden
+        ``.``/``_`` files, such as a crashed append's temp file, are skipped
+        as Spark skips them."""
+        return pq.read_table(self.path(table), columns=columns, filters=filters)
+
+    def append_rows(self, table: str, schema: StructType, rows: list[tuple]) -> None:
+        """Append ``rows`` as ONE parquet file written on the driver with
+        pyarrow — the bookkeeping-table write path, with no Spark job.
+
+        The file matches what a Spark append writes: zstd, Spark's parquet
+        types (``timestamp`` as INT96, so DuckDB and Spark read the same
+        type from either writer's files), the StructType in the footer
+        (so :meth:`read` needs no inference) and a ``part-`` name. It is
+        written under a hidden temp name and renamed into place, so a crash
+        mid-append leaves only a file every reader skips."""
+        arrow_schema = pa.schema(
+            [pa.field(f.name, _ARROW_TYPES[f.dataType.typeName()]) for f in schema.fields],
+            metadata={SPARK_SCHEMA_KEY: schema.json()},
+        )
+        data = pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=arrow_schema
+        )
+        d = self.path(table)
+        os.makedirs(d, exist_ok=True)
+        name = f"part-{uuid.uuid4()}.zstd.parquet"
+        tmp = os.path.join(d, f".{name}.tmp")
+        pq.write_table(data, tmp, compression="zstd", use_deprecated_int96_timestamps=True)
+        os.replace(tmp, os.path.join(d, name))
 
     def partition_values(self, table: str, key: str = "part_bucket") -> set[str]:
         """Partition values of a table's top-level ``key=value`` dirs, from
@@ -74,7 +158,6 @@ class Catalog:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(table))
-        self._known.add(table)
 
     def append(self, df: DataFrame, table: str, partition_by: tuple[str, ...] = ()) -> None:
         self.write(df, table, partition_by, mode="append")
@@ -101,7 +184,6 @@ class Catalog:
             target = self.path(f"{table_prefix}{sink}")
             shutil.rmtree(target, ignore_errors=True)
             os.replace(os.path.join(staging, d), target)
-            self._known.add(f"{table_prefix}{sink}")
             sinks.append(sink)
         shutil.rmtree(staging, ignore_errors=True)
         return sinks
@@ -135,6 +217,5 @@ class Catalog:
                 shutil.rmtree(dst, ignore_errors=True)
                 os.replace(src, dst)
                 moved[sink].append(part_dir)
-            self._known.add(f"{table_prefix}{sink}")
         shutil.rmtree(staging, ignore_errors=True)
         return moved

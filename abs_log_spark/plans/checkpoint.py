@@ -12,17 +12,29 @@ partitioned source this prunes whole files, not just rows).
 Idempotence: the routed write uses dynamic partition overwrite keyed by
 ``part_bucket`` — re-running a bucket replaces exactly that bucket, so a
 crash between write and checkpoint append cannot duplicate rows.
+
+The checkpoint table is a handful of rows per run, so it is read and
+appended on the driver with pyarrow (``Catalog.read_arrow`` /
+``Catalog.append_rows``): a Spark job per bookmark cost more scheduling
+than the bookmark is worth. The files keep the columns and types Spark
+writes, and retention still rewrites the table with Spark, so Spark and
+DuckDB readers see one table whichever writer produced a file.
 """
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
 from abs_log_spark.catalog import Catalog
 
 CHECKPOINT_TABLE = "checkpoint"
-CHECKPOINT_SCHEMA = (
-    "run_id string, stage string, partition_key string, status string, ts timestamp"
+CHECKPOINT_SCHEMA = StructType(
+    [StructField(c, StringType()) for c in ("run_id", "stage", "partition_key", "status")]
+    + [StructField("ts", TimestampType())]
 )
 
 
@@ -45,14 +57,12 @@ def completed_partitions(spark: SparkSession, cat: Catalog, stage: str) -> set[s
     _heal(cat)
     if not cat.exists(CHECKPOINT_TABLE):
         return set()
-    rows = (
-        cat.read(spark, CHECKPOINT_TABLE)
-        .where((F.col("stage") == stage) & (F.col("status") == "done"))
-        .select("partition_key")
-        .distinct()
-        .collect()
-    )
-    return {r.partition_key for r in rows}
+    keys = cat.read_arrow(
+        CHECKPOINT_TABLE,
+        columns=["partition_key"],
+        filters=[("stage", "=", stage), ("status", "=", "done")],
+    ).column("partition_key")
+    return set(pc.unique(keys).to_pylist())
 
 
 #: above this many completed buckets, the NOT-isin predicate (a linear chain
@@ -92,8 +102,6 @@ def mark_done(
     if not partition_keys:
         return
     _heal(cat)  # never append-recreate a table stranded mid-retention-swap
-    rows = [(run_id, stage, str(k), "done") for k in partition_keys]
-    df = spark.createDataFrame(
-        rows, "run_id string, stage string, partition_key string, status string"
-    ).withColumn("ts", F.current_timestamp())
-    cat.append(df, CHECKPOINT_TABLE)
+    now = datetime.now(timezone.utc)
+    rows = [(run_id, stage, str(k), "done", now) for k in partition_keys]
+    cat.append_rows(CHECKPOINT_TABLE, CHECKPOINT_SCHEMA, rows)

@@ -3,6 +3,8 @@
 Row counts are collected with ``DataFrame.observe`` — accumulator-style
 metrics piggybacking on the job's own actions, ZERO extra passes over the
 data (a ``df.count()`` audit at 10^12 rows would be a full extra scan).
+The one row per run is appended to the ``metrics`` table on the driver with
+pyarrow (``Catalog.append_rows``), so recording a run costs no Spark job.
 """
 
 from __future__ import annotations
@@ -10,10 +12,18 @@ from __future__ import annotations
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from abs_log_spark.catalog import Catalog
 
 METRICS_TABLE = "metrics"
+METRICS_SCHEMA = StructType(
+    [StructField(c, StringType()) for c in ("run_id", "stage", "partition_key")]
+    + [
+        StructField(c, LongType())
+        for c in ("rows_in", "rows_valid", "rows_invalid", "rows_routed", "wall_ms")
+    ]
+)
 
 
 class StageMetrics:
@@ -58,6 +68,8 @@ class StageMetrics:
     def flush(
         self, spark: SparkSession, cat: Catalog, run_id: str, partition_keys: list[str]
     ) -> dict:
+        """Append this run's row to ``metrics`` (driver-side pyarrow write,
+        no Spark job) and return the collected values plus phase timings."""
         wall_ms = int((time.monotonic() - self.t0) * 1000)
         vals: dict = {"wall_ms": wall_ms}
         for name, obs in self.observations.items():
@@ -80,11 +92,6 @@ class StageMetrics:
             as_long("rows_routed"),
             wall_ms,
         )
-        df = spark.createDataFrame(
-            [row],
-            "run_id string, stage string, partition_key string, rows_in long,"
-            " rows_valid long, rows_invalid long, rows_routed long, wall_ms long",
-        )
-        cat.append(df, METRICS_TABLE)
+        cat.append_rows(METRICS_TABLE, METRICS_SCHEMA, [row])
         vals["timings"] = dict(self.timings)
         return vals

@@ -9,7 +9,7 @@ The Spark-first restatement of abs-log's collector lifecycle ([PK]
       -> STAGE enrich  : broadcast join on the source dimension
       -> STAGE route   : persist once, fan out to per-sink routed tables
       -> STAGE agg     : per-sink minute summaries + error view
-      -> checkpoint + metrics rows
+      -> checkpoint + metrics rows (driver-side pyarrow appends)
 
 Every stage is a pure DataFrame -> DataFrame function so the driver harness
 can register them individually and a Structured-Streaming foreachBatch can
@@ -28,12 +28,17 @@ Scale design decisions (10^12 rows / 1000 executors):
 - the only wide shuffle in the job is the groupBy for the minute summary;
   Spark plans it partial+final with the approx_percentile sketch merging
   map-side. AQE coalesces the post-shuffle partitions.
+- no Spark job for bookkeeping: a cron increment is bound by scheduling,
+  not data, so the checkpoint read and mark, the metrics row and the sink
+  list stay on the driver (pyarrow appends, directory listings), and
+  catalog reads take their schema from the parquet footer instead of an
+  inference job.
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -50,7 +55,6 @@ from abs_log_spark.operators.aggregate import (
 from abs_log_spark.operators.enrich import enrich
 from abs_log_spark.plans import checkpoint as ckpt
 from abs_log_spark.plans.metrics import StageMetrics
-from abs_log_spark.sources.synth import DEFAULT_SINK
 
 
 @dataclass
@@ -59,7 +63,6 @@ class PipelineConfig:
     exact_quantiles: bool = False   # exact percentile (oracle) vs sketch (scale)
     resume: bool = True
     routed_partition_cols: tuple[str, ...] = ("part_bucket",)
-    sinks: tuple[str, ...] = field(default=())  # () -> derive from dim + default
     write_salt: int = 4  # files per routed partition dir / reducers per combo
     #: input already clustered by (source, part_bucket) -> skip the layout
     #: shuffle entirely (routing becomes a pure map job).
@@ -470,10 +473,6 @@ def run_pipeline(
     routed = transform(pending, dim, cfg)
     routed = metrics.observe_routed(routed)
 
-    sinks = list(cfg.sinks) or [
-        r.sink for r in dim.select("sink").distinct().collect()
-    ] + [DEFAULT_SINK]
-
     # ONE data pass: write everything partitioned by (sink, part_bucket) to a
     # staging table, then promote partition dirs into per-sink tables with
     # file moves (Iceberg atomic-partition-replace stand-in). No cache: the
@@ -510,6 +509,9 @@ def run_pipeline(
     moved = cat.promote_partitions("_routed_staging", "routed_")
     metrics.mark("promote")
     processed_any = bool(moved)
+    # summaries cover every sink with routed history (a directory listing,
+    # no Spark job)
+    sinks = routed_sinks(cat)
 
     # Buckets in this increment come from the promoted dir names — zero
     # extra Spark jobs. Ordering invariant (round 5): on the incremental

@@ -431,3 +431,53 @@ def test_crashed_staging_recovery(spark, tmp_catalog):
         if tmp_catalog.exists(f"routed_{s}")
     )
     assert total == 2000
+
+
+def test_resumed_increment_bookkeeping_runs_no_spark_jobs(spark, tmp_catalog, monkeypatch):
+    """A cron increment is bound by scheduling, not data: the checkpoint
+    read and mark, the metrics row and the catalog's schema lookups run on
+    the driver and add no Spark job to a resumed one-bucket run."""
+    from abs_log_spark.catalog import Catalog
+    from abs_log_spark.plans import checkpoint as ckpt
+    from abs_log_spark.plans.metrics import StageMetrics
+
+    seq = gen_sequences(spark, N, invalid_every=10)
+    dim = gen_sources_dim(spark)
+    run_pipeline(spark, tmp_catalog, seq.where(F.col("part_bucket") < 7), dim, run_id="r1")
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def job_ids() -> set[int]:
+        # job-start events reach the status store through the async
+        # listener bus; drain it so no job escapes the count
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(None))
+
+    added: dict[str, int] = {}
+
+    def counting(name, fn):
+        def wrapper(*args, **kwargs):
+            before = job_ids()
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                added[name] = added.get(name, 0) + len(job_ids() - before)
+
+        return wrapper
+
+    for owner, attr in (
+        (ckpt, "completed_partitions"),
+        (ckpt, "mark_done"),
+        (StageMetrics, "flush"),
+        (Catalog, "read"),
+    ):
+        monkeypatch.setattr(owner, attr, counting(attr, getattr(owner, attr)))
+
+    before = job_ids()
+    r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
+    total = len(job_ids() - before)
+    assert r2["buckets_processed"] == 1 and r2["buckets_skipped"] == 7
+    assert total > 0  # the counter sees the run's own write jobs
+    # every wrapped call ran (its key is present) and added no job
+    assert added == {"completed_partitions": 0, "mark_done": 0, "flush": 0, "read": 0}

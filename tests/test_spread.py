@@ -57,15 +57,27 @@ def test_spread_is_result_neutral_and_size_scaled(spark):
     assert n == max(expect, units) or n == units  # no-op keeps scan layout
 
 
-def test_spread_noop_when_layout_already_parallel(tmp_path, spark):
+def test_spread_noop_when_layout_already_parallel(tmp_path, spark, monkeypatch):
     """A table whose file count already reaches the computed target must
     NOT be repartitioned — the production-scale guard."""
-    out = str(tmp_path / "sfbig")
+    from abs_log_spark.sources import readers
+
     n_parts = spark.sparkContext.defaultParallelism
-    spark.range(2000).select(
-        F.col("id").alias("doc_id"), F.lit("x").alias("text")
-    ).repartition(n_parts).write.parquet(os.path.join(out, "documents.parquet"))
-    df = read_table(spark, out, "documents", spread=True)
+    assert n_parts > 1
+    # a small byte target makes the computed target the core count (> 1),
+    # so only the file-count guard can keep the scan as it is
+    monkeypatch.setattr(readers, "SPREAD_TARGET_BYTES", 1)
+
+    def spread_plan(files: int) -> str:
+        out = str(tmp_path / f"sf{files}")
+        spark.range(2000).select(
+            F.col("id").alias("doc_id"), F.lit("x").alias("text")
+        ).repartition(files).write.parquet(os.path.join(out, "documents.parquet"))
+        df = read_table(spark, out, "documents", spread=True)
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    # control: fewer files than the target -> the round-robin repartition
+    assert "Repartition" in spread_plan(1)
     # plan contains no round-robin exchange: the scan's own files suffice
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    plan = spread_plan(n_parts)
     assert "Repartition" not in plan, plan[:500]
