@@ -5,6 +5,8 @@ metrics piggybacking on the job's own actions, ZERO extra passes over the
 data (a ``df.count()`` audit at 10^12 rows would be a full extra scan).
 The one row per run is appended to the ``metrics`` table on the driver with
 pyarrow (``Catalog.append_rows``), so recording a run costs no Spark job.
+The run's count of freshly compiled generated classes is read from the
+driver JVM's codegen counter, also without a Spark action.
 """
 
 from __future__ import annotations
@@ -26,15 +28,24 @@ METRICS_SCHEMA = StructType(
 )
 
 
+def codegen_compile_count(spark: SparkSession) -> int:
+    """Generated classes Janino has compiled in this driver JVM so far (in
+    local mode the executors share it). Flat across a warm run when every
+    class the run needs is still in the codegen cache."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(codegen.METRIC_COMPILATION_TIME().getCount())
+
+
 class StageMetrics:
     """Attach observation points to the flowing DataFrame, then persist the
     collected values once the terminal action has run."""
 
-    def __init__(self) -> None:
+    def __init__(self, spark: SparkSession) -> None:
         self.observations: dict[str, Observation] = {}
         self.t0 = time.monotonic()
         self.timings: dict[str, float] = {}
         self._last = self.t0
+        self._compiles0 = codegen_compile_count(spark)
 
     def mark(self, phase: str) -> None:
         """Record wall time since the previous mark under ``phase``."""
@@ -69,8 +80,11 @@ class StageMetrics:
         self, spark: SparkSession, cat: Catalog, run_id: str, partition_keys: list[str]
     ) -> dict:
         """Append this run's row to ``metrics`` (driver-side pyarrow write,
-        no Spark job) and return the collected values plus phase timings."""
+        no Spark job) and return the collected values plus phase timings and
+        ``codegen_compiles``, the classes compiled since construction (kept
+        out of the ``metrics`` row: one footer schema per table)."""
         wall_ms = int((time.monotonic() - self.t0) * 1000)
+        compiles = codegen_compile_count(spark) - self._compiles0
         vals: dict = {"wall_ms": wall_ms}
         for name, obs in self.observations.items():
             try:
@@ -94,4 +108,5 @@ class StageMetrics:
         )
         cat.append_rows(METRICS_TABLE, METRICS_SCHEMA, [row])
         vals["timings"] = dict(self.timings)
+        vals["codegen_compiles"] = compiles
         return vals

@@ -447,7 +447,7 @@ def run_pipeline(
 ) -> dict:
     """One batch run. Returns summary metrics. Idempotent under re-run."""
     cfg = cfg or PipelineConfig()
-    metrics = StageMetrics()
+    metrics = StageMetrics(spark)
 
     # roll forward/back any compaction swap a previous run crashed inside —
     # BEFORE reading checkpoints or partials (disk state must be consistent

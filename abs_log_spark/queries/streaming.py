@@ -22,7 +22,11 @@ from abs_log_spark.queries import register
 from abs_log_spark.queries.core import _PIPE_FIELDS_CTE, _PIPELINE_E2E_SQL
 from abs_log_spark.sources.readers import sequences_from_documents
 from abs_log_spark.sources.synth import gen_sources_dim
-from abs_log_spark.streaming import merge_stream_partials, run_stream_foreach_batch
+from abs_log_spark.streaming import (
+    merge_stream_partials,
+    run_stream_foreach_batch,
+    two_batch_trigger,
+)
 
 
 @register("streaming_minute_agg_fb", _PIPELINE_E2E_SQL)
@@ -37,7 +41,8 @@ def streaming_minute_agg_fb(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped each batch's Arrow-parse stage at 2 cores regardless of data
     size — now 2x the rebalanced sequences partition count, clamped to
     [4, 16], always split into exactly TWO micro-batches (trigger =
-    half the files; merged output is batch-agnostic, oracle unchanged)."""
+    half the files written; merged output is batch-agnostic, oracle
+    unchanged)."""
     work = tempfile.mkdtemp(prefix="abslog_stream_q_")
     input_dir = os.path.join(work, "input")
     seq = sequences_from_documents(spark, sf_dir)
@@ -53,7 +58,7 @@ def streaming_minute_agg_fb(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim,
         checkpoint_dir=os.path.join(work, "ckpt"),
         cfg=PipelineConfig(),
-        max_files_per_trigger=n_files // 2,
+        max_files_per_trigger=two_batch_trigger(input_dir),
     )
     q.awaitTermination()
 

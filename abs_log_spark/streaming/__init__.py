@@ -13,6 +13,7 @@ from abs_log_spark.streaming.pipeline import (
     read_sequence_stream,
     run_stream_foreach_batch,
     streaming_minute_agg,
+    two_batch_trigger,
 )
 
 __all__ = [
@@ -21,4 +22,5 @@ __all__ = [
     "read_sequence_stream",
     "run_stream_foreach_batch",
     "streaming_minute_agg",
+    "two_batch_trigger",
 ]

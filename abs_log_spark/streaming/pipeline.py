@@ -26,6 +26,8 @@ enrichment shuffle-free; only the windowed groupBy shuffles.
 
 from __future__ import annotations
 
+import math
+import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -65,6 +67,16 @@ def read_sequence_stream(
     if max_files_per_trigger is not None:
         r = r.option("maxFilesPerTrigger", max_files_per_trigger)
     return r.parquet(path)
+
+
+def two_batch_trigger(path: str) -> int:
+    """``maxFilesPerTrigger`` that splits the parquet files actually in
+    ``path`` into two micro-batches (given at least two files). Count the
+    files, not the partitions requested of the writer: a partition that
+    lands empty writes no file, and half the requested count can then
+    cover every file in one batch."""
+    files = [f for f in os.listdir(path) if f.startswith("part-") and f.endswith(".parquet")]
+    return max(1, math.ceil(len(files) / 2))
 
 
 def streaming_minute_agg(

@@ -92,7 +92,7 @@ def test_bookkeeping_tables_agree_across_writers_and_engines(spark, tmp_catalog,
     )
     spark_files = set(_part_files(ck_path))
     ckpt.mark_done(spark, cat, "r1", "routed", ["1", "2"])
-    StageMetrics().flush(spark, cat, "r1", ["1", "2"])
+    StageMetrics(spark).flush(spark, cat, "r1", ["1", "2"])
 
     # a crash between the temp write and the rename
     def crash(src, dst):
@@ -103,7 +103,7 @@ def test_bookkeeping_tables_agree_across_writers_and_engines(spark, tmp_catalog,
         with pytest.raises(OSError):
             ckpt.mark_done(spark, cat, "r2", "routed", ["99"])
         with pytest.raises(OSError):
-            StageMetrics().flush(spark, cat, "r2", ["99"])
+            StageMetrics(spark).flush(spark, cat, "r2", ["99"])
     for p in (ck_path, m_path):
         assert [f for f in os.listdir(p) if f.endswith(".tmp")], p
 

@@ -481,3 +481,44 @@ def test_resumed_increment_bookkeeping_runs_no_spark_jobs(spark, tmp_catalog, mo
     assert total > 0  # the counter sees the run's own write jobs
     # every wrapped call ran (its key is present) and added no job
     assert added == {"completed_partitions": 0, "mark_done": 0, "flush": 0, "read": 0}
+
+
+def test_warm_increment_compiles_no_generated_code(spark, tmp_catalog, tmp_path):
+    """A long-lived engine process (cron loop, report server, foreachBatch)
+    must keep its generated classes cached across cycles. A cron cycle (one
+    increment, then the log_show reports) touches more distinct classes
+    than Spark's default codegen cache of 100 holds; a cache that small
+    evicts them before their next use and recompiles every cycle."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from jobs.log_show import build_view, table_for_view
+
+    # the production layout: the bucket predicate is a partition filter,
+    # not a literal compiled into generated code
+    input_dir = str(tmp_path / "sequences")
+    gen_sequences(spark, N, invalid_every=10).write.partitionBy("part_bucket").parquet(
+        input_dir
+    )
+    seq = spark.read.parquet(input_dir)
+    dim = gen_sources_dim(spark)
+    runs = []
+    for k in (6, 7, 8):
+        runs.append(
+            run_pipeline(
+                spark, tmp_catalog, seq.where(F.col("part_bucket") < k), dim, run_id=f"r{k}"
+            )
+        )
+        for view, kw in (
+            ("request", {}),
+            ("trend", {}),
+            ("error", {}),
+            ("error", {"pivot": True}),
+            ("detail", {"uri": "/api/user/*/profile"}),
+            ("ip", {}),
+        ):
+            df = tmp_catalog.read(spark, table_for_view("sink_a", view))
+            build_view(df, view, sink="sink_a", **kw).collect()
+    assert [r["buckets_processed"] for r in runs] == [6, 1, 1]
+    assert runs[-1]["codegen_compiles"] == 0, [r["codegen_compiles"] for r in runs]

@@ -15,6 +15,7 @@ from abs_log_spark.streaming import (
     read_sequence_stream,
     run_stream_foreach_batch,
     streaming_minute_agg,
+    two_batch_trigger,
 )
 
 N = 3000
@@ -140,6 +141,32 @@ def test_foreachbatch_replay_is_exactly_once(spark, tmp_path, tmp_catalog, seq_i
     merged = merge_stream_partials(tmp_catalog.read(spark, "minute_agg_partials"))
     got = _rows(merged, (KEYS, cols))
     assert got == want
+
+
+def test_two_batch_trigger_counts_files_written(spark, tmp_path, tmp_catalog):
+    """Partitions that land empty write no file: the two-batch trigger is
+    half the files on disk, not half the partitions asked of the writer
+    (half of 4 requested would read both written files in one batch)."""
+    from pyspark.sql import functions as F
+
+    # two sources that hash to shuffle partitions 0 and 1 of 4
+    seq = gen_sequences(spark, 600).where(F.col("source").isin("src0", "src2"))
+    input_dir = str(tmp_path / "input")
+    seq.repartition(4, "source").write.parquet(input_dir)
+    assert two_batch_trigger(input_dir) == 1  # 2 files written, not 4
+    rows: dict[int, int] = {}
+    q = run_stream_foreach_batch(
+        spark,
+        tmp_catalog,
+        input_dir,
+        gen_sources_dim(spark),
+        checkpoint_dir=str(tmp_path / "ckpt_two"),
+        max_files_per_trigger=two_batch_trigger(input_dir),
+        on_batch=rows.__setitem__,
+    )
+    q.awaitTermination()
+    assert [p.batchId for p in q.recentProgress] == [0, 1]
+    assert all(rows.values()) and sum(rows.values()) == seq.count()
 
 
 def _seq_rows(spark, minute_events):
