@@ -18,18 +18,14 @@ Two implementations with identical semantics (tested for parity):
 
 - ``uri_abs_col`` / ``args_abs_col``: pure Spark builtin expressions
   (``transform`` over ``split``) — JVM-side, codegen'd, oracle-checkable.
-- ``uri_abs_udf`` / ``args_abs_udf``: vectorized pandas UDFs (compiled regex
-  over Arrow batches) — the [B]-mandated vectorized path.
+- ``_uri_abs_arrow`` / ``_args_abs_arrow`` in ``functions.parse``: the same
+  split/flag/join over pyarrow arrays, run inside the fused parse
+  ``arrow_udf`` — the [B]-mandated vectorized production path.
 """
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import Column, functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 #: Regexes marking a path segment as volatile (collapsed to ``*``).
 #: Order matters only for documentation; any match collapses the segment.
@@ -76,47 +72,6 @@ def args_abs_col(args: Column) -> Column:
             "&",
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# Vectorized pandas-UDF path (Arrow batches; [B] "no per-row Python")
-#
-# The segment rules are restated as slash-anchored regexes ((?<![^/]) /
-# (?![^/]) = segment boundary, fixed-width so both Python re and Java regex
-# accept them) so a whole Arrow batch abstracts in a few C-level str.replace
-# passes instead of a per-row split/join loop. Parity with the builtin
-# transform() path is asserted in tests (test_abstract.test_dual_path_parity).
-# Undefined edge: empty '&&' segments in args (never produced by nginx) —
-# the builtin path drops them, the regex path preserves them.
-# ---------------------------------------------------------------------------
-
-#: SEGMENT_RULES re-anchored to full path segments.
-SEGMENT_RULES_ANCHORED: tuple[str, ...] = tuple(
-    r"(?<![^/])" + pat.strip("^$") + r"(?![^/])" for pat in SEGMENT_RULES
-)
-_ARGS_KV_PATTERN = r"([^&=]+)(=[^&]*)?"
-
-
-def _abstract_uri_series(s: pd.Series) -> pd.Series:
-    out = s
-    for pat in SEGMENT_RULES_ANCHORED:
-        out = out.str.replace(pat, WILDCARD, regex=True)
-    return out
-
-
-def _abstract_args_series(s: pd.Series) -> pd.Series:
-    return s.str.replace(_ARGS_KV_PATTERN, r"\1=" + WILDCARD, regex=True)
-
-
-# DataType objects (not DDL strings) so module import needs no live session.
-@pandas_udf(StringType())
-def uri_abs_udf(s: pd.Series) -> pd.Series:
-    return _abstract_uri_series(s)
-
-
-@pandas_udf(StringType())
-def args_abs_udf(s: pd.Series) -> pd.Series:
-    return _abstract_args_series(s)
 
 
 # ---------------------------------------------------------------------------

@@ -7,18 +7,16 @@ pandas/Arrow UDFs"). This module is the Spark-first re-expression:
 
 - ``parse_expr(df)``: builtin path — detokenize via ``char``/``array_join``
   then ``regexp_extract`` per field. Fully JVM-side / WholeStageCodegen;
-  used for DuckDB-oracle parity and as the fallback when Python workers are
-  undesirable.
-- ``parse_arrow(df)``: the mandated vectorized path — ONE fused Arrow UDF
-  per batch doing detokenize + regex extract + abstraction and returning a
-  struct (one Python crossing per batch, not one per field; SURVEY.md
-  section 4.3 "One Arrow hop"). On PySpark 4.1 the batch never becomes
-  pandas at all: the ``arrow_udf`` variant consumes the ``list<int32>``
-  ListArray buffers directly (flat values + offsets -> one StringArray, no
-  per-row numpy objects) and runs the line regex through RE2
-  (``pyarrow.compute.extract_regex``) — zero per-row Python anywhere in the
-  hot path. ``parse_arrow_pandas`` keeps the pandas-UDF formulation as the
-  tested fallback (and for Spark versions without ``arrow_udf``).
+  the reference the tests and the DuckDB oracle regex compare against.
+- ``parse_arrow(df)``: the production path — ONE fused PySpark 4.1
+  ``arrow_udf`` per batch doing detokenize + regex extract + abstraction
+  and returning a struct (one Python crossing per batch, not one per field;
+  SURVEY.md section 4.3 "One Arrow hop"). The batch never becomes pandas:
+  the UDF consumes the ``list<int32>`` ListArray buffers directly (flat
+  values + offsets -> one StringArray, no per-row numpy objects) and runs
+  the line regex through RE2 (``pyarrow.compute.extract_regex``) — zero
+  per-row Python in the hot path. Batches holding null tokens or non-ASCII
+  code points detokenize through the per-row ``_detok_batch`` fallback.
 
 Both paths:
 - never drop rows: non-matching lines get ``valid=false`` and null fields —
@@ -34,11 +32,9 @@ Log line shape (FIXTURES.md A1a; canonical nginx ``combined``-like subset):
 
 from __future__ import annotations
 
-import re
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -75,15 +71,15 @@ LINE_PATTERN = (
     r'^(\S+) - \[([^\]]+)\] "(\S+) (\S+) (\S+)" (\d{3}) (\d{1,18}) '
     r"(\d+(?:\.\d+)?)(?![\s\S])"
 )
-_LINE_RE = re.compile(LINE_PATTERN)
 
 #: nginx $time_local -> Spark datetime pattern (session TZ = UTC).
 TIME_FORMAT = "dd/MMM/yyyy:HH:mm:ss Z"
 
 #: Parsed-field struct produced by the Arrow path (pre-timestamp). The Arrow
-#: path also emits the abstraction columns — one more vectorized str.replace
-#: over a batch already in pandas costs far less than a second JVM projection
-#: over the same 10^12 rows (measured ~10s/2M saved vs builtin transform()).
+#: path also emits the abstraction columns — a few more pyarrow.compute
+#: kernels over a batch already in Arrow cost far less than a second JVM
+#: projection over the same 10^12 rows (measured ~10s/2M saved vs builtin
+#: transform()).
 PARSED_SCHEMA = StructType(
     [
         StructField("ip", StringType()),
@@ -101,7 +97,8 @@ PARSED_SCHEMA = StructType(
     ]
 )
 
-#: Fields common to both parse paths (expr path adds abstraction separately).
+#: Fields both parse paths produce (only the Arrow path also emits the
+#: abstraction columns).
 PARSED_FIELDS = [
     f.name
     for f in PARSED_SCHEMA.fields
@@ -164,87 +161,18 @@ def parse_expr(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Fused Arrow path: ONE pandas UDF = detokenize + parse (struct return)
-# ---------------------------------------------------------------------------
-
-
-def _detok_batch(tokens: pd.Series) -> pd.Series:
-    """list<int32> -> str per row. Code points arrive as numpy int arrays;
-    ASCII-range batches take the fast bytes path, anything else falls back
-    to chr-join (full Unicode)."""
-    import numpy as np
-
-    def one(toks):
-        if toks is None:
-            return None
-        arr = np.asarray(toks)
-        if arr.size and arr.max(initial=0) < 128 and arr.min(initial=0) >= 0:
-            return arr.astype(np.uint8).tobytes().decode("ascii")
-        return "".join(map(chr, toks))
-
-    return tokens.map(one)
-
-
-@pandas_udf(PARSED_SCHEMA)
-def _detok_parse_udf(tokens: pd.Series) -> pd.DataFrame:
-    """Fused detokenize + parse, vectorized: ONE C-level regex pass per Arrow
-    batch (pandas str.extract), not a Python loop per row."""
-    lines = _detok_batch(tokens)
-    g = lines.str.extract(_LINE_RE)  # 8 group columns, NaN on non-match
-    valid = g[0].notna() & lines.notna()
-    target = g[3].astype("string")
-    split_t = target.str.split("?", n=1, regex=False)
-    uri = split_t.str[0].astype("string")
-    args = split_t.str[1].astype("string")
-    args = args.where(args.notna() | ~valid, "")  # valid + no '?' -> ''
-    from abs_log_spark.functions.abstract import (
-        _abstract_args_series,
-        _abstract_uri_series,
-    )
-
-    uri_abs = _abstract_uri_series(uri)
-    args_abs = _abstract_args_series(args)
-    out = pd.DataFrame(
-        {
-            "ip": g[0].astype("string"),
-            "ts_str": g[1].astype("string"),
-            "method": g[2].astype("string"),
-            "uri": uri,
-            "args": args,
-            "protocol": g[4].astype("string"),
-            "status": g[5].astype("float").astype("Int32"),
-            "bytes": g[6].astype("float").astype("Int64"),
-            "rt": g[7].astype("float").astype("Float64"),
-            "valid": pd.array(valid.fillna(False), dtype="boolean"),
-            "uri_abs": uri_abs.astype("string"),
-            "args_abs": args_abs.astype("string"),
-        }
-    )
-    return out
-
-
-def parse_arrow_pandas(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
-    """Pandas-UDF fallback path: one Arrow crossing per batch, struct out,
-    then the shared JVM timestamp tail. ``tokens`` passes through untouched.
-    """
-    parsed = df.withColumn("_p", _detok_parse_udf(F.col(tokens_col)))
-    flat = parsed.select("*", "_p.*").drop("_p")
-    return _finish(flat)
-
-
-# ---------------------------------------------------------------------------
-# Pure-Arrow path (PySpark 4.1 ``arrow_udf``): no pandas materialization.
+# Fused Arrow path (PySpark 4.1 ``arrow_udf``): no pandas materialization.
 #
-# The pandas-UDF path pays twice before our code even runs: Arrow -> pandas
-# creates ONE numpy object per row for the list column, and the detok loop
+# A pandas UDF would pay twice before our code even runs: Arrow -> pandas
+# creates ONE numpy object per row for the list column, and a detok loop
 # then round-trips each of those through asarray/astype/tobytes. Consuming
 # the ListArray buffers directly removes both: the flat int32 values cast to
 # uint8 ONCE per batch and the list offsets double as string offsets, so the
 # whole batch detokenizes into a single StringArray with zero per-row Python
-# (measured 2.4x the pandas path on the 2M-row parse stage). The regex runs
-# in RE2 (pyarrow.compute.extract_regex) and the abstraction re-uses the
-# builtin path's split/transform/join formulation on flattened segment
-# arrays — C++ end to end.
+# (measured 2.4x a pandas-UDF formulation on the 2M-row parse stage). The
+# regex runs in RE2 (pyarrow.compute.extract_regex) and the abstraction
+# re-uses the builtin path's split/transform/join formulation on flattened
+# segment arrays — C++ end to end.
 # ---------------------------------------------------------------------------
 
 #: LINE_PATTERN with RE2 named groups (extract_regex needs names). RE2 has
@@ -258,6 +186,24 @@ _LINE_PATTERN_NAMED = (
     r"(?P<bytes>\d{1,18}) (?P<rt>\d+(?:\.\d+)?)$"
 )
 _TARGET_PATTERN_NAMED = r"^(?P<uri>[^?]*)(?:\?(?P<args>.*))?$"
+
+
+def _detok_batch(tokens: pd.Series) -> pd.Series:
+    """list<int32> -> str per row: the general fallback for batches the
+    buffer detok cannot take (null tokens, non-ASCII code points). Code
+    points arrive as numpy int arrays; ASCII-range rows take the fast bytes
+    path, anything else falls back to chr-join (full Unicode)."""
+    import numpy as np
+
+    def one(toks):
+        if toks is None:
+            return None
+        arr = np.asarray(toks)
+        if arr.size and arr.max(initial=0) < 128 and arr.min(initial=0) >= 0:
+            return arr.astype(np.uint8).tobytes().decode("ascii")
+        return "".join(map(chr, toks))
+
+    return tokens.map(one)
 
 
 def _detok_list_array(tok):
@@ -306,7 +252,9 @@ def _uri_abs_arrow(uri):
 
 
 def _args_abs_arrow(args):
-    """``a=1&b=x`` -> ``a=*&b=*`` on a StringArray; '' -> ''."""
+    """``a=1&b=x`` -> ``a=*&b=*`` on a StringArray; '' -> ''. Undefined
+    edge: empty ``&&`` segments (never produced by nginx) are kept here and
+    dropped by the builtin ``args_abs_col``."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -365,20 +313,12 @@ def _parse_tokens_batch(tok):
     )
 
 
-try:  # PySpark >= 4.1
-    from pyspark.sql.functions import arrow_udf as _arrow_udf
-
-    _detok_parse_arrow = _arrow_udf(_parse_tokens_batch, PARSED_SCHEMA)
-except ImportError:  # pragma: no cover - older Spark: pandas formulation
-    _detok_parse_arrow = None
+_detok_parse_arrow = arrow_udf(_parse_tokens_batch, PARSED_SCHEMA)
 
 
 def parse_arrow(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     """Vectorized production path: one Arrow crossing per batch, struct out,
-    then the shared JVM timestamp tail. ``tokens`` passes through untouched.
-    Uses the pure-Arrow UDF when available, else the pandas formulation."""
-    if _detok_parse_arrow is None:  # pragma: no cover
-        return parse_arrow_pandas(df, tokens_col)
+    then the shared JVM timestamp tail. ``tokens`` passes through untouched."""
     parsed = df.withColumn("_p", _detok_parse_arrow(F.col(tokens_col)))
     flat = parsed.select("*", "_p.*").drop("_p")
     return _finish(flat)

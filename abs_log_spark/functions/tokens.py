@@ -9,14 +9,17 @@ row").
 
 Dual paths (parity-tested):
 - builtin expressions (`ascii`/`char` over `split`/`transform`) — valid for
-  code points < 128, which covers the synthetic log-line fixtures; used in
-  oracle-checked queries so DuckDB never needs to see an array column.
-- vectorized pandas UDFs — general Unicode, the production path.
+  code points < 128, which covers the synthetic log-line fixtures; the
+  synthetic and file readers tokenize with them, and ``parse_expr`` and
+  oracle-checked queries detokenize with them so DuckDB never needs to see
+  an array column.
+- pandas UDFs — general Unicode; the ``tokens_roundtrip`` query and the
+  tests use them for the round-trip invariant. The production parse does
+  not: it detokenizes inside its fused ``arrow_udf`` straight from the
+  ``list<int32>`` buffers (``functions.parse``).
 
-Scale note: the pandas path moves one Arrow `list<int32>` batch per 10k rows
-across the Python boundary; the int32 element type is pinned in the return
-schema so pandas' int64 default never leaks into the stored table
-(SURVEY.md section 7 hard-part 3).
+The int32 element type is pinned in the UDF return schema so pandas' int64
+default never leaks into a stored table (SURVEY.md section 7 hard-part 3).
 """
 
 from __future__ import annotations

@@ -18,6 +18,7 @@ Scale notes (100 TB corpus):
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window, functions as F
 
 
@@ -112,8 +113,11 @@ def near_dup_clusters(
     # per round. Both relations are tiny (edge-set and 2-column labels), so
     # persist them: the expensive detection runs exactly once, every round
     # reads cached rows. Lifecycle via the session cache registry, same
-    # contract as the dedup operators (bench/jobs call release_all()).
-    pairs = cache.track(pairs.persist())
+    # contract as the dedup operators (bench/jobs call release_all()). A
+    # pair set the caller already cached is the caller's to release:
+    # tracking it would let release_all() drop the caller's own cache.
+    if pairs.storageLevel == StorageLevel.NONE:
+        pairs = cache.track(pairs.persist())
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionByName(

@@ -4,11 +4,12 @@ The Spark-first restatement of abs-log's collector lifecycle ([PK]
 ``log_analyse.py`` main loop; SURVEY.md section 3.4):
 
     read sequences (prune completed part_buckets via checkpoint anti-join)
-      -> STAGE parse   : ONE fused pandas UDF (detok + regex) per Arrow batch
-      -> STAGE abstract: uri_abs/args_abs builtin exprs (JVM, codegen)
+      -> STAGE parse + abstract: ONE fused arrow_udf per Arrow batch
+         (detok + RE2 regex + uri_abs/args_abs, functions.parse)
       -> STAGE enrich  : broadcast join on the source dimension
-      -> STAGE route   : persist once, fan out to per-sink routed tables
-      -> STAGE agg     : per-sink minute summaries + error view
+      -> STAGE route   : one partitioned write, promoted to per-sink tables
+      -> STAGE agg     : this run's buckets -> histogram partials, folded
+                         into per-sink minute summaries + error view
       -> checkpoint + metrics rows (driver-side pyarrow appends)
 
 Every stage is a pure DataFrame -> DataFrame function so the driver harness
@@ -22,12 +23,13 @@ Scale design decisions (10^12 rows / 1000 executors):
   the parquet stand-in for Iceberg's atomic partition replace). Caching the
   token arrays measured 2x slower than re-reading column-pruned parquet.
 - partition promotion replaces exactly the re-run buckets -> idempotent
-  per-bucket re-runs (resume) without partial-aggregate merges.
-- minute aggregates are recomputed from the routed tables (derived data);
-  parquet column pruning means that read-back never touches token arrays.
-- the only wide shuffle in the job is the groupBy for the minute summary;
-  Spark plans it partial+final with the approx_percentile sketch merging
-  map-side. AQE coalesces the post-shuffle partitions.
+  per-bucket re-runs (resume).
+- summaries are incremental: only this run's buckets are read back from
+  the routed tables (partition-pruned; parquet column pruning keeps the
+  token arrays unread) into mergeable per-bucket partials with lossless rt
+  histograms, so quantiles stay EXACT through every fold; the summaries
+  are re-derived from the aggregate-sized partials table, never from the
+  routed history. AQE coalesces the post-shuffle partitions.
 - no Spark job for bookkeeping: a cron increment is bound by scheduling,
   not data, so the checkpoint read and mark, the metrics row and the sink
   list stay on the driver (pyarrow appends, directory listings), and
@@ -43,13 +45,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from abs_log_spark.catalog import Catalog
-from abs_log_spark.functions.abstract import args_abs_col, uri_abs_col
-from abs_log_spark.functions.parse import parse_arrow, parse_expr
+from abs_log_spark.functions.parse import parse_arrow
 from abs_log_spark.operators.aggregate import (
-    error_view,
     errors_from_hist_partials,
     merge_minute_agg_hist_partials,
-    minute_agg,
     minute_agg_hist_partials,
 )
 from abs_log_spark.operators.enrich import enrich
@@ -57,13 +56,14 @@ from abs_log_spark.plans import checkpoint as ckpt
 from abs_log_spark.plans.metrics import StageMetrics
 
 
+#: files per routed partition dir / reducers per (sink, part_bucket) combo
+#: in the unaligned layout shuffle (see run_pipeline).
+WRITE_SALT = 4
+
+
 @dataclass
 class PipelineConfig:
-    use_arrow: bool = True          # pandas-UDF parse (prod) vs builtin (oracle)
-    exact_quantiles: bool = False   # exact percentile (oracle) vs sketch (scale)
     resume: bool = True
-    routed_partition_cols: tuple[str, ...] = ("part_bucket",)
-    write_salt: int = 4  # files per routed partition dir / reducers per combo
     #: input already clustered by (source, part_bucket) -> skip the layout
     #: shuffle entirely (routing becomes a pure map job).
     input_aligned: bool = False
@@ -72,12 +72,6 @@ class PipelineConfig:
     #: (reference semantics: excluded lines never enter the stats). Invalid
     #: rows are never excluded — invalid_hits stays accurate.
     exclude_uri: str | None = None
-    #: incremental summaries: aggregate ONLY this run's new buckets into
-    #: mergeable per-bucket partials and fold partials into the final
-    #: summaries — a resumed run never re-scans completed routed history.
-    #: False = recompute summaries from all routed tables (the simple path,
-    #: kept for equivalence testing; cost grows with total history).
-    incremental_agg: bool = True
     #: steady-state partials hygiene, ON by default: each run folds
     #: CHECKPOINTED buckets' partials into the consolidated partition (see
     #: compact_partials) so the next run's fold input is one consolidated
@@ -118,12 +112,12 @@ def fan_out_summary(cat: Catalog, name: str, summary: DataFrame) -> None:
 
 def missing_partials_buckets(cat: Catalog, exclude: set[str] = frozenset()) -> set[str]:
     """Buckets present in routed history but absent from ``agg_partials`` —
-    summary rows that a partials-only rebuild would silently drop. Two known
+    summary rows that a partials-only rebuild would silently drop. Known
     producers: a crash after the routed promote but before the partials
-    write, and history built with ``incremental_agg=False`` (--full-agg)
-    before switching modes. Pure directory-listing comparison (no Spark
-    jobs); buckets folded into a consolidated partition by compaction are
-    accounted for via the compaction manifest."""
+    write, and a lost or deleted ``agg_partials`` table. Pure
+    directory-listing comparison (no Spark jobs); buckets folded into a
+    consolidated partition by compaction are accounted for via the
+    compaction manifest."""
     routed: set[str] = set()
     if os.path.isdir(cat.root):
         for t in os.listdir(cat.root):
@@ -412,24 +406,13 @@ def rebuild_summaries(spark: SparkSession, cat: Catalog) -> bool:
     return True
 
 
-def abstract_stage(df: DataFrame) -> DataFrame:
-    return df.withColumn("uri_abs", uri_abs_col(F.col("uri"))).withColumn(
-        "args_abs", args_abs_col(F.col("args"))
-    )
-
-
 def transform(seq_df: DataFrame, dim: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """parse -> abstract -> enrich, no I/O. The routed relation (FIXTURES A3):
     input columns UNTOUCHED (token-equality invariant) + parsed fields +
-    abstractions + sink/site.
-
-    The Arrow path emits abstraction columns inside the same UDF batch (one
-    Python crossing total); the expr path derives them JVM-side."""
+    abstractions + sink/site. The Arrow parse emits the abstraction columns
+    inside the same UDF batch (one Python crossing total)."""
     cfg = cfg or PipelineConfig()
-    if cfg.use_arrow:
-        parsed = parse_arrow(seq_df)  # already carries uri_abs/args_abs
-    else:
-        parsed = abstract_stage(parse_expr(seq_df))
+    parsed = parse_arrow(seq_df)
     if cfg.exclude_uri:
         parsed = parsed.where(
             ~F.col("valid") | ~F.col("uri").rlike(cfg.exclude_uri)
@@ -483,16 +466,16 @@ def run_pipeline(
     # partitions small files (measured 1094 files for 182MB). With it, one
     # file per partition. At 10^12 rows the same shuffle sizes output files
     # via spark.sql.shuffle.partitions instead of letting file count explode.
-    layout_cols = ["sink", *cfg.routed_partition_cols]
+    layout_cols = ("sink", "part_bucket")
     if not cfg.input_aligned:
         # Salt the layout shuffle: hashing only the ~|sinks| x |buckets|
         # combos into shuffle partitions caps reduce parallelism at the combo
         # count and collides hot combos (Zipf sink_a buckets carry ~2x the
-        # mean). The salt splits every combo across `write_salt` reducers ->
-        # balanced tasks, `write_salt` files per partition dir (tune so file
+        # mean). The salt splits every combo across WRITE_SALT reducers ->
+        # balanced tasks, WRITE_SALT files per partition dir (tune so file
         # size ~ 100-500MB at the target scale).
         routed = routed.withColumn(
-            "_wsalt", F.pmod(F.xxhash64("doc_id"), F.lit(cfg.write_salt))
+            "_wsalt", F.pmod(F.xxhash64("doc_id"), F.lit(WRITE_SALT))
         )
         routed = routed.repartition(
             *[F.col(c) for c in layout_cols], F.col("_wsalt")
@@ -504,7 +487,7 @@ def run_pipeline(
     # sorts rows by partition cols inside each task). At 10^12 rows this is
     # the difference between moving the full token payload over the network
     # once vs not at all.
-    cat.write(routed, "_routed_staging", partition_by=tuple(layout_cols))
+    cat.write(routed, "_routed_staging", partition_by=layout_cols)
     metrics.mark("routed_write")
     moved = cat.promote_partitions("_routed_staging", "routed_")
     metrics.mark("promote")
@@ -514,106 +497,84 @@ def run_pipeline(
     sinks = routed_sinks(cat)
 
     # Buckets in this increment come from the promoted dir names — zero
-    # extra Spark jobs. Ordering invariant (round 5): on the incremental
-    # path mark_done runs AFTER the routed promote + partials write but
-    # BEFORE compaction and rebuild_summaries (one fold per run; summaries
-    # are stale-until-next-entry after a crash, never wrong). Only the full
-    # path checkpoints last. Do NOT "restore" a mark_done-after-aggregate
-    # ordering — that reintroduces the double fold. Checkpointing before
-    # the partials write stays forbidden either way: it opened a crash
-    # window where a bucket was recorded done but its agg_partials were
-    # never written, so a resumed run skipped it and rebuild_summaries
-    # silently omitted its rows forever. Both the routed promote and the
-    # dynamic-partition-overwrite partials write are idempotent under
-    # bucket re-run, so crash-before-mark_done just re-runs the bucket.
-    # Belt-and-braces, missing_partials_buckets() also detects and heals
-    # any routed-done-but-partials-absent bucket on the next run.
+    # extra Spark jobs. Ordering invariant (round 5): mark_done runs AFTER
+    # the routed promote + partials write but BEFORE compaction and
+    # rebuild_summaries (one fold per run; summaries are
+    # stale-until-next-entry after a crash, never wrong). Do NOT "restore"
+    # a mark_done-after-aggregate ordering — that reintroduces the double
+    # fold. Checkpointing before the partials write stays forbidden too: it
+    # opened a crash window where a bucket was recorded done but its
+    # agg_partials were never written, so a resumed run skipped it and
+    # rebuild_summaries silently omitted its rows forever. Both the routed
+    # promote and the dynamic-partition-overwrite partials write are
+    # idempotent under bucket re-run, so crash-before-mark_done just re-runs
+    # the bucket. Belt-and-braces, missing_partials_buckets() also detects
+    # and heals any routed-done-but-partials-absent bucket on the next run.
     buckets = sorted(
         {d.split("=", 1)[1] for dirs in moved.values() for d in dirs if "=" in d}
     )
 
-    # Derived aggregates. Two paths:
+    # Derived aggregates, incremental (the 10^12-row resume story):
+    # aggregate ONLY this run's new buckets into mergeable per-bucket
+    # partials (lossless rt histograms -> EXACT quantiles survive the merge,
+    # see operators.aggregate.minute_agg_hist_partials), written with
+    # dynamic partition overwrite keyed by part_bucket (idempotent bucket
+    # re-runs). The final summaries fold the partials table —
+    # aggregate-sized, never the routed history. Cost ∝ increment, not
+    # total history.
     #
-    # incremental (default, the 10^12-row resume story): aggregate ONLY this
-    # run's new buckets into mergeable per-bucket partials (lossless rt
-    # histograms -> EXACT quantiles survive the merge, see
-    # operators.aggregate.minute_agg_hist_partials), written with dynamic
-    # partition overwrite keyed by part_bucket (idempotent bucket re-runs).
-    # The final summaries fold the partials table — aggregate-sized, never
-    # the routed history. Incremental cost ∝ increment, not total history.
-    #
-    # full (cfg.incremental_agg=False): recompute from all routed tables;
-    # parquet column pruning keeps it off the token arrays. Kept as the
-    # equivalence baseline — both paths must produce identical summaries.
-    if cfg.incremental_agg:
-        # Heal partials gaps BEFORE folding summaries: buckets present in
-        # routed history but absent from agg_partials (a crash inside the
-        # old mark_done window, or history built with --full-agg and then
-        # switched to incremental) would otherwise be silently dropped from
-        # every summary table by the partials-only rebuild. Backfilling
-        # re-aggregates exactly the missing buckets' routed partitions —
-        # partition-pruned, never the completed history.
-        backfill = missing_partials_buckets(cat, exclude=set(buckets))
-        agg_buckets = sorted(set(buckets) | backfill)
-        if agg_buckets:
-            inc = routed_union(spark, cat, sinks, bucket_filter=agg_buckets)
-            if inc is not None:
-                inc = metrics.observe_agg_input(inc)
-                # distinct from the streaming 'minute_agg_partials' table:
-                # batch partials are (keys, bucket, status, rt) histograms —
-                # ONE scan of the increment feeds both summary kinds
-                cat.write(
-                    minute_agg_hist_partials(inc),
-                    "agg_partials",
-                    partition_by=("part_bucket",),
-                )
-        metrics.mark("agg_partials")
-
-        # checkpoint NOW — the invariant is 'never record a bucket done
-        # before its routed partition AND its partials are durable', and
-        # both writes are above. Summaries are derived data rebuilt
-        # unconditionally at every entry, so a crash between here and the
-        # rebuild below leaves them merely stale-until-next-run, never
-        # wrong (same convergence as crash-inside-compaction).
-        if buckets:
-            ckpt.mark_done(spark, cat, run_id, "routed", buckets)
-
-        # compact strictly AFTER mark_done: folding an un-checkpointed
-        # bucket into the consolidated partition would let a
-        # crash-then-resume re-process it and double-count (its own
-        # rewritten partition + its contribution already baked into
-        # part_bucket=-1). Restricted to CHECKPOINTED buckets (resume's
-        # done-set + this run's just-marked buckets): a backfilled
-        # partition whose checkpoint row was cleared is NOT checkpointed,
-        # and folding it would make the re-ingest pre-pass subtract +
-        # re-backfill + re-fold it on every subsequent run forever
-        # (round-4 ADVICE). It stays an own-partition partial until a run
-        # actually checkpoints it. Crash inside compaction rolls
-        # forward/back via the journal (recover_compaction at next entry).
-        #
-        # Ordered BEFORE the summary rebuild (round-4 verdict ask #3): the
-        # fold over (consolidated + this run's buckets) happens exactly
-        # ONCE here, and the rebuild then merges a single already-folded
-        # partition — previously the same rows were folded twice per run
-        # (once inside rebuild, once inside compaction).
-        if cfg.auto_compact:
-            compact_partials(spark, cat, buckets=sorted(done | set(buckets)))
-            metrics.mark("compact")
-        rebuild_summaries(spark, cat)
-        metrics.mark("aggregate")
-    else:
-        backfill = set()
-        allr = routed_union(spark, cat, sinks, bucket_filter=None)
-        if allr is not None:
-            fan_out_summary(
-                cat, "minute_agg_", minute_agg(allr, exact_quantiles=cfg.exact_quantiles)
+    # Heal partials gaps BEFORE folding summaries: buckets present in routed
+    # history but absent from agg_partials (a crash inside the old mark_done
+    # window, or a lost partials table) would otherwise be silently dropped
+    # from every summary table by the partials-only rebuild. Backfilling
+    # re-aggregates exactly the missing buckets' routed partitions —
+    # partition-pruned, never the completed history.
+    backfill = missing_partials_buckets(cat, exclude=set(buckets))
+    agg_buckets = sorted(set(buckets) | backfill)
+    if agg_buckets:
+        inc = routed_union(spark, cat, sinks, bucket_filter=agg_buckets)
+        if inc is not None:
+            inc = metrics.observe_agg_input(inc)
+            # distinct from the streaming 'minute_agg_partials' table:
+            # batch partials are (keys, bucket, status, rt) histograms —
+            # ONE scan of the increment feeds both summary kinds
+            cat.write(
+                minute_agg_hist_partials(inc),
+                "agg_partials",
+                partition_by=("part_bucket",),
             )
-            fan_out_summary(cat, "errors_", error_view(allr))
-            metrics.mark("aggregate")
-        # full path: checkpoint LAST (summaries here are not incrementally
-        # healed from partials, so 'done' must imply 'summarized')
-        if buckets:
-            ckpt.mark_done(spark, cat, run_id, "routed", buckets)
+    metrics.mark("agg_partials")
+
+    # checkpoint NOW — the invariant is 'never record a bucket done before
+    # its routed partition AND its partials are durable', and both writes
+    # are above. Summaries are derived data rebuilt unconditionally at every
+    # entry, so a crash between here and the rebuild below leaves them
+    # merely stale-until-next-run, never wrong (same convergence as
+    # crash-inside-compaction).
+    if buckets:
+        ckpt.mark_done(spark, cat, run_id, "routed", buckets)
+
+    # compact strictly AFTER mark_done: folding an un-checkpointed bucket
+    # into the consolidated partition would let a crash-then-resume
+    # re-process it and double-count (its own rewritten partition + its
+    # contribution already baked into part_bucket=-1). Restricted to
+    # CHECKPOINTED buckets (resume's done-set + this run's just-marked
+    # buckets): a backfilled partition whose checkpoint row was cleared is
+    # NOT checkpointed, and folding it would make the re-ingest pre-pass
+    # subtract + re-backfill + re-fold it on every subsequent run forever
+    # (round-4 ADVICE). It stays an own-partition partial until a run
+    # actually checkpoints it. Crash inside compaction rolls forward/back
+    # via the journal (recover_compaction at next entry).
+    #
+    # Ordered BEFORE the summary rebuild (round-4 verdict ask #3): the fold
+    # over (consolidated + this run's buckets) happens exactly ONCE here,
+    # and the rebuild then merges a single already-folded partition instead
+    # of folding the same rows a second time.
+    if cfg.auto_compact:
+        compact_partials(spark, cat, buckets=sorted(done | set(buckets)))
+        metrics.mark("compact")
+    rebuild_summaries(spark, cat)
+    metrics.mark("aggregate")
 
     vals = metrics.flush(spark, cat, run_id, buckets)
     vals["buckets_processed"] = len(buckets)

@@ -35,7 +35,6 @@ def main(argv: list[str] | None = None) -> int:
         help="run the pipeline N times (fresh warehouse per rep) in ONE JVM, "
         "printing one JSON line per rep — steady-state (warm-JIT) benchmarking",
     )
-    p.add_argument("--expr-parse", action="store_true", help="builtin-expr parse instead of Arrow UDF")
     p.add_argument(
         "--aligned", action="store_true",
         help="input is clustered by (source, part_bucket): skip the layout shuffle",
@@ -44,18 +43,12 @@ def main(argv: list[str] | None = None) -> int:
         "--exclude-uri", default=None,
         help="regex: valid rows with matching uri are dropped before routing",
     )
-    p.add_argument("--exact-quantiles", action="store_true")
     p.add_argument(
         "--no-auto-compact", action="store_true",
         help="keep per-bucket agg_partials partitions instead of folding "
         "checkpointed buckets into the consolidated partition after "
         "mark_done (auto-compaction is ON by default; the fold keeps the "
         "per-run summary merge O(live keys))",
-    )
-    p.add_argument(
-        "--full-agg", action="store_true",
-        help="recompute summaries from all routed tables instead of the "
-        "incremental per-bucket partials (the simple non-resume path)",
     )
     args = p.parse_args(argv)
 
@@ -74,12 +67,9 @@ def main(argv: list[str] | None = None) -> int:
         )
     dim = gen_sources_dim(spark)
     cfg = PipelineConfig(
-        use_arrow=not args.expr_parse,
-        exact_quantiles=args.exact_quantiles,
         resume=not args.no_resume,
         input_aligned=args.aligned,
         exclude_uri=args.exclude_uri,
-        incremental_agg=not args.full_agg,
         auto_compact=not args.no_auto_compact,
     )
     if args.repeat == 1:

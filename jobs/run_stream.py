@@ -33,11 +33,9 @@ def main(argv: list[str] | None = None) -> int:
         "--available-now", action="store_true",
         help="drain everything currently in the input, then stop (backfill mode)",
     )
-    p.add_argument("--exact-quantiles", action="store_true")
     args = p.parse_args(argv)
 
     from abs_log_spark.catalog import Catalog
-    from abs_log_spark.plans.pipeline import PipelineConfig
     from abs_log_spark.session import get_spark
     from abs_log_spark.sources.synth import gen_sources_dim
     from abs_log_spark.streaming import merge_stream_partials, run_stream_foreach_batch
@@ -53,7 +51,6 @@ def main(argv: list[str] | None = None) -> int:
         args.input,
         dim,
         checkpoint_dir=args.checkpoint,
-        cfg=PipelineConfig(exact_quantiles=args.exact_quantiles, resume=False),
         max_files_per_trigger=args.max_files_per_trigger,
         available_now=args.available_now,
         on_batch=lambda bid, n: batches.append((bid, n)),

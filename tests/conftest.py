@@ -26,3 +26,31 @@ def tmp_catalog(tmp_path):
 
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+@pytest.fixture()
+def reference_catalog(spark, tmp_path):
+    """Builder for the full-recompute reference that incremental summaries
+    must equal: route ``seq`` in one pass, then write every summary table
+    from ALL routed history (exact quantiles, no partials, no fold).
+    Returns the reference Catalog."""
+    from abs_log_spark.catalog import Catalog
+    from abs_log_spark.operators.aggregate import error_view, minute_agg
+    from abs_log_spark.plans.pipeline import (
+        fan_out_summary,
+        routed_sinks,
+        routed_union,
+        transform,
+    )
+
+    def build(seq, dim):
+        cat = Catalog(root=str(tmp_path / "wh_full"))
+        cat.write(transform(seq, dim), "_routed_staging",
+                  partition_by=("sink", "part_bucket"))
+        cat.promote_partitions("_routed_staging", "routed_")
+        allr = routed_union(spark, cat, routed_sinks(cat))
+        fan_out_summary(cat, "minute_agg_", minute_agg(allr, exact_quantiles=True))
+        fan_out_summary(cat, "errors_", error_view(allr))
+        return cat
+
+    return build

@@ -2,14 +2,11 @@
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import functions as F
 
-from abs_log_spark.functions.abstract import (
-    args_abs_col,
-    args_abs_udf,
-    uri_abs_col,
-    uri_abs_udf,
-)
+from abs_log_spark.functions.abstract import args_abs_col, uri_abs_col
+from abs_log_spark.functions.parse import _args_abs_arrow, _uri_abs_arrow
 
 URI_CASES = [
     ("/api/user/123/profile", "/api/user/*/profile"),
@@ -46,21 +43,20 @@ def test_args_abs_builtin(spark):
 
 
 def test_dual_path_parity(spark):
-    """pandas-UDF path must agree with the builtin-expression path."""
+    """The Arrow kernels inside the production parse UDF agree with the
+    builtin-expression path, and with the expected values, including null
+    input -> null."""
     uris = [u for u, _ in URI_CASES] + [None]
     args = [a for a, _ in ARGS_CASES] + [None]
-    rows = [(u, a) for u in uris for a in args]
-    df = spark.createDataFrame(rows, "uri string, args string")
-    mismatches = (
-        df.select(
-            uri_abs_col(F.col("uri")).alias("u1"),
-            uri_abs_udf(F.col("uri")).alias("u2"),
-            args_abs_col(F.col("args")).alias("a1"),
-            args_abs_udf(F.col("args")).alias("a2"),
-        )
-        .where(
-            ~(F.col("u1").eqNullSafe(F.col("u2")) & F.col("a1").eqNullSafe(F.col("a2")))
-        )
-        .count()
+    df = spark.createDataFrame([(u,) for u in uris], "uri string").select(
+        uri_abs_col(F.col("uri")).alias("a")
     )
-    assert mismatches == 0
+    builtin_uri = [r.a for r in df.collect()]
+    df = spark.createDataFrame([(a,) for a in args], "args string").select(
+        args_abs_col(F.col("args")).alias("a")
+    )
+    builtin_args = [r.a for r in df.collect()]
+    arrow_uri = _uri_abs_arrow(pa.array(uris, pa.string())).to_pylist()
+    arrow_args = _args_abs_arrow(pa.array(args, pa.string())).to_pylist()
+    assert arrow_uri == builtin_uri == [e for _, e in URI_CASES] + [None]
+    assert arrow_args == builtin_args == [e for _, e in ARGS_CASES] + [None]

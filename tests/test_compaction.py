@@ -70,13 +70,10 @@ def test_compaction_preserves_summaries_and_shrinks_fold(spark, tmp_catalog):
     assert compact_partials(spark, tmp_catalog) == {"buckets_compacted": 0}
 
 
-def test_compaction_then_incremental_resume(spark, tmp_catalog, tmp_path):
+def test_compaction_then_incremental_resume(spark, tmp_catalog, reference_catalog):
     """New increments after compaction write their own partitions; the fold
     merges consolidated + live partials into exactly the full-history
     summaries."""
-    from abs_log_spark.catalog import Catalog
-    from abs_log_spark.plans.pipeline import PipelineConfig
-
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
     half = seq.where(F.col("part_bucket") < 4)
@@ -90,10 +87,7 @@ def test_compaction_then_incremental_resume(spark, tmp_catalog, tmp_path):
         str(CONSOLIDATED_BUCKET), "4", "5", "6", "7"
     }
 
-    full_cat = Catalog(root=str(tmp_path / "wh_full"))
-    run_pipeline(spark, full_cat, seq, dim, run_id="full",
-                 cfg=PipelineConfig(resume=False, incremental_agg=False,
-                                    exact_quantiles=True))
+    full_cat = reference_catalog(seq, dim)
     assert _summaries(spark, tmp_catalog) == _summaries(spark, full_cat)
 
 
@@ -169,13 +163,10 @@ def test_compaction_crash_windows_roll_forward(spark, tmp_catalog):
     assert _summaries(spark, tmp_catalog) == snap
 
 
-def test_auto_compact_pipeline_mode(spark, tmp_catalog, tmp_path):
+def test_auto_compact_pipeline_mode(spark, tmp_catalog, reference_catalog):
     """cfg.auto_compact: every run leaves agg_partials as ONE consolidated
     partition, and summaries still equal the full recompute across resumed
     increments — the steady-state O(live keys) fold, production-wired."""
-    from abs_log_spark.catalog import Catalog
-    from abs_log_spark.plans.pipeline import PipelineConfig
-
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
     cfg = PipelineConfig(auto_compact=True)
@@ -185,10 +176,7 @@ def test_auto_compact_pipeline_mode(spark, tmp_catalog, tmp_path):
     run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2", cfg=cfg)
     assert tmp_catalog.partition_values("agg_partials") == {str(CONSOLIDATED_BUCKET)}
 
-    full_cat = Catalog(root=str(tmp_path / "wh_full"))
-    run_pipeline(spark, full_cat, seq, dim, run_id="full",
-                 cfg=PipelineConfig(resume=False, incremental_agg=False,
-                                    exact_quantiles=True))
+    full_cat = reference_catalog(seq, dim)
     assert _summaries(spark, tmp_catalog) == _summaries(spark, full_cat)
 
 
@@ -257,13 +245,11 @@ def test_reingest_after_compaction(spark, tmp_catalog):
     assert _summaries(spark, tmp_catalog) == snap
 
 
-def test_multi_run_partials_stay_bounded(spark, tmp_catalog, tmp_path):
+def test_multi_run_partials_stay_bounded(spark, tmp_catalog, reference_catalog):
     """Judge r3 ask #3: with default auto-compaction, a long resumed-run
     sequence keeps agg_partials at ONE consolidated partition after every
     run (O(live keys), not O(retained buckets)) while summaries track the
     growing history exactly."""
-    from abs_log_spark.catalog import Catalog
-
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
     for step in range(1, 5):  # ingest 2 more buckets per run
@@ -273,10 +259,7 @@ def test_multi_run_partials_stay_bounded(spark, tmp_catalog, tmp_path):
             str(CONSOLIDATED_BUCKET)
         }, f"partials not consolidated after run {step}"
 
-    full_cat = Catalog(root=str(tmp_path / "wh_full"))
-    run_pipeline(spark, full_cat, seq, dim, run_id="full",
-                 cfg=PipelineConfig(resume=False, incremental_agg=False,
-                                    exact_quantiles=True))
+    full_cat = reference_catalog(seq, dim)
     assert _summaries(spark, tmp_catalog) == _summaries(spark, full_cat)
 
 

@@ -89,6 +89,28 @@ def test_clusters_star_and_chain(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4, 7: 7}
 
 
+def test_clusters_leave_callers_cached_pairs_cached(spark):
+    """near_dup_clusters persists (and registers for release_all) only a
+    pair set that is not cached yet: a caller's own persisted ``pairs``
+    stays cached after the operator's caches are released."""
+    from pyspark import StorageLevel
+
+    from abs_log_spark import cache
+
+    docs = spark.createDataFrame([(i,) for i in range(1, 5)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(1, 2), (3, 4)], "doc_a long, doc_b long"
+    ).persist(StorageLevel.MEMORY_ONLY)
+    try:
+        got = {r.doc_id: r.cluster_id for r in near_dup_clusters(docs, pairs).collect()}
+        assert got == {1: 1, 2: 1, 3: 3, 4: 3}
+        cache.release_all()
+        assert pairs.is_cached
+        assert pairs.storageLevel != StorageLevel.NONE
+    finally:
+        pairs.unpersist()
+
+
 def test_scrub_pii_counts_and_placeholders(spark):
     rows = [
         (1, "write to bob99@mail.com and ann@site.org now"),

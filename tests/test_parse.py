@@ -41,7 +41,7 @@ def test_parse_paths_agree(spark):
 
 def test_arrow_abstraction_matches_builtin(spark):
     """uri_abs/args_abs emitted inside the Arrow parse UDF == builtin
-    transform()-based expressions (three-way dual-path parity)."""
+    transform()-based expressions (dual-path parity)."""
     from abs_log_spark.functions.abstract import args_abs_col, uri_abs_col
 
     seq = gen_sequences(spark, 400, invalid_every=9)
@@ -53,26 +53,29 @@ def test_arrow_abstraction_matches_builtin(spark):
     assert mism == 0
 
 
-def test_arrow_pandas_paths_agree(spark):
-    """Pure-Arrow UDF path == pandas-UDF fallback path, including the
-    batches the Arrow fast path must hand off: null tokens and non-ASCII
-    code points (both detokenize via the per-row fallback)."""
+def test_parse_arrow_fallback_batch_null_and_non_ascii(spark):
+    """A batch the buffer detok cannot take (null tokens, non-ASCII code
+    points) goes through the per-row fallback and still parses every row:
+    the null-token row comes out invalid with null fields, the non-ASCII
+    line parses in full Unicode, and the ASCII rows around them are
+    unaffected."""
     from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
-    from abs_log_spark.functions.parse import parse_arrow_pandas
-
-    seq = gen_sequences(spark, 300, invalid_every=11)
-    # append adversarial rows: null tokens + a non-ASCII (fallback) line
-    extra = spark.createDataFrame(
-        [(None,), ([ord(c) for c in GOOD.replace("alpha", "ålpha")],)],
+    lines = [GOOD, None, GOOD.replace("alpha", "ålpha"), BAD, GOOD_NO_ARGS]
+    df = spark.createDataFrame(
+        [([ord(c) for c in ln] if ln is not None else None,) for ln in lines],
         StructType([StructField("tokens", ArrayType(IntegerType()))]),
-    )
-    base = seq.select("tokens").unionByName(extra)
-    a = parse_arrow(base).drop("tokens")
-    p = parse_arrow_pandas(base).drop("tokens")
-    assert a.exceptAll(p).count() + p.exceptAll(a).count() == 0
-    # the non-ASCII line still parses (fallback path is full-Unicode)
-    assert a.where(F.col("args") == "q=ålpha&page=2").count() == 1
+    ).coalesce(1)  # one partition -> one Arrow batch mixing all five rows
+    g, nul, uni, b, g2 = parse_arrow(df).collect()
+    assert g.valid and g.args == "q=alpha&page=2" and g.args_abs == "q=*&page=*"
+    assert nul.tokens is None and not nul.valid
+    assert nul.ip is None and nul.uri is None and nul.status is None and nul.ts is None
+    assert uni.valid and uni.ip == "10.0.0.1" and uni.args == "q=ålpha&page=2"
+    assert uni.uri == "/api/user/123/profile" and uni.uri_abs == "/api/user/*/profile"
+    assert uni.args_abs == "q=*&page=*" and uni.status == 200 and uni.bytes == 1234
+    assert str(uni.ts) == "2024-01-01 00:05:07"
+    assert not b.valid and b.uri is None
+    assert g2.valid and g2.args == "" and g2.status == 404
 
 
 def test_tokens_untouched_roundtrip(spark):
@@ -92,15 +95,13 @@ def test_tokens_untouched_roundtrip(spark):
 
 def test_trailing_newline_invalid_on_every_path(spark):
     """Pinned behavior (round-4 ADVICE): a token array carrying a trailing
-    line terminator is INVALID on all three paths identically. Python re and
+    line terminator is INVALID on both paths identically. Python re and
     Java regex `$` match before a final newline while RE2's does not; the
     pattern now anchors with a strict end-of-text lookahead on the
     Python/Java side so the engines cannot disagree."""
-    from abs_log_spark.functions.parse import parse_arrow_pandas
-
     lines = [GOOD, GOOD + "\n", GOOD + "\r\n", GOOD + "\n\n", GOOD_NO_ARGS]
     df = _tok_df(spark, lines)
-    for path in (parse_arrow, parse_arrow_pandas, parse_expr):
+    for path in (parse_arrow, parse_expr):
         got = [r.valid for r in path(df).select("valid").collect()]
         assert got == [True, False, False, False, True], path.__name__
 
@@ -110,9 +111,7 @@ def test_regex_matching_cast_hostile_lines_are_invalid_not_fatal(spark):
     Before round 5, rt='1.2.3' matched `[0-9.]+` then CRASHED the float
     cast — one malformed line failing an entire Arrow batch (the whole job
     at scale). Pinned: multi-dot rt and int64-overflow bytes are invalid on
-    all three paths, counted, never fatal."""
-    from abs_log_spark.functions.parse import parse_arrow_pandas
-
+    both paths, counted, never fatal."""
     lines = [
         GOOD,
         '10.0.0.1 - [01/Jan/2024:00:05:07 +0000] "GET /x HTTP/1.1" 200 1234 1.2.3',
@@ -122,7 +121,7 @@ def test_regex_matching_cast_hostile_lines_are_invalid_not_fatal(spark):
         '10.0.0.1 - [01/Jan/2024:00:05:07 +0000] "GET /x HTTP/1.1" 200 1234 5.',
     ]
     df = _tok_df(spark, lines)
-    for path in (parse_arrow, parse_arrow_pandas, parse_expr):
+    for path in (parse_arrow, parse_expr):
         got = [r.valid for r in path(df).select("valid").collect()]
         assert got == [True, False, False, False, False], path.__name__
 

@@ -178,11 +178,9 @@ def test_hist_partials_merge_equals_exact_minute_agg(spark):
             assert math.isclose(gv, wv, rel_tol=1e-9, abs_tol=1e-12), (k, c, gv, wv)
 
 
-def test_incremental_agg_on_resume(spark, tmp_catalog, tmp_path):
+def test_incremental_agg_on_resume(spark, tmp_catalog, reference_catalog):
     """A resumed run's summary aggregation reads ONLY the new buckets (the
     increment), yet the final summaries equal a full recompute."""
-    from abs_log_spark.catalog import Catalog
-
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
     half = seq.where(F.col("part_bucket") < 4)
@@ -210,10 +208,7 @@ def test_incremental_agg_on_resume(spark, tmp_catalog, tmp_path):
     assert "PartitionFilters" in plan and "part_bucket" in plan.split("PartitionFilters", 1)[1][:200]
 
     # (c) summaries identical to a from-scratch full recompute
-    full_cat = Catalog(root=str(tmp_path / "wh_full"))
-    run_pipeline(spark, full_cat, seq, dim, run_id="full",
-                 cfg=PipelineConfig(resume=False, incremental_agg=False,
-                                    exact_quantiles=True))
+    full_cat = reference_catalog(seq, dim)
     for s in ("sink_a", "sink_b", "sink_c"):
         if not tmp_catalog.exists(f"minute_agg_{s}"):
             assert not full_cat.exists(f"minute_agg_{s}")
@@ -304,21 +299,23 @@ def test_crash_between_promote_and_partials_heals(spark, tmp_catalog):
         ), s
 
 
-def test_full_to_incremental_mode_mixing_backfills(spark, tmp_catalog):
-    """History built with --full-agg has no partials; a later incremental run
-    must backfill them instead of rebuilding summaries from an empty partials
+def test_missing_agg_partials_table_backfills(spark, tmp_catalog):
+    """A warehouse whose whole agg_partials table is gone (routed history
+    and checkpoints intact) must backfill every bucket's partials from the
+    routed tables instead of rebuilding summaries from an empty partials
     table (silently dropping all prior history)."""
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
-    run_pipeline(spark, tmp_catalog, seq, dim, run_id="full",
-                 cfg=PipelineConfig(incremental_agg=False, exact_quantiles=True))
+    nc = PipelineConfig(auto_compact=False)
+    run_pipeline(spark, tmp_catalog, seq, dim, run_id="r1", cfg=nc)
     pv1 = {
         s: tmp_catalog.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0]
         for s in ("sink_a", "sink_b", "sink_c")
         if tmp_catalog.exists(f"minute_agg_{s}")
     }
+    tmp_catalog.drop("agg_partials")
     assert not tmp_catalog.exists("agg_partials")
-    r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="inc")  # incremental
+    r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2", cfg=nc)
     assert r2["buckets_processed"] == 0 and r2["buckets_backfilled"] == 8
     assert tmp_catalog.exists("agg_partials")
     for s, v in pv1.items():

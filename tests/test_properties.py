@@ -1,21 +1,19 @@
 """Property-based tests (hypothesis) for the pure vectorized kernels.
 
-These run WITHOUT a SparkSession: the pandas-series functions are exactly
-what executes inside the Arrow UDFs, so properties proven here hold for the
-distributed path (dual-path parity tests tie the two together).
+These run WITHOUT a SparkSession: the pyarrow kernels are exactly what
+executes inside the production parse ``arrow_udf``, so properties proven
+here hold for the distributed path (dual-path parity tests tie them to the
+builtin expressions).
 """
 
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from abs_log_spark.functions.abstract import (
-    _abstract_args_series,
-    _abstract_uri_series,
-)
-from abs_log_spark.functions.parse import _detok_batch
+from abs_log_spark.functions.parse import _args_abs_arrow, _detok_batch, _uri_abs_arrow
 
 SEGMENT = st.text(
     alphabet=st.characters(whitelist_categories=("Ll", "Lu", "Nd"), max_codepoint=127),
@@ -29,19 +27,17 @@ URI = st.lists(SEGMENT, min_size=1, max_size=6).map(lambda segs: "/" + "/".join(
 @given(st.lists(URI, min_size=1, max_size=20))
 def test_uri_abstraction_idempotent(uris):
     """abs(abs(x)) == abs(x): '*' is never itself volatile."""
-    s = pd.Series(uris)
-    once = _abstract_uri_series(s)
-    twice = _abstract_uri_series(once)
-    assert (once == twice).all()
+    once = _uri_abs_arrow(pa.array(uris, pa.string()))
+    twice = _uri_abs_arrow(once)
+    assert once.to_pylist() == twice.to_pylist()
 
 
 @settings(max_examples=200, deadline=None)
 @given(st.lists(URI, min_size=1, max_size=20))
 def test_uri_abstraction_preserves_shape(uris):
     """Segment count and non-volatile segments survive abstraction."""
-    s = pd.Series(uris)
-    out = _abstract_uri_series(s)
-    for orig, abst in zip(s, out):
+    out = _uri_abs_arrow(pa.array(uris, pa.string())).to_pylist()
+    for orig, abst in zip(uris, out):
         o_segs, a_segs = orig.split("/"), abst.split("/")
         assert len(o_segs) == len(a_segs)
         for o, a in zip(o_segs, a_segs):
@@ -59,7 +55,7 @@ ARGKEY = st.text(
 @given(st.lists(st.tuples(ARGKEY, ARGKEY), min_size=1, max_size=5))
 def test_args_abstraction_keeps_keys_wildcards_values(kvs):
     args = "&".join(f"{k}={v}" for k, v in kvs)
-    out = _abstract_args_series(pd.Series([args])).iloc[0]
+    out = _args_abs_arrow(pa.array([args], pa.string()))[0].as_py()
     assert out == "&".join(f"{k}=*" for k, _ in kvs)
 
 
