@@ -12,6 +12,14 @@ appended a few rows at a time on the driver with pyarrow
 (:meth:`Catalog.append_rows`): one parquet file per append, the same
 columns, physical types and footer Spark writes, and no Spark job.
 
+Every multi-step replace of live data goes through ONE crash-safe swap
+(:meth:`Catalog.swap`): the caller drops the staging table and writes it
+completely, a write-ahead journal appears atomically, idempotent moves and
+removals run, and the journal is removed. :meth:`Catalog.recover` finishes
+a journaled swap a crash interrupted, or rolls back one whose journal never
+appeared; every entry point that reads or writes swapped state calls it
+first.
+
 Partition layout is the scale story: at 10^12 rows the input is laid out by
 ``(source, part_bucket)`` (hash-bucketed doc_id) so that (a) resume can prune
 whole partitions via the checkpoint anti-join, (b) per-source skew is split
@@ -34,6 +42,11 @@ from pyspark.sql.types import StructType
 
 #: footer key under which Spark stores a data file's schema as StructType JSON
 SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
+
+#: the one staging table of :meth:`Catalog.swap` (one swap is in flight at
+#: a time) and its write-ahead journal, both at the warehouse root
+SWAP_STAGING = "_swap_staging"
+SWAP_JOURNAL = "_swap_journal.json"
 
 #: Spark type name -> the arrow type that writes Spark's parquet physical
 #: type (timestamps go out as INT96, see :meth:`Catalog.append_rows`)
@@ -102,8 +115,11 @@ class Catalog:
     def read_arrow(self, table: str, columns: list[str], filters=None) -> pa.Table:
         """Driver-side pyarrow read of a small table (no Spark job). Hidden
         ``.``/``_`` files, such as a crashed append's temp file, are skipped
-        as Spark skips them."""
-        return pq.read_table(self.path(table), columns=columns, filters=filters)
+        as Spark skips them. Timestamps come back in Spark's microseconds."""
+        return pq.read_table(
+            self.path(table), columns=columns, filters=filters,
+            coerce_int96_timestamp_unit="us",
+        )
 
     def append_rows(self, table: str, schema: StructType, rows: list[tuple]) -> None:
         """Append ``rows`` as ONE parquet file written on the driver with
@@ -128,6 +144,45 @@ class Catalog:
         tmp = os.path.join(d, f".{name}.tmp")
         pq.write_table(data, tmp, compression="zstd", use_deprecated_int96_timestamps=True)
         os.replace(tmp, os.path.join(d, name))
+
+    def swap(self, moves: list[tuple[str, str]], removes: list[str] = ()) -> None:
+        """Crash-safe replace of live paths by the completely written
+        :data:`SWAP_STAGING` table. ``moves`` are ``(src, dst)`` file or
+        directory pairs and ``removes`` are directories, all relative to the
+        warehouse root; a move replaces its destination, and no removed
+        directory may be a destination.
+
+        The journal is written under a hidden temp name and renamed into
+        place, so it either names every step or does not exist. Every step
+        after it is idempotent (a move whose source is gone already ran),
+        so :meth:`recover` can re-run it from any crash point."""
+        tmp = self.path(f".{SWAP_JOURNAL}.tmp")
+        with open(tmp, "w") as f:
+            json.dump({"moves": moves, "removes": list(removes)}, f)
+        os.replace(tmp, self.path(SWAP_JOURNAL))
+        self.recover()
+
+    def recover(self) -> None:
+        """Finish the swap a crash interrupted (journal present), else roll
+        back an uncommitted one: its staging and a temp journal left
+        mid-write are dropped, and the live paths were never touched."""
+        journal = self.path(SWAP_JOURNAL)
+        if os.path.exists(journal):
+            with open(journal) as f:
+                j = json.load(f)
+            for rel in j["removes"]:
+                if os.path.isdir(self.path(rel)):
+                    shutil.rmtree(self.path(rel))
+            for src, dst in j["moves"]:
+                src, dst = self.path(src), self.path(dst)
+                if os.path.exists(src):  # else this move already ran
+                    if os.path.isdir(dst):
+                        shutil.rmtree(dst)
+                    os.replace(src, dst)
+        self.drop(SWAP_STAGING)
+        for p in (self.path(f".{SWAP_JOURNAL}.tmp"), journal):
+            if os.path.exists(p):
+                os.remove(p)
 
     def partition_values(self, table: str, key: str = "part_bucket") -> set[str]:
         """Partition values of a table's top-level ``key=value`` dirs, from

@@ -9,7 +9,6 @@ Four families, all DataFrame-native:
   materializes all pairs, only per-bucket pairs.
 - SimHash: 64-bit signature from word 3-gram shingles (computed in-row);
   chunk-LSH (4 x 16-bit) for candidates; Hamming-distance verify.
-- n-gram Jaccard: the exact verifier used standalone on a candidate set.
 
 Embedding near-dup lives in operators/ann.py (cosine path).
 """
@@ -28,7 +27,6 @@ from abs_log_spark.functions.similarity import (
     jaccard_from_arrays,
     minhash_signature_arr,
     oversized_buckets,
-    shingles_col,
     simhash_signature,
 )
 from abs_log_spark.functions.text import fingerprint_md5_col
@@ -131,12 +129,11 @@ def minhash_lsh_pairs(
         # third (skipped_out): persist the tiny (doc_id, band, bucket)
         # relation or every branch re-derives the signatures from shingles
         # (measured 1.5x the whole query). Same lifecycle as docs_sh.
-        # Persisted PRE-PARTITIONED on the bucket key: the count pre-pass
-        # and the member-list groupBy cluster on the same (band, bucket),
-        # so one repartition at persist time replaces the two groupBy
-        # exchanges both consumers would otherwise each pay (guide §2.4 —
-        # operations keyed the same way share one exchange; the cached
-        # HashPartitioning satisfies ClusteredDistribution downstream).
+        # The repartition on the bucket key before the persist does NOT
+        # remove the two downstream groupBy exchanges: Spark 4 AQE-wraps
+        # cached plans (canChangeCachedPlanOutputPartitioning), and a
+        # round-6 A/B measured it neutral. It stays until its own paired
+        # run on near_dup_dedup justifies deleting it.
         bb = _own_persist(bb.repartition("band", "bucket"), persisted_out)
         if skipped_out is not None:
             skipped_out.append(oversized_buckets(bb, max_bucket_size))
@@ -210,9 +207,9 @@ def simhash_pairs(
     ).select("doc_id", "cb.band", "cb.bucket")
     if max_bucket_size is not None:
         # same as minhash: the count pre-pass is a second consumer of the
-        # chunk relation — persist it rather than re-exploding per branch,
-        # and pre-partition on the bucket key so both bucket groupBys run
-        # exchange-free off the cache (see minhash_lsh_pairs)
+        # chunk relation — persist it rather than re-exploding per branch;
+        # the repartition before the persist is measured neutral, not
+        # exchange-saving (see minhash_lsh_pairs)
         chunks = _own_persist(chunks.repartition("band", "bucket"), persisted_out)
         if skipped_out is not None:
             skipped_out.append(oversized_buckets(chunks, max_bucket_size))
@@ -226,14 +223,6 @@ def simhash_pairs(
         .where(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
     )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame, pairs: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Exact n-gram Jaccard for an explicit candidate-pair set."""
-    docs_sh = df.select("doc_id", shingles_col(F.col(text_col)).alias("sh"))
-    return jaccard_from_arrays(pairs, docs_sh)
 
 
 def with_near_dup_copies(df: DataFrame, id_offset: int = 1_000_000, suffix: str = " zqx zqy zqz") -> DataFrame:

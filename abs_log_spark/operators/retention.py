@@ -1,16 +1,15 @@
 """Old-data expiry (SURVEY.md S5) — abs-log's retention cleanup.
 
-Reference behavior ([PK] config-driven retention): drop aggregate documents
-older than N days so the summary store stays bounded. On Iceberg this is a
-metadata-level ``DELETE FROM t WHERE minute < cutoff`` (partition drop when
-the table is partitioned by a minute-derived column). The parquet stand-in
-rewrites the (tiny) summary table filtered to the keep-range and swaps it in
-atomically via the staging-promote move the catalog already uses.
-
-Summary tables are bounded by |minutes| x |endpoints| — rewriting them is
-cheap at any input scale; the 10^12-row routed tables are expired by
-dropping whole ``part_bucket``/date partitions instead (directory removal,
-never a rewrite).
+Reference behavior ([PK] config-driven retention): drop old data so the
+stores stay bounded. The summaries are re-derived from ``agg_partials`` at
+every run, so expiry acts on the inputs of that fold, never on the summary
+tables themselves: :func:`expire_buckets` removes whole input buckets from
+the routed tables, the histogram partials and the checkpoint, then rebuilds
+the summaries. The 10^12-row routed tables are expired by dropping whole
+``part_bucket`` partitions (directory removal, never a rewrite); the
+partials and checkpoint rewrites go through the catalog's journaled swap
+(:meth:`Catalog.swap`), so a crash at any step rolls forward or back at the
+next entry.
 """
 
 from __future__ import annotations
@@ -18,157 +17,9 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 from abs_log_spark.catalog import Catalog
-
-
-#: Parallelism floor for whole-table retention rewrites. ``coalesce(1)``
-#: single-threads the rewrite once a summary has grown (round-4 verdict
-#: note); a small fixed repartition keeps the rewrite parallel while still
-#: bounding file count — summary tables are aggregate-sized, so 8 files of
-#: any grown summary are each comfortably sized.
-REWRITE_PARTITIONS = 8
-
-
-def _staging_name(table: str) -> str:
-    return f"_{table}_retention_staging"
-
-
-def _tomb_suffix(name: str) -> str:
-    """Hidden tombstone dir name (dot prefix: Spark readers skip it)."""
-    return f".{name}.tombstone"
-
-
-def recover_retention(cat: Catalog, table: str) -> None:
-    """Roll a crashed retention swap forward (idempotent; called at every
-    retention entry point, same discipline as compaction's
-    ``recover_compaction``).
-
-    Both swap shapes write staging COMPLETELY (parquet ``_SUCCESS``) before
-    any live directory moves, and every move is an atomic ``os.replace`` of
-    the form live -> hidden tombstone, staging -> live, tombstone removed.
-    So at recovery time:
-
-    - tombstone present + live dir present: the swap completed, only the
-      tombstone cleanup remained -> remove it.
-    - tombstone present + live dir absent: crash between the two replaces ->
-      promote the staging dir if it exists (the kept rows — this is the
-      window the round-3 ADVICE flagged as silent loss); a boundary day that
-      legitimately emptied out has no staging dir and stays deleted.
-    - staging present without a tombstone: the write never reached the swap
-      -> live dirs untouched, drop staging.
-
-    Rows are never silently dropped (P3): kept rows live in staging until
-    the live dir is restored, and the tombstone preserves the pre-swap state
-    until the kept rows are in place.
-    """
-    staging = _staging_name(table)
-    # table-level swap (unpartitioned summary layout)
-    ttomb = cat.path(_tomb_suffix(table))
-    if os.path.isdir(ttomb):
-        if not os.path.isdir(cat.path(table)):
-            if os.path.isdir(cat.path(staging)):
-                os.replace(cat.path(staging), cat.path(table))
-            else:  # staging vanished too: restore the pre-swap table
-                os.replace(ttomb, cat.path(table))
-        shutil.rmtree(ttomb, ignore_errors=True)
-    # partition-level swap (day-partitioned boundary rewrite)
-    root = cat.path(table)
-    if os.path.isdir(root):
-        for d in os.listdir(root):
-            if not (d.startswith(".day=") and d.endswith(".tombstone")):
-                continue
-            day_dir = d[1 : -len(".tombstone")]
-            bdir = os.path.join(root, day_dir)
-            src = os.path.join(cat.path(staging), day_dir)
-            if not os.path.isdir(bdir) and os.path.isdir(src):
-                os.replace(src, bdir)
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    cat.drop(staging)
-
-
-def _replace_table(cat: Catalog, staging: str, table: str) -> None:
-    """Atomic-as-possible whole-table replace via the tombstone protocol
-    (see :func:`recover_retention` for the crash matrix)."""
-    ttomb = cat.path(_tomb_suffix(table))
-    shutil.rmtree(ttomb, ignore_errors=True)
-    if os.path.isdir(cat.path(table)):
-        os.replace(cat.path(table), ttomb)
-    os.replace(cat.path(staging), cat.path(table))
-    shutil.rmtree(ttomb, ignore_errors=True)
-
-
-def expire_summary(
-    spark: SparkSession,
-    cat: Catalog,
-    table: str,
-    cutoff,
-    ts_col: str = "minute",
-) -> dict:
-    """Delete rows with ``ts_col < cutoff`` from a summary table.
-
-    Rows with a NULL ``ts_col`` — the invalid-line group, which has no
-    timestamp to age — are KEPT: the engine's rows-are-never-silently-
-    dropped invariant (P3) extends to retention.
-
-    Scale path: on a day-partitioned table, every day directory strictly
-    older than the cutoff's date is dropped as a pure file/metadata
-    operation (Iceberg partition DELETE); only the boundary day (plus any
-    unpartitioned layout) is row-rewritten. Both rewrites go through the
-    staged tombstone-swap protocol so a crash at any point rolls forward at
-    the next entry (:func:`recover_retention`) — kept rows are never lost.
-    Returns {"kept", "dropped"}. Equivalent Iceberg statement:
-    ``DELETE FROM {table} WHERE {ts_col} < TIMESTAMP '{cutoff}'``.
-    """
-    from datetime import datetime
-
-    recover_retention(cat, table)
-    if not cat.exists(table):
-        return {"kept": 0, "dropped": 0}
-    total = cat.read(spark, table).count()
-    cutoff_date = datetime.fromisoformat(str(cutoff)).date()
-    root = cat.path(table)
-    for d in os.listdir(root):
-        if not d.startswith("day="):
-            continue
-        val = d.split("=", 1)[1]
-        # the null partition (invalid-line groups) never ages out
-        if val.startswith("__"):
-            continue
-        if datetime.fromisoformat(val).date() < cutoff_date:
-            shutil.rmtree(os.path.join(root, d))
-    if not cat.exists(table):  # every day dir aged out
-        cat.drop(table)
-        return {"kept": 0, "dropped": total}
-    df = cat.read(spark, table)  # re-read: whole-day drops already applied
-    keep_pred = F.col(ts_col).isNull() | (F.col(ts_col) >= F.lit(cutoff))
-    staging = _staging_name(table)
-    if "day" in df.columns:
-        # only the BOUNDARY day needs a row rewrite; every other surviving
-        # day directory is untouched (no read, no write). Ordering (the
-        # round-3 ADVICE crash window): staging materializes FULLY, then the
-        # live day moves ASIDE atomically (hidden tombstone — never deleted
-        # before the kept rows are in place), then staging moves in.
-        bdir = os.path.join(root, f"day={cutoff_date.isoformat()}")
-        if os.path.isdir(bdir):
-            boundary = df.where(F.col("day") == F.lit(cutoff_date)).where(keep_pred)
-            cat.drop(staging)
-            cat.write(boundary.coalesce(1), staging, partition_by=("day",))
-            tomb = os.path.join(root, _tomb_suffix(f"day={cutoff_date.isoformat()}"))
-            shutil.rmtree(tomb, ignore_errors=True)
-            os.replace(bdir, tomb)
-            src = os.path.join(cat.path(staging), f"day={cutoff_date.isoformat()}")
-            if os.path.isdir(src):  # boundary day may empty out entirely
-                os.replace(src, bdir)
-            shutil.rmtree(tomb)
-            cat.drop(staging)
-        kept = cat.read(spark, table).count() if cat.exists(table) else 0
-    else:
-        cat.write(df.where(keep_pred).repartition(REWRITE_PARTITIONS), staging)
-        kept = cat.read(spark, staging).count()
-        _replace_table(cat, staging, table)
-    return {"kept": kept, "dropped": total - kept}
 
 
 def expire_buckets(spark: SparkSession, cat: Catalog, buckets: list[str]) -> dict:
@@ -185,38 +36,18 @@ def expire_buckets(spark: SparkSession, cat: Catalog, buckets: list[str]) -> dic
     equivalent: partition DELETEs on the two data tables + checkpoint DELETE
     + the summary REPLACE, in one transaction group.
     """
-    from abs_log_spark.plans.checkpoint import CHECKPOINT_TABLE, filter_pending
-    from abs_log_spark.plans.pipeline import rebuild_summaries, subtract_compacted
+    from abs_log_spark.plans import checkpoint as ckpt
+    from abs_log_spark.plans.pipeline import rebuild_summaries, routed_sinks, subtract_compacted
 
     dropped = {"routed_partitions": 0, "partials_partitions": 0, "checkpoint_rows": 0}
     # buckets folded into the consolidated partials partition have no own
     # partition dir to drop: subtract their exact contribution instead —
     # BEFORE the routed drop, which is the data the recompute reads
     dropped["partials_subtracted"] = subtract_compacted(spark, cat, buckets)
-    tables = [
-        t for t in os.listdir(cat.root)
-        if t.startswith("routed_") and os.path.isdir(cat.path(t))
-    ] if os.path.isdir(cat.root) else []
-    for t in tables:
-        dropped["routed_partitions"] += expire_routed_buckets(cat, t, buckets)
+    for sink in routed_sinks(cat):
+        dropped["routed_partitions"] += expire_routed_buckets(cat, f"routed_{sink}", buckets)
     dropped["partials_partitions"] = expire_routed_buckets(cat, "agg_partials", buckets)
-
-    recover_retention(cat, CHECKPOINT_TABLE)
-    if cat.exists(CHECKPOINT_TABLE):
-        ck = cat.read(spark, CHECKPOINT_TABLE)
-        # same small-set/anti-join switch as resume's filter_pending:
-        # expiring thousands of buckets must not build a thousands-deep
-        # NOT-isin predicate chain (evaluated per row, never indexed)
-        keep = filter_pending(ck, {str(b) for b in buckets}, key_col="partition_key")
-        n_total = ck.count()
-        staging = _staging_name(CHECKPOINT_TABLE)
-        cat.write(keep.repartition(REWRITE_PARTITIONS), staging)
-        n_keep = cat.read(spark, staging).count()
-        # tombstone swap: a crash can no longer leave the checkpoint table
-        # deleted with the kept rows stranded in staging
-        _replace_table(cat, staging, CHECKPOINT_TABLE)
-        dropped["checkpoint_rows"] = n_total - n_keep
-
+    dropped["checkpoint_rows"] = ckpt.expire(cat, {str(b) for b in buckets})
     rebuild_summaries(spark, cat)
     return dropped
 
@@ -226,12 +57,8 @@ def expire_routed_buckets(cat: Catalog, table: str, buckets: list[str]) -> int:
     a metadata/file operation, no data rewrite). ``buckets`` are partition
     values of the table's layout key, e.g. ``["0", "1"]`` for part_bucket.
     """
-    import shutil
-
     root = cat.path(table)
     dropped = 0
-    if not os.path.isdir(root):
-        return 0
     for b in buckets:
         p = os.path.join(root, f"part_bucket={b}")
         if os.path.isdir(p):

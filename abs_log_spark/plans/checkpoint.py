@@ -17,8 +17,11 @@ The checkpoint table is a handful of rows per run, so it is read and
 appended on the driver with pyarrow (``Catalog.read_arrow`` /
 ``Catalog.append_rows``): a Spark job per bookmark cost more scheduling
 than the bookmark is worth. The files keep the columns and types Spark
-writes, and retention still rewrites the table with Spark, so Spark and
-DuckDB readers see one table whichever writer produced a file.
+writes, so Spark and DuckDB readers see one table whichever writer produced
+a file (earlier Spark-written history included). Bucket expiry rewrites the
+kept rows the same way and swaps them in with the catalog's journaled swap
+(:func:`expire`); every read and append first recovers a swap a crash
+interrupted (:meth:`Catalog.recover`).
 """
 
 from __future__ import annotations
@@ -29,7 +32,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
-from abs_log_spark.catalog import Catalog
+from abs_log_spark.catalog import SWAP_STAGING, Catalog
 
 CHECKPOINT_TABLE = "checkpoint"
 CHECKPOINT_SCHEMA = StructType(
@@ -38,23 +41,10 @@ CHECKPOINT_SCHEMA = StructType(
 )
 
 
-def _heal(cat: Catalog) -> None:
-    """Roll forward any retention swap a previous run crashed inside, BEFORE
-    any checkpoint read or append. Without this, a crash inside
-    expire_buckets' ``_replace_table`` window (live table moved to tombstone,
-    staging not yet promoted) makes the next run see NO checkpoint table:
-    ``completed_partitions`` returns empty, everything re-ingests, and
-    ``mark_done``'s append RECREATES the live table — after which the next
-    ``recover_retention`` classifies the swap as complete and deletes the
-    tombstone, permanently discarding all pre-crash lineage. Healing at
-    every consumer closes that window (round-4 ADVICE, medium)."""
-    from abs_log_spark.operators.retention import recover_retention
-
-    recover_retention(cat, CHECKPOINT_TABLE)
-
-
 def completed_partitions(spark: SparkSession, cat: Catalog, stage: str) -> set[str]:
-    _heal(cat)
+    # a crash inside expire's swap can leave no live table until recovery
+    # moves the kept rows in: reading first would re-ingest every bucket
+    cat.recover()
     if not cat.exists(CHECKPOINT_TABLE):
         return set()
     keys = cat.read_arrow(
@@ -101,7 +91,24 @@ def mark_done(
 ) -> None:
     if not partition_keys:
         return
-    _heal(cat)  # never append-recreate a table stranded mid-retention-swap
+    cat.recover()  # never append to a table stranded mid-swap
     now = datetime.now(timezone.utc)
     rows = [(run_id, stage, str(k), "done", now) for k in partition_keys]
     cat.append_rows(CHECKPOINT_TABLE, CHECKPOINT_SCHEMA, rows)
+
+
+def expire(cat: Catalog, keys: set[str]) -> int:
+    """Delete every checkpoint row whose ``partition_key`` is in ``keys``
+    (a re-ingest of those buckets then reprocesses them). The kept rows,
+    ``ts`` exact, are rewritten on the driver as one file in the
+    :meth:`Catalog.append_rows` format and replace the table in one
+    journaled :meth:`Catalog.swap` — no Spark job. Returns rows dropped."""
+    cat.recover()
+    if not cat.exists(CHECKPOINT_TABLE):
+        return 0
+    rows = cat.read_arrow(CHECKPOINT_TABLE, columns=CHECKPOINT_SCHEMA.names).to_pylist()
+    kept = [tuple(r.values()) for r in rows if r["partition_key"] not in keys]
+    cat.drop(SWAP_STAGING)
+    cat.append_rows(SWAP_STAGING, CHECKPOINT_SCHEMA, kept)
+    cat.swap([(SWAP_STAGING, CHECKPOINT_TABLE)])
+    return len(rows) - len(kept)

@@ -39,12 +39,13 @@ Scale design decisions (10^12 rows / 1000 executors):
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from abs_log_spark.catalog import Catalog
+from abs_log_spark.catalog import SWAP_STAGING, Catalog
 from abs_log_spark.functions.parse import parse_arrow
 from abs_log_spark.operators.aggregate import (
     errors_from_hist_partials,
@@ -72,18 +73,6 @@ class PipelineConfig:
     #: (reference semantics: excluded lines never enter the stats). Invalid
     #: rows are never excluded — invalid_hits stays accurate.
     exclude_uri: str | None = None
-    #: steady-state partials hygiene, ON by default: each run folds
-    #: CHECKPOINTED buckets' partials into the consolidated partition (see
-    #: compact_partials) so the next run's fold input is one consolidated
-    #: partition + that run's increment — O(live keys) forever, instead of
-    #: growing with retained buckets. The horizon policy is "checkpointed":
-    #: compaction runs strictly AFTER ckpt.mark_done, so an un-checkpointed
-    #: bucket is never folded (a crash anywhere before mark_done just
-    #: re-runs the bucket against its own still-separate partition — no
-    #: double count); a checkpointed bucket only changes again via expiry
-    #: (manifest subtract) or an explicit checkpoint clear, which the
-    #: re-ingest pre-pass at the top of run_pipeline un-compacts first.
-    auto_compact: bool = True
 
 
 def fan_out_summary(cat: Catalog, name: str, summary: DataFrame) -> None:
@@ -135,77 +124,10 @@ CONSOLIDATED_BUCKET = -1
 _MANIFEST = "_compacted_buckets.json"
 
 
-#: write-ahead journal for the compaction/subtraction directory swaps: the
-#: staging write completes (parquet _SUCCESS) BEFORE the journal appears,
-#: and every post-journal step is idempotent, so a crash at ANY point rolls
-#: forward on the next entry (recover_compaction) — no double count (a
-#: swapped-but-unmanifested bucket would otherwise be re-aggregated by the
-#: backfill), no silent loss (a half-removed partition set is re-applied
-#: from the journal). Same bug class as the round-2 mark_done window —
-#: journaled away instead of re-ordered away because this swap has three
-#: non-atomic steps, not two.
-_JOURNAL = "_compact_journal.json"
-
-
-def _journal_path(cat: Catalog) -> str:
-    return os.path.join(cat.root, _JOURNAL)
-
-
-def _apply_journal(cat: Catalog) -> None:
-    """Idempotently (re-)apply a journaled dir swap + manifest update."""
-    import json
-    import shutil
-
-    with open(_journal_path(cat)) as f:
-        j = json.load(f)
-    src = os.path.join(cat.path(j["staging"]), f"part_bucket={CONSOLIDATED_BUCKET}")
-    dst = os.path.join(cat.path("agg_partials"), f"part_bucket={CONSOLIDATED_BUCKET}")
-    if j.get("has_src", True):
-        if os.path.isdir(src):  # swap not done yet: remove olds, move in
-            for b in j.get("remove", []):
-                shutil.rmtree(
-                    os.path.join(cat.path("agg_partials"), f"part_bucket={b}"),
-                    ignore_errors=True,
-                )
-            shutil.rmtree(dst, ignore_errors=True)
-            os.replace(src, dst)
-        # else: the move already happened — dirs are final
-    else:  # subtract that cancelled everything: the partition just goes away
-        shutil.rmtree(dst, ignore_errors=True)
-    manifest = compacted_buckets(cat)
-    manifest |= set(j.get("manifest_add", []))
-    manifest -= set(j.get("manifest_remove", []))
-    _save_compacted(cat, manifest)
-    cat.drop(j["staging"])
-    os.remove(_journal_path(cat))
-
-
-_COMPACT_STAGINGS = ("_partials_compact_staging", "_partials_subtract_staging")
-
-
-def recover_compaction(cat: Catalog) -> str | None:
-    """Entry-point hygiene (run_pipeline / compact / subtract all call
-    this first): roll a crashed swap forward (journal present — every
-    remaining step is idempotent), or roll an uncommitted staging write
-    back (staging dir without a journal = the write never completed; the
-    live partitions were never touched). Returns what it did."""
-    if os.path.exists(_journal_path(cat)):
-        _apply_journal(cat)
-        return "forward"
-    rolled = None
-    for t in _COMPACT_STAGINGS:
-        if os.path.isdir(cat.path(t)):
-            cat.drop(t)
-            rolled = "rollback"
-    return rolled
-
-
 def compacted_buckets(cat: Catalog) -> set[str]:
     """Buckets whose partials were folded into the consolidated partition by
     :func:`compact_partials` — recorded in a tiny JSON manifest (the parquet
     stand-in for an Iceberg snapshot property)."""
-    import json
-
     p = os.path.join(cat.root, _MANIFEST)
     if not os.path.exists(p):
         return set()
@@ -213,11 +135,22 @@ def compacted_buckets(cat: Catalog) -> set[str]:
         return set(json.load(f))
 
 
-def _save_compacted(cat: Catalog, buckets: set[str]) -> None:
-    import json
-
-    with open(os.path.join(cat.root, _MANIFEST), "w") as f:
-        json.dump(sorted(buckets), f)
+def _swap_partials(cat: Catalog, manifest: set[str], remove: list[str]) -> None:
+    """Swap the staged partials state into place in one journaled
+    :meth:`Catalog.swap`: the consolidated partition, when the staging holds
+    one, and the new manifest move in; the ``remove`` bucket partitions go.
+    Without the journal a crash between the partition swap and the manifest
+    update would double count (a folded bucket missing from the manifest is
+    re-aggregated by the backfill) or lose rows (a half-removed set)."""
+    staging = cat.path(SWAP_STAGING)
+    os.makedirs(staging, exist_ok=True)
+    with open(os.path.join(staging, _MANIFEST), "w") as f:
+        json.dump(sorted(manifest), f)
+    moves = [(os.path.join(SWAP_STAGING, _MANIFEST), _MANIFEST)]
+    cons = f"part_bucket={CONSOLIDATED_BUCKET}"
+    if os.path.isdir(os.path.join(staging, cons)):
+        moves.append((os.path.join(SWAP_STAGING, cons), os.path.join("agg_partials", cons)))
+    cat.swap(moves, [os.path.join("agg_partials", f"part_bucket={b}") for b in remove])
 
 
 def routed_union(
@@ -286,13 +219,11 @@ def compact_partials(
     SUBTRACTS an expired compacted bucket's contribution (recomputed from
     its still-present routed partition) instead of dropping a partition
     dir, and a re-ingested bucket (checkpoint cleared) simply writes its
-    own partition again. The multi-step dir swap is crash-journaled
-    (:func:`recover_compaction`). Returns counts; no-op if nothing to
+    own partition again. The partition swap and the manifest update are one
+    journaled :meth:`Catalog.swap`. Returns counts; no-op if nothing to
     compact.
     """
-    import json
-
-    recover_compaction(cat)
+    cat.recover()
     have = cat.partition_values("agg_partials")
     live = have - {str(CONSOLIDATED_BUCKET)}
     to_compact = live if buckets is None else (live & {str(b) for b in buckets})
@@ -308,21 +239,11 @@ def compact_partials(
         .agg(*[F.sum(m).cast("long").alias(m) for m in _PARTIAL_MEASURES])
         .withColumn("part_bucket", F.lit(CONSOLIDATED_BUCKET))
     )
-    # write-then-journal-then-swap: the fold READS the partitions it
-    # replaces, so it fully materializes in staging first; the journal
-    # appears only after the staging write committed (_SUCCESS), and every
-    # step _apply_journal performs after that is idempotent
-    staging = "_partials_compact_staging"
-    cat.write(folded, staging, partition_by=("part_bucket",))
-    with open(_journal_path(cat), "w") as f:
-        json.dump({
-            "op": "compact",
-            "staging": staging,
-            "remove": read_set,
-            "manifest_add": sorted(to_compact),
-            "has_src": True,
-        }, f)
-    _apply_journal(cat)
+    # the fold READS the partitions it replaces, so it fully materializes
+    # in staging before the swap touches them
+    cat.drop(SWAP_STAGING)
+    cat.write(folded, SWAP_STAGING, partition_by=("part_bucket",))
+    _swap_partials(cat, compacted_buckets(cat) | to_compact, sorted(to_compact))
     return {"buckets_compacted": len(to_compact)}
 
 
@@ -333,22 +254,20 @@ def subtract_compacted(spark: SparkSession, cat: Catalog, victims: list[str]) ->
     deterministic recompute of the bucket's routed partition — so expiry
     recomputes the victims' partials from routed (still on disk at this
     point), NEGATES the measures, merges, and drops fully-cancelled rows.
-    Must run BEFORE the routed partition drop; the dir swap is
-    crash-journaled like compaction's. Returns victim count."""
-    import json
-
-    recover_compaction(cat)
-    victims = sorted(set(map(str, victims)) & compacted_buckets(cat))
+    Must run BEFORE the routed partition drop; the swap is journaled like
+    compaction's. Returns victim count."""
+    cat.recover()
+    compacted = compacted_buckets(cat)
+    victims = sorted(set(map(str, victims)) & compacted)
     if not victims:
         return 0
-    from abs_log_spark.operators.aggregate import minute_agg_hist_partials
-
+    manifest = compacted - set(victims)
     cons = cat.read(spark, "agg_partials").where(
         F.col("part_bucket") == CONSOLIDATED_BUCKET
     )
     vr = routed_union(spark, cat, routed_sinks(cat), bucket_filter=victims)
     if vr is None:
-        _save_compacted(cat, compacted_buckets(cat) - set(victims))
+        _swap_partials(cat, manifest, [])
         return len(victims)
     neg = minute_agg_hist_partials(vr).select(
         *[c for c in cons.columns if c not in (*_PARTIAL_MEASURES, "part_bucket")],
@@ -364,19 +283,13 @@ def subtract_compacted(spark: SparkSession, cat: Catalog, victims: list[str]) ->
         .where(" or ".join(f"{m} != 0" for m in _PARTIAL_MEASURES))
         .withColumn("part_bucket", F.lit(CONSOLIDATED_BUCKET))
     )
-    staging = "_partials_subtract_staging"
-    cat.write(merged, staging, partition_by=("part_bucket",))
-    has_src = os.path.isdir(
-        os.path.join(cat.path(staging), f"part_bucket={CONSOLIDATED_BUCKET}")
-    )  # everything-cancelled -> the consolidated partition just vanishes
-    with open(_journal_path(cat), "w") as f:
-        json.dump({
-            "op": "subtract",
-            "staging": staging,
-            "manifest_remove": victims,
-            "has_src": has_src,
-        }, f)
-    _apply_journal(cat)
+    cat.drop(SWAP_STAGING)
+    cat.write(merged, SWAP_STAGING, partition_by=("part_bucket",))
+    # everything cancelled: no staged partition, the live one just goes
+    staged = os.path.isdir(
+        os.path.join(cat.path(SWAP_STAGING), f"part_bucket={CONSOLIDATED_BUCKET}")
+    )
+    _swap_partials(cat, manifest, [] if staged else [str(CONSOLIDATED_BUCKET)])
     return len(victims)
 
 
@@ -432,10 +345,10 @@ def run_pipeline(
     cfg = cfg or PipelineConfig()
     metrics = StageMetrics(spark)
 
-    # roll forward/back any compaction swap a previous run crashed inside —
-    # BEFORE reading checkpoints or partials (disk state must be consistent
-    # before backfill detection looks at it)
-    recover_compaction(cat)
+    # roll forward/back any swap a previous run crashed inside — BEFORE
+    # reading checkpoints or partials (disk state must be consistent before
+    # backfill detection looks at it)
+    cat.recover()
     done = ckpt.completed_partitions(spark, cat, "routed") if cfg.resume else set()
     # Re-ingest pre-pass: a COMPACTED bucket whose checkpoint row was cleared
     # (operator re-ingest, or resume=False over an existing warehouse) is
@@ -564,15 +477,16 @@ def run_pipeline(
     # subtract + re-backfill + re-fold it on every subsequent run forever
     # (round-4 ADVICE). It stays an own-partition partial until a run
     # actually checkpoints it. Crash inside compaction rolls forward/back
-    # via the journal (recover_compaction at next entry).
+    # via the swap journal (cat.recover() at next entry). Compacting every
+    # run keeps the next run's fold input at one consolidated partition +
+    # that run's increment: O(live keys) forever, not O(retained buckets).
     #
     # Ordered BEFORE the summary rebuild (round-4 verdict ask #3): the fold
     # over (consolidated + this run's buckets) happens exactly ONCE here,
     # and the rebuild then merges a single already-folded partition instead
     # of folding the same rows a second time.
-    if cfg.auto_compact:
-        compact_partials(spark, cat, buckets=sorted(done | set(buckets)))
-        metrics.mark("compact")
+    compact_partials(spark, cat, buckets=sorted(done | set(buckets)))
+    metrics.mark("compact")
     rebuild_summaries(spark, cat)
     metrics.mark("aggregate")
 

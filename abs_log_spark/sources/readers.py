@@ -184,14 +184,3 @@ def sequences_from_documents(
         "source",
         F.pmod(F.xxhash64("doc_id"), F.lit(8)).cast("int").alias("part_bucket"),
     )
-
-
-def sources_dim_for_documents(spark: SparkSession, n_sources: int = 20) -> DataFrame:
-    """Dimension covering the driver documents' src0..src19 domain.
-
-    Same k % 3 sink rule as the synthetic dim, expressible in ANSI SQL for
-    the DuckDB oracle: sink = CASE (CAST(substr(source,4) AS INT) % 3) ...
-    """
-    from abs_log_spark.sources.synth import gen_sources_dim
-
-    return gen_sources_dim(spark, n_sources=n_sources)

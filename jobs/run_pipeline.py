@@ -43,13 +43,6 @@ def main(argv: list[str] | None = None) -> int:
         "--exclude-uri", default=None,
         help="regex: valid rows with matching uri are dropped before routing",
     )
-    p.add_argument(
-        "--no-auto-compact", action="store_true",
-        help="keep per-bucket agg_partials partitions instead of folding "
-        "checkpointed buckets into the consolidated partition after "
-        "mark_done (auto-compaction is ON by default; the fold keeps the "
-        "per-run summary merge O(live keys))",
-    )
     args = p.parse_args(argv)
 
     from abs_log_spark.catalog import Catalog
@@ -70,7 +63,6 @@ def main(argv: list[str] | None = None) -> int:
         resume=not args.no_resume,
         input_aligned=args.aligned,
         exclude_uri=args.exclude_uri,
-        auto_compact=not args.no_auto_compact,
     )
     if args.repeat == 1:
         summary = run_pipeline(spark, cat, seq, dim, run_id=args.run_id, cfg=cfg)

@@ -145,3 +145,73 @@ def test_bookkeeping_tables_agree_across_writers_and_engines(spark, tmp_catalog,
         assert [r[2] for r in m_rows] == ["0", "1,2"]
     finally:
         con.close()
+
+
+def test_checkpoint_expiry_runs_no_spark_job(spark, tmp_catalog, monkeypatch):
+    """expire_buckets rewrites a mixed checkpoint table (Spark-written
+    history plus pyarrow appends) on the driver: its checkpoint step runs no
+    Spark job, kept rows keep their exact ``ts``, and Spark, DuckDB and
+    ``completed_partitions`` agree afterwards — also once every row has
+    expired."""
+    from abs_log_spark.operators.retention import expire_buckets
+
+    cat = tmp_catalog
+    ck_path = cat.path(ckpt.CHECKPOINT_TABLE)
+    cat.append(
+        spark.createDataFrame(
+            [("r0", "routed", "0", "done"), ("r0", "routed", "1", "done"),
+             ("r0", "other", "1", "done")],
+            "run_id string, stage string, partition_key string, status string",
+        ).withColumn("ts", F.current_timestamp()),
+        ckpt.CHECKPOINT_TABLE,
+    )
+    ckpt.mark_done(spark, cat, "r1", "routed", ["2", "3"])
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def job_ids() -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(None))
+
+    jobs: list[int] = []
+    expire = ckpt.expire
+
+    def counted(*args, **kwargs):
+        before = job_ids()
+        try:
+            return expire(*args, **kwargs)
+        finally:
+            jobs.append(len(job_ids() - before))
+
+    monkeypatch.setattr(ckpt, "expire", counted)
+
+    def rows():
+        return sorted(
+            tuple(r) for r in cat.read(spark, ckpt.CHECKPOINT_TABLE).select(
+                "run_id", "stage", "partition_key", "status", F.unix_micros("ts")
+            ).collect()
+        )
+
+    def duck():
+        con = duckdb.connect()
+        try:
+            return sorted(con.execute(
+                "SELECT run_id, stage, partition_key, status, epoch_us(ts)"
+                f" FROM read_parquet('{ck_path}/*.parquet')"
+            ).fetchall())
+        finally:
+            con.close()
+
+    before = rows()
+    assert expire_buckets(spark, cat, ["1", "3"])["checkpoint_rows"] == 3
+    assert jobs == [0]
+    kept = [r for r in before if r[2] not in ("1", "3")]
+    assert len(kept) == 2 and rows() == kept == duck()  # exact ts, both engines
+    assert ckpt.completed_partitions(spark, cat, "routed") == {"0", "2"}
+    assert cat.read(spark, ckpt.CHECKPOINT_TABLE).schema["ts"].dataType == TimestampType()
+
+    assert expire_buckets(spark, cat, ["0", "2"])["checkpoint_rows"] == 2
+    assert jobs == [0, 0]
+    assert rows() == [] == duck()
+    assert ckpt.completed_partitions(spark, cat, "routed") == set()

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from abs_log_spark.operators.aggregate import minute_agg, salted_minute_agg, trend
-from abs_log_spark.plans.pipeline import PipelineConfig, run_pipeline, transform
+from abs_log_spark.plans.pipeline import run_pipeline, transform
 from abs_log_spark.sources.synth import gen_sequences, gen_sources_dim
 
 N = 600
@@ -270,7 +270,7 @@ def test_incremental_agg_bucket_rerun_idempotent(spark, tmp_catalog):
         ), s
 
 
-def test_crash_between_promote_and_partials_heals(spark, tmp_catalog):
+def test_crash_between_promote_and_partials_heals(spark, tmp_catalog, run_uncompacted):
     """The mark_done-before-partials crash window: a bucket checkpointed as
     routed-done but with no agg_partials partition must be detected and
     backfilled on the next run — never silently dropped from summaries."""
@@ -278,11 +278,10 @@ def test_crash_between_promote_and_partials_heals(spark, tmp_catalog):
 
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
-    # auto_compact off: the simulated crash state needs bucket 2's OWN
-    # partials partition on disk (the compacted variant of this window is
-    # covered by tests/test_compaction.py)
-    nc = PipelineConfig(auto_compact=False)
-    run_pipeline(spark, tmp_catalog, seq, dim, run_id="r1", cfg=nc)
+    # uncompacted: the simulated crash state needs bucket 2's OWN partials
+    # partition on disk (the compacted variant of this window is covered by
+    # tests/test_compaction.py)
+    run_uncompacted(spark, tmp_catalog, seq, dim, run_id="r1")
     pv1 = {
         s: tmp_catalog.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0]
         for s in ("sink_a", "sink_b", "sink_c")
@@ -290,7 +289,7 @@ def test_crash_between_promote_and_partials_heals(spark, tmp_catalog):
     }
     # simulate the crash state: bucket 2's partials vanish, checkpoint says done
     shutil.rmtree(tmp_catalog.path("agg_partials") + "/part_bucket=2")
-    r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2", cfg=nc)
+    r2 = run_uncompacted(spark, tmp_catalog, seq, dim, run_id="r2")
     assert r2["buckets_processed"] == 0 and r2["buckets_backfilled"] == 1
     for s, v in pv1.items():
         assert (
@@ -299,15 +298,14 @@ def test_crash_between_promote_and_partials_heals(spark, tmp_catalog):
         ), s
 
 
-def test_missing_agg_partials_table_backfills(spark, tmp_catalog):
+def test_missing_agg_partials_table_backfills(spark, tmp_catalog, run_uncompacted):
     """A warehouse whose whole agg_partials table is gone (routed history
     and checkpoints intact) must backfill every bucket's partials from the
     routed tables instead of rebuilding summaries from an empty partials
     table (silently dropping all prior history)."""
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
-    nc = PipelineConfig(auto_compact=False)
-    run_pipeline(spark, tmp_catalog, seq, dim, run_id="r1", cfg=nc)
+    run_uncompacted(spark, tmp_catalog, seq, dim, run_id="r1")
     pv1 = {
         s: tmp_catalog.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0]
         for s in ("sink_a", "sink_b", "sink_c")
@@ -315,7 +313,7 @@ def test_missing_agg_partials_table_backfills(spark, tmp_catalog):
     }
     tmp_catalog.drop("agg_partials")
     assert not tmp_catalog.exists("agg_partials")
-    r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2", cfg=nc)
+    r2 = run_uncompacted(spark, tmp_catalog, seq, dim, run_id="r2")
     assert r2["buckets_processed"] == 0 and r2["buckets_backfilled"] == 8
     assert tmp_catalog.exists("agg_partials")
     for s, v in pv1.items():

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from abs_log_spark.operators.retention import expire_routed_buckets, expire_summary
+from abs_log_spark.operators.retention import expire_routed_buckets
 from abs_log_spark.sources.readers import read_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -78,68 +78,21 @@ def test_log_show_error_pivot_layout(spark):
     assert [r["500"] for r in out] == [1, 0]  # absent combo filled with 0
 
 
-def test_expire_summary(spark, tmp_catalog):
-    """S5: rows older than the cutoff are deleted, newer rows survive."""
-    df = spark.range(100).select(
-        (F.to_timestamp(F.lit("2024-01-01 00:00:00")) + F.make_interval(mins=F.col("id").cast("int"))).alias("minute"),
-        F.col("id").alias("pv"),
-    )
-    tmp_catalog.write(df, "minute_agg_s")
-    res = expire_summary(spark, tmp_catalog, "minute_agg_s", "2024-01-01 00:40:00")
-    assert res == {"kept": 60, "dropped": 40}
-    remaining = tmp_catalog.read(spark, "minute_agg_s")
-    assert remaining.count() == 60
-    assert remaining.agg(F.min("pv")).first()[0] == 40
-
-
-def test_expire_summary_day_partitioned(spark, tmp_catalog):
-    """Day-partitioned retention: whole sub-cutoff day dirs drop as file
-    ops, ONLY the boundary day is rewritten (newer day files untouched),
-    and null-minute invalid groups never age out (P3 invariant)."""
-    import os
-
-    rows = []
-    for day in (1, 2, 3):
-        for h in (6, 18):
-            rows.append((f"2024-01-0{day} {h:02d}:00:00", day * 100 + h))
-    df = (
-        spark.createDataFrame(rows, "minute string, pv long")
-        .withColumn("minute", F.to_timestamp("minute"))
-        .unionByName(
-            spark.createDataFrame([(None, 7)], "minute string, pv long")
-            .withColumn("minute", F.to_timestamp("minute"))
-        )
-        .withColumn("day", F.to_date("minute"))
-    )
-    tmp_catalog.write(df, "minute_agg_x", partition_by=("day",))
-    newer = os.path.join(tmp_catalog.path("minute_agg_x"), "day=2024-01-03")
-    files_before = sorted(os.listdir(newer))
-
-    res = expire_summary(spark, tmp_catalog, "minute_agg_x", "2024-01-02 12:00:00")
-    assert res == {"kept": 4, "dropped": 3}  # 2 on day3, 1 boundary, 1 null kept
-    root = tmp_catalog.path("minute_agg_x")
-    assert not os.path.isdir(os.path.join(root, "day=2024-01-01"))
-    assert sorted(os.listdir(newer)) == files_before  # untouched, not rewritten
-    pvs = sorted(r.pv for r in tmp_catalog.read(spark, "minute_agg_x").collect())
-    assert pvs == [7, 218, 306, 318]  # null group + boundary evening + day3
-
-
-def test_expire_buckets_keeps_all_state_consistent(spark, tmp_catalog):
+def test_expire_buckets_keeps_all_state_consistent(spark, tmp_catalog, run_uncompacted):
     """Expiring buckets must drop routed data, histogram partials, AND
     checkpoint rows together, then rebuild summaries — otherwise the next
     merge resurrects expired data or a re-ingest silently skips."""
     from abs_log_spark.operators.retention import expire_buckets
     from abs_log_spark.plans import checkpoint as ckpt
-    from abs_log_spark.plans.pipeline import PipelineConfig, run_pipeline
+    from abs_log_spark.plans.pipeline import run_pipeline
     from abs_log_spark.sources.synth import gen_sequences, gen_sources_dim
 
     seq = gen_sequences(spark, 600, invalid_every=10)
     dim = gen_sources_dim(spark)
-    # auto_compact off: this test asserts the PER-BUCKET partition drops;
-    # the consolidated-partition expiry path is covered by
+    # uncompacted: this test asserts the PER-BUCKET partition drops; the
+    # consolidated-partition expiry path is covered by
     # tests/test_compaction.py::test_expire_compacted_bucket_subtracts_exactly
-    run_pipeline(spark, tmp_catalog, seq, dim, run_id="r1",
-                 cfg=PipelineConfig(auto_compact=False))
+    run_uncompacted(spark, tmp_catalog, seq, dim, run_id="r1")
     pv_all = sum(
         tmp_catalog.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0]
         for s in ("sink_a", "sink_b", "sink_c")
@@ -215,16 +168,17 @@ def test_summary_tables_day_partitioned_and_pruned(spark, tmp_catalog):
 
 
 def test_expire_checkpoint_rewrite_uses_anti_join_above_threshold(spark, tmp_catalog):
-    """Expiring thousands of buckets must not build a thousands-deep NOT-isin
-    chain over the checkpoint: above ISIN_MAX_KEYS the rewrite plans a
-    broadcast anti-join (same switch as resume's filter_pending)."""
+    """Expiring more buckets than ISIN_MAX_KEYS keeps exactly the unexpired
+    checkpoint rows. The expiry itself is a driver-side set lookup; a Spark
+    filter of the checkpoint by that many keys (resume's filter_pending)
+    plans a broadcast anti-join, not a thousands-deep NOT-isin chain."""
     from abs_log_spark.operators.retention import expire_buckets
     from abs_log_spark.plans.checkpoint import ISIN_MAX_KEYS, filter_pending
     from abs_log_spark.plans import checkpoint as ckpt
 
     n = ISIN_MAX_KEYS + 36
     ckpt.mark_done(spark, tmp_catalog, "r1", "routed", [str(k) for k in range(n + 5)])
-    # plan evidence on the exact expression expire_buckets uses
+    # plan evidence for a Spark-side filter of the checkpoint by the keys
     ck = tmp_catalog.read(spark, ckpt.CHECKPOINT_TABLE)
     keep = filter_pending(ck, {str(k) for k in range(n)}, key_col="partition_key")
     plan = keep._jdf.queryExecution().executedPlan().toString()
@@ -245,128 +199,3 @@ def test_expire_routed_buckets(spark, tmp_catalog):
     assert expire_routed_buckets(tmp_catalog, "routed_x", ["0", "2"]) == 2
     left = tmp_catalog.read(spark, "routed_x")
     assert set(r[0] for r in left.select("part_bucket").distinct().collect()) == {1, 3}
-
-
-def _day_table(spark, tmp_catalog, name):
-    rows = []
-    for day in (1, 2, 3):
-        for h in (6, 18):
-            rows.append((f"2024-01-0{day} {h:02d}:00:00", day * 100 + h))
-    df = (
-        spark.createDataFrame(rows, "minute string, pv long")
-        .withColumn("minute", F.to_timestamp("minute"))
-        .withColumn("day", F.to_date("minute"))
-    )
-    tmp_catalog.write(df, name, partition_by=("day",))
-    return df
-
-
-def test_expire_boundary_swap_crash_recovers(spark, tmp_catalog):
-    """Round-3 ADVICE (medium): a crash between the boundary day's
-    move-aside and the staged move-in must NOT lose the kept rows. Simulate
-    the exact window — staging written, boundary dir tombstoned, promote
-    never ran — and assert the next expire_summary invocation restores the
-    kept rows before re-applying the cutoff."""
-    import os
-    import shutil as sh
-
-    from abs_log_spark.operators.retention import recover_retention
-
-    _day_table(spark, tmp_catalog, "minute_agg_c")
-    root = tmp_catalog.path("minute_agg_c")
-    cutoff = "2024-01-02 12:00:00"
-
-    # reproduce expire_summary's on-disk state at the crash point:
-    # old days dropped, staging holds the kept boundary rows (day=2024-01-02
-    # evening), boundary dir moved aside to the tombstone, promote pending
-    sh.rmtree(os.path.join(root, "day=2024-01-01"))
-    df = tmp_catalog.read(spark, "minute_agg_c")
-    keep = df.where("day = DATE '2024-01-02' and minute >= TIMESTAMP '2024-01-02 12:00:00'")
-    tmp_catalog.write(keep.coalesce(1), "_minute_agg_c_retention_staging",
-                      partition_by=("day",))
-    os.replace(
-        os.path.join(root, "day=2024-01-02"),
-        os.path.join(root, ".day=2024-01-02.tombstone"),
-    )
-
-    # crash-state reads: Spark skips the dot-dir; boundary rows are absent
-    assert tmp_catalog.read(spark, "minute_agg_c").count() == 2  # day3 only
-
-    res = expire_summary(spark, tmp_catalog, "minute_agg_c", cutoff)
-    assert res == {"kept": 3, "dropped": 0}  # kept rows restored, no re-drop
-    pvs = sorted(r.pv for r in tmp_catalog.read(spark, "minute_agg_c").collect())
-    assert pvs == [218, 306, 318]
-    assert not os.path.isdir(os.path.join(root, ".day=2024-01-02.tombstone"))
-    assert not os.path.isdir(tmp_catalog.path("_minute_agg_c_retention_staging"))
-
-    # idempotence: recovery with nothing pending is a no-op
-    recover_retention(tmp_catalog, "minute_agg_c")
-    assert sorted(r.pv for r in tmp_catalog.read(spark, "minute_agg_c").collect()) == pvs
-
-
-def test_expire_unpartitioned_swap_crash_recovers(spark, tmp_catalog):
-    """Whole-table replace (unpartitioned layout): crash after the table
-    moved aside but before staging moved in — recovery promotes staging
-    (the kept rows), never resurrects dropped rows or loses kept ones."""
-    import os
-
-    from abs_log_spark.operators.retention import recover_retention
-
-    df = spark.range(10).select(
-        (F.to_timestamp(F.lit("2024-01-01 00:00:00"))
-         + F.make_interval(mins=F.col("id").cast("int"))).alias("minute"),
-        F.col("id").alias("pv"),
-    )
-    tmp_catalog.write(df, "minute_agg_u")
-    keep = df.where("pv >= 4")
-    tmp_catalog.write(keep.coalesce(1), "_minute_agg_u_retention_staging")
-    os.replace(
-        tmp_catalog.path("minute_agg_u"),
-        tmp_catalog.path(".minute_agg_u.tombstone"),
-    )
-    recover_retention(tmp_catalog, "minute_agg_u")
-    assert sorted(r.pv for r in tmp_catalog.read(spark, "minute_agg_u").collect()) == [
-        4, 5, 6, 7, 8, 9
-    ]
-    assert not os.path.isdir(tmp_catalog.path(".minute_agg_u.tombstone"))
-
-
-def test_checkpoint_swap_crash_heals_before_any_consumer(spark, tmp_catalog):
-    """Round-4 ADVICE (medium): a crash inside expire_buckets'
-    checkpoint-table _replace_table window (live table tombstoned, staging
-    not yet promoted) must not silently discard the pre-crash lineage. The
-    failure mode: completed_partitions sees no table -> full re-ingest, and
-    mark_done's append RECREATES the live table, after which recovery
-    classifies the swap complete and deletes the tombstone (rows gone for
-    good). Both checkpoint consumers now heal the swap first."""
-    import os
-
-    from abs_log_spark.plans import checkpoint as ckpt
-
-    ckpt.mark_done(spark, tmp_catalog, "r1", "routed", ["0", "1", "2"])
-    keep = (
-        tmp_catalog.read(spark, ckpt.CHECKPOINT_TABLE)
-        .where(F.col("partition_key") != "2")
-    )
-    tmp_catalog.write(keep, "_checkpoint_retention_staging")
-    # crash point: live moved aside, staging (kept rows) never promoted
-    os.replace(
-        tmp_catalog.path(ckpt.CHECKPOINT_TABLE),
-        tmp_catalog.path(".checkpoint.tombstone"),
-    )
-
-    # reader heals first: resume sees the kept lineage, not an empty table
-    assert ckpt.completed_partitions(spark, tmp_catalog, "routed") == {"0", "1"}
-    assert not os.path.isdir(tmp_catalog.path(".checkpoint.tombstone"))
-
-    # writer path from the same crash state: append must not recreate a
-    # fresh table over a stranded swap
-    os.replace(
-        tmp_catalog.path(ckpt.CHECKPOINT_TABLE),
-        tmp_catalog.path(".checkpoint.tombstone"),
-    )
-    ckpt.mark_done(spark, tmp_catalog, "r2", "routed", ["3"])
-    assert ckpt.completed_partitions(spark, tmp_catalog, "routed") == {
-        "0", "1", "3"
-    }
-    assert not os.path.isdir(tmp_catalog.path(".checkpoint.tombstone"))
