@@ -129,11 +129,13 @@ def minhash_lsh_pairs(
         # third (skipped_out): persist the tiny (doc_id, band, bucket)
         # relation or every branch re-derives the signatures from shingles
         # (measured 1.5x the whole query). Same lifecycle as docs_sh.
-        # The repartition on the bucket key before the persist does NOT
-        # remove the two downstream groupBy exchanges: Spark 4 AQE-wraps
-        # cached plans (canChangeCachedPlanOutputPartitioning), and a
-        # round-6 A/B measured it neutral. It stays until its own paired
-        # run on near_dup_dedup justifies deleting it.
+        # The repartition on the bucket key leaves the cache hash-
+        # partitioned on (band, bucket), and AQE coalesces it to the data's
+        # size (canChangeCachedPlanOutputPartitioning, session.py): the
+        # count pre-pass and the member-list groupBy read it with no
+        # exchange. Without it a near_dup_dedup pass ran 14 jobs, 38 tasks
+        # and 1.8 MB of shuffle instead of 12, 27 and 1.0 MB, and was no
+        # faster (6 paired runs, 4-core host).
         bb = _own_persist(bb.repartition("band", "bucket"), persisted_out)
         if skipped_out is not None:
             skipped_out.append(oversized_buckets(bb, max_bucket_size))
@@ -208,8 +210,8 @@ def simhash_pairs(
     if max_bucket_size is not None:
         # same as minhash: the count pre-pass is a second consumer of the
         # chunk relation — persist it rather than re-exploding per branch;
-        # the repartition before the persist is measured neutral, not
-        # exchange-saving (see minhash_lsh_pairs)
+        # repartitioned on the bucket key, the cache feeds both groupBys
+        # with no exchange (see minhash_lsh_pairs)
         chunks = _own_persist(chunks.repartition("band", "bucket"), persisted_out)
         if skipped_out is not None:
             skipped_out.append(oversized_buckets(chunks, max_bucket_size))
