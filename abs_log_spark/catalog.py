@@ -21,10 +21,11 @@ appeared; every entry point that reads or writes swapped state calls it
 first.
 
 Partition layout is the scale story: at 10^12 rows the input is laid out by
-``(source, part_bucket)`` (hash-bucketed doc_id) so that (a) resume can prune
-whole partitions via the checkpoint anti-join, (b) per-source skew is split
-across buckets, and (c) routed writes are append-only per partition with
-dynamic partition overwrite giving idempotent re-runs.
+``(source, part_bucket)`` (hash-bucketed doc_id) so that (a) resume prunes
+whole partitions with one partition filter on the checkpointed buckets,
+(b) per-source skew is split across buckets, and (c) routed writes are
+append-only per partition with dynamic partition overwrite giving
+idempotent re-runs.
 """
 
 from __future__ import annotations

@@ -5,9 +5,10 @@ abs-log resumes via a per-file byte offset saved after each cron run ([PK]
 offset/bookmark record). The Spark-first equivalent at 10^12 rows is
 partition-level lineage: the input is laid out by ``part_bucket`` (hash of
 doc_id — the Iceberg-bucket stand-in), a checkpoint table records each
-bucket that completed the routed write, and a restart anti-joins the input
-against completed buckets so only unfinished partitions are re-read (with a
-partitioned source this prunes whole files, not just rows).
+bucket that completed the routed write, and a restart filters the input by
+one ``NOT part_bucket IN (done)`` predicate (:func:`bucket_in`), which Spark
+keeps as a partition filter: completed bucket directories are never opened,
+however long the history.
 
 Idempotence: the routed write uses dynamic partition overwrite keyed by
 ``part_bucket`` — re-running a bucket replaces exactly that bucket, so a
@@ -26,10 +27,11 @@ interrupted (:meth:`Catalog.recover`).
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from datetime import datetime, timezone
 
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
 from abs_log_spark.catalog import SWAP_STAGING, Catalog
@@ -41,7 +43,7 @@ CHECKPOINT_SCHEMA = StructType(
 )
 
 
-def completed_partitions(spark: SparkSession, cat: Catalog, stage: str) -> set[str]:
+def completed_partitions(cat: Catalog, stage: str) -> set[str]:
     # a crash inside expire's swap can leave no live table until recovery
     # moves the kept rows in: reading first would re-ingest every bucket
     cat.recover()
@@ -55,40 +57,35 @@ def completed_partitions(spark: SparkSession, cat: Catalog, stage: str) -> set[s
     return set(pc.unique(keys).to_pylist())
 
 
-#: above this many completed buckets, the NOT-isin predicate (a linear chain
-#: the optimizer evaluates per row and cannot index) gives way to a broadcast
-#: anti-join against the done-set — O(1) hash probe per row, and the tiny
-#: done relation ships once per executor.
-ISIN_MAX_KEYS = 64
+#: the directory name Spark writes and lists for a null ``part_bucket``; the
+#: checkpoint, the compaction manifest and :func:`bucket_in` spell the null
+#: bucket this one way.
+NULL_BUCKET = "__HIVE_DEFAULT_PARTITION__"
 
 
-def filter_pending(df: DataFrame, done: set[str], key_col: str = "part_bucket") -> DataFrame:
-    """Drop already-completed partitions. With a disk layout partitioned by
-    ``key_col`` the small-set predicate becomes partition pruning at the
-    scan; a long-history done-set (thousands of buckets) switches to a
-    broadcast left_anti join instead of a thousands-deep isin chain."""
-    if not done:
-        return df
-    # normalize NULL keys to a sentinel so both paths agree: a bare
-    # ~isin(...) evaluates to NULL on a null key and silently DROPS the row,
-    # while left_anti keeps it — behavior must not flip at ISIN_MAX_KEYS.
-    key = F.coalesce(F.col(key_col).cast("string"), F.lit("<null>"))
-    if len(done) <= ISIN_MAX_KEYS:
-        return df.where(~key.isin(*sorted(done)))
-    spark = df.sparkSession
-    done_df = spark.createDataFrame(
-        [(k,) for k in sorted(done)], "_done_key string"
-    )
-    return df.join(F.broadcast(done_df), key == F.col("_done_key"), "left_anti")
+def bucket_in(keys: Iterable[str]) -> Column:
+    """``part_bucket`` is one of ``keys`` (partition values as strings,
+    :data:`NULL_BUCKET` for the null bucket), never null: ``~bucket_in(done)``
+    keeps a null-bucket row until its key is done. ONE SQL expression, one
+    JVM call (``Column.isin`` makes one per key); ``int()`` keeps checkpoint
+    strings out of SQL text. Spark plans an IN list over 10 items as a hashed
+    ``INSET`` partition filter, so a partitioned scan opens only the matching
+    bucket directories at any set size."""
+    keys = set(keys)
+    ints = ", ".join(map(str, sorted({int(k) for k in keys - {NULL_BUCKET}})))
+    hit = f"coalesce(part_bucket IN ({ints}), false)" if ints else "false"
+    if NULL_BUCKET in keys:
+        hit = f"part_bucket IS NULL OR {hit}"
+    return F.expr(hit)
 
 
-def mark_done(
-    spark: SparkSession,
-    cat: Catalog,
-    run_id: str,
-    stage: str,
-    partition_keys: list[str],
-) -> None:
+def filter_pending(df: DataFrame, done: set[str]) -> DataFrame:
+    """Drop already-completed ``part_bucket``s; with a disk layout
+    partitioned by ``part_bucket`` this is partition pruning at the scan."""
+    return df.where(~bucket_in(done)) if done else df
+
+
+def mark_done(cat: Catalog, run_id: str, stage: str, partition_keys: list[str]) -> None:
     if not partition_keys:
         return
     cat.recover()  # never append to a table stranded mid-swap

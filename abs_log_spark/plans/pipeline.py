@@ -3,7 +3,7 @@
 The Spark-first restatement of abs-log's collector lifecycle ([PK]
 ``log_analyse.py`` main loop; SURVEY.md section 3.4):
 
-    read sequences (prune completed part_buckets via checkpoint anti-join)
+    read sequences (prune completed part_buckets: checkpoint partition filter)
       -> STAGE parse + abstract: ONE fused arrow_udf per Arrow batch
          (detok + RE2 regex + uri_abs/args_abs, functions.parse)
       -> STAGE enrich  : broadcast join on the source dimension
@@ -170,7 +170,7 @@ def routed_union(
             continue
         r = cat.read(spark, tbl)
         if bucket_filter is not None:
-            r = r.where(F.col("part_bucket").isin([int(b) for b in bucket_filter]))
+            r = r.where(ckpt.bucket_in(bucket_filter))
         parts.append(
             r.withColumn("sink", F.lit(sink)).select(
                 "sink", "site", "ts", "uri_abs", "rt", "bytes", "status",
@@ -229,10 +229,8 @@ def compact_partials(
     to_compact = live if buckets is None else (live & {str(b) for b in buckets})
     if not to_compact:
         return {"buckets_compacted": 0}
-    read_set = sorted(to_compact | (have & {str(CONSOLIDATED_BUCKET)}))
-    partials = cat.read(spark, "agg_partials").where(
-        F.col("part_bucket").isin([int(b) for b in read_set])
-    )
+    read_set = to_compact | (have & {str(CONSOLIDATED_BUCKET)})
+    partials = cat.read(spark, "agg_partials").where(ckpt.bucket_in(read_set))
     grain = [c for c in partials.columns if c not in (*_PARTIAL_MEASURES, "part_bucket")]
     folded = (
         partials.groupBy(*grain)
@@ -349,7 +347,7 @@ def run_pipeline(
     # reading checkpoints or partials (disk state must be consistent before
     # backfill detection looks at it)
     cat.recover()
-    done = ckpt.completed_partitions(spark, cat, "routed") if cfg.resume else set()
+    done = ckpt.completed_partitions(cat, "routed") if cfg.resume else set()
     # Re-ingest pre-pass: a COMPACTED bucket whose checkpoint row was cleared
     # (operator re-ingest, or resume=False over an existing warehouse) is
     # about to be re-processed — but its old contribution lives inside the
@@ -465,7 +463,7 @@ def run_pipeline(
     # merely stale-until-next-run, never wrong (same convergence as
     # crash-inside-compaction).
     if buckets:
-        ckpt.mark_done(spark, cat, run_id, "routed", buckets)
+        ckpt.mark_done(cat, run_id, "routed", buckets)
 
     # compact strictly AFTER mark_done: folding an un-checkpointed bucket
     # into the consolidated partition would let a crash-then-resume

@@ -91,7 +91,7 @@ def test_bookkeeping_tables_agree_across_writers_and_engines(spark, tmp_catalog,
         METRICS_TABLE,
     )
     spark_files = set(_part_files(ck_path))
-    ckpt.mark_done(spark, cat, "r1", "routed", ["1", "2"])
+    ckpt.mark_done(cat, "r1", "routed", ["1", "2"])
     StageMetrics(spark).flush(spark, cat, "r1", ["1", "2"])
 
     # a crash between the temp write and the rename
@@ -101,7 +101,7 @@ def test_bookkeeping_tables_agree_across_writers_and_engines(spark, tmp_catalog,
     with monkeypatch.context() as m:
         m.setattr(os, "replace", crash)
         with pytest.raises(OSError):
-            ckpt.mark_done(spark, cat, "r2", "routed", ["99"])
+            ckpt.mark_done(cat, "r2", "routed", ["99"])
         with pytest.raises(OSError):
             StageMetrics(spark).flush(spark, cat, "r2", ["99"])
     for p in (ck_path, m_path):
@@ -128,7 +128,7 @@ def test_bookkeeping_tables_agree_across_writers_and_engines(spark, tmp_catalog,
         )
         assert sp_rows == dk_rows and len(sp_rows) == 4
         assert {r[2] for r in sp_rows if r[1] == "routed"} == {"0", "1", "2"}
-        assert ckpt.completed_partitions(spark, cat, "routed") == {"0", "1", "2"}
+        assert ckpt.completed_partitions(cat, "routed") == {"0", "1", "2"}
         # ts has one type per engine, whichever writer produced the file
         for f in sorted(spark_files | arrow_files):
             assert spark.read.parquet(f).schema["ts"].dataType == TimestampType(), f
@@ -165,7 +165,7 @@ def test_checkpoint_expiry_runs_no_spark_job(spark, tmp_catalog, monkeypatch):
         ).withColumn("ts", F.current_timestamp()),
         ckpt.CHECKPOINT_TABLE,
     )
-    ckpt.mark_done(spark, cat, "r1", "routed", ["2", "3"])
+    ckpt.mark_done(cat, "r1", "routed", ["2", "3"])
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -208,10 +208,10 @@ def test_checkpoint_expiry_runs_no_spark_job(spark, tmp_catalog, monkeypatch):
     assert jobs == [0]
     kept = [r for r in before if r[2] not in ("1", "3")]
     assert len(kept) == 2 and rows() == kept == duck()  # exact ts, both engines
-    assert ckpt.completed_partitions(spark, cat, "routed") == {"0", "2"}
+    assert ckpt.completed_partitions(cat, "routed") == {"0", "2"}
     assert cat.read(spark, ckpt.CHECKPOINT_TABLE).schema["ts"].dataType == TimestampType()
 
     assert expire_buckets(spark, cat, ["0", "2"])["checkpoint_rows"] == 2
     assert jobs == [0, 0]
     assert rows() == [] == duck()
-    assert ckpt.completed_partitions(spark, cat, "routed") == set()
+    assert ckpt.completed_partitions(cat, "routed") == set()

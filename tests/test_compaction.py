@@ -146,7 +146,7 @@ def test_swap_crash_at_every_step_converges(spark, tmp_path, monkeypatch, site):
         return (
             _summaries(spark, cat),
             compacted_buckets(cat),
-            ckpt.completed_partitions(spark, cat, "routed"),
+            ckpt.completed_partitions(cat, "routed"),
         )
 
     def fresh(name):
@@ -167,10 +167,10 @@ def test_swap_crash_at_every_step_converges(spark, tmp_path, monkeypatch, site):
     def reenter(cat):
         if site == "checkpoint":
             # the kept lineage, before or after the expiry — never lost
-            assert ckpt.completed_partitions(spark, cat, "routed") in (
+            assert ckpt.completed_partitions(cat, "routed") in (
                 {"0", "1", "2", "3", "4", "5"}, {"1", "2", "3", "4", "5"}
             )
-            ckpt.mark_done(spark, cat, "r3", "routed", ["9"])
+            ckpt.mark_done(cat, "r3", "routed", ["9"])
             crashing_step(cat)  # the operator retries the expiry
         else:
             run_pipeline(spark, cat, seq if site == "compaction" else first6, dim,
@@ -179,7 +179,7 @@ def test_swap_crash_at_every_step_converges(spark, tmp_path, monkeypatch, site):
     ref = fresh("ref")
     crashing_step(ref)
     if site == "checkpoint":
-        ckpt.mark_done(spark, ref, "r3", "routed", ["9"])
+        ckpt.mark_done(ref, "r3", "routed", ["9"])
     want = state(ref)
     call = 1 if site == "checkpoint" else 0
 

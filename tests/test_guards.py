@@ -1,5 +1,6 @@
 """Loud-failure guards: ANN dim mismatches error instead of silently
-returning wrong results; long-history checkpoints use an anti-join."""
+returning wrong results; the resume filter stays a partition filter at any
+done-set size and never drops a null-bucket row before its key is done."""
 
 from __future__ import annotations
 
@@ -7,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from abs_log_spark.operators.ann import centroid_ivf_assign, lsh_bucket_knn
-from abs_log_spark.plans.checkpoint import ISIN_MAX_KEYS, filter_pending
+from abs_log_spark.plans.checkpoint import NULL_BUCKET, filter_pending
 
 
 def _emb(spark, dim):
@@ -67,37 +68,32 @@ def test_simhash_feature_overflow_raises(spark):
     assert simhash_signature(ok).count() == 1
 
 
-def test_filter_pending_null_keys_consistent(spark):
-    """NULL keys must survive BOTH filter_pending paths identically (the
-    isin form's NULL predicate used to silently drop them)."""
-    df = spark.range(20).select(
-        F.when(F.col("id") < 5, None).otherwise(F.col("id") % 10)
-        .cast("int").alias("part_bucket")
-    )
-    small = {"1", "2"}
-    large = {str(k) for k in range(ISIN_MAX_KEYS + 10)} - {"0"}
-    n_null = 5
-    got_small = filter_pending(df, small)
-    got_large = filter_pending(df, large)
-    assert got_small.where(F.col("part_bucket").isNull()).count() == n_null
-    assert got_large.where(F.col("part_bucket").isNull()).count() == n_null
+@pytest.fixture(scope="module")
+def bucketed_input(spark, tmp_path_factory):
+    """Parquet input partitioned by ``part_bucket``: buckets 0..199 and the
+    null bucket, 3 rows each."""
+    path = str(tmp_path_factory.mktemp("pending") / "sequences")
+    b = F.col("id") % 201
+    spark.range(201 * 3).select(
+        "id", F.when(b < 200, b).cast("int").alias("part_bucket")
+    ).coalesce(1).write.partitionBy("part_bucket").parquet(path)
+    return spark.read.parquet(path)
 
 
-def test_filter_pending_anti_join_for_large_done_sets(spark):
-    df = spark.range(500).select(
-        F.col("id"), (F.col("id") % 200).cast("int").alias("part_bucket")
-    )
-    small = {str(k) for k in range(10)}
-    large = {str(k) for k in range(ISIN_MAX_KEYS + 36)}  # 100 done buckets
-
-    got_small = filter_pending(df, small).count()
-    got_large = filter_pending(df, large).count()
-    # brute-force expectation
-    exp_small = df.where(~F.col("part_bucket").isin([int(k) for k in small])).count()
-    exp_large = df.where(~F.col("part_bucket").isin([int(k) for k in large])).count()
-    assert (got_small, got_large) == (exp_small, exp_large)
-    # the large path is a broadcast anti-join, and no helper column leaks
-    large_df = filter_pending(df, large)
-    assert large_df.columns == df.columns
-    plan = large_df._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in plan
+@pytest.mark.parametrize("n_done", [2, 64, 65, 190])
+def test_filter_pending_is_one_partition_filter(bucketed_input, n_done):
+    """Rows equal a brute-force filter at every done-set size, null-bucket
+    rows stay until NULL_BUCKET is done, and the scan prunes partitions
+    (no join against the done set, which would read every partition)."""
+    rows = [(r.id, r.part_bucket) for r in bucketed_input.collect()]
+    done = {str(k) for k in range(n_done)}
+    for keys, nulls_kept in ((done, 3), (done | {NULL_BUCKET}, 0)):
+        got = filter_pending(bucketed_input, keys)
+        want = [
+            i for i, b in rows if (NULL_BUCKET if b is None else str(b)) not in keys
+        ]
+        assert sorted(r.id for r in got.collect()) == sorted(want)
+        assert got.where(F.col("part_bucket").isNull()).count() == nulls_kept
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "part_bucket" in plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+        assert "LeftAnti" not in plan and "BroadcastHashJoin" not in plan

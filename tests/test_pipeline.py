@@ -130,7 +130,7 @@ def test_pipeline_partial_resume(spark, tmp_catalog):
     dim = gen_sources_dim(spark)
     half = seq.where(F.col("part_bucket") < 4)
     run_pipeline(spark, tmp_catalog, half, dim, run_id="r1")
-    done = ckpt.completed_partitions(spark, tmp_catalog, "routed")
+    done = ckpt.completed_partitions(tmp_catalog, "routed")
     assert done == {"0", "1", "2", "3"}
     r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
     assert r2["buckets_processed"] == 4  # only the missing half
@@ -208,35 +208,45 @@ def test_incremental_agg_on_resume(spark, tmp_catalog, reference_catalog):
     assert "PartitionFilters" in plan and "part_bucket" in plan.split("PartitionFilters", 1)[1][:200]
 
     # (c) summaries identical to a from-scratch full recompute
-    full_cat = reference_catalog(seq, dim)
+    want = _summaries(spark, reference_catalog(seq, dim))
+    assert _summaries(spark, tmp_catalog) == want and want
+
+
+def _summaries(spark, cat) -> dict[str, list[tuple]]:
+    """Every per-sink summary table's rows, sorted, float sums rounded."""
+    out = {}
     for s in ("sink_a", "sink_b", "sink_c"):
-        if not tmp_catalog.exists(f"minute_agg_{s}"):
-            assert not full_cat.exists(f"minute_agg_{s}")
-            continue
-        inc_rows = sorted(
-            (str(r["minute"]), str(r["uri_abs"]), r["pv"], r["bytes_sum"],
-             round(r["rt_sum"] or 0, 6), round(r["rt_p50"] or 0, 6), r["err_hits"],
-             r["invalid_hits"])
-            for r in tmp_catalog.read(spark, f"minute_agg_{s}").collect()
-        )
-        full_rows = sorted(
-            (str(r["minute"]), str(r["uri_abs"]), r["pv"], r["bytes_sum"],
-             round(r["rt_sum"] or 0, 6), round(r["rt_p50"] or 0, 6), r["err_hits"],
-             r["invalid_hits"])
-            for r in full_cat.read(spark, f"minute_agg_{s}").collect()
-        )
-        assert inc_rows == full_rows and len(inc_rows) > 0
-        # error summaries merge too
-        if tmp_catalog.exists(f"errors_{s}"):
-            inc_err = sorted(
-                (str(r["minute"]), r["status"], r["hits"])
-                for r in tmp_catalog.read(spark, f"errors_{s}").collect()
+        if cat.exists(f"minute_agg_{s}"):
+            out[f"minute_agg_{s}"] = sorted(
+                (str(r["minute"]), str(r["uri_abs"]), r["pv"], r["bytes_sum"],
+                 round(r["rt_sum"] or 0, 6), round(r["rt_p50"] or 0, 6), r["err_hits"],
+                 r["invalid_hits"])
+                for r in cat.read(spark, f"minute_agg_{s}").collect()
             )
-            full_err = sorted(
+        if cat.exists(f"errors_{s}"):
+            out[f"errors_{s}"] = sorted(
                 (str(r["minute"]), r["status"], r["hits"])
-                for r in full_cat.read(spark, f"errors_{s}").collect()
+                for r in cat.read(spark, f"errors_{s}").collect()
             )
-            assert inc_err == full_err
+    return out
+
+
+def test_null_bucket_is_a_bucket_like_any_other(spark, tmp_catalog, reference_catalog):
+    """Input rows with a null ``part_bucket`` land in Spark's null partition
+    of every table; the run summarizes them like any bucket, checkpoints
+    them as NULL_BUCKET, and a re-run skips them."""
+    from abs_log_spark.plans import checkpoint as ckpt
+
+    seq = gen_sequences(spark, N, invalid_every=10)
+    seq = seq.withColumn("part_bucket", F.when(F.col("part_bucket") != 0, F.col("part_bucket")))
+    dim = gen_sources_dim(spark)
+    r1 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r1")
+    assert r1["rows_in"] == N and r1["buckets_processed"] == 8
+    assert _summaries(spark, tmp_catalog) == _summaries(spark, reference_catalog(seq, dim))
+    assert ckpt.NULL_BUCKET in ckpt.completed_partitions(tmp_catalog, "routed")
+
+    r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
+    assert r2["buckets_processed"] == 0 and r2["buckets_skipped"] == 8
 
 
 def test_incremental_agg_bucket_rerun_idempotent(spark, tmp_catalog):
@@ -257,7 +267,7 @@ def test_incremental_agg_bucket_rerun_idempotent(spark, tmp_catalog):
     pdf = ck.toPandas()
     tmp_catalog.drop("checkpoint")
     spark.createDataFrame(pdf).write.parquet(tmp_catalog.path("checkpoint"))
-    assert ckpt.completed_partitions(spark, tmp_catalog, "routed") == {
+    assert ckpt.completed_partitions(tmp_catalog, "routed") == {
         "0", "1", "2", "4", "5", "6", "7"
     }
 
@@ -517,3 +527,44 @@ def test_warm_increment_compiles_no_generated_code(spark, tmp_catalog, tmp_path)
             build_view(df, view, sink="sink_a", **kw).collect()
     assert [r["buckets_processed"] for r in runs] == [6, 1, 1]
     assert runs[-1]["codegen_compiles"] == 0, [r["codegen_compiles"] for r in runs]
+
+
+def test_resume_cost_does_not_grow_with_done_buckets(spark, tmp_path):
+    """A one-bucket increment runs the same Spark jobs and stage tasks over
+    10 or 70 done buckets: the pending filter prunes the input scan to the
+    increment's partitions at any history length."""
+    from abs_log_spark.catalog import Catalog
+    from abs_log_spark.plans import checkpoint as ckpt
+
+    input_dir = str(tmp_path / "sequences")
+    gen_sequences(spark, 71 * 8, buckets=71).coalesce(1).write.partitionBy(
+        "part_bucket"
+    ).parquet(input_dir)
+    seq = spark.read.parquet(input_dir)
+    dim = gen_sources_dim(spark)
+    n_pending = seq.where(F.col("part_bucket") == 70).count()
+    assert n_pending > 0
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def counted_run(done: range, inp) -> tuple[dict, int, int]:
+        # checkpoint rows only: the done buckets were never routed
+        cat = Catalog(root=str(tmp_path / f"wh_{len(done)}"))
+        ckpt.mark_done(cat, "history", "routed", [str(b) for b in done])
+        group = f"resume_{len(done)}"
+        sc.setJobGroup(group, group)
+        try:
+            vals = run_pipeline(spark, cat, inp, dim, run_id="inc")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = tracker.getJobIdsForGroup(group)
+        stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+        infos = [tracker.getStageInfo(s) for s in stages]
+        return vals, len(jobs), sum(i.numCompletedTasks for i in infos if i)
+
+    short = counted_run(range(60, 70), seq.where(F.col("part_bucket") >= 60))
+    long = counted_run(range(70), seq)
+    for vals, _, _ in (short, long):
+        assert vals["buckets_processed"] == 1 and vals["rows_in"] == n_pending
+    assert short[1:] == long[1:], (short[1:], long[1:])

@@ -102,7 +102,7 @@ def test_expire_buckets_keeps_all_state_consistent(spark, tmp_catalog, run_uncom
     res = expire_buckets(spark, tmp_catalog, ["0", "1"])
     assert res["partials_partitions"] == 2 and res["checkpoint_rows"] == 2
     assert res["routed_partitions"] >= 2
-    assert ckpt.completed_partitions(spark, tmp_catalog, "routed") == {
+    assert ckpt.completed_partitions(tmp_catalog, "routed") == {
         "2", "3", "4", "5", "6", "7"
     }
     pv_after = sum(
@@ -167,26 +167,17 @@ def test_summary_tables_day_partitioned_and_pruned(spark, tmp_catalog):
     assert inv == 600 // 10
 
 
-def test_expire_checkpoint_rewrite_uses_anti_join_above_threshold(spark, tmp_catalog):
-    """Expiring more buckets than ISIN_MAX_KEYS keeps exactly the unexpired
-    checkpoint rows. The expiry itself is a driver-side set lookup; a Spark
-    filter of the checkpoint by that many keys (resume's filter_pending)
-    plans a broadcast anti-join, not a thousands-deep NOT-isin chain."""
+def test_expire_many_buckets_keeps_the_rest(spark, tmp_catalog):
+    """Expiring 100 buckets keeps exactly the unexpired checkpoint rows (the
+    rewrite is a driver-side set lookup, whatever the set size)."""
     from abs_log_spark.operators.retention import expire_buckets
-    from abs_log_spark.plans.checkpoint import ISIN_MAX_KEYS, filter_pending
     from abs_log_spark.plans import checkpoint as ckpt
 
-    n = ISIN_MAX_KEYS + 36
-    ckpt.mark_done(spark, tmp_catalog, "r1", "routed", [str(k) for k in range(n + 5)])
-    # plan evidence for a Spark-side filter of the checkpoint by the keys
-    ck = tmp_catalog.read(spark, ckpt.CHECKPOINT_TABLE)
-    keep = filter_pending(ck, {str(k) for k in range(n)}, key_col="partition_key")
-    plan = keep._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in plan
-    # end-to-end: the rewrite keeps exactly the unexpired rows
+    n = 100
+    ckpt.mark_done(tmp_catalog, "r1", "routed", [str(k) for k in range(n + 5)])
     res = expire_buckets(spark, tmp_catalog, [str(k) for k in range(n)])
     assert res["checkpoint_rows"] == n
-    assert ckpt.completed_partitions(spark, tmp_catalog, "routed") == {
+    assert ckpt.completed_partitions(tmp_catalog, "routed") == {
         str(k) for k in range(n, n + 5)
     }
 
