@@ -89,7 +89,6 @@ def minute_agg(
 def minute_agg_hist_partials(
     routed: DataFrame,
     keys: tuple[str, ...] = GROUP_KEYS,
-    bucket_col: str = "part_bucket",
 ) -> DataFrame:
     """Per-input-bucket MERGEABLE minute-agg partials — the incremental-resume
     path's unit of work ([B] north_rule: incremental runs must not re-scan
@@ -108,12 +107,12 @@ def minute_agg_hist_partials(
     Scale: partial size per group is bounded by the rt value resolution
     (milliseconds here — the reference logs %.3f request_time [PK]); for a
     continuous measure, quantize rt at this stage (the partial becomes the
-    sketch). The write is partitioned by ``bucket_col`` so a re-run of a
+    sketch). The write is partitioned by ``part_bucket`` so a re-run of a
     bucket replaces exactly its own partials (dynamic partition overwrite).
     """
     df = routed.withColumn("minute", F.date_trunc("minute", F.col("ts")))
     return df.groupBy(
-        *[F.col(k) for k in keys], F.col(bucket_col), F.col("status"), F.col("rt")
+        *[F.col(k) for k in keys], F.col("part_bucket"), F.col("status"), F.col("rt")
     ).agg(
         F.sum(F.when(F.col("valid"), 1).otherwise(0)).alias("pv"),
         F.coalesce(F.sum("bytes"), F.lit(0)).cast("long").alias("bytes_sum"),

@@ -91,19 +91,18 @@ class StageMetrics:
                 vals.update(obs.get)
             except Exception:  # action may not have touched this point
                 pass
-        def as_long(key: str) -> int:
-            v = vals.get(key)
-            return int(v) if v is not None else 0  # empty input -> null sums
-
+        # empty input -> null sums; no pending rows -> no observed values
         vals = {k: (0 if v is None else v) for k, v in vals.items()}
+        counts = {
+            k: int(vals.get(k, 0))
+            for k in ("rows_in", "rows_valid", "rows_invalid", "rows_routed")
+        }
+        vals.update(counts)
         row = (
             run_id,
             "pipeline",
             ",".join(map(str, sorted(partition_keys))),
-            as_long("rows_in"),
-            as_long("rows_valid"),
-            as_long("rows_invalid"),
-            as_long("rows_routed"),
+            *counts.values(),
             wall_ms,
         )
         cat.append_rows(METRICS_TABLE, METRICS_SCHEMA, [row])

@@ -13,8 +13,9 @@ The Spark-first restatement of abs-log's collector lifecycle ([PK]
       -> checkpoint + metrics rows (driver-side pyarrow appends)
 
 Every stage is a pure DataFrame -> DataFrame function so the driver harness
-can register them individually and a Structured-Streaming foreachBatch can
-reuse them unchanged (SURVEY.md section 2.10).
+can register them individually; a Structured-Streaming foreachBatch runs
+``run_pipeline`` itself, one micro-batch per increment (SURVEY.md section
+2.10).
 
 Scale design decisions (10^12 rows / 1000 executors):
 - ONE data pass, NO cache: the routed relation (wide token arrays) is
@@ -446,9 +447,8 @@ def run_pipeline(
         inc = routed_union(spark, cat, sinks, bucket_filter=agg_buckets)
         if inc is not None:
             inc = metrics.observe_agg_input(inc)
-            # distinct from the streaming 'minute_agg_partials' table:
-            # batch partials are (keys, bucket, status, rt) histograms —
-            # ONE scan of the increment feeds both summary kinds
+            # partials are (keys, bucket, status, rt) histograms — ONE
+            # scan of the increment feeds both summary kinds
             cat.write(
                 minute_agg_hist_partials(inc),
                 "agg_partials",

@@ -1,11 +1,12 @@
 """Streaming-pipeline driver query (SURVEY.md section 2.10).
 
 Runs the foreachBatch micro-batched pipeline to completion (availableNow
-trigger over a multi-file input => multiple real micro-batches), merges the
-per-batch minute_agg partials, and returns the final per-minute totals. The
-DuckDB oracle recomputes the same totals from the closed-form field formulas
-— so a bug in the streaming wiring (checkpointing, batch splits, partial
-merge) breaks value equality, not just row counts.
+trigger over a multi-file input => multiple real micro-batches, each one
+``run_pipeline`` increment) and returns the warehouse's per-sink minute
+summaries. The DuckDB oracle recomputes the same totals from the
+closed-form field formulas — so a bug in the streaming wiring
+(checkpointing, batch splits, the per-batch fold) breaks value equality,
+not just row counts.
 """
 
 from __future__ import annotations
@@ -13,36 +14,31 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from abs_log_spark.catalog import Catalog
-from abs_log_spark.plans.pipeline import PipelineConfig
+from abs_log_spark.plans.pipeline import routed_sinks
 from abs_log_spark.queries import register
 from abs_log_spark.queries.core import _PIPE_FIELDS_CTE, _PIPELINE_E2E_SQL
 from abs_log_spark.sources.readers import sequences_from_documents
 from abs_log_spark.sources.synth import gen_sources_dim
-from abs_log_spark.streaming import (
-    merge_stream_partials,
-    run_stream_foreach_batch,
-    two_batch_trigger,
-)
+from abs_log_spark.streaming import run_stream_foreach_batch, two_batch_trigger
 
 
 @register("streaming_minute_agg_fb", _PIPELINE_E2E_SQL)
 def streaming_minute_agg_fb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Micro-batched streaming pipeline vs the batch oracle: multi-file
-    input, maxFilesPerTrigger=half => 2 micro-batches whose partials must
-    merge to EXACTLY the single-pass aggregate — including the exact
-    quantile columns, which now survive the cross-batch merge (the oracle
-    is the identical closed-form SQL the batch flagship uses). The file
-    count is SIZE-ADAPTIVE (round 6): a parquet file is the micro-batch
-    scan's split unit, so the round-5 fixed 4-file/2-per-trigger layout
-    capped each batch's Arrow-parse stage at 2 cores regardless of data
-    size — now 2x the rebalanced sequences partition count, clamped to
-    [4, 16], always split into exactly TWO micro-batches (trigger =
-    half the files written; merged output is batch-agnostic, oracle
-    unchanged)."""
+    input, maxFilesPerTrigger=half => 2 micro-batches, each a cron increment
+    of ``run_pipeline``, whose folded ``minute_agg_<sink>`` summaries must
+    equal EXACTLY the single-pass aggregate — including the exact quantile
+    columns (the oracle is the identical closed-form SQL the batch flagship
+    uses). The file count is SIZE-ADAPTIVE: a parquet file is the
+    micro-batch scan's split unit, so it is 2x the rebalanced sequences
+    partition count, clamped to [4, 16], always split into exactly TWO
+    micro-batches (trigger = half the files written; the summaries are
+    batch-agnostic, oracle unchanged)."""
     work = tempfile.mkdtemp(prefix="abslog_stream_q_")
     input_dir = os.path.join(work, "input")
     seq = sequences_from_documents(spark, sf_dir)
@@ -56,13 +52,14 @@ def streaming_minute_agg_fb(spark: SparkSession, sf_dir: str) -> DataFrame:
         cat,
         input_dir,
         dim,
-        checkpoint_dir=os.path.join(work, "ckpt"),
-        cfg=PipelineConfig(),
         max_files_per_trigger=two_batch_trigger(input_dir),
     )
     q.awaitTermination()
 
-    merged = merge_stream_partials(cat.read(spark, "minute_agg_partials"))
+    merged = reduce(
+        DataFrame.unionByName,
+        [cat.read(spark, f"minute_agg_{s}") for s in routed_sinks(cat)],
+    )
     out = merged.select(
         "sink",
         "site",

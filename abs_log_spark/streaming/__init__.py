@@ -2,14 +2,14 @@
 
 The reference is a cron micro-batcher ([PK] ``log_analyse.py`` run every N
 minutes with an offset bookmark); the batch pipeline with checkpoint/resume
-is the primary restatement of that. This package is the always-on variant:
-every batch stage is a pure DataFrame -> DataFrame function, so it composes
-unchanged into ``readStream`` / ``foreachBatch``.
+is that cycle. This package is the always-on variant: every batch stage is
+a pure DataFrame -> DataFrame function, so it composes unchanged into
+``readStream``, and ``foreachBatch`` runs each micro-batch as one
+``run_pipeline`` increment into the same warehouse.
 """
 
 from abs_log_spark.streaming.pipeline import (
     SEQUENCES_SCHEMA,
-    merge_stream_partials,
     read_sequence_stream,
     run_stream_foreach_batch,
     streaming_minute_agg,
@@ -18,7 +18,6 @@ from abs_log_spark.streaming.pipeline import (
 
 __all__ = [
     "SEQUENCES_SCHEMA",
-    "merge_stream_partials",
     "read_sequence_stream",
     "run_stream_foreach_batch",
     "streaming_minute_agg",

@@ -9,14 +9,14 @@ Two execution shapes, both reusing the batch stages verbatim:
    own limitation that coarse regroupings carry totals only (see
    ``operators.aggregate.trend``).
 2. **foreachBatch micro-batching** (:func:`run_stream_foreach_batch`): each
-   micro-batch aggregates into the SAME lossless histogram partials the
-   batch resume path uses (``operators.aggregate.minute_agg_hist_partials``
-   with batch_id as the bucket), appended per batch;
-   :func:`merge_stream_partials` folds them into final per-minute totals —
-   including EXACT cross-batch quantiles, which the round-1 shape (per-batch
-   minute_agg rows) could not merge. This is the shape that maps 1:1 onto
-   the reference's cron increments ([PK] each cron run aggregates its new
-   lines, MongoDB upserts merge them).
+   micro-batch is one cron increment of the batch pipeline — ``run_pipeline``
+   over the batch with ``part_bucket = batch_id`` — so the stream feeds the
+   same warehouse as the cron job (routed tables, checkpoint, histogram
+   partials, and the ``minute_agg_*`` / ``errors_*`` summaries ``log_show``
+   reads, EXACT quantiles included) and inherits its crash convergence. A
+   replayed batch id is a done bucket, so it counts once. This is the shape
+   that maps 1:1 onto the reference's cron increments ([PK] each cron run
+   aggregates its new lines, MongoDB upserts merge them).
 
 Scale notes: the streaming state for (1) is bounded by
 |windows within watermark| x |sink, site, uri_abs| — small, because
@@ -40,7 +40,10 @@ from pyspark.sql.types import (
 )
 
 from abs_log_spark.catalog import Catalog
-from abs_log_spark.plans.pipeline import PipelineConfig, transform
+from abs_log_spark.plans.pipeline import PipelineConfig, run_pipeline, transform
+
+#: the stream's offsets and commits, a hidden table of the warehouse it feeds.
+STREAM_OFFSETS = "_stream_offsets"
 
 #: north-rule input schema ([B] input_hint) + the layout bucket column.
 SEQUENCES_SCHEMA = StructType(
@@ -122,57 +125,45 @@ def streaming_minute_agg(
     )
 
 
-def merge_stream_partials(partials: DataFrame) -> DataFrame:
-    """Fold per-batch histogram partials into final per-minute totals with
-    EXACT quantiles (same schema/values as the single-pass batch aggregate).
-
-    Exactly-once under foreachBatch replay: a crash between the partials
-    append and the streaming checkpoint commit re-runs the SAME batch_id
-    over the same input files; the deterministic transform re-appends
-    BIT-IDENTICAL partial rows (the grain includes batch_id), so a full-row
-    dropDuplicates restores exactly-once — without it every replayed batch
-    double-counts pv/bytes/rt."""
-    from abs_log_spark.operators.aggregate import merge_minute_agg_hist_partials
-
-    return merge_minute_agg_hist_partials(partials.dropDuplicates())
-
-
 def run_stream_foreach_batch(
     spark: SparkSession,
     cat: Catalog,
     input_path: str,
     dim: DataFrame,
-    checkpoint_dir: str,
     cfg: PipelineConfig | None = None,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
     on_batch: Callable[[int, int], None] | None = None,
 ):
-    """Micro-batch the stream through the full batch semantics.
+    """Micro-batch the stream through the cron cycle: each batch is one
+    :func:`run_pipeline` increment keyed ``part_bucket = batch_id``, and
+    ``on_batch(batch_id, rows_in)`` reports it.
 
-    Each batch: transform -> histogram partials keyed by batch_id, appended
-    to ``minute_agg_partials`` (append-only => replayable; the streaming
-    checkpoint gives exactly-once batch ids, so a restarted query re-runs an
-    uncommitted batch and re-appends bit-identical rows — the full-row dedup
-    in :func:`merge_stream_partials` is the Iceberg-snapshot stand-in).
-    Returns the started StreamingQuery.
+    The stream's offsets live inside the warehouse it feeds
+    (:data:`STREAM_OFFSETS`). Batch ids restart at 0 with a fresh offsets
+    directory, and ``run_pipeline`` skips done buckets, so offsets kept apart
+    from the warehouse would make a new stream skip every batch. One
+    warehouse therefore takes one stream: Spark refuses a second input path
+    against the same offsets. A restarted query re-runs an uncommitted batch
+    over the same files: a no-op if its bucket is done, otherwise an
+    idempotent bucket re-run. Returns the started StreamingQuery.
     """
-    cfg = cfg or PipelineConfig()
     stream = read_sequence_stream(spark, input_path, max_files_per_trigger)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        from abs_log_spark.operators.aggregate import minute_agg_hist_partials
-
-        routed = transform(batch_df, dim, cfg)
-        hist = minute_agg_hist_partials(
-            routed.withColumn("batch_id", F.lit(batch_id)), bucket_col="batch_id"
+        vals = run_pipeline(
+            spark,
+            cat,
+            batch_df.withColumn("part_bucket", F.lit(batch_id).cast("int")),
+            dim,
+            run_id=f"stream-{batch_id}",
+            cfg=cfg,
         )
-        cat.append(hist, "minute_agg_partials")
         if on_batch is not None:
-            on_batch(batch_id, batch_df.count())
+            on_batch(batch_id, vals["rows_in"])
 
     writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+        "checkpointLocation", cat.path(STREAM_OFFSETS)
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

@@ -1,18 +1,19 @@
 """spark-submit entry point for the STREAMING pipeline variant.
 
 The always-on counterpart of jobs/run_pipeline.py: micro-batches a
-sequences directory (or, on a cluster, an Iceberg table stream) through the
-identical batch stages via foreachBatch, appending per-batch minute_agg
-histogram partials; ``merge_stream_partials`` folds them to final totals
-(EXACT quantiles included) on read.
+sequences directory (or, on a cluster, an Iceberg table stream) through
+foreachBatch, each micro-batch one ``run_pipeline`` increment keyed by its
+batch id. The stream feeds the same warehouse tables as the cron job, so
+``jobs/log_show.py`` serves it. Its offsets live inside the warehouse: one
+warehouse takes one stream (or one bucketed batch input, never both).
 
 Usage (finite drain, e.g. backfill):
     python jobs/run_stream.py --input /data/sequences --warehouse /tmp/swh \
-        --checkpoint /tmp/sckpt --available-now
+        --available-now
 
 Usage (continuous):
     spark-submit --py-files dist/abs_log_spark.zip jobs/run_stream.py \
-        --input /data/sequences --warehouse /wh --checkpoint /ckpt
+        --input /data/sequences --warehouse /wh
 """
 
 from __future__ import annotations
@@ -26,7 +27,6 @@ def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description="abs-log-spark streaming pipeline")
     p.add_argument("--input", required=True, help="sequences parquet dir to stream")
     p.add_argument("--warehouse", required=True)
-    p.add_argument("--checkpoint", required=True, help="streaming checkpoint dir")
     p.add_argument("--master", default=None)
     p.add_argument("--max-files-per-trigger", type=int, default=None)
     p.add_argument(
@@ -38,7 +38,7 @@ def main(argv: list[str] | None = None) -> int:
     from abs_log_spark.catalog import Catalog
     from abs_log_spark.session import get_spark
     from abs_log_spark.sources.synth import gen_sources_dim
-    from abs_log_spark.streaming import merge_stream_partials, run_stream_foreach_batch
+    from abs_log_spark.streaming import run_stream_foreach_batch
 
     spark = get_spark(app_name="abs-log-spark:stream", master=args.master)
     cat = Catalog(root=args.warehouse)
@@ -50,23 +50,13 @@ def main(argv: list[str] | None = None) -> int:
         cat,
         args.input,
         dim,
-        checkpoint_dir=args.checkpoint,
         max_files_per_trigger=args.max_files_per_trigger,
         available_now=args.available_now,
         on_batch=lambda bid, n: batches.append((bid, n)),
     )
     q.awaitTermination()
 
-    merged_rows = 0
-    if cat.exists("minute_agg_partials"):
-        merged = merge_stream_partials(cat.read(spark, "minute_agg_partials"))
-        cat.write(merged.coalesce(1), "minute_agg_merged")
-        merged_rows = cat.read(spark, "minute_agg_merged").count()
-    print(json.dumps({
-        "batches": len(batches),
-        "rows_by_batch": batches,
-        "minute_agg_merged_rows": merged_rows,
-    }))
+    print(json.dumps({"batches": len(batches), "rows_by_batch": batches}))
     spark.stop()
     return 0
 

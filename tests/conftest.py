@@ -69,3 +69,29 @@ def reference_catalog(spark, tmp_path):
         return cat
 
     return build
+
+
+@pytest.fixture()
+def summaries(spark):
+    """``summaries(cat)``: every per-sink summary table's rows, sorted, float
+    sums rounded — what an incremental warehouse and its
+    ``reference_catalog`` must agree on."""
+
+    def rows(cat) -> dict[str, list[tuple]]:
+        out = {}
+        for s in ("sink_a", "sink_b", "sink_c"):
+            if cat.exists(f"minute_agg_{s}"):
+                out[f"minute_agg_{s}"] = sorted(
+                    (str(r["minute"]), str(r["uri_abs"]), r["pv"], r["bytes_sum"],
+                     round(r["rt_sum"] or 0, 6), round(r["rt_p50"] or 0, 6), r["err_hits"],
+                     r["invalid_hits"])
+                    for r in cat.read(spark, f"minute_agg_{s}").collect()
+                )
+            if cat.exists(f"errors_{s}"):
+                out[f"errors_{s}"] = sorted(
+                    (str(r["minute"]), r["status"], r["hits"])
+                    for r in cat.read(spark, f"errors_{s}").collect()
+                )
+        return out
+
+    return rows

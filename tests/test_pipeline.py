@@ -122,6 +122,22 @@ def test_pipeline_run_and_resume(spark, tmp_catalog):
         assert tmp_catalog.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0] == v
 
 
+def test_rerun_with_nothing_pending_returns_zero_row_counts(spark, tmp_catalog):
+    """A run whose input is all done observes no rows; it still returns the
+    four row counts its ``metrics`` row records, as 0."""
+    seq = gen_sequences(spark, N, invalid_every=10)
+    dim = gen_sources_dim(spark)
+    run_pipeline(spark, tmp_catalog, seq, dim, run_id="r1")
+    r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
+    counts = ("rows_in", "rows_valid", "rows_invalid", "rows_routed")
+    assert r2["buckets_processed"] == 0
+    assert {k: r2.get(k) for k in counts} == dict.fromkeys(counts, 0)
+    rows = tmp_catalog.read_arrow(
+        "metrics", columns=["run_id", *counts], filters=[("run_id", "=", "r2")]
+    ).to_pylist()
+    assert rows == [{"run_id": "r2", **dict.fromkeys(counts, 0)}]
+
+
 def test_pipeline_partial_resume(spark, tmp_catalog):
     """Simulate a crash after half the buckets: second run completes the rest."""
     from abs_log_spark.plans import checkpoint as ckpt
@@ -178,7 +194,7 @@ def test_hist_partials_merge_equals_exact_minute_agg(spark):
             assert math.isclose(gv, wv, rel_tol=1e-9, abs_tol=1e-12), (k, c, gv, wv)
 
 
-def test_incremental_agg_on_resume(spark, tmp_catalog, reference_catalog):
+def test_incremental_agg_on_resume(spark, tmp_catalog, reference_catalog, summaries):
     """A resumed run's summary aggregation reads ONLY the new buckets (the
     increment), yet the final summaries equal a full recompute."""
     seq = gen_sequences(spark, N, invalid_every=10)
@@ -208,30 +224,11 @@ def test_incremental_agg_on_resume(spark, tmp_catalog, reference_catalog):
     assert "PartitionFilters" in plan and "part_bucket" in plan.split("PartitionFilters", 1)[1][:200]
 
     # (c) summaries identical to a from-scratch full recompute
-    want = _summaries(spark, reference_catalog(seq, dim))
-    assert _summaries(spark, tmp_catalog) == want and want
+    want = summaries(reference_catalog(seq, dim))
+    assert summaries(tmp_catalog) == want and want
 
 
-def _summaries(spark, cat) -> dict[str, list[tuple]]:
-    """Every per-sink summary table's rows, sorted, float sums rounded."""
-    out = {}
-    for s in ("sink_a", "sink_b", "sink_c"):
-        if cat.exists(f"minute_agg_{s}"):
-            out[f"minute_agg_{s}"] = sorted(
-                (str(r["minute"]), str(r["uri_abs"]), r["pv"], r["bytes_sum"],
-                 round(r["rt_sum"] or 0, 6), round(r["rt_p50"] or 0, 6), r["err_hits"],
-                 r["invalid_hits"])
-                for r in cat.read(spark, f"minute_agg_{s}").collect()
-            )
-        if cat.exists(f"errors_{s}"):
-            out[f"errors_{s}"] = sorted(
-                (str(r["minute"]), r["status"], r["hits"])
-                for r in cat.read(spark, f"errors_{s}").collect()
-            )
-    return out
-
-
-def test_null_bucket_is_a_bucket_like_any_other(spark, tmp_catalog, reference_catalog):
+def test_null_bucket_is_a_bucket_like_any_other(spark, tmp_catalog, reference_catalog, summaries):
     """Input rows with a null ``part_bucket`` land in Spark's null partition
     of every table; the run summarizes them like any bucket, checkpoints
     them as NULL_BUCKET, and a re-run skips them."""
@@ -242,7 +239,7 @@ def test_null_bucket_is_a_bucket_like_any_other(spark, tmp_catalog, reference_ca
     dim = gen_sources_dim(spark)
     r1 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r1")
     assert r1["rows_in"] == N and r1["buckets_processed"] == 8
-    assert _summaries(spark, tmp_catalog) == _summaries(spark, reference_catalog(seq, dim))
+    assert summaries(tmp_catalog) == summaries(reference_catalog(seq, dim))
     assert ckpt.NULL_BUCKET in ckpt.completed_partitions(tmp_catalog, "routed")
 
     r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")

@@ -3,20 +3,21 @@ into readStream must produce exactly the batch answers."""
 
 from __future__ import annotations
 
-import math
+import os
 
 import pytest
+from pyspark.errors import StreamingQueryException
 
 from abs_log_spark.operators.aggregate import minute_agg
 from abs_log_spark.plans.pipeline import transform
 from abs_log_spark.sources.synth import gen_sequences, gen_sources_dim
 from abs_log_spark.streaming import (
-    merge_stream_partials,
     read_sequence_stream,
     run_stream_foreach_batch,
     streaming_minute_agg,
     two_batch_trigger,
 )
+from abs_log_spark.streaming.pipeline import STREAM_OFFSETS
 
 N = 3000
 
@@ -72,75 +73,97 @@ def test_native_windowed_agg_equals_batch(spark, tmp_path, seq_input):
     assert sum(m["rows_routed"] for m in observed) == N
 
 
-def test_foreachbatch_partials_merge_to_batch_answer(spark, tmp_path, tmp_catalog, seq_input):
-    """Micro-batched foreachBatch histogram partials, merged, == single-pass
-    batch agg on EVERY measure — exact quantiles included (they survive the
-    cross-batch merge), plus the invalid-row null-key group."""
+def _drain(spark, cat, input_dir, dim) -> list[tuple[int, int]]:
+    """Run the foreachBatch stream over ``input_dir`` to the end, one file
+    per micro-batch; returns the ``(batch_id, rows_in)`` pairs reported."""
+    rows: list[tuple[int, int]] = []
+    run_stream_foreach_batch(
+        spark, cat, input_dir, dim, max_files_per_trigger=1,
+        on_batch=lambda bid, n: rows.append((bid, n)),
+    ).awaitTermination()
+    return rows
+
+
+def _batches(cat) -> list[str]:
+    """The checkpoint's ``partition_key`` column, one entry per row, sorted."""
+    keys = cat.read_arrow("checkpoint", columns=["partition_key"]).column("partition_key")
+    return sorted(keys.to_pylist(), key=int)
+
+
+def test_foreachbatch_feeds_the_cron_warehouse(
+    spark, tmp_catalog, seq_input, reference_catalog, summaries
+):
+    """Each micro-batch is one ``run_pipeline`` increment keyed by its batch
+    id: the stream's ``minute_agg_*`` and ``errors_*`` summaries equal the
+    full recompute on every compared measure (exact p50 included), and the
+    checkpoint holds one row per batch."""
     seq, input_dir = seq_input
     dim = gen_sources_dim(spark)
-    q = run_stream_foreach_batch(
-        spark,
-        tmp_catalog,
-        input_dir,
-        dim,
-        checkpoint_dir=str(tmp_path / "ckpt_fb"),
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination()
+    rows = _drain(spark, tmp_catalog, input_dir, dim)
 
-    partials = tmp_catalog.read(spark, "minute_agg_partials")
-    n_batches = partials.select("batch_id").distinct().count()
-    assert n_batches >= 2, "multi-file input must produce multiple micro-batches"
-
-    merged = merge_stream_partials(partials)
-    exact_cols = ["pv", "bytes_sum", "err_hits", "invalid_hits"]
-    float_cols = ["rt_sum", "rt_avg", "rt_min", "rt_p25", "rt_p50", "rt_p75", "rt_max"]
-    got = _rows(merged, (KEYS, exact_cols + float_cols))
-    want = _rows(
-        minute_agg(transform(seq, dim), exact_quantiles=True),
-        (KEYS, exact_cols + float_cols),
-    )
-
-    assert set(got) == set(want)
-    for k, g in got.items():
-        w = want[k]
-        assert g[: len(exact_cols)] == w[: len(exact_cols)], k
-        for gg, ww in zip(g[len(exact_cols):], w[len(exact_cols):]):
-            if gg is None and ww is None:
-                continue
-            assert math.isclose(gg, ww, rel_tol=1e-9, abs_tol=1e-9), (k, gg, ww)
+    assert len(rows) >= 2, "multi-file input must produce multiple micro-batches"
+    assert sum(n for _, n in rows) == N
+    assert _batches(tmp_catalog) == [str(bid) for bid, _ in rows]
+    want = summaries(reference_catalog(seq, dim))
+    assert summaries(tmp_catalog) == want and want
 
 
-def test_foreachbatch_replay_is_exactly_once(spark, tmp_path, tmp_catalog, seq_input):
-    """Crash-recovery scenario: the partials append committed but the
-    streaming checkpoint did not, so the restarted query re-runs the same
-    batch_id and re-appends identical partial rows. The merge must dedup on
-    (batch_id, keys) so measures are NOT double-counted."""
+@pytest.mark.parametrize("replay", ["uncommitted_batch", "crash_in_mark_done"])
+def test_foreachbatch_replay_counts_once(
+    spark, tmp_catalog, seq_input, reference_catalog, summaries, monkeypatch, replay
+):
+    """Real replays converge to the reference. ``uncommitted_batch``: the
+    last batch's commit is lost, so the restarted query re-runs it over the
+    same files; its bucket is done, so it is a no-op that reads 0 rows.
+    ``crash_in_mark_done``: batch 1 dies after its routed promote and its
+    partials write; the restart re-runs batch 1 as a bucket re-run, then
+    batch 2."""
+    from abs_log_spark.plans import checkpoint as ckpt
+
     seq, input_dir = seq_input
     dim = gen_sources_dim(spark)
-    q = run_stream_foreach_batch(
-        spark,
-        tmp_catalog,
-        input_dir,
-        dim,
-        checkpoint_dir=str(tmp_path / "ckpt_replay"),
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination()
 
-    partials = tmp_catalog.read(spark, "minute_agg_partials")
-    clean = merge_stream_partials(partials)
-    cols = ["pv", "bytes_sum", "err_hits", "invalid_hits", "rt_p50"]
-    want = _rows(clean, (KEYS, cols))
+    if replay == "uncommitted_batch":
+        last = _drain(spark, tmp_catalog, input_dir, dim)[-1][0]
+        commits = os.path.join(tmp_catalog.path(STREAM_OFFSETS), "commits")
+        for name in (str(last), f".{last}.crc"):
+            if os.path.exists(os.path.join(commits, name)):
+                os.remove(os.path.join(commits, name))
+        assert _drain(spark, tmp_catalog, input_dir, dim) == [(last, 0)]
+    else:
+        mark_done = ckpt.mark_done
 
-    # simulate the replay: batch 0's rows land a second time, bit-identical
-    replay = partials.where("batch_id = 0")
-    assert replay.count() > 0
-    tmp_catalog.append(replay, "minute_agg_partials")
+        def crash_on_batch_1(cat, run_id, stage, keys):
+            if "1" in keys:
+                raise RuntimeError("injected crash in mark_done")
+            mark_done(cat, run_id, stage, keys)
 
-    merged = merge_stream_partials(tmp_catalog.read(spark, "minute_agg_partials"))
-    got = _rows(merged, (KEYS, cols))
-    assert got == want
+        with monkeypatch.context() as m:
+            m.setattr(ckpt, "mark_done", crash_on_batch_1)
+            with pytest.raises(StreamingQueryException):
+                _drain(spark, tmp_catalog, input_dir, dim)
+        assert ckpt.completed_partitions(tmp_catalog, "routed") == {"0"}
+        assert [bid for bid, _ in _drain(spark, tmp_catalog, input_dir, dim)] == [1, 2]
+
+    assert _batches(tmp_catalog) == ["0", "1", "2"]
+    want = summaries(reference_catalog(seq, dim))
+    assert summaries(tmp_catalog) == want and want
+
+
+def test_one_input_per_warehouse(spark, tmp_path, tmp_catalog, seq_input, summaries):
+    """The offsets live in the warehouse, so a second input path cannot feed
+    it: batch ids would restart at 0 and collide with done buckets. Spark
+    refuses the second path and the summaries stay as they were."""
+    seq, input_dir = seq_input
+    dim = gen_sources_dim(spark)
+    _drain(spark, tmp_catalog, input_dir, dim)
+    before = summaries(tmp_catalog)
+
+    other = str(tmp_path / "other_input")
+    gen_sequences(spark, 300).write.parquet(other)
+    with pytest.raises(StreamingQueryException, match="basePath"):
+        _drain(spark, tmp_catalog, other, dim)
+    assert summaries(tmp_catalog) == before and before
 
 
 def test_two_batch_trigger_counts_files_written(spark, tmp_path, tmp_catalog):
@@ -160,7 +183,6 @@ def test_two_batch_trigger_counts_files_written(spark, tmp_path, tmp_catalog):
         tmp_catalog,
         input_dir,
         gen_sources_dim(spark),
-        checkpoint_dir=str(tmp_path / "ckpt_two"),
         max_files_per_trigger=two_batch_trigger(input_dir),
         on_batch=rows.__setitem__,
     )
