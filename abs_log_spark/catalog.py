@@ -224,23 +224,25 @@ class Catalog:
     def promote_sink_tables(self, staging_table: str, table_prefix: str) -> list[str]:
         """Promote a staging write partitioned by ``_sink`` into per-sink
         tables by moving each ``_sink=S`` directory wholesale to
-        ``<prefix>S`` (full-table replace — summary tables are rewritten per
-        run). The data files keep their own ``sink`` column; ``_sink`` exists
-        only to drive the directory layout, so ONE write job fans out to N
-        sink tables. Iceberg equivalent: ``REPLACE TABLE ... AS SELECT``
-        per sink, or a single table with sink partition."""
+        ``<prefix>S``. The staging replaces the whole SET of ``<prefix>*``
+        tables (summary tables are rewritten per run): a ``<prefix>`` table
+        whose sink the staging lacks is dropped, so a sink with no rows left
+        serves none. The data files keep their own ``sink`` column; ``_sink``
+        exists only to drive the directory layout, so ONE write job fans out
+        to N sink tables. Iceberg equivalent: ``REPLACE TABLE ... AS
+        SELECT`` per sink, or a single table with sink partition."""
         staging = self.path(staging_table)
-        sinks: list[str] = []
-        if not os.path.isdir(staging):
-            return sinks
-        for d in sorted(os.listdir(staging)):
-            if not d.startswith("_sink="):
-                continue
-            sink = d.split("=", 1)[1]
+        sinks = sorted(
+            d.split("=", 1)[1] for d in os.listdir(staging) if d.startswith("_sink=")
+        ) if os.path.isdir(staging) else []
+        if os.path.isdir(self.root):
+            for t in os.listdir(self.root):
+                if t.startswith(table_prefix) and t[len(table_prefix):] not in sinks:
+                    shutil.rmtree(self.path(t))
+        for sink in sinks:
             target = self.path(f"{table_prefix}{sink}")
             shutil.rmtree(target, ignore_errors=True)
-            os.replace(os.path.join(staging, d), target)
-            sinks.append(sink)
+            os.replace(os.path.join(staging, f"_sink={sink}"), target)
         shutil.rmtree(staging, ignore_errors=True)
         return sinks
 

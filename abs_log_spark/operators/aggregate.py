@@ -90,11 +90,11 @@ def minute_agg_hist_partials(
     routed: DataFrame,
     keys: tuple[str, ...] = GROUP_KEYS,
 ) -> DataFrame:
-    """Per-input-bucket MERGEABLE minute-agg partials — the incremental-resume
-    path's unit of work ([B] north_rule: incremental runs must not re-scan
-    completed history).
+    """MERGEABLE minute-agg partials — the incremental-resume path's unit of
+    work ([B] north_rule: incremental runs must not re-scan completed
+    history).
 
-    Grain: (keys..., bucket, status, rt). Carrying the distinct rt values
+    Grain: (keys..., status, rt). Carrying the distinct rt values
     WITH their counts makes the partial a lossless histogram: every
     minute_agg measure — including EXACT quantiles — re-derives from
     partials alone, so an incremental run aggregates only its new buckets
@@ -107,12 +107,12 @@ def minute_agg_hist_partials(
     Scale: partial size per group is bounded by the rt value resolution
     (milliseconds here — the reference logs %.3f request_time [PK]); for a
     continuous measure, quantize rt at this stage (the partial becomes the
-    sketch). The write is partitioned by ``part_bucket`` so a re-run of a
-    bucket replaces exactly its own partials (dynamic partition overwrite).
+    sketch). The measures are exact integer sums, so partials of disjoint
+    row sets add (and subtract) group by group.
     """
     df = routed.withColumn("minute", F.date_trunc("minute", F.col("ts")))
     return df.groupBy(
-        *[F.col(k) for k in keys], F.col("part_bucket"), F.col("status"), F.col("rt")
+        *[F.col(k) for k in keys], F.col("status"), F.col("rt")
     ).agg(
         F.sum(F.when(F.col("valid"), 1).otherwise(0)).alias("pv"),
         F.coalesce(F.sum("bytes"), F.lit(0)).cast("long").alias("bytes_sum"),

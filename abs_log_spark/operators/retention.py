@@ -7,9 +7,9 @@ tables themselves: :func:`expire_buckets` removes whole input buckets from
 the routed tables, the histogram partials and the checkpoint, then rebuilds
 the summaries. The 10^12-row routed tables are expired by dropping whole
 ``part_bucket`` partitions (directory removal, never a rewrite); the
-partials and checkpoint rewrites go through the catalog's journaled swap
-(:meth:`Catalog.swap`), so a crash at any step rolls forward or back at the
-next entry.
+partials subtraction and the checkpoint rewrite go through the catalog's
+journaled swap (:meth:`Catalog.swap`), so a crash at any step rolls forward
+or back at the next entry.
 """
 
 from __future__ import annotations
@@ -23,30 +23,29 @@ from abs_log_spark.catalog import Catalog
 
 
 def expire_buckets(spark: SparkSession, cat: Catalog, buckets: list[str]) -> dict:
-    """Consistently expire input buckets EVERYWHERE they left state: every
-    ``routed_*`` table's partitions, the ``agg_partials`` histogram
-    partitions, and the checkpoint rows — then rebuild the summary tables
-    from the remaining partials.
+    """Consistently expire input buckets EVERYWHERE they left state: their
+    contribution to ``agg_partials``, every ``routed_*`` table's partitions,
+    and the checkpoint rows — then rebuild the summary tables from the
+    remaining partials (no summary table is left when nothing remains).
 
     This is the expiry the incremental-aggregation design requires: dropping
     only the routed partitions would leave the buckets' partials behind, and
     the next ``rebuild_summaries`` would resurrect expired data; leaving the
     checkpoint rows would make a later re-ingest of the same bucket key
     silently skip. One call keeps all four surfaces in lockstep. Iceberg
-    equivalent: partition DELETEs on the two data tables + checkpoint DELETE
-    + the summary REPLACE, in one transaction group.
+    equivalent: partition DELETEs on the routed tables + a partials
+    rewrite + checkpoint DELETE + the summary REPLACE, in one transaction
+    group.
     """
     from abs_log_spark.plans import checkpoint as ckpt
     from abs_log_spark.plans.pipeline import rebuild_summaries, routed_sinks, subtract_compacted
 
-    dropped = {"routed_partitions": 0, "partials_partitions": 0, "checkpoint_rows": 0}
-    # buckets folded into the consolidated partials partition have no own
-    # partition dir to drop: subtract their exact contribution instead —
-    # BEFORE the routed drop, which is the data the recompute reads
-    dropped["partials_subtracted"] = subtract_compacted(spark, cat, buckets)
-    for sink in routed_sinks(cat):
-        dropped["routed_partitions"] += expire_routed_buckets(cat, f"routed_{sink}", buckets)
-    dropped["partials_partitions"] = expire_routed_buckets(cat, "agg_partials", buckets)
+    # subtract the buckets' exact partials BEFORE the routed drop, which is
+    # the data the recompute reads
+    dropped = {"partials_subtracted": subtract_compacted(spark, cat, buckets)}
+    dropped["routed_partitions"] = sum(
+        expire_routed_buckets(cat, f"routed_{sink}", buckets) for sink in routed_sinks(cat)
+    )
     dropped["checkpoint_rows"] = ckpt.expire(cat, {str(b) for b in buckets})
     rebuild_summaries(spark, cat)
     return dropped

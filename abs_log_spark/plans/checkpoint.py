@@ -58,7 +58,7 @@ def completed_partitions(cat: Catalog, stage: str) -> set[str]:
 
 
 #: the directory name Spark writes and lists for a null ``part_bucket``; the
-#: checkpoint, the compaction manifest and :func:`bucket_in` spell the null
+#: checkpoint, the partials lineage and :func:`bucket_in` spell the null
 #: bucket this one way.
 NULL_BUCKET = "__HIVE_DEFAULT_PARTITION__"
 

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import time
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -82,14 +83,23 @@ class StageMetrics:
         """Append this run's row to ``metrics`` (driver-side pyarrow write,
         no Spark job) and return the collected values plus phase timings and
         ``codegen_compiles``, the classes compiled since construction (kept
-        out of the ``metrics`` row: one footer schema per table)."""
+        out of the ``metrics`` row: one footer schema per table).
+
+        Every observation point must have been consumed by an action before
+        this call: ``Observation.get`` blocks until its action has run, and
+        waits forever for one that never does. An action over empty input
+        completes it with a count of 0 and null sums, or, when adaptive
+        execution pruned the observed subtree as empty, with no row at all;
+        both read as zero counts."""
         wall_ms = int((time.monotonic() - self.t0) * 1000)
         compiles = codegen_compile_count(spark) - self._compiles0
         vals: dict = {"wall_ms": wall_ms}
-        for name, obs in self.observations.items():
+        for obs in self.observations.values():
             try:
                 vals.update(obs.get)
-            except Exception:  # action may not have touched this point
+            except Py4JJavaError:
+                # the action ran on empty input and AQE replaced the
+                # observed subtree by an empty relation: no metrics row
                 pass
         # empty input -> null sums; no pending rows -> no observed values
         vals = {k: (0 if v is None else v) for k, v in vals.items()}

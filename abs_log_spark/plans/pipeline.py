@@ -8,9 +8,12 @@ The Spark-first restatement of abs-log's collector lifecycle ([PK]
          (detok + RE2 regex + uri_abs/args_abs, functions.parse)
       -> STAGE enrich  : broadcast join on the source dimension
       -> STAGE route   : one partitioned write, promoted to per-sink tables
-      -> STAGE agg     : this run's buckets -> histogram partials, folded
-                         into per-sink minute summaries + error view
-      -> checkpoint + metrics rows (driver-side pyarrow appends)
+      -> STAGE fold    : unfolded routed buckets -> histogram partials,
+                         added to ONE agg_partials table (one swap)
+      -> checkpoint row (driver-side pyarrow append)
+      -> STAGE summary : agg_partials -> per-sink minute summaries + error
+                         view
+      -> metrics row (driver-side pyarrow append)
 
 Every stage is a pure DataFrame -> DataFrame function so the driver harness
 can register them individually; a Structured-Streaming foreachBatch runs
@@ -25,12 +28,14 @@ Scale design decisions (10^12 rows / 1000 executors):
   token arrays measured 2x slower than re-reading column-pruned parquet.
 - partition promotion replaces exactly the re-run buckets -> idempotent
   per-bucket re-runs (resume).
-- summaries are incremental: only this run's buckets are read back from
-  the routed tables (partition-pruned; parquet column pruning keeps the
-  token arrays unread) into mergeable per-bucket partials with lossless rt
-  histograms, so quantiles stay EXACT through every fold; the summaries
-  are re-derived from the aggregate-sized partials table, never from the
-  routed history. AQE coalesces the post-shuffle partitions.
+- summaries are incremental: only the buckets not yet folded are read
+  back from the routed tables (partition-pruned; parquet column pruning
+  keeps the token arrays unread) into mergeable partials with lossless rt
+  histograms, so quantiles stay EXACT through every fold. Each run folds
+  them ONCE into the one ``agg_partials`` table, whose lineage of folded
+  buckets moves with it in the same swap; the summaries are re-derived
+  from that aggregate-sized table, never from the routed history. AQE
+  coalesces the post-shuffle partitions.
 - no Spark job for bookkeeping: a cron increment is bound by scheduling,
   not data, so the checkpoint read and mark, the metrics row and the sink
   list stay on the driver (pyarrow appends, directory listings), and
@@ -76,12 +81,14 @@ class PipelineConfig:
     exclude_uri: str | None = None
 
 
-def fan_out_summary(cat: Catalog, name: str, summary: DataFrame) -> None:
+def fan_out_summary(cat: Catalog, name: str, summary: DataFrame | None) -> None:
     """ONE write job per summary kind, fanned out to per-sink tables by a
     partitioned write + directory promote (no per-sink filter jobs —
     measured ~0.4s of scheduler overhead per tiny job). ``_sink`` duplicates
     ``sink`` purely to drive the directory layout while keeping the sink
-    column inside the data files.
+    column inside the data files. The promote replaces the whole set of
+    ``<name>*`` tables, so a sink with no rows left (or every sink, when
+    ``summary`` is None) loses its table.
 
     Summary tables are additionally partitioned by ``day = date(minute)`` so
     time-ranged reports (``log_show --from/--to``) prune whole partition
@@ -90,68 +97,31 @@ def fan_out_summary(cat: Catalog, name: str, summary: DataFrame) -> None:
     land in the null partition and are read back intact."""
     staging = f"_{name}staging"
     cat.drop(staging)
-    cat.write(
-        summary.withColumn("_sink", F.col("sink"))
-        .withColumn("day", F.to_date("minute"))
-        .repartition(F.col("_sink")),
-        staging,
-        partition_by=("_sink", "day"),
-    )
+    if summary is not None:
+        cat.write(
+            summary.withColumn("_sink", F.col("sink"))
+            .withColumn("day", F.to_date("minute"))
+            .repartition(F.col("_sink")),
+            staging,
+            partition_by=("_sink", "day"),
+        )
     cat.promote_sink_tables(staging, name)
 
 
-def missing_partials_buckets(cat: Catalog, exclude: set[str] = frozenset()) -> set[str]:
-    """Buckets present in routed history but absent from ``agg_partials`` —
-    summary rows that a partials-only rebuild would silently drop. Known
-    producers: a crash after the routed promote but before the partials
-    write, and a lost or deleted ``agg_partials`` table. Pure
-    directory-listing comparison (no Spark jobs); buckets folded into a
-    consolidated partition by compaction are accounted for via the
-    compaction manifest."""
-    routed: set[str] = set()
-    if os.path.isdir(cat.root):
-        for t in os.listdir(cat.root):
-            if t.startswith("routed_"):
-                routed |= cat.partition_values(t)
-    have = cat.partition_values("agg_partials")
-    have |= compacted_buckets(cat)
-    return routed - have - set(exclude)
+#: lineage of ``agg_partials``: the buckets folded into it. It lives inside
+#: the table directory (Spark, DuckDB and ``footer_schema`` skip ``_``
+#: names), so the one directory swap moves the table and its lineage together.
+_LINEAGE = "_folded_buckets.json"
 
 
-#: agg_partials partition id holding compacted history. Real buckets are
-#: non-negative (hash buckets), so -1 can never collide with live lineage.
-CONSOLIDATED_BUCKET = -1
-
-_MANIFEST = "_compacted_buckets.json"
-
-
-def compacted_buckets(cat: Catalog) -> set[str]:
-    """Buckets whose partials were folded into the consolidated partition by
-    :func:`compact_partials` — recorded in a tiny JSON manifest (the parquet
+def folded_buckets(cat: Catalog) -> set[str]:
+    """Buckets whose partials are folded into ``agg_partials`` (the parquet
     stand-in for an Iceberg snapshot property)."""
-    p = os.path.join(cat.root, _MANIFEST)
+    p = os.path.join(cat.path("agg_partials"), _LINEAGE)
     if not os.path.exists(p):
         return set()
     with open(p) as f:
         return set(json.load(f))
-
-
-def _swap_partials(cat: Catalog, manifest: set[str], remove: list[str]) -> None:
-    """Swap the staged partials state into place in one journaled
-    :meth:`Catalog.swap`: the consolidated partition, when the staging holds
-    one, and the new manifest move in; the ``remove`` bucket partitions go.
-    Without the journal a crash between the partition swap and the manifest
-    update would double count (a folded bucket missing from the manifest is
-    re-aggregated by the backfill) or lose rows (a half-removed set)."""
-    staging = cat.path(SWAP_STAGING)
-    os.makedirs(staging, exist_ok=True)
-    with open(os.path.join(staging, _MANIFEST), "w") as f:
-        json.dump(sorted(manifest), f)
-    moves = [(os.path.join(SWAP_STAGING, _MANIFEST), _MANIFEST)]
-    cons = f"part_bucket={CONSOLIDATED_BUCKET}"
-    if os.path.isdir(os.path.join(staging, cons)):
-        moves.append((os.path.join(SWAP_STAGING, cons), os.path.join("agg_partials", cons)))
-    cat.swap(moves, [os.path.join("agg_partials", f"part_bucket={b}") for b in remove])
 
 
 def routed_union(
@@ -200,95 +170,62 @@ def routed_sinks(cat: Catalog) -> list[str]:
 _PARTIAL_MEASURES = ("pv", "bytes_sum", "rt_cnt", "err_hits", "invalid_hits")
 
 
-def compact_partials(
-    spark: SparkSession, cat: Catalog, buckets: list[str] | None = None
-) -> dict:
-    """Fold per-bucket ``agg_partials`` partitions into ONE consolidated
-    partition (``part_bucket = -1``), keeping ``rebuild_summaries``' per-run
-    fold O(live keys) instead of O(keys x all retained buckets).
-
-    The partials grain includes ``part_bucket`` only for idempotent bucket
-    re-runs; once a bucket is past its re-run horizon (the caller's policy —
-    e.g. older than the resume window), that lineage is dead weight: a year
-    of 5-minute increments at 10^12-row scale leaves ~10^5 bucket partitions
-    whose rows the per-run fold re-reads every time. Compaction collapses
-    them by the same merge the summaries use (the measures are sums — the
-    histogram stays lossless, exact quantiles survive), so summaries are
-    bit-identical before and after (pytest-verified).
-
-    Compacted buckets are recorded in a manifest; :func:`expire_buckets`
-    SUBTRACTS an expired compacted bucket's contribution (recomputed from
-    its still-present routed partition) instead of dropping a partition
-    dir, and a re-ingested bucket (checkpoint cleared) simply writes its
-    own partition again. The partition swap and the manifest update are one
-    journaled :meth:`Catalog.swap`. Returns counts; no-op if nothing to
-    compact.
-    """
-    cat.recover()
-    have = cat.partition_values("agg_partials")
-    live = have - {str(CONSOLIDATED_BUCKET)}
-    to_compact = live if buckets is None else (live & {str(b) for b in buckets})
-    if not to_compact:
-        return {"buckets_compacted": 0}
-    read_set = to_compact | (have & {str(CONSOLIDATED_BUCKET)})
-    partials = cat.read(spark, "agg_partials").where(ckpt.bucket_in(read_set))
-    grain = [c for c in partials.columns if c not in (*_PARTIAL_MEASURES, "part_bucket")]
-    folded = (
-        partials.groupBy(*grain)
-        .agg(*[F.sum(m).cast("long").alias(m) for m in _PARTIAL_MEASURES])
-        .withColumn("part_bucket", F.lit(CONSOLIDATED_BUCKET))
-    )
-    # the fold READS the partitions it replaces, so it fully materializes
-    # in staging before the swap touches them
+def _swap_fold(spark: SparkSession, cat: Catalog, delta: DataFrame, lineage: set[str]) -> None:
+    """Add the ``delta`` partials to ``agg_partials`` group by group, drop
+    the groups whose measures all summed to zero, and swap the result and
+    its ``lineage`` in as one directory move. The fold reads the table it
+    replaces, so it is written to staging completely before the journaled
+    :meth:`Catalog.swap` touches the live table."""
+    rows = delta
+    if cat.exists("agg_partials"):
+        rows = cat.read(spark, "agg_partials").unionByName(delta)
+    grain = [c for c in rows.columns if c not in _PARTIAL_MEASURES]
     cat.drop(SWAP_STAGING)
-    cat.write(folded, SWAP_STAGING, partition_by=("part_bucket",))
-    _swap_partials(cat, compacted_buckets(cat) | to_compact, sorted(to_compact))
-    return {"buckets_compacted": len(to_compact)}
+    cat.write(
+        rows.groupBy(*grain)
+        .agg(*[F.sum(m).cast("long").alias(m) for m in _PARTIAL_MEASURES])
+        .where(" or ".join(f"{m} != 0" for m in _PARTIAL_MEASURES)),
+        SWAP_STAGING,
+    )
+    with open(os.path.join(cat.path(SWAP_STAGING), _LINEAGE), "w") as f:
+        json.dump(sorted(lineage), f)
+    cat.swap([(SWAP_STAGING, "agg_partials")])
+
+
+def compact_partials(
+    spark: SparkSession, cat: Catalog, inc: DataFrame, buckets: list[str]
+) -> dict:
+    """THE fold of an increment: turn ``inc``, the routed rows of
+    ``buckets``, into histogram partials, add them to ``agg_partials`` and
+    add ``buckets`` to its lineage, in one swap.
+
+    ``agg_partials`` is ONE unpartitioned table at the summaries' grain plus
+    ``(status, rt)``: the measures are sums and the histogram is lossless,
+    so exact quantiles survive any number of folds, and the summary rebuild
+    reads O(live keys) rows however many buckets were folded. Buckets leave
+    the table only through :func:`subtract_compacted`. Returns counts."""
+    _swap_fold(spark, cat, minute_agg_hist_partials(inc), folded_buckets(cat) | set(buckets))
+    return {"buckets_compacted": len(buckets)}
 
 
 def subtract_compacted(spark: SparkSession, cat: Catalog, victims: list[str]) -> int:
-    """Remove expired buckets' contribution from the CONSOLIDATED partials
-    partition. Their per-bucket partitions no longer exist (compaction folded
-    them), but every partial measure is an exact integer sum over a
-    deterministic recompute of the bucket's routed partition — so expiry
-    recomputes the victims' partials from routed (still on disk at this
-    point), NEGATES the measures, merges, and drops fully-cancelled rows.
-    Must run BEFORE the routed partition drop; the swap is journaled like
-    compaction's. Returns victim count."""
+    """Remove folded buckets' contribution from ``agg_partials``: the same
+    fold as :func:`compact_partials` with the measures NEGATED and the
+    victims taken out of the lineage. Every partial measure is an exact
+    integer sum over a deterministic recompute of the bucket's routed
+    partition, so the victims' partials are recomputed from routed — which
+    must still be on disk: call this BEFORE dropping it — and the groups
+    only they fed cancel to zero and go. Returns the folded victim count."""
     cat.recover()
-    compacted = compacted_buckets(cat)
-    victims = sorted(set(map(str, victims)) & compacted)
+    folded = folded_buckets(cat)
+    victims = sorted(set(map(str, victims)) & folded)
     if not victims:
         return 0
-    manifest = compacted - set(victims)
-    cons = cat.read(spark, "agg_partials").where(
-        F.col("part_bucket") == CONSOLIDATED_BUCKET
+    p = minute_agg_hist_partials(
+        routed_union(spark, cat, routed_sinks(cat), bucket_filter=victims)
     )
-    vr = routed_union(spark, cat, routed_sinks(cat), bucket_filter=victims)
-    if vr is None:
-        _swap_partials(cat, manifest, [])
-        return len(victims)
-    neg = minute_agg_hist_partials(vr).select(
-        *[c for c in cons.columns if c not in (*_PARTIAL_MEASURES, "part_bucket")],
-        *[(-F.col(m)).alias(m) for m in _PARTIAL_MEASURES],
-        F.lit(CONSOLIDATED_BUCKET).alias("part_bucket"),
-    )
-    grain = [c for c in cons.columns if c not in (*_PARTIAL_MEASURES, "part_bucket")]
-    merged = (
-        cons.unionByName(neg)
-        .groupBy(*grain)
-        .agg(*[F.sum(m).cast("long").alias(m) for m in _PARTIAL_MEASURES])
-        # a fully-cancelled group has every exact counter at zero
-        .where(" or ".join(f"{m} != 0" for m in _PARTIAL_MEASURES))
-        .withColumn("part_bucket", F.lit(CONSOLIDATED_BUCKET))
-    )
-    cat.drop(SWAP_STAGING)
-    cat.write(merged, SWAP_STAGING, partition_by=("part_bucket",))
-    # everything cancelled: no staged partition, the live one just goes
-    staged = os.path.isdir(
-        os.path.join(cat.path(SWAP_STAGING), f"part_bucket={CONSOLIDATED_BUCKET}")
-    )
-    _swap_partials(cat, manifest, [] if staged else [str(CONSOLIDATED_BUCKET)])
+    neg = p.select(*[(-F.col(c)).alias(c) if c in _PARTIAL_MEASURES else c for c in p.columns])
+    _swap_fold(spark, cat, neg, folded - set(victims))
     return len(victims)
 
 
@@ -296,7 +233,9 @@ def rebuild_summaries(spark: SparkSession, cat: Catalog) -> bool:
     """Re-derive every summary table from the current ``agg_partials``
     relation (aggregate-sized — never the routed history). The single
     summary-consistency primitive: the incremental pipeline, bucket expiry,
-    and crash recovery all converge on 'summaries = merge(partials)'.
+    and crash recovery all converge on 'summaries = merge(partials)'; with
+    no partials left, no summary table is left either. Returns whether
+    there were partials.
 
     The two summary kinds are INDEPENDENT actions over the same partials
     scan, so they run on concurrent scheduler threads: at the 24M-row
@@ -306,16 +245,19 @@ def rebuild_summaries(spark: SparkSession, cat: Catalog) -> bool:
     also interleave onto idle executors instead of serializing."""
     from concurrent.futures import ThreadPoolExecutor
 
-    if not cat.exists("agg_partials"):
-        return False
-    partials = cat.read(spark, "agg_partials")
-    jobs = [
-        ("minute_agg_", merge_minute_agg_hist_partials(partials)),
-        ("errors_", errors_from_hist_partials(partials)),
+    partials = cat.read(spark, "agg_partials") if cat.exists("agg_partials") else None
+    kinds = [
+        ("minute_agg_", merge_minute_agg_hist_partials),
+        ("errors_", errors_from_hist_partials),
     ]
+
+    def fan_out(kind):
+        name, derive = kind
+        fan_out_summary(cat, name, None if partials is None else derive(partials))
+
     with ThreadPoolExecutor(max_workers=2) as ex:
-        list(ex.map(lambda kv: fan_out_summary(cat, kv[0], kv[1]), jobs))
-    return True
+        list(ex.map(fan_out, kinds))
+    return partials is not None
 
 
 def transform(seq_df: DataFrame, dim: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
@@ -345,20 +287,17 @@ def run_pipeline(
     metrics = StageMetrics(spark)
 
     # roll forward/back any swap a previous run crashed inside — BEFORE
-    # reading checkpoints or partials (disk state must be consistent before
-    # backfill detection looks at it)
+    # reading the checkpoint or the partials lineage
     cat.recover()
     done = ckpt.completed_partitions(cat, "routed") if cfg.resume else set()
-    # Re-ingest pre-pass: a COMPACTED bucket whose checkpoint row was cleared
-    # (operator re-ingest, or resume=False over an existing warehouse) is
-    # about to be re-processed — but its old contribution lives inside the
-    # consolidated partials partition, where the fresh per-bucket write
-    # cannot overwrite it. Subtract it NOW, while the bucket's old routed
-    # partition (the subtraction's recompute input) is still on disk — the
-    # promote below replaces it. After this, the bucket behaves exactly like
-    # a never-compacted re-run: its own partitions get rewritten, no double
-    # count (tests/test_compaction.py::test_reingest_after_compaction).
-    reingest = compacted_buckets(cat) - done
+    # Re-ingest pre-pass: a FOLDED bucket without a checkpoint row (operator
+    # re-ingest, resume=False over an existing warehouse, or a crash between
+    # the fold swap and mark_done) is about to be folded again, from its
+    # fresh routed partition or its current one. Subtract its old
+    # contribution NOW, while the old routed partition (the subtraction's
+    # recompute input) is still on disk — the promote below may replace it.
+    # No double count (tests/test_compaction.py::test_reingest_after_compaction).
+    reingest = folded_buckets(cat) - done
     if reingest:
         subtract_compacted(spark, cat, sorted(reingest))
     pending = ckpt.filter_pending(seq_df, done)
@@ -409,88 +348,39 @@ def run_pipeline(
     sinks = routed_sinks(cat)
 
     # Buckets in this increment come from the promoted dir names — zero
-    # extra Spark jobs. Ordering invariant (round 5): mark_done runs AFTER
-    # the routed promote + partials write but BEFORE compaction and
-    # rebuild_summaries (one fold per run; summaries are
-    # stale-until-next-entry after a crash, never wrong). Do NOT "restore"
-    # a mark_done-after-aggregate ordering — that reintroduces the double
-    # fold. Checkpointing before the partials write stays forbidden too: it
-    # opened a crash window where a bucket was recorded done but its
-    # agg_partials were never written, so a resumed run skipped it and
-    # rebuild_summaries silently omitted its rows forever. Both the routed
-    # promote and the dynamic-partition-overwrite partials write are
-    # idempotent under bucket re-run, so crash-before-mark_done just re-runs
-    # the bucket. Belt-and-braces, missing_partials_buckets() also detects
-    # and heals any routed-done-but-partials-absent bucket on the next run.
+    # extra Spark jobs.
     buckets = sorted(
         {d.split("=", 1)[1] for dirs in moved.values() for d in dirs if "=" in d}
     )
 
-    # Derived aggregates, incremental (the 10^12-row resume story):
-    # aggregate ONLY this run's new buckets into mergeable per-bucket
-    # partials (lossless rt histograms -> EXACT quantiles survive the merge,
-    # see operators.aggregate.minute_agg_hist_partials), written with
-    # dynamic partition overwrite keyed by part_bucket (idempotent bucket
-    # re-runs). The final summaries fold the partials table —
-    # aggregate-sized, never the routed history. Cost ∝ increment, not
-    # total history.
-    #
-    # Heal partials gaps BEFORE folding summaries: buckets present in routed
-    # history but absent from agg_partials (a crash inside the old mark_done
-    # window, or a lost partials table) would otherwise be silently dropped
-    # from every summary table by the partials-only rebuild. Backfilling
-    # re-aggregates exactly the missing buckets' routed partitions —
-    # partition-pruned, never the completed history.
-    backfill = missing_partials_buckets(cat, exclude=set(buckets))
-    agg_buckets = sorted(set(buckets) | backfill)
-    if agg_buckets:
-        inc = routed_union(spark, cat, sinks, bucket_filter=agg_buckets)
-        if inc is not None:
-            inc = metrics.observe_agg_input(inc)
-            # partials are (keys, bucket, status, rt) histograms — ONE
-            # scan of the increment feeds both summary kinds
-            cat.write(
-                minute_agg_hist_partials(inc),
-                "agg_partials",
-                partition_by=("part_bucket",),
-            )
-    metrics.mark("agg_partials")
-
-    # checkpoint NOW — the invariant is 'never record a bucket done before
-    # its routed partition AND its partials are durable', and both writes
-    # are above. Summaries are derived data rebuilt unconditionally at every
-    # entry, so a crash between here and the rebuild below leaves them
-    # merely stale-until-next-run, never wrong (same convergence as
-    # crash-inside-compaction).
-    if buckets:
-        ckpt.mark_done(cat, run_id, "routed", buckets)
-
-    # compact strictly AFTER mark_done: folding an un-checkpointed bucket
-    # into the consolidated partition would let a crash-then-resume
-    # re-process it and double-count (its own rewritten partition + its
-    # contribution already baked into part_bucket=-1). Restricted to
-    # CHECKPOINTED buckets (resume's done-set + this run's just-marked
-    # buckets): a backfilled partition whose checkpoint row was cleared is
-    # NOT checkpointed, and folding it would make the re-ingest pre-pass
-    # subtract + re-backfill + re-fold it on every subsequent run forever
-    # (round-4 ADVICE). It stays an own-partition partial until a run
-    # actually checkpoints it. Crash inside compaction rolls forward/back
-    # via the swap journal (cat.recover() at next entry). Compacting every
-    # run keeps the next run's fold input at one consolidated partition +
-    # that run's increment: O(live keys) forever, not O(retained buckets).
-    #
-    # Ordered BEFORE the summary rebuild (round-4 verdict ask #3): the fold
-    # over (consolidated + this run's buckets) happens exactly ONCE here,
-    # and the rebuild then merges a single already-folded partition instead
-    # of folding the same rows a second time.
-    compact_partials(spark, cat, buckets=sorted(done | set(buckets)))
+    # ONE fold per run (the 10^12-row resume story): every routed bucket the
+    # partials lineage lacks — this run's buckets, plus any that a crash
+    # before the fold or a cleared checkpoint left unfolded — is read back
+    # (partition-pruned; column pruning keeps the token arrays unread),
+    # turned into lossless rt histograms (EXACT quantiles survive, see
+    # operators.aggregate.minute_agg_hist_partials) and added to
+    # agg_partials in one swap. Cost ∝ increment + live keys, never the
+    # routed history; the bucket sets are directory listings.
+    routed_buckets = set().union(*(cat.partition_values(f"routed_{k}") for k in sinks))
+    to_fold = sorted(routed_buckets - folded_buckets(cat))
+    if to_fold:
+        inc = routed_union(spark, cat, sinks, bucket_filter=to_fold)
+        compact_partials(spark, cat, metrics.observe_agg_input(inc), to_fold)
     metrics.mark("compact")
+
+    # Order: fold swap, THEN mark_done, THEN rebuild. Checkpointing first
+    # would open a crash window where a bucket is recorded done but never
+    # folded: a resumed run would skip it and the summaries would omit its
+    # rows forever. A crash between the swap and mark_done leaves a folded
+    # bucket without a checkpoint row, which the next run's re-ingest
+    # pre-pass subtracts and folds once more. Summaries are derived data
+    # rebuilt at every entry: stale after a crash, never wrong.
+    ckpt.mark_done(cat, run_id, "routed", to_fold)
     rebuild_summaries(spark, cat)
     metrics.mark("aggregate")
 
     vals = metrics.flush(spark, cat, run_id, buckets)
     vals["buckets_processed"] = len(buckets)
-    vals["buckets_backfilled"] = len(backfill)
     vals["buckets_skipped"] = len(done)
     vals["sinks"] = sinks
     vals["any_write"] = processed_any

@@ -337,8 +337,8 @@ def pipeline_e2e_minute_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("pipeline_incremental_agg", _PIPELINE_E2E_SQL)
 def pipeline_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The incremental-resume aggregation path (S1/R2 at 10^12 rows): the
-    routed relation is aggregated into per-bucket lossless rt-HISTOGRAM
-    partials (operators.aggregate.minute_agg_hist_partials), then the
+    routed relation is aggregated into lossless rt-HISTOGRAM partials
+    (operators.aggregate.minute_agg_hist_partials), then the
     partials are folded back (frequency-weighted exact percentile) — and the
     result must match the SAME closed-form oracle as the single-pass
     flagship. Proves a resumed run can aggregate only its new buckets and

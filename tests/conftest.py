@@ -25,21 +25,6 @@ def tmp_catalog(tmp_path):
     return Catalog(root=str(tmp_path / "warehouse"))
 
 
-@pytest.fixture()
-def run_uncompacted(monkeypatch):
-    """``run_pipeline`` with the compaction after ``mark_done`` skipped, so
-    ``agg_partials`` keeps its per-bucket partitions: the state a crash
-    between ``mark_done`` and compaction leaves."""
-    from abs_log_spark.plans import pipeline
-
-    def run(*args, **kwargs):
-        with monkeypatch.context() as m:
-            m.setattr(pipeline, "compact_partials", lambda *a, **k: {"buckets_compacted": 0})
-            return pipeline.run_pipeline(*args, **kwargs)
-
-    return run
-
-
 SF_DIR = "/root/testdata/sf0.001"
 
 

@@ -1,6 +1,7 @@
-"""Partials compaction: the per-run summary fold stays O(live keys) while
-summaries remain bit-identical, and expiry/resume stay in lockstep with the
-consolidated partition."""
+"""The partials fold: each run folds its new buckets into ONE unpartitioned
+``agg_partials`` table, whose lineage moves with it in one swap. The
+summary rebuild stays O(live keys), summaries equal a full recompute, and
+expiry/resume stay in lockstep with the lineage."""
 
 from __future__ import annotations
 
@@ -11,14 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from abs_log_spark.catalog import SWAP_JOURNAL, SWAP_STAGING, Catalog
+from abs_log_spark.operators.aggregate import minute_agg_hist_partials
 from abs_log_spark.plans import checkpoint as ckpt
-from abs_log_spark.plans.pipeline import (
-    CONSOLIDATED_BUCKET,
-    compact_partials,
-    compacted_buckets,
-    rebuild_summaries,
-    run_pipeline,
-)
+from abs_log_spark.plans.pipeline import folded_buckets, run_pipeline, transform
 from abs_log_spark.sources.synth import gen_sequences, gen_sources_dim
 
 N = 600
@@ -43,53 +39,55 @@ def _summaries(spark, cat):
     return out
 
 
-def test_compaction_preserves_summaries_and_shrinks_fold(spark, tmp_catalog, run_uncompacted):
+def _pv(spark, cat):
+    return sum(
+        cat.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0]
+        for s in SINKS if cat.exists(f"minute_agg_{s}")
+    )
+
+
+def _assert_one_table(cat, lineage):
+    """agg_partials is one table: no partition dir, lineage inside it."""
+    assert cat.partition_values("agg_partials") == set()
+    assert not any("=" in d for d in os.listdir(cat.path("agg_partials")))
+    assert folded_buckets(cat) == lineage
+
+
+def test_compaction_preserves_summaries_and_shrinks_fold(spark, tmp_catalog, reference_catalog):
+    """Folding two buckets per run keeps ONE agg_partials table with fewer
+    rows than the per-bucket partials it absorbed (cross-bucket groups
+    merged — at minimum the per-bucket invalid-line rows per sink collapse
+    to one), and the summaries equal a full recompute."""
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
-    run_uncompacted(spark, tmp_catalog, seq, dim, run_id="r1")
-    snap = _summaries(spark, tmp_catalog)
-    rows_before = tmp_catalog.read(spark, "agg_partials").count()
-    parts_before = tmp_catalog.partition_values("agg_partials")
-    assert len(parts_before) == 8
+    for step in range(1, 5):
+        run_pipeline(spark, tmp_catalog, seq.where(F.col("part_bucket") < 2 * step), dim,
+                     run_id=f"r{step}")
+    _assert_one_table(tmp_catalog, {str(b) for b in range(8)})
 
-    res = compact_partials(spark, tmp_catalog)
-    assert res["buckets_compacted"] == 8
-    # the fold input is now ONE partition with fewer rows (cross-bucket
-    # groups merged — at minimum the 8 per-bucket invalid-line rows per sink
-    # collapse to one)
-    assert tmp_catalog.partition_values("agg_partials") == {str(CONSOLIDATED_BUCKET)}
-    rows_after = tmp_catalog.read(spark, "agg_partials").count()
-    assert rows_after < rows_before
-    assert compacted_buckets(tmp_catalog) == parts_before
-
-    rebuild_summaries(spark, tmp_catalog)
-    assert _summaries(spark, tmp_catalog) == snap
-
-    # compacting again is a no-op
-    assert compact_partials(spark, tmp_catalog) == {"buckets_compacted": 0}
+    routed = transform(seq, dim)
+    per_bucket = sum(
+        minute_agg_hist_partials(routed.where(F.col("part_bucket") == b)).count()
+        for b in range(8)
+    )
+    assert tmp_catalog.read(spark, "agg_partials").count() < per_bucket
+    assert _summaries(spark, tmp_catalog) == _summaries(spark, reference_catalog(seq, dim))
 
 
-def test_compaction_then_incremental_resume(
-    spark, tmp_catalog, reference_catalog, run_uncompacted
-):
-    """New increments after compaction write their own partitions; the fold
-    merges consolidated + live partials into exactly the full-history
-    summaries."""
+def test_compaction_then_incremental_resume(spark, tmp_catalog, reference_catalog):
+    """A resumed run folds only its new buckets' routed rows into the table
+    the earlier runs built; the summaries equal the full-history ones."""
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
     half = seq.where(F.col("part_bucket") < 4)
-    run_uncompacted(spark, tmp_catalog, half, dim, run_id="r1")
-    compact_partials(spark, tmp_catalog)
+    run_pipeline(spark, tmp_catalog, half, dim, run_id="r1")
+    _assert_one_table(tmp_catalog, {"0", "1", "2", "3"})
 
-    r2 = run_uncompacted(spark, tmp_catalog, seq, dim, run_id="r2")
-    # compacted buckets are NOT treated as missing partials (manifest)
-    assert r2["buckets_processed"] == 4 and r2["buckets_backfilled"] == 0
-    assert tmp_catalog.partition_values("agg_partials") == {
-        str(CONSOLIDATED_BUCKET), "4", "5", "6", "7"
-    }
-
-    full_cat = reference_catalog(seq, dim)
-    assert _summaries(spark, tmp_catalog) == _summaries(spark, full_cat)
+    r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
+    assert r2["buckets_processed"] == 4
+    assert r2["rows_agg_input"] == seq.where(F.col("part_bucket") >= 4).count()
+    _assert_one_table(tmp_catalog, {str(b) for b in range(8)})
+    assert _summaries(spark, tmp_catalog) == _summaries(spark, reference_catalog(seq, dim))
 
 
 class _Crash(Exception):
@@ -129,23 +127,23 @@ def _crash_inside_swap(monkeypatch, call: int, step: int) -> None:
 @pytest.mark.parametrize("site", ["compaction", "subtraction", "checkpoint"])
 def test_swap_crash_at_every_step_converges(spark, tmp_path, monkeypatch, site):
     """A crash at ANY filesystem step of each journaled swap converges: after
-    the next entry, summaries, compacted_buckets and completed_partitions
-    equal an uninterrupted run's. Sites: the compaction after mark_done, the
-    subtraction of a re-ingested compacted bucket, and expire_buckets'
+    the next entry, summaries, folded_buckets and completed_partitions
+    equal an uninterrupted run's. Sites: the fold of a run's new buckets,
+    the subtraction of a re-ingested folded bucket, and expire_buckets'
     checkpoint rewrite (whose crash the next run's checkpoint read and
     append see first, and which the operator's retry then finishes)."""
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
     first6 = seq.where(F.col("part_bucket") < 6)
     base = Catalog(root=str(tmp_path / "base"))
-    run_pipeline(spark, base, first6, dim, run_id="r1")  # compacts 0..5
+    run_pipeline(spark, base, first6, dim, run_id="r1")  # folds 0..5
     if site == "subtraction":
         ckpt.expire(base, {"3"})  # operator clears bucket 3 for re-ingest
 
     def state(cat):
         return (
             _summaries(spark, cat),
-            compacted_buckets(cat),
+            folded_buckets(cat),
             ckpt.completed_partitions(cat, "routed"),
         )
 
@@ -155,9 +153,9 @@ def test_swap_crash_at_every_step_converges(spark, tmp_path, monkeypatch, site):
         return cat
 
     def crashing_step(cat):
-        if site == "compaction":  # buckets 6, 7 are new: compaction swaps once
+        if site == "compaction":  # buckets 6, 7 are new: the fold swaps once
             run_pipeline(spark, cat, seq, dim, run_id="r2")
-        elif site == "subtraction":  # swap 0 subtracts bucket 3
+        elif site == "subtraction":  # swap 0 subtracts bucket 3, swap 1 folds it
             run_pipeline(spark, cat, first6, dim, run_id="r2")
         else:  # swap 0 subtracts bucket 0, swap 1 rewrites the checkpoint
             from abs_log_spark.operators.retention import expire_buckets
@@ -204,15 +202,16 @@ def test_swap_crash_at_every_step_converges(spark, tmp_path, monkeypatch, site):
     assert step > 4, step  # journal, removals/moves, staging drop, journal drop
 
 
-def test_leftover_temp_journal_is_ignored(spark, tmp_catalog, monkeypatch, run_uncompacted):
-    """A crash while the swap journal is being written leaves a hidden temp
-    journal (here torn to zero bytes) next to a complete staging. Recovery
-    must not parse it: the swap never committed, so the staging and the
-    temp file are dropped and the live partitions stay as they were."""
+def test_leftover_temp_journal_is_ignored(spark, tmp_catalog, monkeypatch, reference_catalog):
+    """A crash while the fold's swap journal is being written leaves a
+    hidden temp journal (here torn to zero bytes) next to a complete
+    staging. Recovery must not parse it: the swap never committed, so the
+    staging and the temp file are dropped and the live table stays as it
+    was."""
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
-    run_uncompacted(spark, tmp_catalog, seq, dim, run_id="r1")
-    snap = _summaries(spark, tmp_catalog)
+    run_pipeline(spark, tmp_catalog, seq.where(F.col("part_bucket") < 4), dim, run_id="r1")
+    rows = tmp_catalog.read(spark, "agg_partials").count()
     replace = os.replace
 
     def no_journal(src, dst):
@@ -223,7 +222,7 @@ def test_leftover_temp_journal_is_ignored(spark, tmp_catalog, monkeypatch, run_u
     with monkeypatch.context() as m:
         m.setattr(os, "replace", no_journal)
         with pytest.raises(_Crash):
-            compact_partials(spark, tmp_catalog)
+            run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
     tmp = tmp_catalog.path(f".{SWAP_JOURNAL}.tmp")
     open(tmp, "w").close()
     assert os.path.isdir(tmp_catalog.path(SWAP_STAGING))
@@ -231,65 +230,49 @@ def test_leftover_temp_journal_is_ignored(spark, tmp_catalog, monkeypatch, run_u
     tmp_catalog.recover()
     assert not os.path.exists(tmp)
     assert not os.path.exists(tmp_catalog.path(SWAP_STAGING))
-    assert len(tmp_catalog.partition_values("agg_partials")) == 8
-    assert compacted_buckets(tmp_catalog) == set()
-    # the next run compacts normally
-    r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
-    assert r2["buckets_backfilled"] == 0
-    assert tmp_catalog.partition_values("agg_partials") == {str(CONSOLIDATED_BUCKET)}
-    assert compacted_buckets(tmp_catalog) == {str(b) for b in range(8)}
-    assert _summaries(spark, tmp_catalog) == snap
+    _assert_one_table(tmp_catalog, {"0", "1", "2", "3"})
+    assert tmp_catalog.read(spark, "agg_partials").count() == rows
+    # the next run folds normally
+    r3 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r3")
+    assert r3["buckets_processed"] == 4
+    _assert_one_table(tmp_catalog, {str(b) for b in range(8)})
+    assert _summaries(spark, tmp_catalog) == _summaries(spark, reference_catalog(seq, dim))
 
 
-def test_expire_compacted_bucket_subtracts_exactly(spark, tmp_catalog, run_uncompacted):
-    """Expiring a bucket whose partials were folded away must subtract its
-    exact contribution from the consolidated partition — summaries equal
-    'never ingested it', and a re-ingest restores everything."""
+def test_expire_compacted_bucket_subtracts_exactly(spark, tmp_catalog):
+    """Expiring folded buckets must subtract their exact contribution from
+    agg_partials — summaries equal 'never ingested them', and a re-ingest
+    restores everything."""
     from abs_log_spark.operators.retention import expire_buckets
-    from abs_log_spark.plans.pipeline import transform
 
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
-    run_uncompacted(spark, tmp_catalog, seq, dim, run_id="r1")
-    pv_all = sum(
-        tmp_catalog.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0]
-        for s in SINKS if tmp_catalog.exists(f"minute_agg_{s}")
-    )
-    compact_partials(spark, tmp_catalog)
+    run_pipeline(spark, tmp_catalog, seq, dim, run_id="r1")
+    pv_all = _pv(spark, tmp_catalog)
 
     res = expire_buckets(spark, tmp_catalog, ["0", "1"])
     assert res["partials_subtracted"] == 2
-    assert res["partials_partitions"] == 0  # no per-bucket dirs existed
-    assert compacted_buckets(tmp_catalog) == {"2", "3", "4", "5", "6", "7"}
+    _assert_one_table(tmp_catalog, {"2", "3", "4", "5", "6", "7"})
     valid_expired = transform(seq.where("part_bucket < 2"), dim).where("valid").count()
-    pv_after = sum(
-        tmp_catalog.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0]
-        for s in SINKS if tmp_catalog.exists(f"minute_agg_{s}")
-    )
-    assert valid_expired > 0 and pv_after == pv_all - valid_expired
+    assert valid_expired > 0 and _pv(spark, tmp_catalog) == pv_all - valid_expired
 
-    # re-ingest: checkpoint was cleared, the buckets reprocess into their own
-    # (live) partitions and the fold restores the full totals
+    # re-ingest: the checkpoint was cleared, the buckets are routed and
+    # folded again and the totals come back
     r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
     assert r2["buckets_processed"] == 2
-    pv_back = sum(
-        tmp_catalog.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0]
-        for s in SINKS if tmp_catalog.exists(f"minute_agg_{s}")
-    )
-    assert pv_back == pv_all
+    assert _pv(spark, tmp_catalog) == pv_all
 
 
 def test_reingest_after_compaction(spark, tmp_catalog):
-    """Judge r3 ask #6: clear a COMPACTED bucket's checkpoint row and re-run
+    """Judge r3 ask #6: clear a FOLDED bucket's checkpoint row and re-run
     it. The re-ingest pre-pass must subtract the bucket's old contribution
-    from the consolidated partition BEFORE the rerun replaces its routed
-    partition, so summaries stay exact — no double count from part_bucket=-1
-    plus the fresh per-bucket partition."""
+    from agg_partials BEFORE the rerun replaces its routed partition, so
+    summaries stay exact — no double count from the old contribution plus
+    the fresh fold."""
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
-    run_pipeline(spark, tmp_catalog, seq, dim, run_id="r1")  # default: compacts
-    assert tmp_catalog.partition_values("agg_partials") == {str(CONSOLIDATED_BUCKET)}
-    assert compacted_buckets(tmp_catalog) == {str(b) for b in range(8)}
+    run_pipeline(spark, tmp_catalog, seq, dim, run_id="r1")
+    _assert_one_table(tmp_catalog, {str(b) for b in range(8)})
     snap = _summaries(spark, tmp_catalog)
 
     # operator re-ingest: bucket 3's checkpoint row is cleared
@@ -300,65 +283,59 @@ def test_reingest_after_compaction(spark, tmp_catalog):
 
     r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
     assert r2["buckets_processed"] == 1
-    # bucket 3 was un-compacted, re-aggregated, and re-compacted
-    assert compacted_buckets(tmp_catalog) == {str(b) for b in range(8)}
-    assert tmp_catalog.partition_values("agg_partials") == {str(CONSOLIDATED_BUCKET)}
+    # bucket 3 was subtracted, re-aggregated and folded again
+    _assert_one_table(tmp_catalog, {str(b) for b in range(8)})
     assert _summaries(spark, tmp_catalog) == snap
 
 
 def test_multi_run_partials_stay_bounded(spark, tmp_catalog, reference_catalog):
-    """Judge r3 ask #3: with the compaction every run does, a long
-    resumed-run sequence keeps agg_partials at ONE consolidated partition
-    after every run (O(live keys), not O(retained buckets)) while summaries
-    track the growing history exactly."""
+    """Judge r3 ask #3: a long resumed-run sequence keeps agg_partials ONE
+    table after every run (O(live keys), not O(retained buckets)), its
+    lineage equal to the checkpoint, while summaries track the growing
+    history exactly."""
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
     for step in range(1, 5):  # ingest 2 more buckets per run
         part = seq.where(F.col("part_bucket") < 2 * step)
         run_pipeline(spark, tmp_catalog, part, dim, run_id=f"s{step}")
-        assert tmp_catalog.partition_values("agg_partials") == {
-            str(CONSOLIDATED_BUCKET)
-        }, f"partials not consolidated after run {step}"
+        _assert_one_table(tmp_catalog, ckpt.completed_partitions(tmp_catalog, "routed"))
+        assert len(folded_buckets(tmp_catalog)) == 2 * step
 
     full_cat = reference_catalog(seq, dim)
     assert _summaries(spark, tmp_catalog) == _summaries(spark, full_cat)
 
 
-def test_orphaned_backfill_bucket_stays_unfolded(spark, tmp_catalog):
-    """Round-4 ADVICE: the post-run fold is restricted to CHECKPOINTED
-    buckets. An orphaned bucket (routed partition on disk, checkpoint row
-    cleared, absent from the run's input) gets its partials backfilled but
-    must NOT be folded into the consolidated partition — folding it made
-    every subsequent run subtract + re-backfill + re-fold it forever. It
-    stays an own-partition partial, and the system reaches a fixed point."""
-    from abs_log_spark.plans.pipeline import missing_partials_buckets
+def test_orphaned_bucket_is_folded_and_checkpointed_once(spark, tmp_catalog, monkeypatch):
+    """An orphaned bucket (routed partition on disk, checkpoint row cleared,
+    absent from the run's input) is subtracted, folded again from its
+    routed partition and checkpointed — once. The summaries do not move and
+    the next run is a fixed point: no subtraction, no fold."""
+    from abs_log_spark.plans import pipeline
 
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
-    run_pipeline(spark, tmp_catalog, seq, dim, run_id="r1")  # compacts all 8
+    run_pipeline(spark, tmp_catalog, seq, dim, run_id="r1")  # folds all 8
     snap = _summaries(spark, tmp_catalog)
 
     # orphan bucket 3: checkpoint row cleared, input no longer carries it
-    ck = tmp_catalog.read(spark, "checkpoint").where("partition_key <> '3'")
-    pdf = ck.toPandas()
-    tmp_catalog.drop("checkpoint")
-    spark.createDataFrame(pdf).write.parquet(tmp_catalog.path("checkpoint"))
+    ckpt.expire(tmp_catalog, {"3"})
     rest = seq.where(F.col("part_bucket") != 3)
+    subtracted = []
+    subtract = pipeline.subtract_compacted
+    monkeypatch.setattr(pipeline, "subtract_compacted",
+                        lambda s, c, v: subtracted.append(v) or subtract(s, c, v))
 
     r2 = run_pipeline(spark, tmp_catalog, seq_df=rest, dim=dim, run_id="r2")
-    assert r2["buckets_backfilled"] == 1  # bucket 3 re-aggregated once
-    # ... but NOT folded: it is un-checkpointed, so it keeps its own partition
-    assert tmp_catalog.partition_values("agg_partials") == {
-        str(CONSOLIDATED_BUCKET), "3"
-    }
-    assert "3" not in compacted_buckets(tmp_catalog)
+    assert subtracted == [["3"]]
+    assert r2["buckets_processed"] == 0
+    assert r2["rows_agg_input"] == seq.where(F.col("part_bucket") == 3).count()
+    _assert_one_table(tmp_catalog, {str(b) for b in range(8)})
+    assert ckpt.completed_partitions(tmp_catalog, "routed") == {str(b) for b in range(8)}
     assert _summaries(spark, tmp_catalog) == snap
 
-    # fixed point: the next run does no subtract / re-backfill / re-fold
+    # fixed point: the next run subtracts nothing and folds nothing
     r3 = run_pipeline(spark, tmp_catalog, seq_df=rest, dim=dim, run_id="r3")
-    assert r3["buckets_backfilled"] == 0
-    assert tmp_catalog.partition_values("agg_partials") == {
-        str(CONSOLIDATED_BUCKET), "3"
-    }
-    assert missing_partials_buckets(tmp_catalog) == set()
+    assert subtracted == [["3"]]
+    assert "rows_agg_input" not in r3
+    _assert_one_table(tmp_catalog, {str(b) for b in range(8)})
     assert _summaries(spark, tmp_catalog) == snap

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from abs_log_spark.operators.aggregate import minute_agg, salted_minute_agg, trend
@@ -277,52 +278,65 @@ def test_incremental_agg_bucket_rerun_idempotent(spark, tmp_catalog):
         ), s
 
 
-def test_crash_between_promote_and_partials_heals(spark, tmp_catalog, run_uncompacted):
-    """The mark_done-before-partials crash window: a bucket checkpointed as
-    routed-done but with no agg_partials partition must be detected and
-    backfilled on the next run — never silently dropped from summaries."""
-    import shutil
+def test_crash_between_promote_and_partials_heals(
+    spark, tmp_catalog, monkeypatch, reference_catalog, summaries
+):
+    """A crash after the routed promote but inside the fold leaves a routed
+    bucket that is neither folded nor checkpointed. The next run folds it
+    from its routed partition even when its input no longer carries the
+    bucket, and checkpoints it — never silently dropped from summaries."""
+    from abs_log_spark.plans import checkpoint as ckpt, pipeline
+    from abs_log_spark.plans.pipeline import folded_buckets, routed_sinks
+
+    class Crash(Exception):
+        pass
+
+    def crash(*args, **kwargs):
+        raise Crash
 
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
-    # uncompacted: the simulated crash state needs bucket 2's OWN partials
-    # partition on disk (the compacted variant of this window is covered by
-    # tests/test_compaction.py)
-    run_uncompacted(spark, tmp_catalog, seq, dim, run_id="r1")
-    pv1 = {
-        s: tmp_catalog.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0]
-        for s in ("sink_a", "sink_b", "sink_c")
-        if tmp_catalog.exists(f"minute_agg_{s}")
-    }
-    # simulate the crash state: bucket 2's partials vanish, checkpoint says done
-    shutil.rmtree(tmp_catalog.path("agg_partials") + "/part_bucket=2")
-    r2 = run_uncompacted(spark, tmp_catalog, seq, dim, run_id="r2")
-    assert r2["buckets_processed"] == 0 and r2["buckets_backfilled"] == 1
-    for s, v in pv1.items():
-        assert (
-            tmp_catalog.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0]
-            == v
-        ), s
+    first7 = seq.where(F.col("part_bucket") < 7)
+    run_pipeline(spark, tmp_catalog, first7, dim, run_id="r1")
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "compact_partials", crash)
+        with pytest.raises(Crash):
+            run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
+    assert any(
+        "7" in tmp_catalog.partition_values(f"routed_{s}") for s in routed_sinks(tmp_catalog)
+    )
+    assert "7" not in folded_buckets(tmp_catalog)
+    assert "7" not in ckpt.completed_partitions(tmp_catalog, "routed")
+
+    r3 = run_pipeline(spark, tmp_catalog, first7, dim, run_id="r3")
+    assert r3["buckets_processed"] == 0
+    assert r3["rows_agg_input"] == seq.where(F.col("part_bucket") == 7).count()
+    all8 = {str(b) for b in range(8)}
+    assert folded_buckets(tmp_catalog) == all8
+    assert ckpt.completed_partitions(tmp_catalog, "routed") == all8
+    assert summaries(tmp_catalog) == summaries(reference_catalog(seq, dim))
 
 
-def test_missing_agg_partials_table_backfills(spark, tmp_catalog, run_uncompacted):
+def test_missing_agg_partials_table_backfills(spark, tmp_catalog):
     """A warehouse whose whole agg_partials table is gone (routed history
-    and checkpoints intact) must backfill every bucket's partials from the
-    routed tables instead of rebuilding summaries from an empty partials
-    table (silently dropping all prior history)."""
+    and checkpoints intact) has no folded lineage either: the next run
+    folds every routed bucket again instead of rebuilding summaries from an
+    empty partials table (silently dropping all prior history)."""
+    from abs_log_spark.plans.pipeline import folded_buckets
+
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
-    run_uncompacted(spark, tmp_catalog, seq, dim, run_id="r1")
+    run_pipeline(spark, tmp_catalog, seq, dim, run_id="r1")
     pv1 = {
         s: tmp_catalog.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0]
         for s in ("sink_a", "sink_b", "sink_c")
         if tmp_catalog.exists(f"minute_agg_{s}")
     }
     tmp_catalog.drop("agg_partials")
-    assert not tmp_catalog.exists("agg_partials")
-    r2 = run_uncompacted(spark, tmp_catalog, seq, dim, run_id="r2")
-    assert r2["buckets_processed"] == 0 and r2["buckets_backfilled"] == 8
-    assert tmp_catalog.exists("agg_partials")
+    assert not tmp_catalog.exists("agg_partials") and folded_buckets(tmp_catalog) == set()
+    r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
+    assert r2["buckets_processed"] == 0 and r2["rows_agg_input"] == N
+    assert folded_buckets(tmp_catalog) == {str(b) for b in range(8)}
     for s, v in pv1.items():
         assert (
             tmp_catalog.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0]

@@ -78,21 +78,18 @@ def test_log_show_error_pivot_layout(spark):
     assert [r["500"] for r in out] == [1, 0]  # absent combo filled with 0
 
 
-def test_expire_buckets_keeps_all_state_consistent(spark, tmp_catalog, run_uncompacted):
+def test_expire_buckets_keeps_all_state_consistent(spark, tmp_catalog):
     """Expiring buckets must drop routed data, histogram partials, AND
     checkpoint rows together, then rebuild summaries — otherwise the next
     merge resurrects expired data or a re-ingest silently skips."""
     from abs_log_spark.operators.retention import expire_buckets
     from abs_log_spark.plans import checkpoint as ckpt
-    from abs_log_spark.plans.pipeline import run_pipeline
+    from abs_log_spark.plans.pipeline import folded_buckets, run_pipeline, routed_sinks
     from abs_log_spark.sources.synth import gen_sequences, gen_sources_dim
 
     seq = gen_sequences(spark, 600, invalid_every=10)
     dim = gen_sources_dim(spark)
-    # uncompacted: this test asserts the PER-BUCKET partition drops; the
-    # consolidated-partition expiry path is covered by
-    # tests/test_compaction.py::test_expire_compacted_bucket_subtracts_exactly
-    run_uncompacted(spark, tmp_catalog, seq, dim, run_id="r1")
+    run_pipeline(spark, tmp_catalog, seq, dim, run_id="r1")
     pv_all = sum(
         tmp_catalog.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0]
         for s in ("sink_a", "sink_b", "sink_c")
@@ -100,11 +97,14 @@ def test_expire_buckets_keeps_all_state_consistent(spark, tmp_catalog, run_uncom
     )
 
     res = expire_buckets(spark, tmp_catalog, ["0", "1"])
-    assert res["partials_partitions"] == 2 and res["checkpoint_rows"] == 2
+    assert res["partials_subtracted"] == 2 and res["checkpoint_rows"] == 2
     assert res["routed_partitions"] >= 2
-    assert ckpt.completed_partitions(tmp_catalog, "routed") == {
-        "2", "3", "4", "5", "6", "7"
-    }
+    kept = {"2", "3", "4", "5", "6", "7"}
+    assert ckpt.completed_partitions(tmp_catalog, "routed") == kept
+    assert folded_buckets(tmp_catalog) == kept
+    assert all(
+        tmp_catalog.partition_values(f"routed_{s}") <= kept for s in routed_sinks(tmp_catalog)
+    )
     pv_after = sum(
         tmp_catalog.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0]
         for s in ("sink_a", "sink_b", "sink_c")
@@ -128,6 +128,37 @@ def test_expire_buckets_keeps_all_state_consistent(spark, tmp_catalog, run_uncom
         if tmp_catalog.exists(f"minute_agg_{s}")
     )
     assert pv_back == pv_all
+
+
+def test_expire_every_bucket_leaves_no_summary(spark, tmp_catalog, monkeypatch, capsys):
+    """Expiring every bucket leaves no summary table behind: log_show finds
+    nothing to serve (exit 2) instead of the expired rows."""
+    import os
+    import sys
+
+    from abs_log_spark import session
+    from abs_log_spark.operators.retention import expire_buckets
+    from abs_log_spark.plans import checkpoint as ckpt
+    from abs_log_spark.plans.pipeline import folded_buckets, run_pipeline
+    from abs_log_spark.sources.synth import gen_sequences, gen_sources_dim
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from jobs import log_show
+
+    seq = gen_sequences(spark, 600, invalid_every=10)
+    run_pipeline(spark, tmp_catalog, seq, gen_sources_dim(spark), run_id="r1")
+    assert tmp_catalog.exists("minute_agg_sink_a")
+
+    expire_buckets(spark, tmp_catalog, [str(b) for b in range(8)])
+    assert ckpt.completed_partitions(tmp_catalog, "routed") == set()
+    assert folded_buckets(tmp_catalog) == set()
+    assert tmp_catalog.read(spark, "agg_partials").count() == 0
+    left = [t for t in os.listdir(tmp_catalog.root) if t.startswith(("minute_agg_", "errors_"))]
+    assert left == []
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    for view in ("request", "error"):
+        assert log_show.main([tmp_catalog.root, "sink_a", view]) == 2
+    assert "no table" in capsys.readouterr().err
 
 
 def test_summary_tables_day_partitioned_and_pruned(spark, tmp_catalog):
