@@ -22,7 +22,7 @@ first.
 
 Partition layout is the scale story: at 10^12 rows the input is laid out by
 ``(source, part_bucket)`` (hash-bucketed doc_id) so that (a) resume prunes
-whole partitions with one partition filter on the checkpointed buckets,
+whole partitions with one partition filter on the done buckets,
 (b) per-source skew is split across buckets, and (c) routed writes are
 append-only per partition with dynamic partition overwrite giving
 idempotent re-runs.
@@ -122,7 +122,7 @@ class Catalog:
             coerce_int96_timestamp_unit="us",
         )
 
-    def append_rows(self, table: str, schema: StructType, rows: list[tuple]) -> None:
+    def append_rows(self, table: str, schema: StructType, rows: list[tuple]) -> str:
         """Append ``rows`` as ONE parquet file written on the driver with
         pyarrow — the bookkeeping-table write path, with no Spark job.
 
@@ -131,7 +131,8 @@ class Catalog:
         type from either writer's files), the StructType in the footer
         (so :meth:`read` needs no inference) and a ``part-`` name. It is
         written under a hidden temp name and renamed into place, so a crash
-        mid-append leaves only a file every reader skips."""
+        mid-append leaves only a file every reader skips. Returns the file
+        name."""
         arrow_schema = pa.schema(
             [pa.field(f.name, _ARROW_TYPES[f.dataType.typeName()]) for f in schema.fields],
             metadata={SPARK_SCHEMA_KEY: schema.json()},
@@ -145,6 +146,7 @@ class Catalog:
         tmp = os.path.join(d, f".{name}.tmp")
         pq.write_table(data, tmp, compression="zstd", use_deprecated_int96_timestamps=True)
         os.replace(tmp, os.path.join(d, name))
+        return name
 
     def swap(self, moves: list[tuple[str, str]], removes: list[str] = ()) -> None:
         """Crash-safe replace of live paths by the completely written
@@ -179,6 +181,7 @@ class Catalog:
                 if os.path.exists(src):  # else this move already ran
                     if os.path.isdir(dst):
                         shutil.rmtree(dst)
+                    os.makedirs(os.path.dirname(dst), exist_ok=True)
                     os.replace(src, dst)
         self.drop(SWAP_STAGING)
         for p in (self.path(f".{SWAP_JOURNAL}.tmp"), journal):

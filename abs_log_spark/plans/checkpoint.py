@@ -4,33 +4,41 @@ checkpoint with per-partition lineage").
 abs-log resumes via a per-file byte offset saved after each cron run ([PK]
 offset/bookmark record). The Spark-first equivalent at 10^12 rows is
 partition-level lineage: the input is laid out by ``part_bucket`` (hash of
-doc_id — the Iceberg-bucket stand-in), a checkpoint table records each
-bucket that completed the routed write, and a restart filters the input by
-one ``NOT part_bucket IN (done)`` predicate (:func:`bucket_in`), which Spark
-keeps as a partition filter: completed bucket directories are never opened,
+doc_id — the Iceberg-bucket stand-in), and a restart filters the input by
+one predicate over the done buckets (:func:`bucket_in`), which Spark keeps
+as a partition filter: completed bucket directories are never opened,
 however long the history.
 
-Idempotence: the routed write uses dynamic partition overwrite keyed by
-``part_bucket`` — re-running a bucket replaces exactly that bucket, so a
-crash between write and checkpoint append cannot duplicate rows.
+The done set is ONE file: the lineage of ``agg_partials``,
+:data:`LINEAGE`, the buckets folded into it. It lives inside the table
+directory, so the journaled :meth:`Catalog.swap` that replaces the table
+replaces the done set with it — the parquet stand-in for Iceberg's one
+metadata file per snapshot. A bucket is done exactly when its rows are in
+the partials, so no second record can disagree with the first.
 
-The checkpoint table is a handful of rows per run, so it is read and
-appended on the driver with pyarrow (``Catalog.read_arrow`` /
-``Catalog.append_rows``): a Spark job per bookmark cost more scheduling
-than the bookmark is worth. The files keep the columns and types Spark
-writes, so Spark and DuckDB readers see one table whichever writer produced
-a file (earlier Spark-written history included). Bucket expiry rewrites the
-kept rows the same way and swaps them in with the catalog's journaled swap
-(:func:`expire`); every read and append first recovers a swap a crash
-interrupted (:meth:`Catalog.recover`).
+The ``checkpoint`` table is an append-only audit log, read by no run. Each
+fold or subtraction stages one file of rows (``done`` for folded buckets,
+``expired`` for subtracted ones) next to the new lineage with
+:func:`mark_done`, and the same swap publishes it, so the partials, the
+done set and the log change in one commit: replaying the log (the last
+status per key is ``done``) gives :func:`completed_partitions` after every
+commit. The rows are written on the driver with pyarrow
+(:meth:`Catalog.append_rows`) with the columns and types Spark writes, so
+Spark and DuckDB read one table whichever writer produced a file.
+
+Idempotence: the routed write uses dynamic partition overwrite keyed by
+``part_bucket`` — re-running a bucket that never committed replaces exactly
+that bucket's routed rows.
 """
 
 from __future__ import annotations
 
+import json
+import os
 from collections.abc import Iterable
 from datetime import datetime, timezone
+from itertools import groupby
 
-import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
@@ -42,24 +50,25 @@ CHECKPOINT_SCHEMA = StructType(
     + [StructField("ts", TimestampType())]
 )
 
+#: the done set: lineage of ``agg_partials``, inside its directory (Spark,
+#: DuckDB and ``footer_schema`` skip ``_`` names)
+LINEAGE = "_folded_buckets.json"
 
-def completed_partitions(cat: Catalog, stage: str) -> set[str]:
-    # a crash inside expire's swap can leave no live table until recovery
-    # moves the kept rows in: reading first would re-ingest every bucket
+
+def completed_partitions(cat: Catalog) -> set[str]:
+    """The done buckets: the ``agg_partials`` lineage, one JSON file, read
+    after :meth:`Catalog.recover` finishes any swap a crash interrupted."""
     cat.recover()
-    if not cat.exists(CHECKPOINT_TABLE):
+    p = os.path.join(cat.path("agg_partials"), LINEAGE)
+    if not os.path.exists(p):
         return set()
-    keys = cat.read_arrow(
-        CHECKPOINT_TABLE,
-        columns=["partition_key"],
-        filters=[("stage", "=", stage), ("status", "=", "done")],
-    ).column("partition_key")
-    return set(pc.unique(keys).to_pylist())
+    with open(p) as f:
+        return set(json.load(f))
 
 
 #: the directory name Spark writes and lists for a null ``part_bucket``; the
-#: checkpoint, the partials lineage and :func:`bucket_in` spell the null
-#: bucket this one way.
+#: done set, the audit log and :func:`bucket_in` spell the null bucket this
+#: one way.
 NULL_BUCKET = "__HIVE_DEFAULT_PARTITION__"
 
 
@@ -67,13 +76,20 @@ def bucket_in(keys: Iterable[str]) -> Column:
     """``part_bucket`` is one of ``keys`` (partition values as strings,
     :data:`NULL_BUCKET` for the null bucket), never null: ``~bucket_in(done)``
     keeps a null-bucket row until its key is done. ONE SQL expression, one
-    JVM call (``Column.isin`` makes one per key); ``int()`` keeps checkpoint
-    strings out of SQL text. Spark plans an IN list over 10 items as a hashed
-    ``INSET`` partition filter, so a partitioned scan opens only the matching
-    bucket directories at any set size."""
+    JVM call (``Column.isin`` makes one per key); ``int()`` keeps key
+    strings out of SQL text. Runs of consecutive keys become ``BETWEEN``
+    terms and the rest one ``IN`` list, so cron and stream buckets, which
+    grow in order, give a predicate of a few terms at any history length;
+    Spark keeps it as a partition filter, so a partitioned scan opens only
+    the matching bucket directories."""
     keys = set(keys)
-    ints = ", ".join(map(str, sorted({int(k) for k in keys - {NULL_BUCKET}})))
-    hit = f"coalesce(part_bucket IN ({ints}), false)" if ints else "false"
+    ints = sorted({int(k) for k in keys - {NULL_BUCKET}})
+    runs = [[k for _, k in g] for _, g in groupby(enumerate(ints), lambda p: p[1] - p[0])]
+    terms = [f"part_bucket BETWEEN {r[0]} AND {r[-1]}" for r in runs if len(r) > 1]
+    singles = [str(r[0]) for r in runs if len(r) == 1]
+    if singles:
+        terms.append(f"part_bucket IN ({', '.join(singles)})")
+    hit = f"coalesce({' OR '.join(terms)}, false)" if terms else "false"
     if NULL_BUCKET in keys:
         hit = f"part_bucket IS NULL OR {hit}"
     return F.expr(hit)
@@ -85,27 +101,17 @@ def filter_pending(df: DataFrame, done: set[str]) -> DataFrame:
     return df.where(~bucket_in(done)) if done else df
 
 
-def mark_done(cat: Catalog, run_id: str, stage: str, partition_keys: list[str]) -> None:
-    if not partition_keys:
-        return
-    cat.recover()  # never append to a table stranded mid-swap
+def mark_done(
+    cat: Catalog, run_id: str, done: set[str], keys: list[str], status: str = "done"
+) -> tuple[str, str]:
+    """Stage a commit's bookkeeping inside the written :data:`SWAP_STAGING`
+    table: ``done``, the done set after the commit, as its lineage, and one
+    checkpoint file of ``keys`` rows with ``status``. Returns the move that
+    publishes that file into the checkpoint table; it must precede the move
+    of the staging itself in the same :meth:`Catalog.swap`."""
     now = datetime.now(timezone.utc)
-    rows = [(run_id, stage, str(k), "done", now) for k in partition_keys]
-    cat.append_rows(CHECKPOINT_TABLE, CHECKPOINT_SCHEMA, rows)
-
-
-def expire(cat: Catalog, keys: set[str]) -> int:
-    """Delete every checkpoint row whose ``partition_key`` is in ``keys``
-    (a re-ingest of those buckets then reprocesses them). The kept rows,
-    ``ts`` exact, are rewritten on the driver as one file in the
-    :meth:`Catalog.append_rows` format and replace the table in one
-    journaled :meth:`Catalog.swap` — no Spark job. Returns rows dropped."""
-    cat.recover()
-    if not cat.exists(CHECKPOINT_TABLE):
-        return 0
-    rows = cat.read_arrow(CHECKPOINT_TABLE, columns=CHECKPOINT_SCHEMA.names).to_pylist()
-    kept = [tuple(r.values()) for r in rows if r["partition_key"] not in keys]
-    cat.drop(SWAP_STAGING)
-    cat.append_rows(SWAP_STAGING, CHECKPOINT_SCHEMA, kept)
-    cat.swap([(SWAP_STAGING, CHECKPOINT_TABLE)])
-    return len(rows) - len(kept)
+    rows = [(run_id, "routed", str(k), status, now) for k in keys]
+    name = cat.append_rows(SWAP_STAGING, CHECKPOINT_SCHEMA, rows)
+    with open(os.path.join(cat.path(SWAP_STAGING), LINEAGE), "w") as f:
+        json.dump(sorted(done), f)
+    return os.path.join(SWAP_STAGING, name), os.path.join(CHECKPOINT_TABLE, name)

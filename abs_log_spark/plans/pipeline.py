@@ -3,14 +3,14 @@
 The Spark-first restatement of abs-log's collector lifecycle ([PK]
 ``log_analyse.py`` main loop; SURVEY.md section 3.4):
 
-    read sequences (prune completed part_buckets: checkpoint partition filter)
+    read sequences (prune done part_buckets: one partition filter)
       -> STAGE parse + abstract: ONE fused arrow_udf per Arrow batch
          (detok + RE2 regex + uri_abs/args_abs, functions.parse)
       -> STAGE enrich  : broadcast join on the source dimension
       -> STAGE route   : one partitioned write, promoted to per-sink tables
-      -> STAGE fold    : unfolded routed buckets -> histogram partials,
-                         added to ONE agg_partials table (one swap)
-      -> checkpoint row (driver-side pyarrow append)
+      -> STAGE fold    : routed buckets not yet done -> histogram partials,
+                         added to ONE agg_partials table; its done set and
+                         checkpoint audit rows ride in the same swap
       -> STAGE summary : agg_partials -> per-sink minute summaries + error
                          view
       -> metrics row (driver-side pyarrow append)
@@ -33,19 +33,19 @@ Scale design decisions (10^12 rows / 1000 executors):
   keeps the token arrays unread) into mergeable partials with lossless rt
   histograms, so quantiles stay EXACT through every fold. Each run folds
   them ONCE into the one ``agg_partials`` table, whose lineage of folded
-  buckets moves with it in the same swap; the summaries are re-derived
-  from that aggregate-sized table, never from the routed history. AQE
-  coalesces the post-shuffle partitions.
+  buckets — THE done set (``checkpoint.completed_partitions``) — moves
+  with it in the same swap: a run commits once; the summaries are
+  re-derived from that aggregate-sized table, never from the routed
+  history. AQE coalesces the post-shuffle partitions.
 - no Spark job for bookkeeping: a cron increment is bound by scheduling,
-  not data, so the checkpoint read and mark, the metrics row and the sink
-  list stay on the driver (pyarrow appends, directory listings), and
-  catalog reads take their schema from the parquet footer instead of an
-  inference job.
+  not data, so the done-set read, the audit rows, the metrics row and the
+  sink list stay on the driver (one JSON file, pyarrow appends, directory
+  listings), and catalog reads take their schema from the parquet footer
+  instead of an inference job.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
@@ -108,22 +108,6 @@ def fan_out_summary(cat: Catalog, name: str, summary: DataFrame | None) -> None:
     cat.promote_sink_tables(staging, name)
 
 
-#: lineage of ``agg_partials``: the buckets folded into it. It lives inside
-#: the table directory (Spark, DuckDB and ``footer_schema`` skip ``_``
-#: names), so the one directory swap moves the table and its lineage together.
-_LINEAGE = "_folded_buckets.json"
-
-
-def folded_buckets(cat: Catalog) -> set[str]:
-    """Buckets whose partials are folded into ``agg_partials`` (the parquet
-    stand-in for an Iceberg snapshot property)."""
-    p = os.path.join(cat.path("agg_partials"), _LINEAGE)
-    if not os.path.exists(p):
-        return set()
-    with open(p) as f:
-        return set(json.load(f))
-
-
 def routed_union(
     spark: SparkSession,
     cat: Catalog,
@@ -170,12 +154,24 @@ def routed_sinks(cat: Catalog) -> list[str]:
 _PARTIAL_MEASURES = ("pv", "bytes_sum", "rt_cnt", "err_hits", "invalid_hits")
 
 
-def _swap_fold(spark: SparkSession, cat: Catalog, delta: DataFrame, lineage: set[str]) -> None:
+def _swap_fold(
+    spark: SparkSession,
+    cat: Catalog,
+    delta: DataFrame,
+    run_id: str,
+    done: set[str],
+    keys: list[str],
+    status: str,
+    removes: list[str] = (),
+) -> None:
     """Add the ``delta`` partials to ``agg_partials`` group by group, drop
-    the groups whose measures all summed to zero, and swap the result and
-    its ``lineage`` in as one directory move. The fold reads the table it
-    replaces, so it is written to staging completely before the journaled
-    :meth:`Catalog.swap` touches the live table."""
+    the groups whose measures all summed to zero, and commit the result,
+    the done set ``done`` and ``status`` audit rows for ``keys`` in ONE
+    journaled :meth:`Catalog.swap` (which also drops ``removes``). The fold
+    reads the table it replaces, so it is written to staging completely
+    before the swap touches the live table. The audit file's move runs
+    first: moved after the staging, it would land in ``agg_partials`` as a
+    data file."""
     rows = delta
     if cat.exists("agg_partials"):
         rows = cat.read(spark, "agg_partials").unionByName(delta)
@@ -187,45 +183,54 @@ def _swap_fold(spark: SparkSession, cat: Catalog, delta: DataFrame, lineage: set
         .where(" or ".join(f"{m} != 0" for m in _PARTIAL_MEASURES)),
         SWAP_STAGING,
     )
-    with open(os.path.join(cat.path(SWAP_STAGING), _LINEAGE), "w") as f:
-        json.dump(sorted(lineage), f)
-    cat.swap([(SWAP_STAGING, "agg_partials")])
+    audit = ckpt.mark_done(cat, run_id, done, keys, status)
+    cat.swap([audit, (SWAP_STAGING, "agg_partials")], removes)
 
 
 def compact_partials(
-    spark: SparkSession, cat: Catalog, inc: DataFrame, buckets: list[str]
+    spark: SparkSession,
+    cat: Catalog,
+    inc: DataFrame,
+    run_id: str,
+    done: set[str],
+    buckets: list[str],
 ) -> dict:
     """THE fold of an increment: turn ``inc``, the routed rows of
     ``buckets``, into histogram partials, add them to ``agg_partials`` and
-    add ``buckets`` to its lineage, in one swap.
+    ``buckets`` to ``done``, its lineage, and log them ``done``, in one swap.
 
     ``agg_partials`` is ONE unpartitioned table at the summaries' grain plus
     ``(status, rt)``: the measures are sums and the histogram is lossless,
     so exact quantiles survive any number of folds, and the summary rebuild
     reads O(live keys) rows however many buckets were folded. Buckets leave
     the table only through :func:`subtract_compacted`. Returns counts."""
-    _swap_fold(spark, cat, minute_agg_hist_partials(inc), folded_buckets(cat) | set(buckets))
+    _swap_fold(spark, cat, minute_agg_hist_partials(inc), run_id, done | set(buckets),
+               buckets, "done")
     return {"buckets_compacted": len(buckets)}
 
 
-def subtract_compacted(spark: SparkSession, cat: Catalog, victims: list[str]) -> int:
-    """Remove folded buckets' contribution from ``agg_partials``: the same
-    fold as :func:`compact_partials` with the measures NEGATED and the
-    victims taken out of the lineage. Every partial measure is an exact
-    integer sum over a deterministic recompute of the bucket's routed
-    partition, so the victims' partials are recomputed from routed — which
-    must still be on disk: call this BEFORE dropping it — and the groups
-    only they fed cancel to zero and go. Returns the folded victim count."""
-    cat.recover()
-    folded = folded_buckets(cat)
-    victims = sorted(set(map(str, victims)) & folded)
+def subtract_compacted(
+    spark: SparkSession, cat: Catalog, victims: list[str], run_id: str, removes: list[str] = ()
+) -> int:
+    """Remove done buckets' contribution from ``agg_partials``: the same
+    fold as :func:`compact_partials` with the measures NEGATED, the victims
+    taken out of the done set and logged ``expired``, and ``removes``
+    dropped, in one swap. Every partial measure is an exact integer sum over
+    a deterministic recompute of the bucket's routed partition, so the
+    victims' partials are recomputed from routed — which a removal in this
+    same swap may then drop — and the groups only they fed cancel to zero
+    and go. With no victim done, only ``removes`` are dropped. Returns the
+    done victim count."""
+    done = ckpt.completed_partitions(cat)
+    victims = sorted(set(map(str, victims)) & done)
     if not victims:
+        cat.swap([], removes)
         return 0
     p = minute_agg_hist_partials(
         routed_union(spark, cat, routed_sinks(cat), bucket_filter=victims)
     )
     neg = p.select(*[(-F.col(c)).alias(c) if c in _PARTIAL_MEASURES else c for c in p.columns])
-    _swap_fold(spark, cat, neg, folded - set(victims))
+    _swap_fold(spark, cat, neg, run_id, done - set(victims), victims, "expired", removes)
     return len(victims)
 
 
@@ -286,20 +291,13 @@ def run_pipeline(
     cfg = cfg or PipelineConfig()
     metrics = StageMetrics(spark)
 
-    # roll forward/back any swap a previous run crashed inside — BEFORE
-    # reading the checkpoint or the partials lineage
-    cat.recover()
-    done = ckpt.completed_partitions(cat, "routed") if cfg.resume else set()
-    # Re-ingest pre-pass: a FOLDED bucket without a checkpoint row (operator
-    # re-ingest, resume=False over an existing warehouse, or a crash between
-    # the fold swap and mark_done) is about to be folded again, from its
-    # fresh routed partition or its current one. Subtract its old
-    # contribution NOW, while the old routed partition (the subtraction's
-    # recompute input) is still on disk — the promote below may replace it.
-    # No double count (tests/test_compaction.py::test_reingest_after_compaction).
-    reingest = folded_buckets(cat) - done
-    if reingest:
-        subtract_compacted(spark, cat, sorted(reingest))
+    done = ckpt.completed_partitions(cat)
+    if not cfg.resume and done:
+        # re-ingest every bucket: subtract its folded rows now, while its
+        # routed partition (the subtraction's recompute input) is on disk —
+        # the promote below may replace it
+        subtract_compacted(spark, cat, sorted(done), run_id)
+        done = set()
     pending = ckpt.filter_pending(seq_df, done)
     pending = metrics.observe_input(pending)
     metrics.mark("setup")
@@ -353,29 +351,23 @@ def run_pipeline(
         {d.split("=", 1)[1] for dirs in moved.values() for d in dirs if "=" in d}
     )
 
-    # ONE fold per run (the 10^12-row resume story): every routed bucket the
-    # partials lineage lacks — this run's buckets, plus any that a crash
-    # before the fold or a cleared checkpoint left unfolded — is read back
-    # (partition-pruned; column pruning keeps the token arrays unread),
-    # turned into lossless rt histograms (EXACT quantiles survive, see
-    # operators.aggregate.minute_agg_hist_partials) and added to
-    # agg_partials in one swap. Cost ∝ increment + live keys, never the
-    # routed history; the bucket sets are directory listings.
+    # ONE fold per run (the 10^12-row resume story): every routed bucket not
+    # done — this run's buckets, plus any a crash before the fold left
+    # unfolded — is read back (partition-pruned; column pruning keeps the
+    # token arrays unread), turned into lossless rt histograms (EXACT
+    # quantiles survive, see operators.aggregate.minute_agg_hist_partials)
+    # and added to agg_partials in the swap that marks it done. Cost ∝
+    # increment + live keys, never the routed history; the bucket sets are
+    # directory listings.
     routed_buckets = set().union(*(cat.partition_values(f"routed_{k}") for k in sinks))
-    to_fold = sorted(routed_buckets - folded_buckets(cat))
+    to_fold = sorted(routed_buckets - done)
     if to_fold:
         inc = routed_union(spark, cat, sinks, bucket_filter=to_fold)
-        compact_partials(spark, cat, metrics.observe_agg_input(inc), to_fold)
+        compact_partials(spark, cat, metrics.observe_agg_input(inc), run_id, done, to_fold)
     metrics.mark("compact")
 
-    # Order: fold swap, THEN mark_done, THEN rebuild. Checkpointing first
-    # would open a crash window where a bucket is recorded done but never
-    # folded: a resumed run would skip it and the summaries would omit its
-    # rows forever. A crash between the swap and mark_done leaves a folded
-    # bucket without a checkpoint row, which the next run's re-ingest
-    # pre-pass subtracts and folds once more. Summaries are derived data
-    # rebuilt at every entry: stale after a crash, never wrong.
-    ckpt.mark_done(cat, run_id, "routed", to_fold)
+    # Summaries are derived data rebuilt at every entry: stale after a
+    # crash, never wrong.
     rebuild_summaries(spark, cat)
     metrics.mark("aggregate")
 

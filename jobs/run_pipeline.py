@@ -29,7 +29,11 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--master", default=None, help="override spark master")
     p.add_argument("--buckets", type=int, default=8, help="part_bucket count for synth")
     p.add_argument("--invalid-every", type=int, default=0, help="corrupt every k-th synth row")
-    p.add_argument("--no-resume", action="store_true", help="ignore existing checkpoints")
+    p.add_argument(
+        "--no-resume", action="store_true",
+        help="re-ingest every input bucket: subtract the done buckets' folded "
+        "rows, then route and fold the whole input again",
+    )
     p.add_argument(
         "--repeat", type=int, default=1,
         help="run the pipeline N times (fresh warehouse per rep) in ONE JVM, "

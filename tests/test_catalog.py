@@ -4,6 +4,7 @@ appended by pyarrow next to Spark-written files."""
 from __future__ import annotations
 
 import os
+from datetime import datetime, timezone
 
 import duckdb
 import pyarrow as pa
@@ -69,10 +70,16 @@ def test_catalog_read_without_spark_footer_falls_back_to_inference(spark, tmp_ca
 
 def test_bookkeeping_tables_agree_across_writers_and_engines(spark, tmp_catalog, monkeypatch):
     """checkpoint and metrics tables built from Spark-written files plus
-    pyarrow appends read the same rows in Spark, DuckDB and
-    ``completed_partitions``, with the same ``ts`` type from either
-    writer's files; a crashed append's temp file is ignored by all three."""
+    pyarrow appends read the same rows in Spark and DuckDB, with the same
+    ``ts`` type from either writer's files; a crashed append's temp file is
+    ignored by both."""
     cat = tmp_catalog
+
+    def audit(run_id, keys):
+        now = datetime.now(timezone.utc)
+        rows = [(run_id, "routed", k, "done", now) for k in keys]
+        cat.append_rows(ckpt.CHECKPOINT_TABLE, ckpt.CHECKPOINT_SCHEMA, rows)
+
     ck_path, m_path = cat.path(ckpt.CHECKPOINT_TABLE), cat.path(METRICS_TABLE)
     # Spark-written history, as earlier runs and retention rewrites leave it
     cat.append(
@@ -91,7 +98,7 @@ def test_bookkeeping_tables_agree_across_writers_and_engines(spark, tmp_catalog,
         METRICS_TABLE,
     )
     spark_files = set(_part_files(ck_path))
-    ckpt.mark_done(cat, "r1", "routed", ["1", "2"])
+    audit("r1", ["1", "2"])
     StageMetrics(spark).flush(spark, cat, "r1", ["1", "2"])
 
     # a crash between the temp write and the rename
@@ -101,7 +108,7 @@ def test_bookkeeping_tables_agree_across_writers_and_engines(spark, tmp_catalog,
     with monkeypatch.context() as m:
         m.setattr(os, "replace", crash)
         with pytest.raises(OSError):
-            ckpt.mark_done(cat, "r2", "routed", ["99"])
+            audit("r2", ["99"])
         with pytest.raises(OSError):
             StageMetrics(spark).flush(spark, cat, "r2", ["99"])
     for p in (ck_path, m_path):
@@ -128,7 +135,6 @@ def test_bookkeeping_tables_agree_across_writers_and_engines(spark, tmp_catalog,
         )
         assert sp_rows == dk_rows and len(sp_rows) == 4
         assert {r[2] for r in sp_rows if r[1] == "routed"} == {"0", "1", "2"}
-        assert ckpt.completed_partitions(cat, "routed") == {"0", "1", "2"}
         # ts has one type per engine, whichever writer produced the file
         for f in sorted(spark_files | arrow_files):
             assert spark.read.parquet(f).schema["ts"].dataType == TimestampType(), f
@@ -145,73 +151,3 @@ def test_bookkeeping_tables_agree_across_writers_and_engines(spark, tmp_catalog,
         assert [r[2] for r in m_rows] == ["0", "1,2"]
     finally:
         con.close()
-
-
-def test_checkpoint_expiry_runs_no_spark_job(spark, tmp_catalog, monkeypatch):
-    """expire_buckets rewrites a mixed checkpoint table (Spark-written
-    history plus pyarrow appends) on the driver: its checkpoint step runs no
-    Spark job, kept rows keep their exact ``ts``, and Spark, DuckDB and
-    ``completed_partitions`` agree afterwards — also once every row has
-    expired."""
-    from abs_log_spark.operators.retention import expire_buckets
-
-    cat = tmp_catalog
-    ck_path = cat.path(ckpt.CHECKPOINT_TABLE)
-    cat.append(
-        spark.createDataFrame(
-            [("r0", "routed", "0", "done"), ("r0", "routed", "1", "done"),
-             ("r0", "other", "1", "done")],
-            "run_id string, stage string, partition_key string, status string",
-        ).withColumn("ts", F.current_timestamp()),
-        ckpt.CHECKPOINT_TABLE,
-    )
-    ckpt.mark_done(cat, "r1", "routed", ["2", "3"])
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def job_ids() -> set[int]:
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return set(tracker.getJobIdsForGroup(None))
-
-    jobs: list[int] = []
-    expire = ckpt.expire
-
-    def counted(*args, **kwargs):
-        before = job_ids()
-        try:
-            return expire(*args, **kwargs)
-        finally:
-            jobs.append(len(job_ids() - before))
-
-    monkeypatch.setattr(ckpt, "expire", counted)
-
-    def rows():
-        return sorted(
-            tuple(r) for r in cat.read(spark, ckpt.CHECKPOINT_TABLE).select(
-                "run_id", "stage", "partition_key", "status", F.unix_micros("ts")
-            ).collect()
-        )
-
-    def duck():
-        con = duckdb.connect()
-        try:
-            return sorted(con.execute(
-                "SELECT run_id, stage, partition_key, status, epoch_us(ts)"
-                f" FROM read_parquet('{ck_path}/*.parquet')"
-            ).fetchall())
-        finally:
-            con.close()
-
-    before = rows()
-    assert expire_buckets(spark, cat, ["1", "3"])["checkpoint_rows"] == 3
-    assert jobs == [0]
-    kept = [r for r in before if r[2] not in ("1", "3")]
-    assert len(kept) == 2 and rows() == kept == duck()  # exact ts, both engines
-    assert ckpt.completed_partitions(cat, "routed") == {"0", "2"}
-    assert cat.read(spark, ckpt.CHECKPOINT_TABLE).schema["ts"].dataType == TimestampType()
-
-    assert expire_buckets(spark, cat, ["0", "2"])["checkpoint_rows"] == 2
-    assert jobs == [0, 0]
-    assert rows() == [] == duck()
-    assert ckpt.completed_partitions(cat, "routed") == set()

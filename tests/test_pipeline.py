@@ -147,7 +147,7 @@ def test_pipeline_partial_resume(spark, tmp_catalog):
     dim = gen_sources_dim(spark)
     half = seq.where(F.col("part_bucket") < 4)
     run_pipeline(spark, tmp_catalog, half, dim, run_id="r1")
-    done = ckpt.completed_partitions(tmp_catalog, "routed")
+    done = ckpt.completed_partitions(tmp_catalog)
     assert done == {"0", "1", "2", "3"}
     r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
     assert r2["buckets_processed"] == 4  # only the missing half
@@ -241,52 +241,58 @@ def test_null_bucket_is_a_bucket_like_any_other(spark, tmp_catalog, reference_ca
     r1 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r1")
     assert r1["rows_in"] == N and r1["buckets_processed"] == 8
     assert summaries(tmp_catalog) == summaries(reference_catalog(seq, dim))
-    assert ckpt.NULL_BUCKET in ckpt.completed_partitions(tmp_catalog, "routed")
+    assert ckpt.NULL_BUCKET in ckpt.completed_partitions(tmp_catalog)
 
     r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
     assert r2["buckets_processed"] == 0 and r2["buckets_skipped"] == 8
 
 
-def test_incremental_agg_bucket_rerun_idempotent(spark, tmp_catalog):
-    """Re-running an already-aggregated bucket (crash between routed promote
-    and checkpoint mark) replaces its partials instead of double-counting."""
+def test_incremental_agg_bucket_rerun_idempotent(
+    spark, tmp_catalog, monkeypatch, reference_catalog, summaries
+):
+    """Re-running a bucket whose fold crashed inside its swap, before the
+    journal landed (routed promoted, partials staged, nothing committed),
+    replaces its routed rows and folds it once instead of double-counting."""
+    import os
+
+    from abs_log_spark.catalog import SWAP_JOURNAL
     from abs_log_spark.plans import checkpoint as ckpt
+
+    class Crash(Exception):
+        pass
 
     seq = gen_sequences(spark, N)
     dim = gen_sources_dim(spark)
-    run_pipeline(spark, tmp_catalog, seq, dim, run_id="r1")
-    pv1 = {
-        s: tmp_catalog.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0]
-        for s in ("sink_a", "sink_b", "sink_c")
-        if tmp_catalog.exists(f"minute_agg_{s}")
-    }
-    # simulate the crash: bucket 3's checkpoint row never landed
-    ck = tmp_catalog.read(spark, "checkpoint").where("partition_key <> '3'")
-    pdf = ck.toPandas()
-    tmp_catalog.drop("checkpoint")
-    spark.createDataFrame(pdf).write.parquet(tmp_catalog.path("checkpoint"))
-    assert ckpt.completed_partitions(tmp_catalog, "routed") == {
-        "0", "1", "2", "4", "5", "6", "7"
-    }
+    run_pipeline(spark, tmp_catalog, seq.where(F.col("part_bucket") < 7), dim, run_id="r1")
+    replace = os.replace
 
-    r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
-    assert r2["buckets_processed"] == 1
-    for s, v in pv1.items():
-        assert (
-            tmp_catalog.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0]
-            == v
-        ), s
+    def crash_at_journal(src, dst):
+        if dst.endswith(SWAP_JOURNAL):
+            raise Crash
+        return replace(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash_at_journal)
+        with pytest.raises(Crash):
+            run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
+    assert ckpt.completed_partitions(tmp_catalog) == {str(b) for b in range(7)}
+
+    r3 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r3")
+    assert r3["buckets_processed"] == 1
+    assert r3["rows_agg_input"] == seq.where(F.col("part_bucket") == 7).count()
+    assert summaries(tmp_catalog) == summaries(reference_catalog(seq, dim))
 
 
 def test_crash_between_promote_and_partials_heals(
     spark, tmp_catalog, monkeypatch, reference_catalog, summaries
 ):
     """A crash after the routed promote but inside the fold leaves a routed
-    bucket that is neither folded nor checkpointed. The next run folds it
-    from its routed partition even when its input no longer carries the
-    bucket, and checkpoints it — never silently dropped from summaries."""
+    bucket that is not done. The next run folds it from its routed
+    partition even when its input no longer carries the bucket, and marks
+    it done — never silently dropped from summaries. The run after that is
+    a fixed point: it folds nothing and the summaries do not move."""
     from abs_log_spark.plans import checkpoint as ckpt, pipeline
-    from abs_log_spark.plans.pipeline import folded_buckets, routed_sinks
+    from abs_log_spark.plans.pipeline import routed_sinks
 
     class Crash(Exception):
         pass
@@ -305,43 +311,53 @@ def test_crash_between_promote_and_partials_heals(
     assert any(
         "7" in tmp_catalog.partition_values(f"routed_{s}") for s in routed_sinks(tmp_catalog)
     )
-    assert "7" not in folded_buckets(tmp_catalog)
-    assert "7" not in ckpt.completed_partitions(tmp_catalog, "routed")
+    assert "7" not in ckpt.completed_partitions(tmp_catalog)
 
     r3 = run_pipeline(spark, tmp_catalog, first7, dim, run_id="r3")
     assert r3["buckets_processed"] == 0
     assert r3["rows_agg_input"] == seq.where(F.col("part_bucket") == 7).count()
-    all8 = {str(b) for b in range(8)}
-    assert folded_buckets(tmp_catalog) == all8
-    assert ckpt.completed_partitions(tmp_catalog, "routed") == all8
-    assert summaries(tmp_catalog) == summaries(reference_catalog(seq, dim))
+    assert ckpt.completed_partitions(tmp_catalog) == {str(b) for b in range(8)}
+    want = summaries(reference_catalog(seq, dim))
+    assert summaries(tmp_catalog) == want
+
+    r4 = run_pipeline(spark, tmp_catalog, first7, dim, run_id="r4")
+    assert r4["buckets_processed"] == 0 and "rows_agg_input" not in r4
+    assert summaries(tmp_catalog) == want
 
 
-def test_missing_agg_partials_table_backfills(spark, tmp_catalog):
-    """A warehouse whose whole agg_partials table is gone (routed history
-    and checkpoints intact) has no folded lineage either: the next run
-    folds every routed bucket again instead of rebuilding summaries from an
-    empty partials table (silently dropping all prior history)."""
-    from abs_log_spark.plans.pipeline import folded_buckets
+def test_missing_agg_partials_table_backfills(spark, tmp_catalog, summaries):
+    """A warehouse whose whole agg_partials table is gone has lost its done
+    set with it: the next run re-ingests every bucket of its input (the
+    routed partitions are replaced, not added to), so the summaries come
+    back unchanged instead of being rebuilt from an empty partials table."""
+    from abs_log_spark.plans import checkpoint as ckpt
 
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
     run_pipeline(spark, tmp_catalog, seq, dim, run_id="r1")
-    pv1 = {
-        s: tmp_catalog.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0]
-        for s in ("sink_a", "sink_b", "sink_c")
-        if tmp_catalog.exists(f"minute_agg_{s}")
-    }
+    snap = summaries(tmp_catalog)
     tmp_catalog.drop("agg_partials")
-    assert not tmp_catalog.exists("agg_partials") and folded_buckets(tmp_catalog) == set()
+    assert ckpt.completed_partitions(tmp_catalog) == set()
     r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
-    assert r2["buckets_processed"] == 0 and r2["rows_agg_input"] == N
-    assert folded_buckets(tmp_catalog) == {str(b) for b in range(8)}
-    for s, v in pv1.items():
-        assert (
-            tmp_catalog.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0]
-            == v
-        ), s
+    assert r2["buckets_processed"] == 8 and r2["rows_agg_input"] == N
+    assert ckpt.completed_partitions(tmp_catalog) == {str(b) for b in range(8)}
+    assert summaries(tmp_catalog) == snap and snap
+
+
+def test_deleted_checkpoint_table_is_not_state(spark, tmp_catalog, summaries):
+    """The checkpoint table is an audit log no run reads: with it deleted,
+    the next run over the same input still skips every done bucket and the
+    summaries do not move."""
+    from abs_log_spark.plans import checkpoint as ckpt
+
+    seq = gen_sequences(spark, N, invalid_every=10)
+    dim = gen_sources_dim(spark)
+    run_pipeline(spark, tmp_catalog, seq, dim, run_id="r1")
+    snap = summaries(tmp_catalog)
+    tmp_catalog.drop(ckpt.CHECKPOINT_TABLE)
+    r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
+    assert r2["buckets_processed"] == 0 and r2["buckets_skipped"] == 8
+    assert summaries(tmp_catalog) == snap and snap
 
 
 def test_aligned_mode_matches_unaligned(spark, tmp_path):
@@ -544,6 +560,9 @@ def test_resume_cost_does_not_grow_with_done_buckets(spark, tmp_path):
     """A one-bucket increment runs the same Spark jobs and stage tasks over
     10 or 70 done buckets: the pending filter prunes the input scan to the
     increment's partitions at any history length."""
+    import json
+    import os
+
     from abs_log_spark.catalog import Catalog
     from abs_log_spark.plans import checkpoint as ckpt
 
@@ -559,9 +578,11 @@ def test_resume_cost_does_not_grow_with_done_buckets(spark, tmp_path):
     tracker = sc.statusTracker()
 
     def counted_run(done: range, inp) -> tuple[dict, int, int]:
-        # checkpoint rows only: the done buckets were never routed
+        # a seeded done set only: the done buckets were never routed
         cat = Catalog(root=str(tmp_path / f"wh_{len(done)}"))
-        ckpt.mark_done(cat, "history", "routed", [str(b) for b in done])
+        os.makedirs(cat.path("agg_partials"))
+        with open(os.path.join(cat.path("agg_partials"), ckpt.LINEAGE), "w") as f:
+            json.dump([str(b) for b in done], f)
         group = f"resume_{len(done)}"
         sc.setJobGroup(group, group)
         try:
@@ -579,3 +600,57 @@ def test_resume_cost_does_not_grow_with_done_buckets(spark, tmp_path):
     for vals, _, _ in (short, long):
         assert vals["buckets_processed"] == 1 and vals["rows_in"] == n_pending
     assert short[1:] == long[1:], (short[1:], long[1:])
+
+
+def test_bucket_in_ranges_keep_what_an_in_list_keeps(spark):
+    """``bucket_in`` range-encodes runs of consecutive keys; on random gappy
+    key sets (the null bucket in some) it keeps exactly the rows a plain IN
+    list keeps, and it is never null."""
+    import random
+
+    from abs_log_spark.plans import checkpoint as ckpt
+
+    rng = random.Random(11)
+    df = spark.range(130).select(
+        F.when(F.col("id") % 17 != 5, F.col("id")).cast("int").alias("part_bucket")
+    )
+    sets = [set(), {ckpt.NULL_BUCKET}, {"3"}, {"3", "4"}, {str(k) for k in range(130)}]
+    for _ in range(16):
+        p = rng.choice((0.2, 0.6, 0.95))
+        keys = {str(k) for k in range(-5, 135) if rng.random() < p}
+        if rng.random() < 0.5:
+            keys.add(ckpt.NULL_BUCKET)
+        sets.append(keys)
+
+    def in_list(keys):
+        ints = ", ".join(k for k in keys if k != ckpt.NULL_BUCKET)
+        hit = f"coalesce(part_bucket IN ({ints}), false)" if ints else "false"
+        return F.expr(f"part_bucket IS NULL OR {hit}" if ckpt.NULL_BUCKET in keys else hit)
+
+    rows = df.select(*[
+        c for i, keys in enumerate(sets)
+        for c in (ckpt.bucket_in(keys).alias(f"r{i}"), in_list(keys).alias(f"l{i}"))
+    ]).collect()
+    for i, keys in enumerate(sets):
+        got = [r[f"r{i}"] for r in rows]
+        assert None not in got and got == [r[f"l{i}"] for r in rows], sorted(keys)
+
+
+def test_bucket_in_contiguous_keys_stay_a_short_partition_filter(spark, tmp_path):
+    """At 10^5 done keys that form runs, the pending predicate is a few
+    terms, not a 10^5-item list, and Spark keeps it in the scan's
+    PartitionFilters: only the pending bucket directories are read."""
+    from abs_log_spark.plans import checkpoint as ckpt
+
+    path = str(tmp_path / "t")
+    spark.range(400).select(
+        F.col("id"), (F.col("id") % 40).cast("int").alias("part_bucket")
+    ).write.partitionBy("part_bucket").parquet(path)
+    done = {str(k) for k in range(10**5)} - {str(k) for k in range(30, 40)}
+    pred = ckpt.bucket_in(done)
+    assert str(pred).count(" OR ") <= 2 and len(str(pred)) < 200, str(pred)
+
+    pending = ckpt.filter_pending(spark.read.parquet(path), done)
+    plan = pending._jdf.queryExecution().executedPlan().toString()
+    assert "part_bucket" in plan.split("PartitionFilters", 1)[1][:200], plan
+    assert pending.count() == 100

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from abs_log_spark.operators.retention import expire_routed_buckets
+from abs_log_spark.operators.retention import expire_buckets
 from abs_log_spark.sources.readers import read_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -79,12 +79,12 @@ def test_log_show_error_pivot_layout(spark):
 
 
 def test_expire_buckets_keeps_all_state_consistent(spark, tmp_catalog):
-    """Expiring buckets must drop routed data, histogram partials, AND
-    checkpoint rows together, then rebuild summaries — otherwise the next
-    merge resurrects expired data or a re-ingest silently skips."""
-    from abs_log_spark.operators.retention import expire_buckets
+    """Expiring buckets must drop routed data, histogram partials, AND the
+    done set together (logging ``expired`` audit rows), then rebuild
+    summaries — otherwise the next merge resurrects expired data or a
+    re-ingest silently skips."""
     from abs_log_spark.plans import checkpoint as ckpt
-    from abs_log_spark.plans.pipeline import folded_buckets, run_pipeline, routed_sinks
+    from abs_log_spark.plans.pipeline import run_pipeline, routed_sinks
     from abs_log_spark.sources.synth import gen_sequences, gen_sources_dim
 
     seq = gen_sequences(spark, 600, invalid_every=10)
@@ -97,11 +97,13 @@ def test_expire_buckets_keeps_all_state_consistent(spark, tmp_catalog):
     )
 
     res = expire_buckets(spark, tmp_catalog, ["0", "1"])
-    assert res["partials_subtracted"] == 2 and res["checkpoint_rows"] == 2
-    assert res["routed_partitions"] >= 2
+    assert res["partials_subtracted"] == 2 and res["routed_partitions"] >= 2
     kept = {"2", "3", "4", "5", "6", "7"}
-    assert ckpt.completed_partitions(tmp_catalog, "routed") == kept
-    assert folded_buckets(tmp_catalog) == kept
+    assert ckpt.completed_partitions(tmp_catalog) == kept
+    expired = tmp_catalog.read_arrow(
+        ckpt.CHECKPOINT_TABLE, columns=["partition_key"], filters=[("status", "=", "expired")]
+    ).column("partition_key").to_pylist()
+    assert sorted(expired) == ["0", "1"]
     assert all(
         tmp_catalog.partition_values(f"routed_{s}") <= kept for s in routed_sinks(tmp_catalog)
     )
@@ -119,7 +121,7 @@ def test_expire_buckets_keeps_all_state_consistent(spark, tmp_catalog):
     assert valid_expired > 0
     assert pv_after == pv_all - valid_expired
 
-    # re-ingesting the expired buckets reprocesses them (checkpoint cleared)
+    # re-ingesting the expired buckets reprocesses them (no longer done)
     r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
     assert r2["buckets_processed"] == 2
     pv_back = sum(
@@ -137,9 +139,8 @@ def test_expire_every_bucket_leaves_no_summary(spark, tmp_catalog, monkeypatch, 
     import sys
 
     from abs_log_spark import session
-    from abs_log_spark.operators.retention import expire_buckets
     from abs_log_spark.plans import checkpoint as ckpt
-    from abs_log_spark.plans.pipeline import folded_buckets, run_pipeline
+    from abs_log_spark.plans.pipeline import run_pipeline
     from abs_log_spark.sources.synth import gen_sequences, gen_sources_dim
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -150,8 +151,7 @@ def test_expire_every_bucket_leaves_no_summary(spark, tmp_catalog, monkeypatch, 
     assert tmp_catalog.exists("minute_agg_sink_a")
 
     expire_buckets(spark, tmp_catalog, [str(b) for b in range(8)])
-    assert ckpt.completed_partitions(tmp_catalog, "routed") == set()
-    assert folded_buckets(tmp_catalog) == set()
+    assert ckpt.completed_partitions(tmp_catalog) == set()
     assert tmp_catalog.read(spark, "agg_partials").count() == 0
     left = [t for t in os.listdir(tmp_catalog.root) if t.startswith(("minute_agg_", "errors_"))]
     assert left == []
@@ -198,26 +198,14 @@ def test_summary_tables_day_partitioned_and_pruned(spark, tmp_catalog):
     assert inv == 600 // 10
 
 
-def test_expire_many_buckets_keeps_the_rest(spark, tmp_catalog):
-    """Expiring 100 buckets keeps exactly the unexpired checkpoint rows (the
-    rewrite is a driver-side set lookup, whatever the set size)."""
-    from abs_log_spark.operators.retention import expire_buckets
-    from abs_log_spark.plans import checkpoint as ckpt
-
-    n = 100
-    ckpt.mark_done(tmp_catalog, "r1", "routed", [str(k) for k in range(n + 5)])
-    res = expire_buckets(spark, tmp_catalog, [str(k) for k in range(n)])
-    assert res["checkpoint_rows"] == n
-    assert ckpt.completed_partitions(tmp_catalog, "routed") == {
-        str(k) for k in range(n, n + 5)
-    }
-
-
-def test_expire_routed_buckets(spark, tmp_catalog):
+def test_expire_buckets_drops_routed_partitions(spark, tmp_catalog):
+    """With nothing folded to subtract, expiry is one swap that only drops
+    the buckets' routed partition directories."""
     df = spark.range(100).select(
         F.col("id"), (F.col("id") % 4).cast("int").alias("part_bucket")
     )
     tmp_catalog.write(df, "routed_x", partition_by=("part_bucket",))
-    assert expire_routed_buckets(tmp_catalog, "routed_x", ["0", "2"]) == 2
+    res = expire_buckets(spark, tmp_catalog, ["0", "2", "9"])
+    assert res == {"partials_subtracted": 0, "routed_partitions": 2}
     left = tmp_catalog.read(spark, "routed_x")
     assert set(r[0] for r in left.select("part_bucket").distinct().collect()) == {1, 3}

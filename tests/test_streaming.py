@@ -116,8 +116,8 @@ def test_foreachbatch_replay_counts_once(
     last batch's commit is lost, so the restarted query re-runs it over the
     same files; its bucket is done, so it is a no-op that reads 0 rows.
     ``crash_in_mark_done``: batch 1 dies after its routed promote and its
-    partials write; the restart re-runs batch 1 as a bucket re-run, then
-    batch 2."""
+    partials write, before its fold commits; the restart re-runs batch 1 as
+    a bucket re-run, then batch 2."""
     from abs_log_spark.plans import checkpoint as ckpt
 
     seq, input_dir = seq_input
@@ -133,16 +133,16 @@ def test_foreachbatch_replay_counts_once(
     else:
         mark_done = ckpt.mark_done
 
-        def crash_on_batch_1(cat, run_id, stage, keys):
+        def crash_on_batch_1(cat, run_id, done, keys, status="done"):
             if "1" in keys:
                 raise RuntimeError("injected crash in mark_done")
-            mark_done(cat, run_id, stage, keys)
+            return mark_done(cat, run_id, done, keys, status)
 
         with monkeypatch.context() as m:
             m.setattr(ckpt, "mark_done", crash_on_batch_1)
             with pytest.raises(StreamingQueryException):
                 _drain(spark, tmp_catalog, input_dir, dim)
-        assert ckpt.completed_partitions(tmp_catalog, "routed") == {"0"}
+        assert ckpt.completed_partitions(tmp_catalog) == {"0"}
         assert [bid for bid, _ in _drain(spark, tmp_catalog, input_dir, dim)] == [1, 2]
 
     assert _batches(tmp_catalog) == ["0", "1", "2"]
