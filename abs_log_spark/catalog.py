@@ -12,13 +12,14 @@ appended a few rows at a time on the driver with pyarrow
 (:meth:`Catalog.append_rows`): one parquet file per append, the same
 columns, physical types and footer Spark writes, and no Spark job.
 
-Every multi-step replace of live data goes through ONE crash-safe swap
-(:meth:`Catalog.swap`): the caller drops the staging table and writes it
-completely, a write-ahead journal appears atomically, idempotent moves and
-removals run, and the journal is removed. :meth:`Catalog.recover` finishes
-a journaled swap a crash interrupted, or rolls back one whose journal never
-appeared; every entry point that reads or writes swapped state calls it
-first.
+Live data changes in ONE place. A cycle writes everything it changes to
+staging tables, and one crash-safe swap (:meth:`Catalog.swap`) publishes it:
+a write-ahead journal of idempotent moves and removals appears atomically,
+the steps run, and the journal is removed. :meth:`Catalog.recover` runs
+those steps, finishing a journaled swap a crash interrupted or rolling back
+one whose journal never appeared; every entry point that reads or writes
+swapped state calls it first. ``promote_*`` only list the moves that
+publish a staging write.
 
 Partition layout is the scale story: at 10^12 rows the input is laid out by
 ``(source, part_bucket)`` (hash-bucketed doc_id) so that (a) resume prunes
@@ -107,11 +108,16 @@ class Catalog:
         """Read a table with the schema from its footer, so the read itself
         runs no Spark job (schema inference runs one). Spark still discovers
         the partition columns from the directory names. Without a Spark
-        footer the read falls back to inference."""
+        footer the read falls back to inference. Spark ignores a path with
+        a hidden (``_``/``.``) name, so a staging table is read through its
+        visible entries, with itself as the partition base path."""
         path = self.path(table)
         schema = footer_schema(path)
         reader = spark.read if schema is None else spark.read.schema(schema)
-        return reader.parquet(path)
+        if not table.startswith(("_", ".")):
+            return reader.parquet(path)
+        entries = [os.path.join(path, d) for d in sorted(os.listdir(path)) if d[0] not in "_."]
+        return reader.option("basePath", path).parquet(*entries)
 
     def read_arrow(self, table: str, columns: list[str], filters=None) -> pa.Table:
         """Driver-side pyarrow read of a small table (no Spark job). Hidden
@@ -149,11 +155,12 @@ class Catalog:
         return name
 
     def swap(self, moves: list[tuple[str, str]], removes: list[str] = ()) -> None:
-        """Crash-safe replace of live paths by the completely written
-        :data:`SWAP_STAGING` table. ``moves`` are ``(src, dst)`` file or
-        directory pairs and ``removes`` are directories, all relative to the
-        warehouse root; a move replaces its destination, and no removed
-        directory may be a destination.
+        """Crash-safe replace of live paths by completely written staging
+        tables: the ONE way a cycle publishes anything. ``moves`` are
+        ``(src, dst)`` file or directory pairs, each ``src`` inside a staging
+        table, and ``removes`` are directories, all relative to the warehouse
+        root; removals run first, a move replaces its destination, and no
+        removed directory may be a destination.
 
         The journal is written under a hidden temp name and renamed into
         place, so it either names every step or does not exist. Every step
@@ -166,10 +173,13 @@ class Catalog:
         self.recover()
 
     def recover(self) -> None:
-        """Finish the swap a crash interrupted (journal present), else roll
-        back an uncommitted one: its staging and a temp journal left
-        mid-write are dropped, and the live paths were never touched."""
+        """Finish the swap a crash interrupted (journal present) and drop the
+        staging tables its moves came from, else roll back an uncommitted
+        one: :data:`SWAP_STAGING` and a temp journal left mid-write are
+        dropped, and the live paths were never touched. The only code that
+        changes live paths."""
         journal = self.path(SWAP_JOURNAL)
+        stagings = {SWAP_STAGING}
         if os.path.exists(journal):
             with open(journal) as f:
                 j = json.load(f)
@@ -177,29 +187,30 @@ class Catalog:
                 if os.path.isdir(self.path(rel)):
                     shutil.rmtree(self.path(rel))
             for src, dst in j["moves"]:
+                stagings.add(src.split(os.sep, 1)[0])
                 src, dst = self.path(src), self.path(dst)
                 if os.path.exists(src):  # else this move already ran
                     if os.path.isdir(dst):
                         shutil.rmtree(dst)
                     os.makedirs(os.path.dirname(dst), exist_ok=True)
                     os.replace(src, dst)
-        self.drop(SWAP_STAGING)
+        for t in sorted(stagings):
+            self.drop(t)
         for p in (self.path(f".{SWAP_JOURNAL}.tmp"), journal):
             if os.path.exists(p):
                 os.remove(p)
 
-    def partition_values(self, table: str, key: str = "part_bucket") -> set[str]:
-        """Partition values of a table's top-level ``key=value`` dirs, from
-        the directory listing alone (the parquet stand-in for an Iceberg
-        partitions-metadata query — no Spark job, no file reads)."""
-        p = self.path(table)
+    def listdir(self, rel: str, prefix: str = "") -> list[str]:
+        """Sorted names of the subdirectories of ``rel`` (relative to the
+        root; "" is the root) that start with ``prefix``: a directory listing,
+        no Spark job."""
+        p = self.path(rel)
         if not os.path.isdir(p):
-            return set()
-        return {
-            d.split("=", 1)[1]
-            for d in os.listdir(p)
-            if d.startswith(f"{key}=") and os.path.isdir(os.path.join(p, d))
-        }
+            return []
+        return sorted(
+            d for d in os.listdir(p)
+            if d.startswith(prefix) and os.path.isdir(os.path.join(p, d))
+        )
 
     def write(
         self,
@@ -224,59 +235,33 @@ class Catalog:
     def drop(self, table: str) -> None:
         shutil.rmtree(self.path(table), ignore_errors=True)
 
-    def promote_sink_tables(self, staging_table: str, table_prefix: str) -> list[str]:
-        """Promote a staging write partitioned by ``_sink`` into per-sink
-        tables by moving each ``_sink=S`` directory wholesale to
-        ``<prefix>S``. The staging replaces the whole SET of ``<prefix>*``
-        tables (summary tables are rewritten per run): a ``<prefix>`` table
-        whose sink the staging lacks is dropped, so a sink with no rows left
-        serves none. The data files keep their own ``sink`` column; ``_sink``
-        exists only to drive the directory layout, so ONE write job fans out
-        to N sink tables. Iceberg equivalent: ``REPLACE TABLE ... AS
-        SELECT`` per sink, or a single table with sink partition."""
-        staging = self.path(staging_table)
-        sinks = sorted(
-            d.split("=", 1)[1] for d in os.listdir(staging) if d.startswith("_sink=")
-        ) if os.path.isdir(staging) else []
-        if os.path.isdir(self.root):
-            for t in os.listdir(self.root):
-                if t.startswith(table_prefix) and t[len(table_prefix):] not in sinks:
-                    shutil.rmtree(self.path(t))
-        for sink in sinks:
-            target = self.path(f"{table_prefix}{sink}")
-            shutil.rmtree(target, ignore_errors=True)
-            os.replace(os.path.join(staging, f"_sink={sink}"), target)
-        shutil.rmtree(staging, ignore_errors=True)
-        return sinks
+    def promote_sink_tables(
+        self, staging_table: str, table_prefix: str
+    ) -> tuple[list[tuple[str, str]], list[str]]:
+        """The :meth:`swap` steps that promote a staging write partitioned by
+        ``_sink`` into per-sink tables: a move of each ``_sink=S`` directory
+        wholesale to ``<prefix>S``, and a removal of each ``<prefix>`` table
+        whose sink the staging lacks, so the staging replaces the whole SET
+        of ``<prefix>*`` tables and a sink with no rows left serves none.
+        The data files keep their own ``sink`` column; ``_sink`` exists only
+        to drive the directory layout, so ONE write job fans out to N sink
+        tables. Iceberg equivalent: ``REPLACE TABLE ... AS SELECT`` per
+        sink, or a single table with sink partition."""
+        sinks = [d.split("=", 1)[1] for d in self.listdir(staging_table, "_sink=")]
+        moves = [(os.path.join(staging_table, f"_sink={s}"), f"{table_prefix}{s}") for s in sinks]
+        removes = [t for t in self.listdir("", table_prefix) if t[len(table_prefix):] not in sinks]
+        return moves, removes
 
-    def promote_partitions(self, staging_table: str, table_prefix: str) -> dict[str, list[str]]:
-        """Promote a staging write partitioned by (sink, <key>) into per-sink
-        tables by moving partition directories: ``staging/sink=S/<key>=V`` ->
-        ``<prefix>S/<key>=V`` (replacing any existing target partition).
+    def promote_partitions(self, staging_table: str, table_prefix: str) -> list[tuple[str, str]]:
+        """The :meth:`swap` moves that promote a staging write partitioned by
+        (sink, <key>) into per-sink tables: ``staging/sink=S/<key>=V`` ->
+        ``<prefix>S/<key>=V``, each replacing that target partition.
 
         This is the parquet stand-in for Iceberg's atomic partition replace:
         ONE data pass writes every sink's rows; routing to per-sink tables is
-        a metadata operation, not a second scan. Returns {sink: [key dirs]}.
-        """
-        staging = self.path(staging_table)
-        moved: dict[str, list[str]] = {}
-        if not os.path.isdir(staging):
-            return moved
-        for sink_dir in sorted(os.listdir(staging)):
-            if not sink_dir.startswith("sink="):
-                continue
-            sink = sink_dir.split("=", 1)[1]
-            target_root = self.path(f"{table_prefix}{sink}")
-            os.makedirs(target_root, exist_ok=True)
-            moved[sink] = []
-            src_root = os.path.join(staging, sink_dir)
-            for part_dir in sorted(os.listdir(src_root)):
-                src = os.path.join(src_root, part_dir)
-                if not os.path.isdir(src):
-                    continue
-                dst = os.path.join(target_root, part_dir)
-                shutil.rmtree(dst, ignore_errors=True)
-                os.replace(src, dst)
-                moved[sink].append(part_dir)
-        shutil.rmtree(staging, ignore_errors=True)
-        return moved
+        a metadata operation, not a second scan."""
+        return [
+            (os.path.join(staging_table, s, d), os.path.join(f"{table_prefix}{s[len('sink='):]}", d))
+            for s in self.listdir(staging_table, "sink=")
+            for d in self.listdir(os.path.join(staging_table, s))
+        ]

@@ -86,13 +86,47 @@ def minute_agg(
     )
 
 
+#: the measures of a histogram partial: exact integer sums, so partials of
+#: disjoint row sets add (and subtract) group by group
+PARTIAL_MEASURES = ("pv", "bytes_sum", "rt_cnt", "err_hits", "invalid_hits")
+
+
+def partial_rows(routed: DataFrame, keys: tuple[str, ...] = GROUP_KEYS, sign: int = 1) -> DataFrame:
+    """Each routed row as a ONE-ROW histogram partial at the grain (keys...,
+    status, rt), its measures multiplied by ``sign`` (-1 takes the rows back
+    out of a fold). A projection, no shuffle: one group-by over any union of
+    these rows and stored partials is the fold, with one exchange."""
+    minute = F.date_trunc("minute", F.col("ts"))
+
+    def one(cond):
+        return F.when(cond, sign).otherwise(0).cast("long")
+
+    return routed.select(
+        *[minute.alias(k) if k == "minute" else F.col(k) for k in keys],
+        F.col("status"),
+        F.col("rt"),
+        one(F.col("valid")).alias("pv"),
+        (F.coalesce(F.col("bytes"), F.lit(0)) * sign).cast("long").alias("bytes_sum"),
+        one(F.col("rt").isNotNull()).alias("rt_cnt"),
+        one(F.col("status") >= 400).alias("err_hits"),
+        one(~F.col("valid")).alias("invalid_hits"),
+    )
+
+
+def sum_partials(rows: DataFrame) -> DataFrame:
+    """Sum partial rows group by group at their grain (every non-measure
+    column)."""
+    grain = [c for c in rows.columns if c not in PARTIAL_MEASURES]
+    return rows.groupBy(*grain).agg(*[F.sum(m).cast("long").alias(m) for m in PARTIAL_MEASURES])
+
+
 def minute_agg_hist_partials(
     routed: DataFrame,
     keys: tuple[str, ...] = GROUP_KEYS,
 ) -> DataFrame:
     """MERGEABLE minute-agg partials — the incremental-resume path's unit of
     work ([B] north_rule: incremental runs must not re-scan completed
-    history).
+    history): :func:`partial_rows` summed by :func:`sum_partials`.
 
     Grain: (keys..., status, rt). Carrying the distinct rt values
     WITH their counts makes the partial a lossless histogram: every
@@ -107,19 +141,9 @@ def minute_agg_hist_partials(
     Scale: partial size per group is bounded by the rt value resolution
     (milliseconds here — the reference logs %.3f request_time [PK]); for a
     continuous measure, quantize rt at this stage (the partial becomes the
-    sketch). The measures are exact integer sums, so partials of disjoint
-    row sets add (and subtract) group by group.
+    sketch).
     """
-    df = routed.withColumn("minute", F.date_trunc("minute", F.col("ts")))
-    return df.groupBy(
-        *[F.col(k) for k in keys], F.col("status"), F.col("rt")
-    ).agg(
-        F.sum(F.when(F.col("valid"), 1).otherwise(0)).alias("pv"),
-        F.coalesce(F.sum("bytes"), F.lit(0)).cast("long").alias("bytes_sum"),
-        F.count("rt").alias("rt_cnt"),
-        F.sum(F.when(F.col("status") >= 400, 1).otherwise(0)).alias("err_hits"),
-        F.sum(F.when(~F.col("valid"), 1).otherwise(0)).alias("invalid_hits"),
-    )
+    return sum_partials(partial_rows(routed, keys))
 
 
 def merge_minute_agg_hist_partials(

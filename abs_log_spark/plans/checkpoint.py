@@ -17,18 +17,19 @@ metadata file per snapshot. A bucket is done exactly when its rows are in
 the partials, so no second record can disagree with the first.
 
 The ``checkpoint`` table is an append-only audit log, read by no run. Each
-fold or subtraction stages one file of rows (``done`` for folded buckets,
-``expired`` for subtracted ones) next to the new lineage with
-:func:`mark_done`, and the same swap publishes it, so the partials, the
-done set and the log change in one commit: replaying the log (the last
-status per key is ``done``) gives :func:`completed_partitions` after every
-commit. The rows are written on the driver with pyarrow
+cycle stages one file of rows (``done`` for folded buckets, ``expired`` for
+subtracted ones) next to the new lineage with :func:`mark_done`, and the
+cycle's one swap publishes it with the partials, the routed partitions and
+the summaries, so all of them change in one commit: replaying the log (the
+last status per key is ``done``) gives :func:`completed_partitions` after
+every commit. The rows are written on the driver with pyarrow
 (:meth:`Catalog.append_rows`) with the columns and types Spark writes, so
 Spark and DuckDB read one table whichever writer produced a file.
 
-Idempotence: the routed write uses dynamic partition overwrite keyed by
-``part_bucket`` — re-running a bucket that never committed replaces exactly
-that bucket's routed rows.
+Idempotence: the routed write goes to a staging table, and the commit
+moves each of its ``part_bucket`` directories over the live one, so
+re-running a bucket replaces exactly that bucket's routed rows; a bucket
+whose cycle never committed left no routed rows behind.
 """
 
 from __future__ import annotations

@@ -7,12 +7,14 @@ The Spark-first restatement of abs-log's collector lifecycle ([PK]
       -> STAGE parse + abstract: ONE fused arrow_udf per Arrow batch
          (detok + RE2 regex + uri_abs/args_abs, functions.parse)
       -> STAGE enrich  : broadcast join on the source dimension
-      -> STAGE route   : one partitioned write, promoted to per-sink tables
-      -> STAGE fold    : routed buckets not yet done -> histogram partials,
-                         added to ONE agg_partials table; its done set and
-                         checkpoint audit rows ride in the same swap
-      -> STAGE summary : agg_partials -> per-sink minute summaries + error
-                         view
+      -> STAGE route   : one partitioned write to a staging table
+      -> STAGE fold    : the staged increment -> one-row histogram partials,
+                         summed with the agg_partials table into its staging
+      -> STAGE summary : staged partials -> per-sink minute summaries + error
+                         view, each into its staging
+      -> COMMIT        : ONE journaled swap publishes the routed partitions,
+                         agg_partials with its done set, the checkpoint audit
+                         rows and the summaries
       -> metrics row (driver-side pyarrow append)
 
 Every stage is a pure DataFrame -> DataFrame function so the driver harness
@@ -23,20 +25,22 @@ can register them individually; a Structured-Streaming foreachBatch runs
 Scale design decisions (10^12 rows / 1000 executors):
 - ONE data pass, NO cache: the routed relation (wide token arrays) is
   written exactly once, partitioned by (sink, part_bucket); per-sink tables
-  are produced by promoting partition directories (a metadata/file move —
-  the parquet stand-in for Iceberg's atomic partition replace). Caching the
+  are produced by moving partition directories (a metadata/file move — the
+  parquet stand-in for Iceberg's atomic partition replace). Caching the
   token arrays measured 2x slower than re-reading column-pruned parquet.
-- partition promotion replaces exactly the re-run buckets -> idempotent
+- a moved partition replaces exactly the re-run bucket -> idempotent
   per-bucket re-runs (resume).
-- summaries are incremental: only the buckets not yet folded are read
-  back from the routed tables (partition-pruned; parquet column pruning
-  keeps the token arrays unread) into mergeable partials with lossless rt
-  histograms, so quantiles stay EXACT through every fold. Each run folds
-  them ONCE into the one ``agg_partials`` table, whose lineage of folded
-  buckets — THE done set (``checkpoint.completed_partitions``) — moves
-  with it in the same swap: a run commits once; the summaries are
-  re-derived from that aggregate-sized table, never from the routed
-  history. AQE coalesces the post-shuffle partitions.
+- summaries are incremental: only this cycle's buckets are read back, from
+  the routed staging (parquet column pruning keeps the token arrays
+  unread), as one-row partials with lossless rt histograms, so quantiles
+  stay EXACT through every fold. They are summed ONCE with the one
+  ``agg_partials`` table, whose lineage of folded buckets is THE done set
+  (``checkpoint.completed_partitions``); the summaries are re-derived from
+  that aggregate-sized result, never from the routed history. AQE
+  coalesces the post-shuffle partitions.
+- one commit per cycle: every output is staged, and one ``Catalog.swap``
+  publishes all of it, so a crash leaves the warehouse before the cycle or
+  after it, never a mix; a run with nothing pending commits nothing.
 - no Spark job for bookkeeping: a cron increment is bound by scheduling,
   not data, so the done-set read, the audit rows, the metrics row and the
   sink list stay on the driver (one JSON file, pyarrow appends, directory
@@ -47,16 +51,20 @@ Scale design decisions (10^12 rows / 1000 executors):
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from abs_log_spark.catalog import SWAP_STAGING, Catalog
 from abs_log_spark.functions.parse import parse_arrow
 from abs_log_spark.operators.aggregate import (
+    PARTIAL_MEASURES,
     errors_from_hist_partials,
     merge_minute_agg_hist_partials,
-    minute_agg_hist_partials,
+    partial_rows,
+    sum_partials,
 )
 from abs_log_spark.operators.enrich import enrich
 from abs_log_spark.plans import checkpoint as ckpt
@@ -81,14 +89,16 @@ class PipelineConfig:
     exclude_uri: str | None = None
 
 
-def fan_out_summary(cat: Catalog, name: str, summary: DataFrame | None) -> None:
+def fan_out_summary(
+    cat: Catalog, name: str, summary: DataFrame | None
+) -> tuple[list[tuple[str, str]], list[str]]:
     """ONE write job per summary kind, fanned out to per-sink tables by a
     partitioned write + directory promote (no per-sink filter jobs —
     measured ~0.4s of scheduler overhead per tiny job). ``_sink`` duplicates
     ``sink`` purely to drive the directory layout while keeping the sink
-    column inside the data files. The promote replaces the whole set of
-    ``<name>*`` tables, so a sink with no rows left (or every sink, when
-    ``summary`` is None) loses its table.
+    column inside the data files. Returns the swap's moves and removes that
+    replace the whole set of ``<name>*`` tables, so a sink with no rows left
+    (or every sink, when ``summary`` is None) loses its table.
 
     Summary tables are additionally partitioned by ``day = date(minute)`` so
     time-ranged reports (``log_show --from/--to``) prune whole partition
@@ -105,7 +115,7 @@ def fan_out_summary(cat: Catalog, name: str, summary: DataFrame | None) -> None:
             staging,
             partition_by=("_sink", "day"),
         )
-    cat.promote_sink_tables(staging, name)
+    return cat.promote_sink_tables(staging, name)
 
 
 def routed_union(
@@ -117,7 +127,7 @@ def routed_union(
     """Union of the per-sink routed tables, pruned to the summary-feeding
     columns (parquet column pruning keeps token arrays unread) and — when
     ``bucket_filter`` is given — to those partition directories only
-    (PartitionFilters at the scan; completed buckets are never opened)."""
+    (PartitionFilters at the scan; other buckets are never opened)."""
     parts = []
     for sink in sinks:
         tbl = f"routed_{sink}"
@@ -132,115 +142,63 @@ def routed_union(
                 "valid", "part_bucket",
             )
         )
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return reduce(DataFrame.unionByName, parts) if parts else None
 
 
 def routed_sinks(cat: Catalog) -> list[str]:
     """Sinks with a routed table on disk (directory listing, no Spark job)."""
-    if not os.path.isdir(cat.root):
-        return []
-    return sorted(
-        t[len("routed_"):]
-        for t in os.listdir(cat.root)
-        if t.startswith("routed_") and os.path.isdir(cat.path(t))
-    )
+    return [t[len("routed_"):] for t in cat.listdir("", "routed_")]
 
 
-_PARTIAL_MEASURES = ("pv", "bytes_sum", "rt_cnt", "err_hits", "invalid_hits")
-
-
-def _swap_fold(
-    spark: SparkSession,
-    cat: Catalog,
-    delta: DataFrame,
-    run_id: str,
-    done: set[str],
-    keys: list[str],
-    status: str,
-    removes: list[str] = (),
-) -> None:
-    """Add the ``delta`` partials to ``agg_partials`` group by group, drop
-    the groups whose measures all summed to zero, and commit the result,
-    the done set ``done`` and ``status`` audit rows for ``keys`` in ONE
-    journaled :meth:`Catalog.swap` (which also drops ``removes``). The fold
-    reads the table it replaces, so it is written to staging completely
-    before the swap touches the live table. The audit file's move runs
-    first: moved after the staging, it would land in ``agg_partials`` as a
-    data file."""
-    rows = delta
-    if cat.exists("agg_partials"):
-        rows = cat.read(spark, "agg_partials").unionByName(delta)
-    grain = [c for c in rows.columns if c not in _PARTIAL_MEASURES]
-    cat.drop(SWAP_STAGING)
-    cat.write(
-        rows.groupBy(*grain)
-        .agg(*[F.sum(m).cast("long").alias(m) for m in _PARTIAL_MEASURES])
-        .where(" or ".join(f"{m} != 0" for m in _PARTIAL_MEASURES)),
-        SWAP_STAGING,
-    )
-    audit = ckpt.mark_done(cat, run_id, done, keys, status)
-    cat.swap([audit, (SWAP_STAGING, "agg_partials")], removes)
+def routed_dirs(cat: Catalog, buckets: list[str]) -> list[str]:
+    """The live ``routed_<sink>/part_bucket=<b>`` directories of ``buckets``."""
+    return [
+        d for sink in routed_sinks(cat) for b in buckets
+        if os.path.isdir(cat.path(d := f"routed_{sink}/part_bucket={b}"))
+    ]
 
 
 def compact_partials(
     spark: SparkSession,
     cat: Catalog,
-    inc: DataFrame,
-    run_id: str,
-    done: set[str],
+    inc: DataFrame | None,
+    victims: DataFrame | None,
     buckets: list[str],
 ) -> dict:
-    """THE fold of an increment: turn ``inc``, the routed rows of
-    ``buckets``, into histogram partials, add them to ``agg_partials`` and
-    ``buckets`` to ``done``, its lineage, and log them ``done``, in one swap.
+    """THE fold of a cycle: write to :data:`SWAP_STAGING` the ``agg_partials``
+    table plus ``inc``, the routed rows of ``buckets``, minus ``victims``,
+    the live routed rows of done buckets leaving the table, with ONE
+    group-by: every routed row is projected to a one-row partial first
+    (:func:`partial_rows`), so the union is summed by grain with one
+    exchange. Groups whose measures all summed to zero go.
 
     ``agg_partials`` is ONE unpartitioned table at the summaries' grain plus
-    ``(status, rt)``: the measures are sums and the histogram is lossless,
-    so exact quantiles survive any number of folds, and the summary rebuild
-    reads O(live keys) rows however many buckets were folded. Buckets leave
-    the table only through :func:`subtract_compacted`. Returns counts."""
-    _swap_fold(spark, cat, minute_agg_hist_partials(inc), run_id, done | set(buckets),
-               buckets, "done")
+    ``(status, rt)``: the measures are exact integer sums over a
+    deterministic recompute of each bucket's routed partition and the
+    histogram is lossless, so exact quantiles survive any number of folds,
+    a victim's rows cancel exactly, and the summary rebuild reads O(live
+    keys) rows however many buckets were folded. Returns counts."""
+    parts = [cat.read(spark, "agg_partials")] if cat.exists("agg_partials") else []
+    parts += [partial_rows(r, sign=sign) for r, sign in ((inc, 1), (victims, -1)) if r is not None]
+    cat.drop(SWAP_STAGING)
+    if parts:
+        cat.write(
+            sum_partials(reduce(DataFrame.unionByName, parts))
+            .where(" or ".join(f"{m} != 0" for m in PARTIAL_MEASURES)),
+            SWAP_STAGING,
+        )
     return {"buckets_compacted": len(buckets)}
 
 
-def subtract_compacted(
-    spark: SparkSession, cat: Catalog, victims: list[str], run_id: str, removes: list[str] = ()
-) -> int:
-    """Remove done buckets' contribution from ``agg_partials``: the same
-    fold as :func:`compact_partials` with the measures NEGATED, the victims
-    taken out of the done set and logged ``expired``, and ``removes``
-    dropped, in one swap. Every partial measure is an exact integer sum over
-    a deterministic recompute of the bucket's routed partition, so the
-    victims' partials are recomputed from routed — which a removal in this
-    same swap may then drop — and the groups only they fed cancel to zero
-    and go. With no victim done, only ``removes`` are dropped. Returns the
-    done victim count."""
-    done = ckpt.completed_partitions(cat)
-    victims = sorted(set(map(str, victims)) & done)
-    if not victims:
-        cat.swap([], removes)
-        return 0
-    p = minute_agg_hist_partials(
-        routed_union(spark, cat, routed_sinks(cat), bucket_filter=victims)
-    )
-    neg = p.select(*[(-F.col(c)).alias(c) if c in _PARTIAL_MEASURES else c for c in p.columns])
-    _swap_fold(spark, cat, neg, run_id, done - set(victims), victims, "expired", removes)
-    return len(victims)
-
-
-def rebuild_summaries(spark: SparkSession, cat: Catalog) -> bool:
-    """Re-derive every summary table from the current ``agg_partials``
-    relation (aggregate-sized — never the routed history). The single
-    summary-consistency primitive: the incremental pipeline, bucket expiry,
-    and crash recovery all converge on 'summaries = merge(partials)'; with
-    no partials left, no summary table is left either. Returns whether
-    there were partials.
+def rebuild_summaries(
+    spark: SparkSession, cat: Catalog
+) -> tuple[list[tuple[str, str]], list[str]]:
+    """Re-derive every summary table from the partials staged in
+    :data:`SWAP_STAGING` (aggregate-sized — never the routed history) and
+    return the swap's moves and removes that publish them: summaries =
+    merge(partials) in every commit, and with no partials left no summary
+    table is left either. It must run before :func:`checkpoint.mark_done`
+    puts the audit file in the staging, which a read would take as partials.
 
     The two summary kinds are INDEPENDENT actions over the same partials
     scan, so they run on concurrent scheduler threads: at the 24M-row
@@ -250,7 +208,7 @@ def rebuild_summaries(spark: SparkSession, cat: Catalog) -> bool:
     also interleave onto idle executors instead of serializing."""
     from concurrent.futures import ThreadPoolExecutor
 
-    partials = cat.read(spark, "agg_partials") if cat.exists("agg_partials") else None
+    partials = cat.read(spark, SWAP_STAGING) if cat.exists(SWAP_STAGING) else None
     kinds = [
         ("minute_agg_", merge_minute_agg_hist_partials),
         ("errors_", errors_from_hist_partials),
@@ -258,11 +216,43 @@ def rebuild_summaries(spark: SparkSession, cat: Catalog) -> bool:
 
     def fan_out(kind):
         name, derive = kind
-        fan_out_summary(cat, name, None if partials is None else derive(partials))
+        return fan_out_summary(cat, name, None if partials is None else derive(partials))
 
     with ThreadPoolExecutor(max_workers=2) as ex:
-        list(ex.map(fan_out, kinds))
-    return partials is not None
+        steps = list(ex.map(fan_out, kinds))
+    return [m for ms, _ in steps for m in ms], [r for _, rs in steps for r in rs]
+
+
+def commit_cycle(
+    spark: SparkSession,
+    cat: Catalog,
+    run_id: str,
+    done: set[str],
+    buckets: list[str],
+    victims: list[str],
+    inc: DataFrame | None = None,
+    moves: list[tuple[str, str]] = (),
+    removes: list[str] = (),
+    mark: Callable[[str], None] = lambda phase: None,
+) -> None:
+    """Stage and publish everything one cycle changes in ONE
+    :meth:`Catalog.swap`: the fold of ``inc`` (the routed rows of
+    ``buckets``) minus the done ``victims``, the summaries derived from it,
+    the done set ``(done - victims) | buckets`` with its audit rows
+    (``done`` for ``buckets``, else ``expired`` for ``victims``), then the
+    caller's ``moves`` and ``removes``. The audit file moves first: moved
+    after the staging, it would land in ``agg_partials`` as a data file. A
+    crash leaves the warehouse before the cycle or after it."""
+    neg = routed_union(spark, cat, routed_sinks(cat), bucket_filter=victims) if victims else None
+    compact_partials(spark, cat, inc, neg, buckets)
+    mark("compact")
+    summary_moves, summary_removes = rebuild_summaries(spark, cat)
+    mark("aggregate")
+    keys, status = (buckets, "done") if buckets else (victims, "expired")
+    audit = ckpt.mark_done(cat, run_id, (done - set(victims)) | set(buckets), keys, status)
+    cat.swap([audit, (SWAP_STAGING, "agg_partials"), *moves, *summary_moves],
+             [*summary_removes, *removes])
+    mark("commit")
 
 
 def transform(seq_df: DataFrame, dim: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
@@ -292,23 +282,16 @@ def run_pipeline(
     metrics = StageMetrics(spark)
 
     done = ckpt.completed_partitions(cat)
-    if not cfg.resume and done:
-        # re-ingest every bucket: subtract its folded rows now, while its
-        # routed partition (the subtraction's recompute input) is on disk —
-        # the promote below may replace it
-        subtract_compacted(spark, cat, sorted(done), run_id)
-        done = set()
-    pending = ckpt.filter_pending(seq_df, done)
-    pending = metrics.observe_input(pending)
+    pending = metrics.observe_input(ckpt.filter_pending(seq_df, done) if cfg.resume else seq_df)
     metrics.mark("setup")
 
     routed = transform(pending, dim, cfg)
     routed = metrics.observe_routed(routed)
 
     # ONE data pass: write everything partitioned by (sink, part_bucket) to a
-    # staging table, then promote partition dirs into per-sink tables with
-    # file moves (Iceberg atomic-partition-replace stand-in). No cache: the
-    # wide token arrays are written exactly once and never re-scanned.
+    # staging table, whose partition dirs the commit moves into per-sink
+    # tables (Iceberg atomic-partition-replace stand-in). No cache: the wide
+    # token arrays are written once and read back column-pruned.
     cat.drop("_routed_staging")  # clear any crashed-run leftovers
     # Shuffle once on the layout key before the partitioned write: without
     # this, every task opens a file per (sink, bucket) value -> tasks x
@@ -338,42 +321,26 @@ def run_pipeline(
     # once vs not at all.
     cat.write(routed, "_routed_staging", partition_by=layout_cols)
     metrics.mark("routed_write")
-    moved = cat.promote_partitions("_routed_staging", "routed_")
-    metrics.mark("promote")
-    processed_any = bool(moved)
-    # summaries cover every sink with routed history (a directory listing,
-    # no Spark job)
-    sinks = routed_sinks(cat)
 
-    # Buckets in this increment come from the promoted dir names — zero
-    # extra Spark jobs.
-    buckets = sorted(
-        {d.split("=", 1)[1] for dirs in moved.values() for d in dirs if "=" in d}
-    )
-
-    # ONE fold per run (the 10^12-row resume story): every routed bucket not
-    # done — this run's buckets, plus any a crash before the fold left
-    # unfolded — is read back (partition-pruned; column pruning keeps the
-    # token arrays unread), turned into lossless rt histograms (EXACT
-    # quantiles survive, see operators.aggregate.minute_agg_hist_partials)
-    # and added to agg_partials in the swap that marks it done. Cost ∝
-    # increment + live keys, never the routed history; the bucket sets are
-    # directory listings.
-    routed_buckets = set().union(*(cat.partition_values(f"routed_{k}") for k in sinks))
-    to_fold = sorted(routed_buckets - done)
-    if to_fold:
-        inc = routed_union(spark, cat, sinks, bucket_filter=to_fold)
-        compact_partials(spark, cat, metrics.observe_agg_input(inc), run_id, done, to_fold)
-    metrics.mark("compact")
-
-    # Summaries are derived data rebuilt at every entry: stale after a
-    # crash, never wrong.
-    rebuild_summaries(spark, cat)
-    metrics.mark("aggregate")
+    # The cycle's buckets are the staging's partition dirs (a listing, zero
+    # Spark jobs); none pending means nothing to commit. The increment is
+    # read back from the staging (partition dirs of this run only; column
+    # pruning keeps the token arrays unread), so the fold's cost is the
+    # increment plus the live keys, never the routed history. A done bucket
+    # in the input (resume=False) is a victim: its live routed rows leave
+    # the partials, and its live routed dirs are replaced or removed.
+    moves = cat.promote_partitions("_routed_staging", "routed_")
+    buckets = sorted({os.path.basename(dst).split("=", 1)[1] for _, dst in moves})
+    if buckets:
+        victims = sorted(set(buckets) & done)
+        replaced = {dst for _, dst in moves}
+        inc = metrics.observe_agg_input(cat.read(spark, "_routed_staging"))
+        commit_cycle(spark, cat, run_id, done, buckets, victims, inc, moves,
+                     [d for d in routed_dirs(cat, victims) if d not in replaced], metrics.mark)
 
     vals = metrics.flush(spark, cat, run_id, buckets)
     vals["buckets_processed"] = len(buckets)
-    vals["buckets_skipped"] = len(done)
-    vals["sinks"] = sinks
-    vals["any_write"] = processed_any
+    vals["buckets_skipped"] = len(done - set(buckets))
+    # summaries cover every sink with routed history
+    vals["sinks"] = routed_sinks(cat)
     return vals

@@ -47,10 +47,13 @@ def reference_catalog(spark, tmp_path):
         cat = Catalog(root=str(tmp_path / "wh_full"))
         cat.write(transform(seq, dim), "_routed_staging",
                   partition_by=("sink", "part_bucket"))
-        cat.promote_partitions("_routed_staging", "routed_")
+        cat.swap(cat.promote_partitions("_routed_staging", "routed_"))
         allr = routed_union(spark, cat, routed_sinks(cat))
-        fan_out_summary(cat, "minute_agg_", minute_agg(allr, exact_quantiles=True))
-        fan_out_summary(cat, "errors_", error_view(allr))
+        steps = [
+            fan_out_summary(cat, "minute_agg_", minute_agg(allr, exact_quantiles=True)),
+            fan_out_summary(cat, "errors_", error_view(allr)),
+        ]
+        cat.swap([m for ms, _ in steps for m in ms], [r for _, rs in steps for r in rs])
         return cat
 
     return build

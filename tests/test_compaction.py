@@ -6,6 +6,7 @@ lockstep with the lineage."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 
@@ -62,7 +63,6 @@ def _audit_done(cat):
 def _assert_one_table(cat, lineage):
     """agg_partials is one table: no partition dir, lineage inside it, and
     the audit log replays to the same done set."""
-    assert cat.partition_values("agg_partials") == set()
     assert not any("=" in d for d in os.listdir(cat.path("agg_partials")))
     assert ckpt.completed_partitions(cat) == lineage == _audit_done(cat)
 
@@ -138,60 +138,83 @@ def _crash_inside_swap(monkeypatch, call: int, step: int) -> None:
         monkeypatch.setattr(mod, name, mutation(getattr(mod, name)))
 
 
-@pytest.mark.parametrize("site", ["compaction", "subtraction"])
+def _live_files(cat) -> dict[str, str]:
+    """Every live file of the warehouse, by path, with a hash of its bytes.
+    Staging tables and the journal (hidden top-level names) are not live,
+    and neither is ``metrics``, the run log appended after the commit."""
+    out = {}
+    for top in os.listdir(cat.root):
+        if top.startswith(("_", ".")) or top == "metrics":
+            continue
+        for d, _, files in os.walk(cat.path(top)):
+            for f in files:
+                with open(os.path.join(d, f), "rb") as fh:
+                    out[os.path.relpath(os.path.join(d, f), cat.root)] = hashlib.sha1(
+                        fh.read()
+                    ).hexdigest()
+    return out
+
+
+@pytest.mark.parametrize("site", ["compaction", "subtraction", "no_resume"])
 def test_swap_crash_at_every_step_converges(spark, tmp_path, monkeypatch, site):
-    """A crash at ANY filesystem step of each journaled swap converges: at
-    every crash point the audit log replays to the done set, and after the
-    next run, summaries and done set equal an uninterrupted run's. Sites:
-    the fold of a run's new buckets, and expire_buckets' one commit (the
-    partials subtraction, the done set and the routed partitions), after
-    which the next run reads input without the expired bucket. A committed
-    expiry (journal written) must keep the bucket out of that run; an
-    uncommitted one left everything as it was, and the operator retries."""
+    """A cycle is ONE commit: it calls ``Catalog.swap`` once, leaves every
+    live file as it was until then, and that swap alone takes the
+    warehouse to the cycle's end state — the routed partitions,
+    ``agg_partials`` with its done set, the audit log and the summaries. So
+    a crash at ANY filesystem step of the swap, followed by
+    ``Catalog.recover()`` alone (no re-run), leaves every live file exactly
+    as before the cycle (always, when the journal had not landed) or
+    exactly as after it, and the audit log replays to the done set. Sites:
+    a run with new buckets, ``expire_buckets``, and a ``resume=False``
+    re-run of done buckets. The swap is replayed, with its recorded steps,
+    on copies of the warehouse as the cycle left it just before the swap."""
     from abs_log_spark.operators.retention import expire_buckets
+    from abs_log_spark.plans.pipeline import PipelineConfig
 
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
     first6 = seq.where(F.col("part_bucket") < 6)
-    rest = first6.where(F.col("part_bucket") != 0)
     base = Catalog(root=str(tmp_path / "base"))
     run_pipeline(spark, base, first6, dim, run_id="r1")  # folds 0..5
+    before = _live_files(base)
 
-    def state(cat):
-        done = ckpt.completed_partitions(cat)
-        assert done == _audit_done(cat)
-        return _summaries(spark, cat), done
+    swaps = []
+    swap = Catalog.swap
 
-    def fresh(name):
-        cat = Catalog(root=str(tmp_path / name))
-        shutil.copytree(base.root, cat.root)
-        return cat
+    def keep_snapshot(self, moves, removes=()):
+        snap = str(tmp_path / f"snap{len(swaps)}")
+        shutil.copytree(self.root, snap)
+        swaps.append((snap, moves, list(removes)))
+        return swap(self, moves, removes)
 
-    def crashing_step(cat):
-        if site == "compaction":  # buckets 6, 7 are new: the fold swaps once
-            run_pipeline(spark, cat, seq, dim, run_id="r2")
-        else:
-            expire_buckets(spark, cat, ["0"])
-
-    def reenter(cat):
-        run_pipeline(spark, cat, seq if site == "compaction" else rest, dim, run_id="r3")
-
-    ref = fresh("ref")
-    crashing_step(ref)
-    reenter(ref)
-    want = state(ref)
-    assert want[1] == ({str(b) for b in range(8)} if site == "compaction"
-                       else {"1", "2", "3", "4", "5"})
-    unexpired = state(base)
+    with monkeypatch.context() as m:
+        m.setattr(Catalog, "swap", keep_snapshot)
+        if site == "compaction":  # buckets 6, 7 are new
+            run_pipeline(spark, base, seq, dim, run_id="r2")
+        elif site == "subtraction":
+            expire_buckets(spark, base, ["0"])
+        else:  # every bucket is done: all six are victims, replaced
+            run_pipeline(spark, base, first6, dim, run_id="r2", cfg=PipelineConfig(resume=False))
+    assert len(swaps) == 1, [s[1:] for s in swaps]
+    snap, moves, removes = swaps[0]
+    after = _live_files(base)
+    assert _live_files(Catalog(root=snap)) == before  # nothing live moved before the swap
+    assert after != before
+    assert ckpt.completed_partitions(base) == _audit_done(base) == (
+        {str(b) for b in range(8)} if site == "compaction"
+        else {"1", "2", "3", "4", "5"} if site == "subtraction"
+        else {str(b) for b in range(6)}
+    )
 
     step = 0
     while True:
         step += 1
-        cat = fresh(f"k{step}")
+        cat = Catalog(root=str(tmp_path / f"k{step}"))
+        shutil.copytree(snap, cat.root)
         with monkeypatch.context() as m:
             _crash_inside_swap(m, 0, step)
             try:
-                crashing_step(cat)
+                cat.swap(moves, removes)
             except _Crash:
                 crashed = True
             else:
@@ -199,15 +222,15 @@ def test_swap_crash_at_every_step_converges(spark, tmp_path, monkeypatch, site):
         if not crashed:  # past the swap's last step
             break
         committed = os.path.exists(cat.path(SWAP_JOURNAL))
-        state(cat)  # recovers; the audit log agrees at every crash point
-        reenter(cat)
-        if site == "subtraction" and not committed:
-            assert state(cat) == unexpired, f"crash at step {step}"
-            crashing_step(cat)  # the operator retries the expiry
-        assert state(cat) == want, f"{site}: crash at step {step}"
+        cat.recover()
+        live = _live_files(cat)
+        assert live == (after if committed else before), f"{site}: crash at step {step}"
+        assert ckpt.completed_partitions(cat) == _audit_done(cat), f"{site}: step {step}"
         assert not os.path.exists(cat.path(SWAP_JOURNAL))
         assert not os.path.exists(cat.path(SWAP_STAGING))
-    assert step > 4, step  # journal, removals/moves, staging drop, journal drop
+        shutil.rmtree(cat.root)
+    assert _live_files(cat) == after
+    assert step > 4, step  # journal, removals/moves, staging drops, journal drop
 
 
 def test_leftover_temp_journal_is_ignored(spark, tmp_catalog, monkeypatch, reference_catalog):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -123,13 +125,47 @@ def test_pipeline_run_and_resume(spark, tmp_catalog):
         assert tmp_catalog.read(spark, f"minute_agg_{s}").agg(F.sum("pv")).collect()[0][0] == v
 
 
-def test_rerun_with_nothing_pending_returns_zero_row_counts(spark, tmp_catalog):
-    """A run whose input is all done observes no rows; it still returns the
-    four row counts its ``metrics`` row records, as 0."""
-    seq = gen_sequences(spark, N, invalid_every=10)
+def test_rerun_with_nothing_pending_returns_zero_row_counts(
+    spark, tmp_catalog, tmp_path, monkeypatch, summaries
+):
+    """A run whose input is all done commits nothing: no ``Catalog.swap``,
+    no summary write, at most the routed write's two Spark jobs over the
+    production input layout (the pending filter prunes every partition),
+    the summaries and the done set unchanged. It still appends its
+    ``metrics`` row and returns the four row counts that row records, as
+    0."""
+    from abs_log_spark.catalog import Catalog
+    from abs_log_spark.plans import checkpoint as ckpt
+
+    input_dir = str(tmp_path / "sequences")
+    gen_sequences(spark, N, invalid_every=10).write.partitionBy("part_bucket").parquet(
+        input_dir
+    )
+    seq = spark.read.parquet(input_dir)
     dim = gen_sources_dim(spark)
     run_pipeline(spark, tmp_catalog, seq, dim, run_id="r1")
-    r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
+    snap, done = summaries(tmp_catalog), ckpt.completed_partitions(tmp_catalog)
+    calls = []
+    write = Catalog.write
+
+    def logged_write(self, df, table, *args, **kwargs):
+        calls.append(table)
+        return write(self, df, table, *args, **kwargs)
+
+    sc = spark.sparkContext
+
+    def job_ids() -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    with monkeypatch.context() as m:
+        m.setattr(Catalog, "swap", lambda *a, **k: calls.append("swap"))
+        m.setattr(Catalog, "write", logged_write)
+        before = job_ids()
+        r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
+        jobs = len(job_ids() - before)
+    assert calls == ["_routed_staging"]
+    assert 0 < jobs <= 2, jobs
     counts = ("rows_in", "rows_valid", "rows_invalid", "rows_routed")
     assert r2["buckets_processed"] == 0
     assert {k: r2.get(k) for k in counts} == dict.fromkeys(counts, 0)
@@ -137,6 +173,8 @@ def test_rerun_with_nothing_pending_returns_zero_row_counts(spark, tmp_catalog):
         "metrics", columns=["run_id", *counts], filters=[("run_id", "=", "r2")]
     ).to_pylist()
     assert rows == [{"run_id": "r2", **dict.fromkeys(counts, 0)}]
+    assert summaries(tmp_catalog) == snap and snap
+    assert ckpt.completed_partitions(tmp_catalog) == done
 
 
 def test_pipeline_partial_resume(spark, tmp_catalog):
@@ -250,9 +288,9 @@ def test_null_bucket_is_a_bucket_like_any_other(spark, tmp_catalog, reference_ca
 def test_incremental_agg_bucket_rerun_idempotent(
     spark, tmp_catalog, monkeypatch, reference_catalog, summaries
 ):
-    """Re-running a bucket whose fold crashed inside its swap, before the
-    journal landed (routed promoted, partials staged, nothing committed),
-    replaces its routed rows and folds it once instead of double-counting."""
+    """Re-running a bucket whose cycle crashed inside its swap, before the
+    journal landed (routed rows, partials and summaries staged, nothing
+    committed), routes and folds it once instead of double-counting."""
     import os
 
     from abs_log_spark.catalog import SWAP_JOURNAL
@@ -283,16 +321,14 @@ def test_incremental_agg_bucket_rerun_idempotent(
     assert summaries(tmp_catalog) == summaries(reference_catalog(seq, dim))
 
 
-def test_crash_between_promote_and_partials_heals(
+def test_crash_inside_the_fold_leaves_live_warehouse_untouched(
     spark, tmp_catalog, monkeypatch, reference_catalog, summaries
 ):
-    """A crash after the routed promote but inside the fold leaves a routed
-    bucket that is not done. The next run folds it from its routed
-    partition even when its input no longer carries the bucket, and marks
-    it done — never silently dropped from summaries. The run after that is
-    a fixed point: it folds nothing and the summaries do not move."""
+    """A crash inside the fold, after the routed write, leaves every live
+    table as it was: the cycle's routed rows stay in the staging, so no
+    routed bucket exists that is not done. The re-run over the same input
+    ingests the bucket again, and the summaries equal a full recompute."""
     from abs_log_spark.plans import checkpoint as ckpt, pipeline
-    from abs_log_spark.plans.pipeline import routed_sinks
 
     class Crash(Exception):
         pass
@@ -302,27 +338,28 @@ def test_crash_between_promote_and_partials_heals(
 
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
-    first7 = seq.where(F.col("part_bucket") < 7)
-    run_pipeline(spark, tmp_catalog, first7, dim, run_id="r1")
+    run_pipeline(spark, tmp_catalog, seq.where(F.col("part_bucket") < 7), dim, run_id="r1")
+
+    def live():
+        return {
+            t: sorted(os.path.relpath(os.path.join(d, f), tmp_catalog.root)
+                      for d, _, fs in os.walk(tmp_catalog.path(t)) for f in fs)
+            for t in os.listdir(tmp_catalog.root) if not t.startswith(("_", "."))
+        }
+
+    snap = live()
     with monkeypatch.context() as m:
         m.setattr(pipeline, "compact_partials", crash)
         with pytest.raises(Crash):
             run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
-    assert any(
-        "7" in tmp_catalog.partition_values(f"routed_{s}") for s in routed_sinks(tmp_catalog)
-    )
-    assert "7" not in ckpt.completed_partitions(tmp_catalog)
+    assert live() == snap  # bucket 7 has no routed partition
+    assert ckpt.completed_partitions(tmp_catalog) == {str(b) for b in range(7)}
 
-    r3 = run_pipeline(spark, tmp_catalog, first7, dim, run_id="r3")
-    assert r3["buckets_processed"] == 0
+    r3 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r3")
+    assert r3["buckets_processed"] == 1
     assert r3["rows_agg_input"] == seq.where(F.col("part_bucket") == 7).count()
     assert ckpt.completed_partitions(tmp_catalog) == {str(b) for b in range(8)}
-    want = summaries(reference_catalog(seq, dim))
-    assert summaries(tmp_catalog) == want
-
-    r4 = run_pipeline(spark, tmp_catalog, first7, dim, run_id="r4")
-    assert r4["buckets_processed"] == 0 and "rows_agg_input" not in r4
-    assert summaries(tmp_catalog) == want
+    assert summaries(tmp_catalog) == summaries(reference_catalog(seq, dim))
 
 
 def test_missing_agg_partials_table_backfills(spark, tmp_catalog, summaries):
@@ -557,14 +594,14 @@ def test_warm_increment_compiles_no_generated_code(spark, tmp_catalog, tmp_path)
 
 
 def test_resume_cost_does_not_grow_with_done_buckets(spark, tmp_path):
-    """A one-bucket increment runs the same Spark jobs and stage tasks over
-    10 or 70 done buckets: the pending filter prunes the input scan to the
-    increment's partitions at any history length."""
-    import json
-    import os
-
+    """A one-bucket increment runs the same Spark jobs over 16 or 70 done
+    buckets of real routed history: the pending filter prunes the input
+    scan to the increment's partitions, and the fold reads the increment
+    from the routed staging, never the routed tables, whose listing would
+    cost a Spark job per sink past 32 partition directories. The count
+    includes the summary writes' pool-thread jobs, which carry no job
+    group."""
     from abs_log_spark.catalog import Catalog
-    from abs_log_spark.plans import checkpoint as ckpt
 
     input_dir = str(tmp_path / "sequences")
     gen_sequences(spark, 71 * 8, buckets=71).coalesce(1).write.partitionBy(
@@ -572,34 +609,26 @@ def test_resume_cost_does_not_grow_with_done_buckets(spark, tmp_path):
     ).parquet(input_dir)
     seq = spark.read.parquet(input_dir)
     dim = gen_sources_dim(spark)
-    n_pending = seq.where(F.col("part_bucket") == 70).count()
-    assert n_pending > 0
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
-    def counted_run(done: range, inp) -> tuple[dict, int, int]:
-        # a seeded done set only: the done buckets were never routed
-        cat = Catalog(root=str(tmp_path / f"wh_{len(done)}"))
-        os.makedirs(cat.path("agg_partials"))
-        with open(os.path.join(cat.path("agg_partials"), ckpt.LINEAGE), "w") as f:
-            json.dump([str(b) for b in done], f)
-        group = f"resume_{len(done)}"
-        sc.setJobGroup(group, group)
-        try:
-            vals = run_pipeline(spark, cat, inp, dim, run_id="inc")
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
+    def job_ids() -> set[int]:
         sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = tracker.getJobIdsForGroup(group)
-        stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
-        infos = [tracker.getStageInfo(s) for s in stages]
-        return vals, len(jobs), sum(i.numCompletedTasks for i in infos if i)
+        return set(tracker.getJobIdsForGroup(None))
 
-    short = counted_run(range(60, 70), seq.where(F.col("part_bucket") >= 60))
-    long = counted_run(range(70), seq)
-    for vals, _, _ in (short, long):
-        assert vals["buckets_processed"] == 1 and vals["rows_in"] == n_pending
-    assert short[1:] == long[1:], (short[1:], long[1:])
+    def counted_increment(history: int) -> tuple[dict, int]:
+        cat = Catalog(root=str(tmp_path / f"wh_{history}"))
+        run_pipeline(spark, cat, seq.where(F.col("part_bucket") < history), dim, run_id="h")
+        before = job_ids()
+        vals = run_pipeline(spark, cat, seq.where(F.col("part_bucket") <= history), dim,
+                            run_id="inc")
+        return vals, len(job_ids() - before)
+
+    short, long = counted_increment(16), counted_increment(70)
+    for (vals, _), history in ((short, 16), (long, 70)):
+        assert vals["buckets_processed"] == 1 and vals["buckets_skipped"] == history
+        assert vals["rows_in"] == seq.where(F.col("part_bucket") == history).count() > 0
+    assert short[1] == long[1], (short[1], long[1])
 
 
 def test_bucket_in_ranges_keep_what_an_in_list_keeps(spark):

@@ -115,9 +115,9 @@ def test_foreachbatch_replay_counts_once(
     """Real replays converge to the reference. ``uncommitted_batch``: the
     last batch's commit is lost, so the restarted query re-runs it over the
     same files; its bucket is done, so it is a no-op that reads 0 rows.
-    ``crash_in_mark_done``: batch 1 dies after its routed promote and its
-    partials write, before its fold commits; the restart re-runs batch 1 as
-    a bucket re-run, then batch 2."""
+    ``crash_in_mark_done``: batch 1 dies after its routed rows, partials
+    and summaries are staged, before its one commit, so none of it is live;
+    the restart re-runs batch 1, then batch 2."""
     from abs_log_spark.plans import checkpoint as ckpt
 
     seq, input_dir = seq_input
