@@ -248,35 +248,3 @@ def error_view(routed: DataFrame) -> DataFrame:
         .groupBy("sink", "minute", "status")
         .agg(F.count("*").alias("hits"))
     )
-
-
-def trend(minute_df: DataFrame, grain: str = "hour") -> DataFrame:
-    """abs-log's ``distribution`` view: regroup minute docs into coarser
-    buckets (minute|ten_min|hour|day) ([PK] ``log_show --group_by``).
-
-    Re-aggregates the minute summaries — sums/counts/min/max combine exactly;
-    quantiles are NOT re-derivable from quartile columns, so (like the
-    reference) the coarse view carries totals only.
-    """
-    m = F.col("minute")
-    if grain == "minute":
-        bucket = m
-    elif grain == "ten_min":
-        bucket = F.timestamp_seconds(F.floor(F.unix_timestamp(m) / 600) * 600)
-    elif grain == "hour":
-        bucket = F.date_trunc("hour", m)
-    elif grain == "day":
-        bucket = F.date_trunc("day", m)
-    else:
-        raise ValueError(f"unknown grain: {grain}")
-    return minute_df.groupBy(
-        F.col("sink"), bucket.alias("bucket")
-    ).agg(
-        F.sum("pv").alias("pv"),
-        F.sum("bytes_sum").cast("long").alias("bytes_sum"),
-        F.sum("rt_sum").alias("rt_sum"),
-        F.min("rt_min").alias("rt_min"),
-        F.max("rt_max").alias("rt_max"),
-        F.sum("err_hits").alias("err_hits"),
-        F.sum("invalid_hits").alias("invalid_hits"),
-    )

@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from abs_log_spark.functions.abstract import args_abs_col, uri_abs_col
 from abs_log_spark.functions.tokens import detokenize_udf, tokenize_udf
 from abs_log_spark.operators.aggregate import minute_agg
-from abs_log_spark.operators.topk import top_n_per_group, with_pct_of_total
 from abs_log_spark.plans.pipeline import transform
 from abs_log_spark.queries import register
 from abs_log_spark.sources.readers import read_table, sequences_from_documents
@@ -390,9 +389,12 @@ def topn_uri_per_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1+W2: log_show's top-N endpoints per sink with %-of-total."""
     routed = _routed(spark, sf_dir)
     agg = routed.groupBy("sink", "uri_abs").agg(F.count("*").alias("pv"))
-    agg = with_pct_of_total(agg, ["pv"], ["sink"])
-    top = top_n_per_group(agg, ["sink"], "pv", 3)
-    return top.select("sink", "uri_abs", "pv", "rank", "pv_pct")
+    # pct before rank: the rank filter then sits right on the ranking window,
+    # and Spark plans a partial top-3 (WindowGroupLimit) before the window
+    w = Window.partitionBy("sink")
+    agg = agg.withColumn("pv_pct", F.round(F.col("pv") * 100.0 / F.sum("pv").over(w), 4))
+    top = agg.withColumn("rank", F.row_number().over(w.orderBy(F.desc("pv"), "uri_abs")))
+    return top.where("rank <= 3").select("sink", "uri_abs", "pv", "rank", "pv_pct")
 
 
 # ---------------------------------------------------------------------------
@@ -553,9 +555,11 @@ def top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("hits"),
         F.round(F.sum("value"), 6).alias("value_sum"),
     )
-    u = with_pct_of_total(u, ["hits"], [])
-    top = top_n_per_group(u, [], "hits", 10)
-    return top.select("user_id", "hits", "value_sum", "rank", "hits_pct")
+    u = u.withColumn(
+        "hits_pct", F.round(F.col("hits") * 100.0 / F.sum("hits").over(Window.partitionBy()), 4)
+    )
+    top = u.withColumn("rank", F.row_number().over(Window.orderBy(F.desc("hits"), "user_id")))
+    return top.where("rank <= 10").select("user_id", "hits", "value_sum", "rank", "hits_pct")
 
 
 _SET_OPS_SQL = """

@@ -89,6 +89,15 @@ ENGINE_CONFS: dict[str, str] = {
     # getOrCreate on an existing session ignores it. Check with
     # StageMetrics' ``codegen_compiles`` (0 on a warm run).
     "spark.sql.codegen.cache.maxEntries": "1000",
+    # PySpark 4.1 wraps every pyspark.sql.functions call and Column operator
+    # in _with_origin (pyspark/errors/utils.py): it looks up the active
+    # session, the JVM origin class and this conf, walks the Python stack,
+    # then sets and clears the JVM origin: F.col("a") + F.lit(1) costs 27
+    # py4j round trips with it on and 7 off. Every cron cycle and near-dup
+    # pass builds its plans from such calls. The cost: DataFrame error
+    # messages lose the Python call-site line; the JVM error and the Python
+    # traceback of the failing action remain.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),

@@ -177,17 +177,17 @@ def gen_sequences(
 
 
 def gen_sources_dim(spark: SparkSession, n_sources: int = N_SOURCES) -> DataFrame:
-    """Broadcast dimension: source -> sink/site/region (FIXTURES.md A2)."""
-    rows = [
-        (
-            f"src{k}",
-            SINK_OF[k % 3],
-            f"site{k % 4}",
-            ("us", "eu", "ap")[k % 3],
-        )
+    """Broadcast dimension: source -> sink/site/region (FIXTURES.md A2).
+
+    An inline ``VALUES`` table, so a local relation: the broadcast in
+    ``enrich`` reads a ``LocalTableScan``. ``createDataFrame`` over a Python
+    list would plan a Python RDD, and every increment's broadcast would run
+    a job through Python workers before the routed write could start."""
+    rows = ", ".join(
+        f"('src{k}', '{SINK_OF[k % 3]}', 'site{k % 4}', '{('us', 'eu', 'ap')[k % 3]}')"
         for k in range(n_sources)
-    ]
-    return spark.createDataFrame(rows, "source string, sink string, site string, region string")
+    )
+    return spark.sql(f"SELECT * FROM VALUES {rows} AS dim(source, sink, site, region)")
 
 
 def gen_documents(

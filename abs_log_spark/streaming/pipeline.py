@@ -7,7 +7,7 @@ Two execution shapes, both reusing the batch stages verbatim:
    friendly measures only (counts/sums/min/max — all mergeable); quantile
    sketches stay on the batch/foreachBatch path, mirroring the reference's
    own limitation that coarse regroupings carry totals only (see
-   ``operators.aggregate.trend``).
+   ``log_show``'s ``trend`` view).
 2. **foreachBatch micro-batching** (:func:`run_stream_foreach_batch`): each
    micro-batch is one cron increment of the batch pipeline — ``run_pipeline``
    over the batch with ``part_bucket = batch_id`` — so the stream feeds the

@@ -4,8 +4,8 @@
 -g minute|ten_min|hour|day] [request | distribution | error | ip]`` querying
 the MongoDB minute docs and printing fixed-width tables. Here the minute
 docs are the pipeline's ``minute_agg_<sink>`` / ``errors_<sink>`` parquet
-tables and every view is a DataFrame expression (operators/topk.py,
-operators/aggregate.trend) — the aggregation runs in Spark, not the client.
+tables and every view is one Spark SQL plan over them — the aggregation runs
+in Spark, not the client.
 
 Usage:
     python jobs/log_show.py WAREHOUSE SINK request [--limit 10] [--from 202401010000] [--to ...]
@@ -37,78 +37,113 @@ def table_for_view(sink: str, view: str) -> str:
     return f"minute_agg_{sink}"
 
 
+#: ``--group-by`` grain -> the SQL expression of a minute's trend bucket
+_GRAIN = {
+    "minute": "minute",
+    "ten_min": "timestamp_seconds(floor(unix_timestamp(minute) / 600) * 600)",
+    "hour": "date_trunc('hour', minute)",
+    "day": "date_trunc('day', minute)",
+}
+
+# Each view is one SQL text: one analysed plan per view instead of a chain of
+# DataFrame calls, each analysed on its own. ``{df}`` is the input relation,
+# ``:uri`` a bound parameter, the other fields are SQL fragments. ``100.0D``:
+# a plain ``100.0`` is a DECIMAL literal.
+#
+# The keyless windows of ``request`` and ``ip`` sit on a COALESCE(1)-hinted
+# aggregate: it is already one partition, so the windows need no
+# ``Exchange SinglePartition`` and run in the aggregate's stage (2 jobs).
+# The grouped rows are abstract URIs or sources, so they stay few.
+_REQUEST_SQL = """
+SELECT rank, uri_abs, hits, hits_pct, bytes, bytes_pct, round(`time`, 3) AS `time`, time_pct
+FROM (
+  SELECT *, row_number() OVER (ORDER BY hits DESC, uri_abs) AS rank,
+         round(hits * 100.0D / sum(hits) OVER (), 4) AS hits_pct,
+         round(bytes * 100.0D / sum(bytes) OVER (), 4) AS bytes_pct,
+         round(`time` * 100.0D / sum(`time`) OVER (), 4) AS time_pct
+  FROM (SELECT /*+ COALESCE(1) */ uri_abs, sum(pv) AS hits, sum(bytes_sum) AS bytes,
+               sum(rt_sum) AS `time`
+        FROM {df} GROUP BY uri_abs))
+WHERE rank <= {limit}"""
+
+_IP_SQL = """
+SELECT source, hits, bytes, hits_pct, rank
+FROM (
+  SELECT *, round(hits * 100.0D / sum(hits) OVER (), 4) AS hits_pct,
+         row_number() OVER (ORDER BY hits DESC, source) AS rank
+  FROM (SELECT /*+ COALESCE(1) */ source, count(*) AS hits, sum(bytes) AS bytes
+        FROM {df} WHERE valid GROUP BY source))
+WHERE rank <= {limit}"""
+
+# One endpoint's rows are one partition too; over every endpoint the
+# windows stay partitioned by uri_abs.
+_DETAIL_SQL = """
+SELECT uri_abs, args_abs, hits, bytes, `time`, hits_pct, rank
+FROM (
+  SELECT *, round(hits * 100.0D / sum(hits) OVER (PARTITION BY uri_abs), 4) AS hits_pct,
+         row_number() OVER (PARTITION BY uri_abs ORDER BY hits DESC, args_abs) AS rank
+  FROM (SELECT {hint} uri_abs, args_abs, count(*) AS hits, sum(bytes) AS bytes,
+               round(sum(rt), 3) AS `time`
+        FROM {df} WHERE valid {uri_filter} GROUP BY uri_abs, args_abs))
+WHERE rank <= {limit}"""
+
+_TREND_SQL = """
+SELECT {bucket} AS bucket, sum(pv) AS pv, CAST(sum(bytes_sum) AS BIGINT) AS bytes_sum,
+       sum(rt_sum) AS rt_sum, min(rt_min) AS rt_min, max(rt_max) AS rt_max,
+       sum(err_hits) AS err_hits, sum(invalid_hits) AS invalid_hits
+FROM {df} {uri_filter} GROUP BY 1 ORDER BY bucket LIMIT {limit}"""
+
+_ERROR_SQL = """
+SELECT status, sum(hits) AS hits FROM {df} GROUP BY status ORDER BY hits DESC LIMIT {limit}"""
+
+# The pivot's column set is read by one aggregate; the minute rows are then
+# one GROUP BY with a FILTER sum per status: one exchange, where
+# ``pivot(values)`` plans two and ``pivot()`` adds discovery jobs.
+_STATUSES_SQL = "SELECT sort_array(collect_set(status)) FROM {df}"
+_PIVOT_SQL = "SELECT minute{sums} FROM {df} GROUP BY minute ORDER BY minute LIMIT {limit}"
+
+
 def build_view(df, view: str, *, sink: str = "", uri: str | None = None,
                limit: int = 10, group_by: str = "hour", pivot: bool = False):
     """Pure DataFrame -> DataFrame report views ([PK] log_show.py layouts);
-    ``df`` is the table named by :func:`table_for_view`."""
-    from pyspark.sql import functions as F
+    ``df`` is the table named by :func:`table_for_view`. Rank ties break by
+    the group key; ``sink`` names the table's sink and changes no view."""
 
-    from abs_log_spark.operators.aggregate import trend
-    from abs_log_spark.operators.topk import top_n_per_group, with_pct_of_total
+    def sql(text: str, **parts):
+        text = text.format(df="{df}", limit=int(limit), **parts)
+        return df.sparkSession.sql(text, {"uri": uri} if uri else None, df=df)
 
     if view == "request":
-        agg = df.groupBy("uri_abs").agg(
-            F.sum("pv").alias("hits"),
-            F.sum("bytes_sum").alias("bytes"),
-            F.sum("rt_sum").alias("time"),
-        )
-        agg = with_pct_of_total(agg, ["hits", "bytes", "time"])
-        return top_n_per_group(agg, [], "hits", limit).select(
-            "rank", "uri_abs", "hits", "hits_pct", "bytes", "bytes_pct",
-            F.round("time", 3).alias("time"), "time_pct",
-        )
+        return sql(_REQUEST_SQL)
     if view in ("trend", "distribution"):
         # reference name: 'distribution' — per-bucket totals, optionally for
-        # a single abstracted endpoint ([PK] log_show request distribution <uri>)
-        if uri:
-            df = df.where(F.col("uri_abs") == uri)
-        return (
-            trend(df.withColumn("sink", F.lit(sink)), grain=group_by)
-            .drop("sink")
-            .orderBy("bucket")
-            .limit(limit)
-        )
+        # a single abstracted endpoint ([PK] log_show request distribution
+        # <uri>). Quantiles do not re-aggregate from quartile columns, so
+        # (like the reference) the coarse view carries totals only.
+        if group_by not in _GRAIN:
+            raise ValueError(f"unknown grain: {group_by}")
+        return sql(_TREND_SQL, bucket=_GRAIN[group_by],
+                   uri_filter="WHERE uri_abs = :uri" if uri else "")
     if view == "detail":
         # reference: log_show request detail <uri> — per-args breakdown of
         # one abstracted endpoint ([PK] log_show.py detail view)
-        d = df.where(F.col("valid"))
-        if uri:
-            d = d.where(F.col("uri_abs") == uri)
-        agg = d.groupBy("uri_abs", "args_abs").agg(
-            F.count("*").alias("hits"),
-            F.sum("bytes").alias("bytes"),
-            F.round(F.sum("rt"), 3).alias("time"),
-        )
-        agg = with_pct_of_total(agg, ["hits"], ["uri_abs"])
-        return top_n_per_group(agg, ["uri_abs"], "hits", limit)
+        return sql(_DETAIL_SQL, hint="/*+ COALESCE(1) */" if uri else "",
+                   uri_filter="AND uri_abs = :uri" if uri else "")
     if view == "ip":
         # reference: log_show ip — top sources by PARSED hits ([PK] ip view);
         # invalid lines have no attributable request and never count here
-        agg = df.where(F.col("valid")).groupBy("source").agg(
-            F.count("*").alias("hits"),
-            F.sum("bytes").alias("bytes"),
-        )
-        agg = with_pct_of_total(agg, ["hits"])
-        return top_n_per_group(agg, [], "hits", limit)
+        return sql(_IP_SQL)
     if view == "error":
-        if pivot:
-            # G7 optional layout: minute rows x status columns. pivot() needs
-            # the column set; statuses are a tiny closed domain, one distinct
-            # job discovers them (Spark then plans a single-shuffle pivot).
-            return (
-                df.groupBy("minute")
-                .pivot("status")
-                .agg(F.sum("hits"))
-                .na.fill(0)
-                .orderBy("minute")
-                .limit(limit)
-            )
-        return (
-            df.groupBy("status")
-            .agg(F.sum("hits").alias("hits"))
-            .orderBy(F.desc("hits"))
-            .limit(limit)
+        if not pivot:
+            return sql(_ERROR_SQL)
+        # G7 optional layout: minute rows x status columns, absent
+        # (minute, status) cells 0. Statuses are integers.
+        statuses = sql(_STATUSES_SQL).first()[0]
+        sums = "".join(
+            f", coalesce(sum(hits) FILTER (WHERE status = {int(s)}), 0) AS `{s}`"
+            for s in statuses
         )
+        return sql(_PIVOT_SQL, sums=sums)
     raise ValueError(f"unknown view: {view}")
 
 

@@ -144,3 +144,13 @@ def test_near_dup_passes_run_no_stage_at_shuffle_width(spark, tmp_path):
     assert {tuple(r) for r in minhash} == _duck("dedup_minhash_lsh", orig_dir)
     assert {tuple(r) for r in simhash} == _duck("dedup_simhash", orig_dir)
     assert {tuple(r) for r in clusters} == _duck("curation_dup_clusters", orig_dir)
+
+
+def test_engine_confs_turn_off_python_origin_capture(spark):
+    """Per-call Python origin capture makes a Column expression cost 27 py4j
+    round trips instead of 7; the engine session runs with it off."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert ENGINE_CONFS["spark.python.sql.dataFrameDebugging.enabled"] == "false"
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False

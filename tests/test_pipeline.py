@@ -7,7 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from abs_log_spark.operators.aggregate import minute_agg, salted_minute_agg, trend
+from abs_log_spark.operators.aggregate import minute_agg, salted_minute_agg
 from abs_log_spark.plans.pipeline import run_pipeline, transform
 from abs_log_spark.sources.synth import gen_sequences, gen_sources_dim
 
@@ -32,6 +32,29 @@ def test_routing_and_token_equality(spark):
     # sink fan-out matches the dim rule (source k -> sink k%3)
     per_sink = {r.sink: r.c for r in routed.groupBy("sink").agg(F.count("*").alias("c")).collect()}
     assert sum(per_sink.values()) == N and set(per_sink) <= {"sink_a", "sink_b", "sink_c"}
+
+
+def test_sources_dim_is_a_local_relation(spark):
+    """The dimension is a LocalTableScan, so the routed write's broadcast
+    starts no Python-worker job; its rows are the source -> sink/site/region
+    rule."""
+    from abs_log_spark.operators.enrich import enrich
+
+    dim = gen_sources_dim(spark)
+    plan = dim._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan
+    assert sorted(tuple(r) for r in dim.collect()) == sorted(
+        (f"src{k}", ("sink_a", "sink_b", "sink_c")[k % 3], f"site{k % 4}",
+         ("us", "eu", "ap")[k % 3])
+        for k in range(10)
+    )
+    assert gen_sources_dim(spark, n_sources=20).count() == 20
+    joined = enrich(spark.range(12).selectExpr("concat('src', id) AS source"), dim)
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" in plan and "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan
+    assert {r.source: r.sink for r in joined.collect()}["src11"] == "sink_default"
 
 
 def test_minute_agg_matches_bruteforce(spark):
@@ -88,10 +111,15 @@ def test_salted_agg_equals_plain(spark):
 
 
 def test_trend_regroup(spark):
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from jobs.log_show import build_view
+
     seq = gen_sequences(spark, N)
     dim = gen_sources_dim(spark)
     m = minute_agg(transform(seq, dim))
-    hourly = trend(m, "hour")
+    hourly = build_view(m, "trend", group_by="hour")
     assert hourly.agg(F.sum("pv")).collect()[0][0] == m.agg(F.sum("pv")).collect()[0][0]
     assert hourly.select("bucket").distinct().count() == 2  # 2-hour fixture window
 

@@ -31,11 +31,15 @@ def test_log_show_ip_excludes_invalid_rows(spark):
 
     rows = [
         ("src0", 100, True), ("src0", 100, True), ("src0", None, False),
-        ("src1", 50, True), ("src1", None, False), ("src1", None, False),
+        ("src2", 7, True), ("src1", 50, True), ("src1", None, False), ("src1", None, False),
     ]
     df = spark.createDataFrame(rows, "source string, bytes long, valid boolean")
-    out = {r.source: (r.hits, r.bytes) for r in build_view(df, "ip").collect()}
-    assert out == {"src0": (2, 200), "src1": (1, 50)}
+    view = build_view(df, "ip")
+    assert dict(view.dtypes) == {"source": "string", "hits": "bigint", "bytes": "bigint",
+                                 "hits_pct": "double", "rank": "int"}
+    out = {r.source: (r.hits, r.bytes, r.rank) for r in view.collect()}
+    # the src1/src2 tie on hits ranks by source
+    assert out == {"src0": (2, 200, 1), "src1": (1, 50, 2), "src2": (1, 7, 3)}
 
 
 def test_log_show_detail_filters_uri_and_invalid(spark):
@@ -73,9 +77,14 @@ def test_log_show_error_pivot_layout(spark):
     df = spark.createDataFrame(
         rows, "sink string, minute string, status int, hits long"
     ).withColumn("minute", F.to_timestamp("minute"))
-    out = build_view(df, "error", pivot=True).collect()
+    view = build_view(df, "error", pivot=True)
+    assert view.dtypes == [("minute", "timestamp"), ("404", "bigint"), ("500", "bigint")]
+    out = view.collect()
     assert [r["404"] for r in out] == [3, 2]
     assert [r["500"] for r in out] == [1, 0]  # absent combo filled with 0
+    # an empty window has no status columns: the minute column, no rows
+    empty = build_view(df.where(F.col("hits") < 0), "error", pivot=True).toPandas()
+    assert list(empty.columns) == ["minute"] and len(empty) == 0
 
 
 def test_expire_buckets_keeps_all_state_consistent(spark, tmp_catalog):
@@ -210,3 +219,75 @@ def test_expire_buckets_drops_routed_partitions(spark, tmp_catalog):
     assert res == {"partials_subtracted": 0, "routed_partitions": 2}
     left = tmp_catalog.read(spark, "routed_x")
     assert set(r[0] for r in left.select("part_bucket").distinct().collect()) == {1, 3}
+
+
+def _log_show():
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from jobs import log_show
+
+    return log_show
+
+
+def test_log_show_views_job_counts_are_pinned(spark, tmp_catalog):
+    """Each view is one SQL plan: the keyless windows of request/ip (and the
+    one-endpoint window of detail --uri) run in the aggregate's stage behind
+    a one-partition coalesce, so a view is one aggregate's two jobs; the
+    pivot reads its status columns with one aggregate and sums them in one
+    GROUP BY, four jobs in all. The count includes the table read."""
+    from datetime import datetime
+
+    from abs_log_spark.plans.pipeline import run_pipeline
+    from abs_log_spark.sources.synth import gen_sequences, gen_sources_dim
+
+    ls = _log_show()
+    run_pipeline(spark, tmp_catalog, gen_sequences(spark, 600, invalid_every=10),
+                 gen_sources_dim(spark), run_id="r1")
+    sc = spark.sparkContext
+    window = (datetime(2024, 1, 1, 0, 30), datetime(2024, 1, 1, 1, 30))
+    limits = (
+        ("request", {}, None, 2),
+        ("trend", {"group_by": "hour"}, window, 2),
+        ("error", {}, None, 2),
+        ("error", {"pivot": True}, window, 4),
+        ("detail", {"uri": "/api/user/*/profile"}, None, 2),
+        ("ip", {}, window, 2),
+    )
+    for i, (view, kw, win, limit) in enumerate(limits):
+        group = f"log_show_view_{i}"
+        sc.setJobGroup(group, view)
+        try:
+            df = tmp_catalog.read(spark, ls.table_for_view("sink_a", view))
+            if win:
+                ts = "ts" if view in ("detail", "ip") else "minute"
+                df = df.where((F.col(ts) >= F.lit(win[0])) & (F.col(ts) < F.lit(win[1])))
+            out = ls.build_view(df, view, sink="sink_a", **kw).toPandas()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert len(out) > 0, (view, kw)
+        assert jobs <= limit, (view, kw, jobs)
+
+
+def test_log_show_request_parity_and_types(spark):
+    """request: hits ties rank by uri_abs, percentages are doubles of the
+    period total, hits and bytes stay longs."""
+    ls = _log_show()
+    m = spark.createDataFrame(
+        [("/b", 5, 10, 1.0), ("/a", 3, 20, 2.0), ("/a", 2, 30, 3.0), ("/c", 7, 40, 4.0)],
+        "uri_abs string, pv long, bytes_sum long, rt_sum double",
+    )
+    out = ls.build_view(m, "request", limit=2)
+    assert out.columns == ["rank", "uri_abs", "hits", "hits_pct", "bytes", "bytes_pct",
+                           "time", "time_pct"]
+    types = dict(out.dtypes)
+    assert types["rank"] == "int"
+    assert types["hits"] == types["bytes"] == "bigint"
+    assert {types[c] for c in ("hits_pct", "bytes_pct", "time", "time_pct")} == {"double"}
+    assert [tuple(r) for r in out.collect()] == [
+        (1, "/c", 7, 41.1765, 40, 40.0, 4.0, 40.0),
+        (2, "/a", 5, 29.4118, 50, 50.0, 5.0, 50.0),
+    ]
