@@ -212,25 +212,16 @@ class Catalog:
             if d.startswith(prefix) and os.path.isdir(os.path.join(p, d))
         )
 
-    def write(
-        self,
-        df: DataFrame,
-        table: str,
-        partition_by: tuple[str, ...] = (),
-        mode: str = "overwrite",
-    ) -> None:
-        """Write a table. With ``mode='overwrite'`` + partition columns and the
-        session's ``partitionOverwriteMode=dynamic``, only the partitions
-        present in ``df`` are replaced — the idempotence primitive behind
+    def write(self, df: DataFrame, table: str, partition_by: tuple[str, ...] = ()) -> None:
+        """Overwrite a table. With partition columns and the session's
+        ``partitionOverwriteMode=dynamic``, only the partitions present in
+        ``df`` are replaced — the idempotence primitive behind
         checkpoint/resume (a re-run of a partition replaces exactly itself).
         """
-        w = df.write.mode(mode)
+        w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(table))
-
-    def append(self, df: DataFrame, table: str, partition_by: tuple[str, ...] = ()) -> None:
-        self.write(df, table, partition_by, mode="append")
 
     def drop(self, table: str) -> None:
         shutil.rmtree(self.path(table), ignore_errors=True)

@@ -7,15 +7,12 @@ error statuses alongside. Hand-rolled dict accumulation merged across
 multiprocessing workers == a partial+final hash aggregate, which Spark's
 ``groupBy().agg()`` provides natively (map-side combine is automatic).
 
-Scale notes (10^12 rows):
-- ``approx_percentile`` is a mergeable sketch — partials combine inside the
-  shuffle like sums do, so the quantile columns add no extra pass. Exact
-  ``percentile`` (oracle path, DuckDB ``quantile_cont`` parity) buffers
-  per-group values and is reserved for tests/small scale.
-- Skew: a hot (sink, minute, uri_abs) group is bounded by requests/minute
-  per endpoint, but a hot ``source`` (Zipf src0 ~ 50%) concentrates in one
-  sink. ``salted_minute_agg`` demonstrates the two-phase split for the
-  sum/count measures; AQE skew handling covers the rest.
+Quantiles are EXACT on every path. The production summaries fold one-row
+histogram partials (:func:`partial_rows` -> :func:`sum_partials` ->
+:func:`merge_minute_agg_hist_partials`) whose (rt, count) histogram is
+lossless, so no sketch is needed at any scale; :func:`minute_agg` is the
+single-pass aggregate over routed rows, the independent reference the fold
+is checked against.
 """
 
 from __future__ import annotations
@@ -24,54 +21,33 @@ from pyspark.sql import DataFrame, functions as F
 
 GROUP_KEYS = ("sink", "site", "minute", "uri_abs")
 
-
-#: Sketch accuracy for the scale path. abs-log's quartile columns are
-#: report-grade (the reference computes them from a CAPPED/sampled value
-#: list [PK]); accuracy=1000 (0.1% rank error) is strictly better than the
-#: reference and one shared sketch for all three quartiles measured ~3x
-#: faster than three accuracy=10000 sketches at 2M rows.
-DEFAULT_PERCENTILE_ACCURACY = 1000
-
 _QS = (0.25, 0.5, 0.75)
 
 
-def minute_agg(
-    routed: DataFrame,
-    exact_quantiles: bool = False,
-    keys: tuple[str, ...] = GROUP_KEYS,
-    accuracy: int = DEFAULT_PERCENTILE_ACCURACY,
-) -> DataFrame:
-    """Per-minute summary per (sink, site, minute, uri_abs).
+def minute_agg(routed: DataFrame) -> DataFrame:
+    """Per-minute summary per (sink, site, minute, uri_abs), in one pass over
+    routed rows, with exact quartiles from ONE array-form ``percentile``.
 
     Invalid rows (``valid=false``) carry null minute/uri_abs and land in a
     dedicated null-key group with ``invalid_hits`` — never silently dropped
     ([PK] abs-log reports invalid_hits next to hits).
-
-    Quartiles: ONE array-form percentile aggregate (exact for oracle-checked
-    paths, mergeable approx sketch for scale) — a single sketch per group
-    serves all three quartiles.
     """
     df = routed.withColumn("minute", F.date_trunc("minute", F.col("ts")))
     ps = F.array(*[F.lit(p) for p in _QS])
-    q = (
-        F.percentile("rt", ps)
-        if exact_quantiles
-        else F.percentile_approx("rt", ps, F.lit(accuracy))
-    )
     aggs = [
         F.sum(F.when(F.col("valid"), 1).otherwise(0)).alias("pv"),
         F.coalesce(F.sum("bytes"), F.lit(0)).cast("long").alias("bytes_sum"),
         F.sum("rt").alias("rt_sum"),
         F.avg("rt").alias("rt_avg"),
         F.min("rt").alias("rt_min"),
-        q.alias("_rt_q"),
+        F.percentile("rt", ps).alias("_rt_q"),
         F.max("rt").alias("rt_max"),
         F.sum(F.when(F.col("status") >= 400, 1).otherwise(0)).alias("err_hits"),
         F.sum(F.when(~F.col("valid"), 1).otherwise(0)).alias("invalid_hits"),
     ]
-    out = df.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
+    out = df.groupBy(*[F.col(k) for k in GROUP_KEYS]).agg(*aggs)
     return out.select(
-        *keys,
+        *GROUP_KEYS,
         "pv",
         "bytes_sum",
         "rt_sum",
@@ -91,7 +67,7 @@ def minute_agg(
 PARTIAL_MEASURES = ("pv", "bytes_sum", "rt_cnt", "err_hits", "invalid_hits")
 
 
-def partial_rows(routed: DataFrame, keys: tuple[str, ...] = GROUP_KEYS, sign: int = 1) -> DataFrame:
+def partial_rows(routed: DataFrame, sign: int = 1) -> DataFrame:
     """Each routed row as a ONE-ROW histogram partial at the grain (keys...,
     status, rt), its measures multiplied by ``sign`` (-1 takes the rows back
     out of a fold). A projection, no shuffle: one group-by over any union of
@@ -102,7 +78,7 @@ def partial_rows(routed: DataFrame, keys: tuple[str, ...] = GROUP_KEYS, sign: in
         return F.when(cond, sign).otherwise(0).cast("long")
 
     return routed.select(
-        *[minute.alias(k) if k == "minute" else F.col(k) for k in keys],
+        *[minute.alias(k) if k == "minute" else F.col(k) for k in GROUP_KEYS],
         F.col("status"),
         F.col("rt"),
         one(F.col("valid")).alias("pv"),
@@ -120,10 +96,7 @@ def sum_partials(rows: DataFrame) -> DataFrame:
     return rows.groupBy(*grain).agg(*[F.sum(m).cast("long").alias(m) for m in PARTIAL_MEASURES])
 
 
-def minute_agg_hist_partials(
-    routed: DataFrame,
-    keys: tuple[str, ...] = GROUP_KEYS,
-) -> DataFrame:
+def minute_agg_hist_partials(routed: DataFrame) -> DataFrame:
     """MERGEABLE minute-agg partials — the incremental-resume path's unit of
     work ([B] north_rule: incremental runs must not re-scan completed
     history): :func:`partial_rows` summed by :func:`sum_partials`.
@@ -143,15 +116,13 @@ def minute_agg_hist_partials(
     continuous measure, quantize rt at this stage (the partial becomes the
     sketch).
     """
-    return sum_partials(partial_rows(routed, keys))
+    return sum_partials(partial_rows(routed))
 
 
-def merge_minute_agg_hist_partials(
-    partials: DataFrame, keys: tuple[str, ...] = GROUP_KEYS
-) -> DataFrame:
+def merge_minute_agg_hist_partials(partials: DataFrame) -> DataFrame:
     """Fold histogram partials into the exact minute_agg result (same schema
-    and values as ``minute_agg(..., exact_quantiles=True)`` over the full
-    history — verified by the oracle twin and pytest equivalence).
+    and values as :func:`minute_agg` over the full history — verified by the
+    oracle twin and pytest equivalence).
 
     Quantiles use Spark's frequency-weighted exact ``percentile`` over the
     (rt, rt_cnt) histogram — identical interpolation to percentile over the
@@ -161,7 +132,7 @@ def merge_minute_agg_hist_partials(
     """
     ps = F.array(*[F.lit(p) for p in _QS])
     q = F.percentile(F.col("rt"), ps, F.greatest(F.col("rt_cnt"), F.lit(1)))
-    out = partials.groupBy(*[F.col(k) for k in keys]).agg(
+    out = partials.groupBy(*[F.col(k) for k in GROUP_KEYS]).agg(
         F.sum("pv").cast("long").alias("pv"),
         F.sum("bytes_sum").cast("long").alias("bytes_sum"),
         F.sum(F.col("rt") * F.col("rt_cnt")).alias("rt_sum"),
@@ -173,7 +144,7 @@ def merge_minute_agg_hist_partials(
         F.sum("invalid_hits").cast("long").alias("invalid_hits"),
     )
     return out.select(
-        *keys,
+        *GROUP_KEYS,
         "pv",
         "bytes_sum",
         "rt_sum",
@@ -189,62 +160,16 @@ def merge_minute_agg_hist_partials(
 
 
 def errors_from_hist_partials(partials: DataFrame) -> DataFrame:
-    """:func:`error_view` derived from the SAME histogram partials as the
-    minute summary — no second scan of the routed increment. Rows with
-    status >= 400 are valid by construction (invalid lines parse to null
-    status), so their pv is exactly the error hit count."""
+    """abs-log's ``error`` report ([PK] ``log_show.py`` error view): hits per
+    (sink, minute, error status), derived from the SAME histogram partials
+    as the minute summary — no second scan of the routed increment. The
+    tests' full-recompute reference (``reference_catalog`` in
+    ``tests/conftest.py``) counts the valid routed rows with status >= 400
+    instead. The two agree: rows with status >= 400 are valid by
+    construction (invalid lines parse to null status), so their pv is
+    exactly the error hit count."""
     return (
         partials.where(F.col("status") >= 400)
         .groupBy("sink", "minute", "status")
         .agg(F.sum("pv").cast("long").alias("hits"))
-    )
-
-
-def salted_minute_agg(
-    routed: DataFrame,
-    salt_buckets: int = 16,
-    keys: tuple[str, ...] = GROUP_KEYS,
-) -> DataFrame:
-    """Two-phase (salted) aggregate for hot keys ([B] "salted aggregation for
-    hot sources").
-
-    Phase 1 groups by (keys, salt = hash(doc_id) % B) so a hot group spreads
-    over B reducers; phase 2 combines the partials. Only decomposable
-    measures (sums/counts/min/max) — quantiles stay on the sketch path where
-    Spark already merges partials per shuffle partition.
-    """
-    df = routed.withColumn("minute", F.date_trunc("minute", F.col("ts"))).withColumn(
-        "_salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets))
-    )
-    partial = df.groupBy(*[F.col(k) for k in keys], F.col("_salt")).agg(
-        F.sum(F.when(F.col("valid"), 1).otherwise(0)).alias("_pv"),
-        F.coalesce(F.sum("bytes"), F.lit(0)).cast("long").alias("_bytes"),
-        F.sum("rt").alias("_rt_sum"),
-        F.count("rt").alias("_rt_n"),
-        F.min("rt").alias("_rt_min"),
-        F.max("rt").alias("_rt_max"),
-        F.sum(F.when(F.col("status") >= 400, 1).otherwise(0)).alias("_err"),
-        F.sum(F.when(~F.col("valid"), 1).otherwise(0)).alias("_inv"),
-    )
-    return partial.groupBy(*[F.col(k) for k in keys]).agg(
-        F.sum("_pv").alias("pv"),
-        F.sum("_bytes").cast("long").alias("bytes_sum"),
-        F.sum("_rt_sum").alias("rt_sum"),
-        (F.sum("_rt_sum") / F.sum("_rt_n")).alias("rt_avg"),
-        F.min("_rt_min").alias("rt_min"),
-        F.max("_rt_max").alias("rt_max"),
-        F.sum("_err").alias("err_hits"),
-        F.sum("_inv").alias("invalid_hits"),
-    )
-
-
-def error_view(routed: DataFrame) -> DataFrame:
-    """abs-log's ``error`` report: per-minute breakdown by error status
-    ([PK] ``log_show.py`` error view). Only valid rows with status >= 400.
-    """
-    return (
-        routed.where(F.col("valid") & (F.col("status") >= 400))
-        .withColumn("minute", F.date_trunc("minute", F.col("ts")))
-        .groupBy("sink", "minute", "status")
-        .agg(F.count("*").alias("hits"))
     )

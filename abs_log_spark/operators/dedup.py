@@ -151,25 +151,24 @@ def simhash_pairs(
     df: DataFrame,
     text_col: str = "text",
     max_hamming: int = 12,
-    chunk_bits: int | None = None,
-    materialize_signatures: bool = True,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     persisted_out: list | None = None,
     skipped_out: list | None = None,
 ) -> DataFrame:
-    """Near-dup pairs via SimHash chunk-LSH (any equal ``chunk_bits``-wide
-    chunk at the same position -> candidate), verified by Hamming distance.
+    """Near-dup pairs via SimHash chunk-LSH (any equal
+    :data:`SIMHASH_CHUNK_BITS`-wide chunk at the same position ->
+    candidate), verified by Hamming distance.
 
-    64-bit shingle signatures in 4 chunks of 16 (default): each chunk
+    64-bit shingle signatures in 4 chunks of 16: each chunk
     position has 65536 buckets, so random docs almost never collide —
     candidate volume is driven by real similarity, not signature-space
     crowding (the 32-bit/8-bit-chunk round-1 setting produced 168,110
     candidates on 1k sf0.01 docs; this setting produces 385 verified pairs).
 
-    ``chunk_bits`` is the recall/cost dial: pairs with hamming < n_chunks
-    are GUARANTEED candidates (pigeonhole); narrower chunks raise that
-    guarantee but multiply bucket occupancy (64/8 -> 256 buckets/position:
-    expect N^2/256 random candidate pairs).
+    The chunk width is the recall/cost dial, fixed at 16: pairs with
+    hamming < n_chunks are GUARANTEED candidates (pigeonhole); narrower
+    chunks raise that guarantee but multiply bucket occupancy (64/8 -> 256
+    buckets/position: expect N^2/256 random candidate pairs).
 
     ``max_bucket_size`` (ON by default, :data:`DEFAULT_MAX_BUCKET_SIZE`)
     guards the chunk-bucket pair expansion exactly as in
@@ -180,19 +179,16 @@ def simhash_pairs(
     """
     from abs_log_spark.functions.similarity import SIMHASH_BITS, SIMHASH_CHUNK_BITS
 
-    chunk_bits = chunk_bits or SIMHASH_CHUNK_BITS
-    sig = simhash_signature(df, text_col)
     # sig feeds THREE consumers (chunk buckets, pair-side A, pair-side B);
     # without materialization each branch recomputes every signature —
     # measured 3x the whole-query cost at 10k docs. Same lifecycle contract
     # as minhash_lsh_pairs: pass persisted_out to own the unpersist; at
     # petabyte scale write the signature relation to a table instead.
-    if materialize_signatures:
-        sig = _own_persist(sig, persisted_out)
+    sig = _own_persist(simhash_signature(df, text_col), persisted_out)
     # chunk-LSH reuses the banded candidate machinery: band = chunk index,
     # bucket = the chunk substring (one groupBy + in-row pairing, see
     # similarity.candidate_pairs)
-    n_chunks = SIMHASH_BITS // chunk_bits
+    n_chunks = SIMHASH_BITS // SIMHASH_CHUNK_BITS
     chunks = sig.select(
         "doc_id",
         F.explode(
@@ -200,7 +196,7 @@ def simhash_pairs(
                 F.struct(
                     F.lit(c).alias("band"),
                     F.substring(
-                        "simhash", c * chunk_bits + 1, chunk_bits
+                        "simhash", c * SIMHASH_CHUNK_BITS + 1, SIMHASH_CHUNK_BITS
                     ).alias("bucket"),
                 )
                 for c in range(n_chunks)

@@ -18,13 +18,14 @@ the partials, so no second record can disagree with the first.
 
 The ``checkpoint`` table is an append-only audit log, read by no run. Each
 cycle stages one file of rows (``done`` for folded buckets, ``expired`` for
-subtracted ones) next to the new lineage with :func:`mark_done`, and the
-cycle's one swap publishes it with the partials, the routed partitions and
-the summaries, so all of them change in one commit: replaying the log (the
-last status per key is ``done``) gives :func:`completed_partitions` after
-every commit. The rows are written on the driver with pyarrow
-(:meth:`Catalog.append_rows`) with the columns and types Spark writes, so
-Spark and DuckDB read one table whichever writer produced a file.
+subtracted ones) and the new lineage under the swap staging with
+:func:`mark_done`, and the cycle's one swap publishes them with the
+partials, the routed partitions and the summaries, so all of them change in
+one commit: replaying the log (the last status per key is ``done``) gives
+:func:`completed_partitions` after every commit. The rows are written on
+the driver with pyarrow (:meth:`Catalog.append_rows`) with the columns and
+types Spark writes, so Spark and DuckDB read one table whichever writer
+produced a file.
 
 Idempotence: the routed write goes to a staging table, and the commit
 moves each of its ``part_bucket`` directories over the live one, so
@@ -54,6 +55,9 @@ CHECKPOINT_SCHEMA = StructType(
 #: the done set: lineage of ``agg_partials``, inside its directory (Spark,
 #: DuckDB and ``footer_schema`` skip ``_`` names)
 LINEAGE = "_folded_buckets.json"
+
+#: where a cycle stages the next ``agg_partials`` table, lineage included
+PARTIALS_STAGING = os.path.join(SWAP_STAGING, "agg_partials")
 
 
 def completed_partitions(cat: Catalog) -> set[str]:
@@ -105,14 +109,17 @@ def filter_pending(df: DataFrame, done: set[str]) -> DataFrame:
 def mark_done(
     cat: Catalog, run_id: str, done: set[str], keys: list[str], status: str = "done"
 ) -> tuple[str, str]:
-    """Stage a commit's bookkeeping inside the written :data:`SWAP_STAGING`
-    table: ``done``, the done set after the commit, as its lineage, and one
-    checkpoint file of ``keys`` rows with ``status``. Returns the move that
-    publishes that file into the checkpoint table; it must precede the move
-    of the staging itself in the same :meth:`Catalog.swap`."""
+    """Stage a commit's bookkeeping under :data:`SWAP_STAGING`: ``done``,
+    the done set after the commit, as the lineage of the staged partials
+    (:data:`PARTIALS_STAGING`, made here when the fold wrote no rows), and
+    one checkpoint file of ``keys`` rows with ``status`` in its own staging
+    directory. Returns the :meth:`Catalog.swap` move that publishes that
+    file into the checkpoint table."""
     now = datetime.now(timezone.utc)
     rows = [(run_id, "routed", str(k), status, now) for k in keys]
-    name = cat.append_rows(SWAP_STAGING, CHECKPOINT_SCHEMA, rows)
-    with open(os.path.join(cat.path(SWAP_STAGING), LINEAGE), "w") as f:
+    staging = os.path.join(SWAP_STAGING, CHECKPOINT_TABLE)
+    name = cat.append_rows(staging, CHECKPOINT_SCHEMA, rows)
+    os.makedirs(cat.path(PARTIALS_STAGING), exist_ok=True)
+    with open(os.path.join(cat.path(PARTIALS_STAGING), LINEAGE), "w") as f:
         json.dump(sorted(done), f)
-    return os.path.join(SWAP_STAGING, name), os.path.join(CHECKPOINT_TABLE, name)
+    return os.path.join(staging, name), os.path.join(CHECKPOINT_TABLE, name)

@@ -9,12 +9,13 @@ The Spark-first restatement of abs-log's collector lifecycle ([PK]
       -> STAGE enrich  : broadcast join on the source dimension
       -> STAGE route   : one partitioned write to a staging table
       -> STAGE fold    : the staged increment -> one-row histogram partials,
-                         summed with the agg_partials table into its staging
+                         summed with the agg_partials table
       -> STAGE summary : staged partials -> per-sink minute summaries + error
-                         view, each into its staging
-      -> COMMIT        : ONE journaled swap publishes the routed partitions,
+                         view
+      -> COMMIT        : ONE journaled swap publishes the routed partitions
+                         and everything staged under SWAP_STAGING:
                          agg_partials with its done set, the checkpoint audit
-                         rows and the summaries
+                         file and the summaries
       -> metrics row (driver-side pyarrow append)
 
 Every stage is a pure DataFrame -> DataFrame function so the driver harness
@@ -38,9 +39,12 @@ Scale design decisions (10^12 rows / 1000 executors):
   (``checkpoint.completed_partitions``); the summaries are re-derived from
   that aggregate-sized result, never from the routed history. AQE
   coalesces the post-shuffle partitions.
-- one commit per cycle: every output is staged, and one ``Catalog.swap``
-  publishes all of it, so a crash leaves the warehouse before the cycle or
-  after it, never a mix; a run with nothing pending commits nothing.
+- one commit per cycle: every output is staged, each in its own directory
+  under ``SWAP_STAGING`` (the routed rows in ``_routed_staging``), and one
+  ``Catalog.swap`` publishes all of it, so a crash leaves the warehouse
+  before the cycle or after it, never a mix; a run with nothing pending
+  commits nothing. The staging is dropped by the ``Catalog.recover`` every
+  cycle starts with, so no stage clears its own.
 - no Spark job for bookkeeping: a cron increment is bound by scheduling,
   not data, so the done-set read, the audit rows, the metrics row and the
   sink list stay on the driver (one JSON file, pyarrow appends, directory
@@ -104,9 +108,9 @@ def fan_out_summary(
     time-ranged reports (``log_show --from/--to``) prune whole partition
     directories at the scan instead of row-filtering a year of summaries —
     the Iceberg days-transform stand-in. Invalid-line groups (null minute)
-    land in the null partition and are read back intact."""
-    staging = f"_{name}staging"
-    cat.drop(staging)
+    land in the null partition and are read back intact. The write is
+    staged at ``SWAP_STAGING/<name>``."""
+    staging = os.path.join(SWAP_STAGING, name)
     if summary is not None:
         cat.write(
             summary.withColumn("_sink", F.col("sink"))
@@ -165,12 +169,12 @@ def compact_partials(
     victims: DataFrame | None,
     buckets: list[str],
 ) -> dict:
-    """THE fold of a cycle: write to :data:`SWAP_STAGING` the ``agg_partials``
-    table plus ``inc``, the routed rows of ``buckets``, minus ``victims``,
-    the live routed rows of done buckets leaving the table, with ONE
-    group-by: every routed row is projected to a one-row partial first
-    (:func:`partial_rows`), so the union is summed by grain with one
-    exchange. Groups whose measures all summed to zero go.
+    """THE fold of a cycle: write to :data:`checkpoint.PARTIALS_STAGING` the
+    ``agg_partials`` table plus ``inc``, the routed rows of ``buckets``,
+    minus ``victims``, the live routed rows of done buckets leaving the
+    table, with ONE group-by: every routed row is projected to a one-row
+    partial first (:func:`partial_rows`), so the union is summed by grain
+    with one exchange. Groups whose measures all summed to zero go.
 
     ``agg_partials`` is ONE unpartitioned table at the summaries' grain plus
     ``(status, rt)``: the measures are exact integer sums over a
@@ -180,12 +184,11 @@ def compact_partials(
     keys) rows however many buckets were folded. Returns counts."""
     parts = [cat.read(spark, "agg_partials")] if cat.exists("agg_partials") else []
     parts += [partial_rows(r, sign=sign) for r, sign in ((inc, 1), (victims, -1)) if r is not None]
-    cat.drop(SWAP_STAGING)
     if parts:
         cat.write(
             sum_partials(reduce(DataFrame.unionByName, parts))
             .where(" or ".join(f"{m} != 0" for m in PARTIAL_MEASURES)),
-            SWAP_STAGING,
+            ckpt.PARTIALS_STAGING,
         )
     return {"buckets_compacted": len(buckets)}
 
@@ -194,11 +197,10 @@ def rebuild_summaries(
     spark: SparkSession, cat: Catalog
 ) -> tuple[list[tuple[str, str]], list[str]]:
     """Re-derive every summary table from the partials staged in
-    :data:`SWAP_STAGING` (aggregate-sized — never the routed history) and
-    return the swap's moves and removes that publish them: summaries =
-    merge(partials) in every commit, and with no partials left no summary
-    table is left either. It must run before :func:`checkpoint.mark_done`
-    puts the audit file in the staging, which a read would take as partials.
+    :data:`checkpoint.PARTIALS_STAGING` (aggregate-sized — never the routed
+    history) and return the swap's moves and removes that publish them:
+    summaries = merge(partials) in every commit, and with no partials left
+    no summary table is left either.
 
     The two summary kinds are INDEPENDENT actions over the same partials
     scan, so they run on concurrent scheduler threads: at the 24M-row
@@ -208,7 +210,8 @@ def rebuild_summaries(
     also interleave onto idle executors instead of serializing."""
     from concurrent.futures import ThreadPoolExecutor
 
-    partials = cat.read(spark, SWAP_STAGING) if cat.exists(SWAP_STAGING) else None
+    staged = ckpt.PARTIALS_STAGING
+    partials = cat.read(spark, staged) if cat.exists(staged) else None
     kinds = [
         ("minute_agg_", merge_minute_agg_hist_partials),
         ("errors_", errors_from_hist_partials),
@@ -240,9 +243,9 @@ def commit_cycle(
     ``buckets``) minus the done ``victims``, the summaries derived from it,
     the done set ``(done - victims) | buckets`` with its audit rows
     (``done`` for ``buckets``, else ``expired`` for ``victims``), then the
-    caller's ``moves`` and ``removes``. The audit file moves first: moved
-    after the staging, it would land in ``agg_partials`` as a data file. A
-    crash leaves the warehouse before the cycle or after it."""
+    caller's ``moves`` and ``removes``. Each output stages in its own
+    directory, so the moves run in any order. A crash leaves the warehouse
+    before the cycle or after it."""
     neg = routed_union(spark, cat, routed_sinks(cat), bucket_filter=victims) if victims else None
     compact_partials(spark, cat, inc, neg, buckets)
     mark("compact")
@@ -250,7 +253,7 @@ def commit_cycle(
     mark("aggregate")
     keys, status = (buckets, "done") if buckets else (victims, "expired")
     audit = ckpt.mark_done(cat, run_id, (done - set(victims)) | set(buckets), keys, status)
-    cat.swap([audit, (SWAP_STAGING, "agg_partials"), *moves, *summary_moves],
+    cat.swap([(ckpt.PARTIALS_STAGING, "agg_partials"), audit, *moves, *summary_moves],
              [*summary_removes, *removes])
     mark("commit")
 
@@ -341,6 +344,4 @@ def run_pipeline(
     vals = metrics.flush(spark, cat, run_id, buckets)
     vals["buckets_processed"] = len(buckets)
     vals["buckets_skipped"] = len(done - set(buckets))
-    # summaries cover every sink with routed history
-    vals["sinks"] = routed_sinks(cat)
     return vals

@@ -303,7 +303,7 @@ def _routed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _e2e_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    agg = minute_agg(_routed(spark, sf_dir), exact_quantiles=True)
+    agg = minute_agg(_routed(spark, sf_dir))
     return agg.select(
         "sink",
         "site",

@@ -36,7 +36,7 @@ TABLES = (
 #: that keeps the local-fixture fix a no-op at production scale (a 100 TB
 #: table is thousands of row groups; repartitioning it would be a full
 #: payload shuffle for nothing).
-SPREAD_MAX_BYTES = int(os.environ.get("ABSLOG_SPREAD_MAX_BYTES", str(256 << 20)))
+SPREAD_MAX_BYTES = 256 << 20
 
 #: Per-partition byte target for ``spread``: partitions = bytes / target,
 #: capped at the session's core count. Sized from a core-count sweep at two
@@ -44,7 +44,7 @@ SPREAD_MAX_BYTES = int(os.environ.get("ABSLOG_SPREAD_MAX_BYTES", str(256 << 20))
 #: 32-way repartition of a sub-MB table is pure task overhead; sf1.0
 #: ~5.9 MB: the cap keeps full core fan-out, which measured best). Tiny
 #: fixtures (sf0.01, 59 KB) yield n=1 and skip the shuffle entirely.
-SPREAD_TARGET_BYTES = int(os.environ.get("ABSLOG_SPREAD_TARGET_BYTES", str(64 << 10)))
+SPREAD_TARGET_BYTES = 64 << 10
 
 
 def _scan_spread_units(path: str) -> tuple[int, int]:

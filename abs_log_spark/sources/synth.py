@@ -8,7 +8,7 @@ local[32] scaling evidence depends on).
 ``sequences``: (doc_id, tokens:array<int32>, n_tok:int32, source, part_bucket)
 where ``tokens`` spells a synthetic nginx-style access-log line (A1a) and
 ``source`` is Zipf-skewed (src0 ~ 50% of rows — the hot key for AQE-skew and
-salted-aggregation tests, [B] "hot sources").
+the salted layout shuffle, [B] "hot sources").
 
 ``sources_dim``: the broadcast enrichment dimension (source -> sink, site,
 region) including a deliberately unmapped source test case (handled by the

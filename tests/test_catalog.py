@@ -82,21 +82,15 @@ def test_bookkeeping_tables_agree_across_writers_and_engines(spark, tmp_catalog,
 
     ck_path, m_path = cat.path(ckpt.CHECKPOINT_TABLE), cat.path(METRICS_TABLE)
     # Spark-written history, as earlier runs and retention rewrites leave it
-    cat.append(
-        spark.createDataFrame(
-            [("r0", "routed", "0", "done"), ("r0", "other", "5", "done")],
-            "run_id string, stage string, partition_key string, status string",
-        ).withColumn("ts", F.current_timestamp()),
-        ckpt.CHECKPOINT_TABLE,
-    )
-    cat.append(
-        spark.createDataFrame(
-            [("r0", "pipeline", "0", 10, 9, 1, 10, 123)],
-            "run_id string, stage string, partition_key string, rows_in long,"
-            " rows_valid long, rows_invalid long, rows_routed long, wall_ms long",
-        ),
-        METRICS_TABLE,
-    )
+    spark.createDataFrame(
+        [("r0", "routed", "0", "done"), ("r0", "other", "5", "done")],
+        "run_id string, stage string, partition_key string, status string",
+    ).withColumn("ts", F.current_timestamp()).write.mode("append").parquet(ck_path)
+    spark.createDataFrame(
+        [("r0", "pipeline", "0", 10, 9, 1, 10, 123)],
+        "run_id string, stage string, partition_key string, rows_in long,"
+        " rows_valid long, rows_invalid long, rows_routed long, wall_ms long",
+    ).write.mode("append").parquet(m_path)
     spark_files = set(_part_files(ck_path))
     audit("r1", ["1", "2"])
     StageMetrics(spark).flush(spark, cat, "r1", ["1", "2"])

@@ -270,6 +270,43 @@ def test_leftover_temp_journal_is_ignored(spark, tmp_catalog, monkeypatch, refer
     assert _summaries(spark, tmp_catalog) == _summaries(spark, reference_catalog(seq, dim))
 
 
+def test_uncommitted_cycle_leaves_no_staging_after_recover(spark, tmp_catalog, monkeypatch,
+                                                          reference_catalog):
+    """Everything a commit builds stages in its own directory under
+    ``SWAP_STAGING``: the partials with their lineage, the audit file and
+    both summary kinds. A crash before the journal lands leaves them all
+    there, and ``recover()`` drops them with that one directory: no summary
+    staging survives at the warehouse root, nothing live changed, and the
+    next run folds normally."""
+    seq = gen_sequences(spark, N, invalid_every=10)
+    dim = gen_sources_dim(spark)
+    run_pipeline(spark, tmp_catalog, seq.where(F.col("part_bucket") < 4), dim, run_id="r1")
+    before = _live_files(tmp_catalog)
+
+    def crash(self, moves, removes=()):
+        raise _Crash("before the journal")
+
+    with monkeypatch.context() as m:
+        m.setattr(Catalog, "swap", crash)
+        with pytest.raises(_Crash):
+            run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
+    assert sorted(os.listdir(tmp_catalog.path(SWAP_STAGING))) == [
+        "agg_partials", "checkpoint", "errors_", "minute_agg_"
+    ]
+    assert os.path.exists(os.path.join(tmp_catalog.path(ckpt.PARTIALS_STAGING), ckpt.LINEAGE))
+
+    tmp_catalog.recover()
+    left = sorted(d for d in os.listdir(tmp_catalog.root) if d.startswith(("_", ".")))
+    assert left == ["_routed_staging"]  # the next run drops it before its write
+    assert _live_files(tmp_catalog) == before
+    assert ckpt.completed_partitions(tmp_catalog) == {"0", "1", "2", "3"}
+
+    r3 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r3")
+    assert r3["buckets_processed"] == 4
+    _assert_one_table(tmp_catalog, {str(b) for b in range(8)})
+    assert _summaries(spark, tmp_catalog) == _summaries(spark, reference_catalog(seq, dim))
+
+
 def test_expire_compacted_bucket_subtracts_exactly(spark, tmp_catalog):
     """Expiring folded buckets must subtract their exact contribution from
     agg_partials — summaries equal 'never ingested them', and a re-ingest

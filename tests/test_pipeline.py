@@ -7,7 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from abs_log_spark.operators.aggregate import minute_agg, salted_minute_agg
+from abs_log_spark.operators.aggregate import minute_agg
 from abs_log_spark.plans.pipeline import run_pipeline, transform
 from abs_log_spark.sources.synth import gen_sequences, gen_sources_dim
 
@@ -61,7 +61,7 @@ def test_minute_agg_matches_bruteforce(spark):
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
     routed = transform(seq, dim)
-    agg = minute_agg(routed, exact_quantiles=True)
+    agg = minute_agg(routed)
     # cross-check one group against a driver-side brute force
     rows = routed.where(F.col("valid")).collect()
     import collections
@@ -89,25 +89,6 @@ def test_minute_agg_matches_bruteforce(spark):
     # invalid rows land in the null-key group, never dropped
     inv = agg.where(F.col("uri_abs").isNull()).agg(F.sum("invalid_hits").alias("i")).collect()[0].i
     assert inv == N // 10
-
-
-def test_salted_agg_equals_plain(spark):
-    seq = gen_sequences(spark, N)
-    dim = gen_sources_dim(spark)
-    routed = transform(seq, dim)
-    def norm(df):
-        # float sums associate differently across the two plans; round them
-        return df.select(
-            "sink", "site", "minute", "uri_abs", "pv", "bytes_sum",
-            F.round("rt_sum", 6).alias("rt_sum"),
-            F.round("rt_avg", 6).alias("rt_avg"),
-            "rt_min", "rt_max", "err_hits", "invalid_hits",
-        )
-
-    plain = norm(minute_agg(routed))
-    salted = norm(salted_minute_agg(routed))
-    diff = plain.exceptAll(salted).count() + salted.exceptAll(plain).count()
-    assert diff == 0
 
 
 def test_trend_regroup(spark):
@@ -241,7 +222,7 @@ def test_hist_partials_merge_equals_exact_minute_agg(spark):
     routed = transform(seq, dim)
 
     merged = merge_minute_agg_hist_partials(minute_agg_hist_partials(routed))
-    full = minute_agg(routed, exact_quantiles=True)
+    full = minute_agg(routed)
 
     cols = full.columns
     def keyed(df):
