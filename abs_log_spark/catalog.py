@@ -49,6 +49,10 @@ SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
 #: a time) and its write-ahead journal, both at the warehouse root
 SWAP_STAGING = "_swap_staging"
 SWAP_JOURNAL = "_swap_journal.json"
+#: the routed write's staging table, whose partition dirs the same swap
+#: moves into the ``routed_*`` tables; a root table of its own, because
+#: perfbench times its write as ``catalog.write:_routed_staging``
+ROUTED_STAGING = "_routed_staging"
 
 #: Spark type name -> the arrow type that writes Spark's parquet physical
 #: type (timestamps go out as INT96, see :meth:`Catalog.append_rows`)
@@ -175,11 +179,11 @@ class Catalog:
     def recover(self) -> None:
         """Finish the swap a crash interrupted (journal present) and drop the
         staging tables its moves came from, else roll back an uncommitted
-        one: :data:`SWAP_STAGING` and a temp journal left mid-write are
-        dropped, and the live paths were never touched. The only code that
-        changes live paths."""
+        one: :data:`SWAP_STAGING`, :data:`ROUTED_STAGING` and a temp journal
+        left mid-write are dropped, and the live paths were never touched.
+        The only code that changes live paths."""
         journal = self.path(SWAP_JOURNAL)
-        stagings = {SWAP_STAGING}
+        stagings = {SWAP_STAGING, ROUTED_STAGING}
         if os.path.exists(journal):
             with open(journal) as f:
                 j = json.load(f)

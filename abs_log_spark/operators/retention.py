@@ -31,12 +31,15 @@ def expire_buckets(spark: SparkSession, cat: Catalog, buckets: list[str]) -> dic
     them in a second step would let a crash between the two leave one half
     expired. Re-ingesting an expired bucket is a run over input that
     carries it. Iceberg equivalent: partition DELETEs on the routed tables,
-    a partials rewrite and the summary REPLACE in one transaction.
+    a partials rewrite and the summary REPLACE in one transaction. Buckets
+    that left no state (not done, no routed partition) commit nothing and
+    run no Spark job.
     """
     from abs_log_spark.plans.pipeline import commit_cycle, routed_dirs
 
     done = ckpt.completed_partitions(cat)
     victims = sorted(set(map(str, buckets)) & done)
     removes = routed_dirs(cat, buckets)
-    commit_cycle(spark, cat, "expire", done, [], victims, removes=removes)
+    if victims or removes:
+        commit_cycle(spark, cat, "expire", done, [], victims, removes=removes)
     return {"partials_subtracted": len(victims), "routed_partitions": len(removes)}

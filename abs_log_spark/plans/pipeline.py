@@ -40,11 +40,16 @@ Scale design decisions (10^12 rows / 1000 executors):
   that aggregate-sized result, never from the routed history. AQE
   coalesces the post-shuffle partitions.
 - one commit per cycle: every output is staged, each in its own directory
-  under ``SWAP_STAGING`` (the routed rows in ``_routed_staging``), and one
+  under ``SWAP_STAGING`` (the routed rows in ``ROUTED_STAGING``), and one
   ``Catalog.swap`` publishes all of it, so a crash leaves the warehouse
   before the cycle or after it, never a mix; a run with nothing pending
-  commits nothing. The staging is dropped by the ``Catalog.recover`` every
-  cycle starts with, so no stage clears its own.
+  commits nothing. Both stagings are dropped by the ``Catalog.recover``
+  every cycle starts with, so no stage clears its own.
+- no hand-sized fan-out: both partitioned writes (routed rows by
+  ``(sink, part_bucket)``, summaries by ``(_sink, day)``) shuffle through
+  a ``REBALANCE`` on their layout columns, so AQE sizes them from measured
+  shuffle sizes: small partition dirs get one file, a hot one is split
+  into advisory-sized files by several tasks.
 - no Spark job for bookkeeping: a cron increment is bound by scheduling,
   not data, so the done-set read, the audit rows, the metrics row and the
   sink list stay on the driver (one JSON file, pyarrow appends, directory
@@ -61,7 +66,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from abs_log_spark.catalog import SWAP_STAGING, Catalog
+from abs_log_spark.catalog import ROUTED_STAGING, SWAP_STAGING, Catalog
 from abs_log_spark.functions.parse import parse_arrow
 from abs_log_spark.operators.aggregate import (
     PARTIAL_MEASURES,
@@ -73,11 +78,6 @@ from abs_log_spark.operators.aggregate import (
 from abs_log_spark.operators.enrich import enrich
 from abs_log_spark.plans import checkpoint as ckpt
 from abs_log_spark.plans.metrics import StageMetrics
-
-
-#: files per routed partition dir / reducers per (sink, part_bucket) combo
-#: in the unaligned layout shuffle (see run_pipeline).
-WRITE_SALT = 4
 
 
 @dataclass
@@ -109,13 +109,19 @@ def fan_out_summary(
     directories at the scan instead of row-filtering a year of summaries —
     the Iceberg days-transform stand-in. Invalid-line groups (null minute)
     land in the null partition and are read back intact. The write is
-    staged at ``SWAP_STAGING/<name>``."""
+    staged at ``SWAP_STAGING/<name>``.
+
+    The rows reach the writer through a ``REBALANCE`` on ``(_sink, day)``:
+    AQE coalesces small day directories into shared tasks (one file each)
+    and splits a hot sink's day into advisory-sized files written by
+    several tasks. A plain repartition by ``_sink`` would send each sink's
+    whole summary history through one task, and AQE never splits it."""
     staging = os.path.join(SWAP_STAGING, name)
     if summary is not None:
         cat.write(
             summary.withColumn("_sink", F.col("sink"))
             .withColumn("day", F.to_date("minute"))
-            .repartition(F.col("_sink")),
+            .hint("rebalance", "_sink", "day"),
             staging,
             partition_by=("_sink", "day"),
         )
@@ -294,27 +300,20 @@ def run_pipeline(
     # ONE data pass: write everything partitioned by (sink, part_bucket) to a
     # staging table, whose partition dirs the commit moves into per-sink
     # tables (Iceberg atomic-partition-replace stand-in). No cache: the wide
-    # token arrays are written once and read back column-pruned.
-    cat.drop("_routed_staging")  # clear any crashed-run leftovers
-    # Shuffle once on the layout key before the partitioned write: without
-    # this, every task opens a file per (sink, bucket) value -> tasks x
-    # partitions small files (measured 1094 files for 182MB). With it, one
-    # file per partition. At 10^12 rows the same shuffle sizes output files
-    # via spark.sql.shuffle.partitions instead of letting file count explode.
+    # token arrays are written once and read back column-pruned. A staging
+    # left by a crashed run was dropped by the recover() of
+    # completed_partitions.
     layout_cols = ("sink", "part_bucket")
     if not cfg.input_aligned:
-        # Salt the layout shuffle: hashing only the ~|sinks| x |buckets|
-        # combos into shuffle partitions caps reduce parallelism at the combo
-        # count and collides hot combos (Zipf sink_a buckets carry ~2x the
-        # mean). The salt splits every combo across WRITE_SALT reducers ->
-        # balanced tasks, WRITE_SALT files per partition dir (tune so file
-        # size ~ 100-500MB at the target scale).
-        routed = routed.withColumn(
-            "_wsalt", F.pmod(F.xxhash64("doc_id"), F.lit(WRITE_SALT))
-        )
-        routed = routed.repartition(
-            *[F.col(c) for c in layout_cols], F.col("_wsalt")
-        ).drop("_wsalt")
+        # Rebalance on the layout key before the partitioned write: without
+        # a shuffle, every task opens a file per (sink, bucket) value ->
+        # tasks x partitions small files (measured 1094 files for 182MB).
+        # AQE sizes the REBALANCE from measured shuffle sizes: small
+        # (sink, bucket) partitions coalesce into shared tasks, one file
+        # per partition dir, and a hot one (Zipf sink_a) is split into
+        # advisoryPartitionSizeInBytes-sized files, with no fan-out
+        # constant to retune per scale.
+        routed = routed.hint("rebalance", *layout_cols)
     # else: the input table is already clustered by (source, part_bucket) —
     # the production Iceberg layout ([B] "explicit range/hash partitioning").
     # sink = f(source), so every input split maps to ~one routed partition:
@@ -322,7 +321,7 @@ def run_pipeline(
     # sorts rows by partition cols inside each task). At 10^12 rows this is
     # the difference between moving the full token payload over the network
     # once vs not at all.
-    cat.write(routed, "_routed_staging", partition_by=layout_cols)
+    cat.write(routed, ROUTED_STAGING, partition_by=layout_cols)
     metrics.mark("routed_write")
 
     # The cycle's buckets are the staging's partition dirs (a listing, zero
@@ -332,12 +331,12 @@ def run_pipeline(
     # increment plus the live keys, never the routed history. A done bucket
     # in the input (resume=False) is a victim: its live routed rows leave
     # the partials, and its live routed dirs are replaced or removed.
-    moves = cat.promote_partitions("_routed_staging", "routed_")
+    moves = cat.promote_partitions(ROUTED_STAGING, "routed_")
     buckets = sorted({os.path.basename(dst).split("=", 1)[1] for _, dst in moves})
     if buckets:
         victims = sorted(set(buckets) & done)
         replaced = {dst for _, dst in moves}
-        inc = metrics.observe_agg_input(cat.read(spark, "_routed_staging"))
+        inc = metrics.observe_agg_input(cat.read(spark, ROUTED_STAGING))
         commit_cycle(spark, cat, run_id, done, buckets, victims, inc, moves,
                      [d for d in routed_dirs(cat, victims) if d not in replaced], metrics.mark)
 

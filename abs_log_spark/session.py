@@ -51,9 +51,9 @@ ENGINE_CONFS: dict[str, str] = {
     # Dynamic-partition writes: keep up to 8 writers open per task instead
     # of sort-before-write (measured on the real routed write, 4M rows
     # local[8], min-of-3: 14.85 -> 13.63 s, and the sort path's spill-
-    # sensitive outliers — 21s walls — disappear). The salted layout
-    # repartition already routes each task a handful of (sink, bucket)
-    # groups, so 8 writers cover it; tasks exceeding the limit fall back
+    # sensitive outliers — 21s walls — disappear). The REBALANCE before
+    # each partitioned write routes each task a handful of partition
+    # dirs, so 8 writers cover it; tasks exceeding the limit fall back
     # to sort-based for the remainder (no correctness edge). Memory per
     # writer is bounded by the data the task actually holds (<= one 32MB
     # input split), not by parquet.block.size.

@@ -40,6 +40,7 @@ from pyspark.sql.types import (
 )
 
 from abs_log_spark.catalog import Catalog
+from abs_log_spark.plans.checkpoint import completed_partitions
 from abs_log_spark.plans.pipeline import PipelineConfig, run_pipeline, transform
 
 #: the stream's offsets and commits, a hidden table of the warehouse it feeds.
@@ -145,22 +146,28 @@ def run_stream_foreach_batch(
     from the warehouse would make a new stream skip every batch. One
     warehouse therefore takes one stream: Spark refuses a second input path
     against the same offsets. A restarted query re-runs an uncommitted batch
-    over the same files: a no-op if its bucket is done, otherwise an
-    idempotent bucket re-run. Returns the started StreamingQuery.
+    over the same files: with ``resume`` on and its bucket done, it reports
+    0 rows and runs no Spark job; otherwise it is an idempotent bucket
+    re-run. Returns the started StreamingQuery.
     """
     stream = read_sequence_stream(spark, input_path, max_files_per_trigger)
 
+    resume = (cfg or PipelineConfig()).resume
+
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        vals = run_pipeline(
-            spark,
-            cat,
-            batch_df.withColumn("part_bucket", F.lit(batch_id).cast("int")),
-            dim,
-            run_id=f"stream-{batch_id}",
-            cfg=cfg,
-        )
+        if resume and str(batch_id) in completed_partitions(cat):
+            rows_in = 0  # a replay of a committed batch: no Spark job
+        else:
+            rows_in = run_pipeline(
+                spark,
+                cat,
+                batch_df.withColumn("part_bucket", F.lit(batch_id).cast("int")),
+                dim,
+                run_id=f"stream-{batch_id}",
+                cfg=cfg,
+            )["rows_in"]
         if on_batch is not None:
-            on_batch(batch_id, vals["rows_in"])
+            on_batch(batch_id, rows_in)
 
     writer = stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", cat.path(STREAM_OFFSETS)

@@ -19,6 +19,33 @@ def spark():
 
 
 @pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> ``(fn(), n)``, where ``n`` counts the Spark jobs
+    submitted while ``fn`` ran, on any thread and in any job group (a
+    stream's batches run in the query's own group). Job ids are one sequence
+    per SparkContext, so ``n`` is the gap between the ids of two one-task
+    probe jobs run before and after ``fn``."""
+    sc = spark.sparkContext
+    group = "count_jobs_probe"
+
+    def probe() -> int:
+        sc.setJobGroup(group, group)
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(group))
+
+    def run(fn):
+        first = probe()
+        out = fn()
+        return out, probe() - first - 1
+
+    return run
+
+
+@pytest.fixture()
 def tmp_catalog(tmp_path):
     from abs_log_spark.catalog import Catalog
 

@@ -275,9 +275,9 @@ def test_uncommitted_cycle_leaves_no_staging_after_recover(spark, tmp_catalog, m
     """Everything a commit builds stages in its own directory under
     ``SWAP_STAGING``: the partials with their lineage, the audit file and
     both summary kinds. A crash before the journal lands leaves them all
-    there, and ``recover()`` drops them with that one directory: no summary
-    staging survives at the warehouse root, nothing live changed, and the
-    next run folds normally."""
+    there, with the routed rows in ``ROUTED_STAGING``, and ``recover()``
+    drops both: no staging survives at the warehouse root, nothing live
+    changed, and the next run folds normally."""
     seq = gen_sequences(spark, N, invalid_every=10)
     dim = gen_sources_dim(spark)
     run_pipeline(spark, tmp_catalog, seq.where(F.col("part_bucket") < 4), dim, run_id="r1")
@@ -297,7 +297,7 @@ def test_uncommitted_cycle_leaves_no_staging_after_recover(spark, tmp_catalog, m
 
     tmp_catalog.recover()
     left = sorted(d for d in os.listdir(tmp_catalog.root) if d.startswith(("_", ".")))
-    assert left == ["_routed_staging"]  # the next run drops it before its write
+    assert left == []
     assert _live_files(tmp_catalog) == before
     assert ckpt.completed_partitions(tmp_catalog) == {"0", "1", "2", "3"}
 
@@ -329,6 +329,24 @@ def test_expire_compacted_bucket_subtracts_exactly(spark, tmp_catalog):
     r2 = run_pipeline(spark, tmp_catalog, seq, dim, run_id="r2")
     assert r2["buckets_processed"] == 2
     assert _pv(spark, tmp_catalog) == pv_all
+
+
+def test_expire_buckets_without_state_commits_nothing(spark, tmp_catalog, count_jobs):
+    """Expiring a bucket that is neither done nor routed has nothing to
+    subtract or remove: it submits no Spark job, appends no audit file and
+    leaves every live file as it was."""
+    from abs_log_spark.operators.retention import expire_buckets
+
+    seq = gen_sequences(spark, N, invalid_every=10)
+    run_pipeline(spark, tmp_catalog, seq, gen_sources_dim(spark), run_id="r1")
+    before = _live_files(tmp_catalog)
+    assert any(p.startswith(ckpt.CHECKPOINT_TABLE + os.sep) for p in before)
+
+    res, jobs = count_jobs(lambda: expire_buckets(spark, tmp_catalog, ["99"]))
+    assert jobs == 0
+    assert res == {"partials_subtracted": 0, "routed_partitions": 0}
+    assert _live_files(tmp_catalog) == before
+    assert not os.path.exists(tmp_catalog.path(SWAP_STAGING))
 
 
 def test_no_resume_rerun_after_compaction(spark, tmp_catalog):

@@ -480,6 +480,67 @@ def test_zipf_skew_and_aligned_layout_balance(spark):
     )
 
 
+@pytest.fixture()
+def small_advisory_size(spark):
+    """AQE's advisory partition size cut to 64 KB for one test, so a few
+    thousand rows make a partition dir AQE splits."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64k")
+    yield
+    spark.conf.set(key, old)
+
+
+def _data_files(cat, rel: str) -> list[str]:
+    return [f for f in os.listdir(cat.path(rel)) if f.startswith("part-")]
+
+
+def test_summary_write_splits_a_hot_sink_day(spark, tmp_catalog, small_advisory_size):
+    """The summary write rebalances on ``(_sink, day)``: each day of a hot
+    sink is split into several files written by several tasks, a small
+    sink's day stays one file, and every row comes back once."""
+    from abs_log_spark.plans.pipeline import fan_out_summary
+
+    day0 = F.lit("2026-01-01 00:00:00").cast("timestamp")
+    hot = spark.range(0, 40000, numPartitions=4).select(
+        F.lit("hot").alias("sink"),
+        (day0 + F.make_interval(days=F.col("id") % 2, mins=F.col("id") % 1440)).alias("minute"),
+        F.sha2(F.col("id").cast("string"), 256).alias("uri_abs"),
+        F.col("id").alias("pv"),
+    )
+    cold = hot.where("pv < 10").withColumns({"sink": F.lit("cold"), "minute": day0})
+    summary = hot.unionByName(cold)
+    cat = tmp_catalog
+    cat.swap(*fan_out_summary(cat, "minute_agg_", summary))
+
+    for day in ("2026-01-01", "2026-01-02"):
+        assert len(_data_files(cat, f"minute_agg_hot/day={day}")) > 1
+    assert cat.listdir("minute_agg_cold") == ["day=2026-01-01"]
+    assert len(_data_files(cat, "minute_agg_cold/day=2026-01-01")) == 1
+    cols = ["sink", "minute", "uri_abs", "pv"]
+    got = cat.read(spark, "minute_agg_hot").unionByName(cat.read(spark, "minute_agg_cold"))
+    assert sorted(got.select(cols).collect()) == sorted(summary.select(cols).collect())
+
+
+def test_routed_write_splits_a_hot_partition_dir(spark, tmp_catalog, small_advisory_size):
+    """The routed write rebalances on ``(sink, part_bucket)``: the hot
+    ``src0`` rows of ``sink_a`` land as several files in one partition dir,
+    a small sink's dir is one file, and every routed row keeps its token
+    array."""
+    hot = gen_sequences(spark, 8000, buckets=1, partitions=4).where("source = 'src0'")
+    cold = gen_sequences(spark, 200, buckets=1).where("source = 'src1'")
+    seq = hot.unionByName(cold)
+    run_pipeline(spark, tmp_catalog, seq, gen_sources_dim(spark), run_id="r1")
+
+    assert len(_data_files(tmp_catalog, "routed_sink_a/part_bucket=0")) > 1
+    assert len(_data_files(tmp_catalog, "routed_sink_b/part_bucket=0")) == 1
+    routed = tmp_catalog.read(spark, "routed_sink_a").unionByName(
+        tmp_catalog.read(spark, "routed_sink_b")
+    )
+    cols = ["doc_id", "tokens"]
+    assert sorted(routed.select(cols).collect()) == sorted(seq.select(cols).collect())
+
+
 def test_crashed_staging_recovery(spark, tmp_catalog):
     """A crash mid-staging-write leaves _routed_staging behind; the next run
     must clear it and produce exactly the clean-run outputs (idempotence of

@@ -110,11 +110,13 @@ def test_foreachbatch_feeds_the_cron_warehouse(
 
 @pytest.mark.parametrize("replay", ["uncommitted_batch", "crash_in_mark_done"])
 def test_foreachbatch_replay_counts_once(
-    spark, tmp_catalog, seq_input, reference_catalog, summaries, monkeypatch, replay
+    spark, tmp_catalog, seq_input, reference_catalog, summaries, monkeypatch, count_jobs,
+    replay,
 ):
     """Real replays converge to the reference. ``uncommitted_batch``: the
     last batch's commit is lost, so the restarted query re-runs it over the
-    same files; its bucket is done, so it is a no-op that reads 0 rows.
+    same files; its bucket is done, so it is a no-op that reads 0 rows and
+    submits no Spark job.
     ``crash_in_mark_done``: batch 1 dies after its routed rows, partials
     and summaries are staged, before its one commit, so none of it is live;
     the restart re-runs batch 1, then batch 2."""
@@ -129,7 +131,9 @@ def test_foreachbatch_replay_counts_once(
         for name in (str(last), f".{last}.crc"):
             if os.path.exists(os.path.join(commits, name)):
                 os.remove(os.path.join(commits, name))
-        assert _drain(spark, tmp_catalog, input_dir, dim) == [(last, 0)]
+        replayed, jobs = count_jobs(lambda: _drain(spark, tmp_catalog, input_dir, dim))
+        assert replayed == [(last, 0)]
+        assert jobs == 0
     else:
         mark_done = ckpt.mark_done
 
